@@ -75,14 +75,14 @@ _PRIORITY = [
 # query_hash_snapshot.json: editing a query without pinning it here
 # fails CI.
 _FRESH = [
-    "chunk_eval_f1",          # r7: join → single-pass flag aggregate
-    "salience_topk_tokens",   # r7: window → in-array top-3 projection
-    "word_boundary_merge",    # r7: window+groupBy → per-doc fold
-    "streaming_tumbling_minute",   # r7: state partitions right-sized
-    "streaming_curation_counts",   # r7: one-shot rep gate + memo schema
-    "streaming_kg_triple_counts",  # r7: 1x-cores micro-batch widening
-    "streaming_dedup_keeper",      # r7: \\A..\\z anchors + memo schema
-    "corpus_curation",        # r7: one-shot rep-gate expression
+    "streaming_tumbling_minute",   # stream drained in a child session
+    "streaming_curation_counts",   # stream drained in a child session
+    "streaming_kg_triple_counts",  # stream drained in a child session
+    "streaming_dedup_keeper",      # stream drained in a child session
+    "pack_sequences_bpe",     # subword-count persist moved to the memo
+    "ann_ivf_lists",          # codebook memo keyed on the input itself
+    "ann_ivf_topk",           # codebook memo keyed on the input itself
+    "ann_pq_topk",            # codebook memo keyed on the input itself
 ]
 
 def _folded() -> frozenset:
@@ -105,20 +105,25 @@ def query_fingerprints() -> dict[str, str]:
     IMPOSSIBLE to edit a query or its oracle without either pinning
     it in _FRESH (so this round's gate covers it) or refreshing the
     snapshot deliberately.  The oracle string is normalized over the
-    per-SF golden tag so the hash is identical under pytest
-    (sf0_001) and the driver gate (sf0_01).  Scope note: helper
-    modules a query delegates to are not hashed — a dedup.py edit
-    shows up here only if the query function or oracle text moved;
-    pytest's full contract run remains the backstop for those."""
+    golden and resource directories, so the hash is the same wherever
+    the repo is checked out, and over the per-SF golden tag, so it is
+    the same under pytest (sf0_001) and the correctness gate (sf0_01).
+    Scope note: helper modules a query delegates to are not hashed —
+    a dedup.py edit shows up here only if the query function or
+    oracle text moved; pytest's full contract run remains the
+    backstop for those."""
     import hashlib
     import inspect
 
+    from lacspark import RESOURCE_DIR
     from lacspark import queries as q
 
     out = {}
     for name, fn in q.SPARK_QUERIES.items():
-        sql = q.ORACLE_SQL.get(name, "").replace(
-            f"{q.GOLDEN_TAG}/", "<SFTAG>/")
+        sql = (q.ORACLE_SQL.get(name, "")
+               .replace(q.GOLDEN_DIR, "<GOLDEN_DIR>")
+               .replace(str(RESOURCE_DIR), "<RESOURCE_DIR>")
+               .replace(f"{q.GOLDEN_TAG}/", "<SFTAG>/"))
         src = inspect.getsource(fn)
         out[name] = hashlib.sha256(
             (sql + "\n" + src).encode()).hexdigest()

@@ -20,6 +20,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .spark.memo import file_identity, input_fingerprint, memo
+
 SPARK_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLE_SQL: dict[str, str] = {}
 
@@ -48,46 +50,52 @@ def register(name: str, sql: str | None = None):
     return deco
 
 
-_LOAD_MEMO: dict = {}
-
-
 def load(spark: SparkSession, sf_dir: str, table: str) -> DataFrame:
-    """Read one testdata table, memoized per (session, path).
+    """Read one testdata table, memoized per (session, path, file
+    identity).
 
     ``spark.read.parquet`` re-runs the file-listing + footer-schema
     job on every call; the returned DataFrame is an immutable lazy
     plan over a static path, so reusing it across query invocations
     in the same session is semantics-free and saves one driver job
     per warm query (a catalog would give this for free via its
-    metadata cache — this is the path-based stand-in)."""
+    metadata cache — this is the path-based stand-in).  A rewrite of
+    any file under the path misses, or the memoized FileIndex would
+    serve deleted part files / stale rows."""
     path = f"{sf_dir}/{table}.parquet"
-    # file identity rides the key (size + mtime_ns, the
-    # files_fingerprint discipline): a path rewritten in-session must
-    # MISS, or the memoized FileIndex serves deleted part files /
-    # stale rows.  st of a directory changes when its entries do.
-    try:
-        st = os.stat(path)
-        if os.path.isdir(path):
-            # a directory's own stat misses an in-place rewrite of an
-            # existing part file (same name, same entry count) — fold
-            # the entries' identity in too (ADVICE r6)
-            with os.scandir(path) as it:
-                entries = tuple(sorted(
-                    (e.name, e.stat().st_size, e.stat().st_mtime_ns)
-                    for e in it))
-            ident = (st.st_size, st.st_mtime_ns, entries)
-        else:
-            ident = (st.st_size, st.st_mtime_ns)
-    except OSError:
-        ident = None  # let spark.read raise its own error
-    key = (spark.sparkContext.applicationId, path, ident)
-    df = _LOAD_MEMO.get(key)
-    if df is None:
-        df = spark.read.parquet(path)
-        while len(_LOAD_MEMO) > 64:  # evict oldest, not everything
-            _LOAD_MEMO.pop(next(iter(_LOAD_MEMO)))
-        _LOAD_MEMO[key] = df
-    return df
+    return memo(spark, ("load", file_identity(path)),
+                lambda: spark.read.parquet(path))
+
+
+def _drain_stream(spark: SparkSession, build, output_mode: str
+                  ) -> DataFrame:
+    """Run ``build(child)``'s stream to completion in a child session
+    and return its memory-sink table (owned by the child).
+
+    The child (``spark.newSession()``: same SparkContext, own SQL
+    conf) runs with 8 shuffle partitions: a stateful streaming
+    operator takes its state-store partition count from this conf at
+    query start, and these replays key on a few to a few hundred
+    keys, where per-partition store setup dominates (measured
+    1.94 s → 0.92 s at 8 against 64; 4/8/16/32 swept, 8 flat-best).
+    The caller's session conf is never written, so concurrent
+    queries on it keep their own settings.  One child per caller
+    session, memoized: every ``newSession()`` adds a listener to the
+    shared SparkContext that is never removed."""
+    import uuid
+
+    def new_child() -> SparkSession:
+        child = spark.newSession()
+        child.conf.set("spark.sql.shuffle.partitions", "8")
+        return child
+
+    child = memo(spark, ("stream_child",), new_child)
+    sink = f"stream_{uuid.uuid4().hex[:8]}"
+    q = (build(child).writeStream.trigger(availableNow=True)
+         .format("memory").queryName(sink)
+         .outputMode(output_mode).start())
+    q.awaitTermination()
+    return child.table(sink)
 
 
 # helpers — Spark side
@@ -225,38 +233,24 @@ def streaming_tumbling_minute(spark, sf_dir):
     newer than the final watermark).  This is the streaming stateful
     aggregate the engine runs continuously in production, proven
     equivalent to its batch twin."""
-    import uuid
-
     schema = load(spark, sf_dir, "events").schema  # memoized listing
-    # the file source wants a directory — glob the events file out of
-    # the sf dir
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 1)
-              .option("pathGlobFilter", "events.parquet")
-              .parquet(sf_dir))
-    # watermarks need TIMESTAMP (the parquet column is NTZ; the
-    # session tz is pinned UTC so the cast preserves wall time)
-    stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    agg = (stream.withWatermark("ts", "10 minutes")
-           .groupBy(F.window("ts", "1 minute").alias("win"), "event_type")
-           .agg(F.count(F.lit(1)).alias("n_events")))
-    sink = f"stream_tumbling_{uuid.uuid4().hex[:8]}"
-    # the stateful agg keys on (window × event_type): 64 state-store
-    # partitions is pure per-partition store-setup overhead at this
-    # key count (measured 1.94 s → 0.92 s at 8; 4/8/16/32 swept, 8
-    # flat-best) — same scoped set/restore pattern as the other
-    # streaming gates; the partition count lives in the checkpoint
-    # from query start, so later batch queries are unaffected.
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (agg.writeStream.trigger(availableNow=True)
-             .format("memory").queryName(sink)
-             .outputMode("complete").start())
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return spark.table(sink).select(
+
+    def build(child):
+        # the file source wants a directory — glob the events file
+        # out of the sf dir
+        stream = (child.readStream.schema(schema)
+                  .option("maxFilesPerTrigger", 1)
+                  .option("pathGlobFilter", "events.parquet")
+                  .parquet(sf_dir))
+        # watermarks need TIMESTAMP (the parquet column is NTZ; the
+        # session tz is pinned UTC so the cast preserves wall time)
+        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
+        return (stream.withWatermark("ts", "10 minutes")
+                .groupBy(F.window("ts", "1 minute").alias("win"),
+                         "event_type")
+                .agg(F.count(F.lit(1)).alias("n_events")))
+
+    return _drain_stream(spark, build, "complete").select(
         F.unix_timestamp(F.col("win.start")).cast("bigint")
         .alias("window_start"),
         "event_type", "n_events")
@@ -275,42 +269,29 @@ def streaming_kg_triple_counts(spark, sf_dir):
     kg_triples parquet.  This is the shape of continuous KG ingestion
     in production (foreachBatch into the lineage-tracked writer);
     the memory sink is the test-scoped harness."""
-    import uuid
-
     from .spark.tagger import tag_and_extract
 
     schema = load(spark, sf_dir, "documents").schema  # memoized listing
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 1)
-              .option("pathGlobFilter", "documents.parquet")
-              .parquet(sf_dir))
-    stream = stream.filter(F.col("doc_id") % 3 == 0)  # _docs_subset
-    # ensure_parallelism skips streaming DFs (micro-batch sizing is
-    # the trigger's job) — but this replay is ONE file, so widen the
-    # micro-batch explicitly or the CPU-bound UDF runs on the file
-    # source's few partitions (1× cores, same r7 sizing rationale as
-    # ensure_parallelism)
-    stream = stream.repartition(spark.sparkContext.defaultParallelism)
-    tagged = tag_and_extract(stream, "text", mode="rank")
-    agg = (tagged.select("doc_id", F.explode("triples").alias("t"))
-           .groupBy("doc_id")
-           .agg(F.count(F.lit(1)).alias("n_triples")))
-    sink = f"stream_kg_{uuid.uuid4().hex[:8]}"
-    # the stateful count keys on ~n_docs/3 ids — 8 state-store
-    # partitions beat the session-wide 32 (per-partition store setup
-    # dominates at this key count; same scoped set/restore pattern as
-    # streaming_curation_counts).  The explicit repartition above is
-    # unaffected — the CPU-bound tag UDF keeps its wide micro-batch.
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (agg.writeStream.trigger(availableNow=True)
-             .format("memory").queryName(sink)
-             .outputMode("complete").start())
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return spark.table(sink)
+
+    def build(child):
+        stream = (child.readStream.schema(schema)
+                  .option("maxFilesPerTrigger", 1)
+                  .option("pathGlobFilter", "documents.parquet")
+                  .parquet(sf_dir))
+        stream = stream.filter(F.col("doc_id") % 3 == 0)  # _docs_subset
+        # ensure_parallelism skips streaming DFs (micro-batch sizing
+        # is the trigger's job) — but this replay is ONE file, so
+        # widen the micro-batch explicitly or the CPU-bound UDF runs
+        # on the file source's few partitions (1× cores, same r7
+        # sizing rationale as ensure_parallelism); the explicit
+        # count is untouched by the child's 8 shuffle partitions
+        stream = stream.repartition(spark.sparkContext.defaultParallelism)
+        tagged = tag_and_extract(stream, "text", mode="rank")
+        return (tagged.select("doc_id", F.explode("triples").alias("t"))
+                .groupBy("doc_id")
+                .agg(F.count(F.lit(1)).alias("n_triples")))
+
+    return _drain_stream(spark, build, "complete")
 
 
 # late-bind the golden path: GOLDEN_TAG is fixed at import, same as
@@ -1361,49 +1342,35 @@ def streaming_curation_counts(spark, sf_dir):
     exact-dup keeper stage is the one curation step that is NOT
     stateless — its streaming twin is the applyInPandasWithState
     dedup operator in spark/streaming.py, pytest-gated.)"""
-    import uuid
-
     from .spark.quality import with_repetition_keep
 
     schema = load(spark, sf_dir, "documents").schema  # memoized listing
-    # availableNow with DEFAULT file batching: the gates are stateless
-    # projections, so per-file micro-batches + a per-batch repartition
-    # (the round-4 shape) bought nothing but trigger overhead — one
-    # trigger over all available files shows the same ≡-batch
-    # equivalence at a third of the cost.  Trigger-rate sizing
-    # (maxFilesPerTrigger / maxBytesPerTrigger) is the production
-    # backpressure knob, not a correctness ingredient.
-    stream = (spark.readStream.schema(schema)
-              .option("pathGlobFilter", "documents.parquet")
-              .parquet(sf_dir))
-    marked = with_repetition_keep(stream)
     punct = F.length(F.regexp_replace("text", "[a-zA-Z0-9 ]", ""))
     punct_pct = F.floor(punct * 100
                         / F.greatest(F.length("text"), F.lit(1)))
     smp = F.expr(_MD5INT_SPARK.format(
         x="concat('cur:', cast(doc_id as string))")) % 100
-    agg = (marked.filter(F.col("rep_keep")
-                         & F.length("text").between(50, 5000)
-                         & (punct_pct < 10) & (smp < 50))
-           .groupBy("lang")
-           .agg(F.count(F.lit(1)).alias("n_pass")))
-    sink = f"stream_cur_{uuid.uuid4().hex[:8]}"
-    # the stateful count has ~n_langs keys: 64 state-store partitions
-    # (the session shuffle default) is pure task overhead.  The
-    # streaming aggregation pins its partition count from this conf
-    # at query START (it lives in the checkpoint thereafter), so the
-    # scoped set/restore is safe for concurrent batch queries planned
-    # after the restore.
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (agg.writeStream.trigger(availableNow=True)
-             .format("memory").queryName(sink)
-             .outputMode("complete").start())
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return spark.table(sink)
+
+    def build(child):
+        # availableNow with DEFAULT file batching: the gates are
+        # stateless projections, so per-file micro-batches + a
+        # per-batch repartition (the round-4 shape) bought nothing
+        # but trigger overhead — one trigger over all available files
+        # shows the same ≡-batch equivalence at a third of the cost.
+        # Trigger-rate sizing (maxFilesPerTrigger /
+        # maxBytesPerTrigger) is the production backpressure knob,
+        # not a correctness ingredient.
+        stream = (child.readStream.schema(schema)
+                  .option("pathGlobFilter", "documents.parquet")
+                  .parquet(sf_dir))
+        return (with_repetition_keep(stream)
+                .filter(F.col("rep_keep")
+                        & F.length("text").between(50, 5000)
+                        & (punct_pct < 10) & (smp < 50))
+                .groupBy("lang")
+                .agg(F.count(F.lit(1)).alias("n_pass")))
+
+    return _drain_stream(spark, build, "complete")
 
 
 @register("streaming_dedup_keeper", r"""
@@ -1442,44 +1409,35 @@ def streaming_dedup_keeper(spark, sf_dir):
     only claimed where it is provable — today's corpus is entirely
     inside the subset (500/500 docs), and the operator's full-Unicode
     behavior stays pytest-gated engine-side."""
-    import uuid
-
     from .spark.streaming import streaming_dedup
 
     schema = load(spark, sf_dir, "documents").schema  # memoized listing
-    stream = (spark.readStream.schema(schema)
-              .option("pathGlobFilter", "documents.parquet")
-              .parquet(sf_dir)
-              # \A..\z, not ^..$: Java's $ also matches before a
-              # FINAL line terminator, so 'abc\n' would pass here yet
-              # fail the oracle's RE2 end-of-text anchor (ADVICE r6);
-              # unambiguous anchors make the two filters identical on
-              # every input, not just newline-free ones
-              .filter(F.col("text").isNotNull()
-                      & F.col("text").rlike(r"\A[ -~]*\z"))
-              .select("lang", F.explode(F.array(
-                  F.col("text"),
-                  F.concat(F.lit("  "), F.upper("text"), F.lit(" "))
-              )).alias("text")))
-    # timeout_minutes=None: a bounded availableNow replay must not
-    # arm processing-time TTL timers — pending timers keep the query
-    # alive through no-data micro-batches until every TTL fires
-    # (streaming_dedup docstring)
-    deduped = streaming_dedup(stream, "lang", "text",
-                              timeout_minutes=None)
-    sink = f"stream_dedup_{uuid.uuid4().hex[:8]}"
-    # per-key state rides the shuffle: n_langs keys → 8 partitions
-    # (same scoped set/restore rationale as streaming_curation_counts)
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        q = (deduped.writeStream.trigger(availableNow=True)
-             .format("memory").queryName(sink)
-             .outputMode("append").start())
-        q.awaitTermination()
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    return spark.table(sink).select("lang", "fingerprint")
+
+    def build(child):
+        stream = (child.readStream.schema(schema)
+                  .option("pathGlobFilter", "documents.parquet")
+                  .parquet(sf_dir)
+                  # \A..\z, not ^..$: Java's $ also matches before a
+                  # FINAL line terminator, so 'abc\n' would pass here
+                  # yet fail the oracle's RE2 end-of-text anchor
+                  # (ADVICE r6); unambiguous anchors make the two
+                  # filters identical on every input, not just
+                  # newline-free ones
+                  .filter(F.col("text").isNotNull()
+                          & F.col("text").rlike(r"\A[ -~]*\z"))
+                  .select("lang", F.explode(F.array(
+                      F.col("text"),
+                      F.concat(F.lit("  "), F.upper("text"), F.lit(" "))
+                  )).alias("text")))
+        # timeout_minutes=None: a bounded availableNow replay must not
+        # arm processing-time TTL timers — pending timers keep the
+        # query alive through no-data micro-batches until every TTL
+        # fires (streaming_dedup docstring)
+        return streaming_dedup(stream, "lang", "text",
+                               timeout_minutes=None)
+
+    return _drain_stream(spark, build, "append") \
+        .select("lang", "fingerprint")
 
 
 @register("token_class_counts", """
@@ -1503,9 +1461,6 @@ def token_class_counts(spark, sf_dir):
         F.size(F.regexp_extract_all(
             "text", F.lit("[A-Za-z]+|[0-9]+|[^A-Za-z0-9 ]"), F.lit(0)))
         .alias("n_bpe_ish"))
-
-
-_PACK_BPE_CACHE: dict = {}
 
 
 @register("token_count_bpe", _golden_sql("token_count_bpe"))
@@ -1548,26 +1503,22 @@ def pack_sequences_bpe(spark, sf_dir, shard_docs: int = 200):
     packs — proving the packing machinery survives contact with an
     actual tokenizer.  Oracle: the identical window over the
     token_count_bpe golden counts."""
-    from .spark.dedup import input_fingerprint, slot_persist
     from .spark.subword import with_subword_counts
     docs = load(spark, sf_dir, "documents")
-    d = with_subword_counts(docs)
     # BOTH prefix-sum branches (within-shard window + per-shard
-    # totals) consume the counts; the single-slot persist runs the
+    # totals) consume the counts; the memo's persist runs the
     # tokenizer UDF pass ONCE per corpus instead of once per branch
     # (lazy — plan-only consumers never execute it; an eager
     # localCheckpoint here ran the UDF at construction time and hid
     # the plan from inspection)
-    t = d.select("doc_id", "lang",
+    ident = input_fingerprint(docs)
+    t = memo(spark, ("pack_bpe", ident, shard_docs) if ident else None,
+             lambda: with_subword_counts(docs).select(
+                 "doc_id", "lang",
                  F.col("__sw.n_subwords").alias("n_subwords"),
                  (F.col("doc_id") / shard_docs).cast("bigint")
-                 .alias("__shard"))
-    # input_fingerprint = file identity + canonicalized-plan digest,
-    # so a transformed `docs` over the same files can't hit the
-    # raw-scan cache entry (ADVICE r4)
-    ident = input_fingerprint(docs)
-    t = slot_persist(_PACK_BPE_CACHE,
-                     (ident, shard_docs) if ident else None, t)
+                 .alias("__shard")),
+             persist=True)
     w_in = (Window.partitionBy("lang", "__shard").orderBy("doc_id")
             .rowsBetween(Window.unboundedPreceding, 0))
     within = t.withColumn(
@@ -2138,8 +2089,7 @@ def ann_ivf_lists(spark, sf_dir):
     from .spark.similarity import ivf_list_sizes
     e = load(spark, sf_dir, "embeddings")
     return ivf_list_sizes(e, "vec_id", "embedding", _IVF_DIM,
-                          n_lists=_IVF_K, iters=_IVF_ITERS,
-                          memo_key=sf_dir)
+                          n_lists=_IVF_K, iters=_IVF_ITERS)
 
 
 @register("ann_ivf_topk", _ivf_oracle_ctes() + """
@@ -2166,8 +2116,7 @@ def ann_ivf_topk(spark, sf_dir):
     e = load(spark, sf_dir, "embeddings")
     return ivf_topk(e.filter(F.col("vec_id") < 50), e,
                     "vec_id", "embedding", _IVF_DIM,
-                    k=5, nprobe=3, n_lists=_IVF_K, iters=_IVF_ITERS,
-                    memo_key=sf_dir) \
+                    k=5, nprobe=3, n_lists=_IVF_K, iters=_IVF_ITERS) \
         .select("query_id", "neighbor_id", "rnk")
 
 
@@ -2304,7 +2253,7 @@ def ann_pq_topk(spark, sf_dir):
     return pq_topk(e.filter(F.col("vec_id") < 50), e,
                    "vec_id", "embedding", 64, k=5, m=_PQ_M,
                    n_cents=_PQ_K, iters=_PQ_ITERS,
-                   rerank=_PQ_RERANK, memo_key=sf_dir) \
+                   rerank=_PQ_RERANK) \
         .select("query_id", "neighbor_id", "rnk")
 
 

@@ -13,9 +13,13 @@ xxhash64-based (JVM-only fast path).  Four families:
 
 from __future__ import annotations
 
+import threading
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+from .memo import input_fingerprint, memo
 
 MD5INT = "cast(conv(substring(md5({x}), 1, 15), 16, 10) as bigint)"
 
@@ -122,102 +126,6 @@ def exact_duplicate_groups(df: DataFrame, id_col: str,
 # overflow under ANSI mode, identical arithmetic in any engine.
 MINHASH_P = (1 << 31) - 1
 
-# single-slot caches — see minhash_near_duplicates
-_SHINGLE_CACHE: dict = {}   # fingerprint table (big, within-corpus)
-_PAIRS_CACHE: dict = {}     # verified pair set (tiny, cross-query)
-
-# guards slot read-check-replace so two driver threads can't race one
-# another into unpersisting a DataFrame the other just received (an
-# RLock: minhash_near_duplicates holds it across its pair-slot probe
-# and the nested slot_persist calls)
-import threading
-
-_SLOT_LOCK = threading.RLock()
-
-
-def files_fingerprint(df: DataFrame) -> tuple:
-    """Identity of a DataFrame's file sources: (path, size, mtime)
-    per input file, empty tuple for non-file (local/in-memory)
-    inputs.  The stat fields catch an overwritten file at the same
-    path (same policy as similarity._memo_fingerprint)."""
-    import os
-
-    out = []
-    for p in sorted(df.inputFiles()):
-        lp = p[5:] if p.startswith("file:") else p
-        try:
-            st = os.stat(lp)
-            out.append((p, st.st_size, st.st_mtime_ns))
-        except OSError:
-            out.append((p, -1, -1))
-    return tuple(out)
-
-
-def input_fingerprint(df: DataFrame) -> tuple | None:
-    """Cache key for a DataFrame INPUT: file identity AND plan shape.
-
-    ``files_fingerprint`` alone identifies the bytes on disk but not
-    the transformation applied to them — a caller passing
-    ``docs.filter(...)`` over the same files would silently collide
-    with the raw-scan entry.  The canonicalized logical plan supplies
-    that discriminator: exprIds are normalized (so two fresh raw
-    scans of one path produce the SAME string) while any extra
-    Filter/Project node changes it.  Canonicalization also strips
-    file paths — which is exactly why it can never be the key on its
-    own (same-schema corpora collide; see the round-4 incident note
-    in slot_persist) — but paired with the file fingerprint both
-    failure modes are covered.  Returns None (never cached across
-    invocations) for non-file inputs."""
-    import hashlib
-
-    files = files_fingerprint(df)
-    if not files:
-        return None
-    # toJSON(), not toString(): the pretty form truncates field lists
-    # at spark.sql.debug.maxToStringFields (default 25), so two wide
-    # schemas differing only past the cut would collide (ADVICE r5);
-    # the JSON serialization is complete at any width.
-    plan = df._jdf.queryExecution().analyzed().canonicalized().toJSON()
-    return (files, hashlib.sha256(plan.encode()).hexdigest())
-
-
-def slot_persist(cache: dict, key, df: DataFrame) -> DataFrame:
-    """Single-slot cross-invocation persist.  Reuses the cached
-    DataFrame when ``key`` matches (key is the caller's INPUT
-    identity — file fingerprints + params, never a plan string) and
-    the owning session is still this one and alive; otherwise the
-    previous entry is released and ``df`` is persisted into the
-    slot.  ``key=None`` (non-file input) is never reused across
-    calls — still persisted for this invocation's multiple
-    consumers, released by the next call.
-
-    Thread-safety: the read-check-replace is atomic under
-    ``_SLOT_LOCK``, so concurrent driver threads can't double-persist
-    or unpersist each other's in-flight slot mid-swap.  Two threads
-    alternating DIFFERENT corpora still thrash the single slot (each
-    evicts the other — correct results, no reuse); the cache is
-    sized for the one-corpus-at-a-time driver this repo runs."""
-    sess = df.sparkSession
-    with _SLOT_LOCK:
-        slot = cache.get("slot")
-        if slot is not None:
-            k0, df0, s0 = slot
-            try:
-                alive = s0 is sess and \
-                    not sess.sparkContext._jsc.sc().isStopped()
-            except Exception:
-                alive = False  # stopped sessions can throw on access
-            if alive and key is not None and k0 == key:
-                return df0
-            try:
-                df0.unpersist()
-            except Exception:
-                pass  # owning session already stopped
-        df = df.persist()
-        cache["slot"] = (key, df, sess)
-        return df
-
-
 # ---------------------------------------------------------------------------
 # No-silent-caps accounting (VERDICT r4 item 5): every degenerate-
 # bucket cap in the dedup/ANN/canonicalization family registers a
@@ -226,11 +134,12 @@ def slot_persist(cache: dict, key, df: DataFrame) -> DataFrame:
 # depends on these (the caps are oracle-mirrored) — they make the
 # drops VISIBLE at run time instead of silently shrinking recall.
 _CAP_AUDIT: dict[str, dict] = {}
+_AUDIT_LOCK = threading.Lock()
 
 
 def _register_cap_audit(op: str, cap: int, unit: str, *, plan=None,
                         counts: tuple[int, int] | None = None) -> None:
-    with _SLOT_LOCK:
+    with _AUDIT_LOCK:
         _CAP_AUDIT[op] = {"cap": cap, "unit": unit, "plan": plan,
                           "counts": counts}
 
@@ -265,7 +174,7 @@ def cap_audit_rows() -> list[dict]:
     scan is typically still page-warm).  Entries reflect each
     operator's LATEST invocation in this process, counting the input
     as it stands NOW."""
-    with _SLOT_LOCK:
+    with _AUDIT_LOCK:
         items = {k: dict(v) for k, v in _CAP_AUDIT.items()}
     out = []
     for op in sorted(items):
@@ -281,7 +190,7 @@ def cap_audit_rows() -> list[dict]:
 
 
 def reset_cap_audit() -> None:
-    with _SLOT_LOCK:
+    with _AUDIT_LOCK:
         _CAP_AUDIT.clear()
 
 
@@ -388,55 +297,43 @@ def minhash_near_duplicates(df: DataFrame, id_col: str, text_col: str,
     are computed projection-only and never explode into rows (docs
     with zero shingles are excluded, matching the relational oracle's
     inner joins)."""
-    if shingle > 1:
-        docsets = shingle_sets(df, id_col, text_col, n=shingle)
-    else:
-        docsets = (tokens(df, id_col, text_col)
-                   .groupBy(id_col)
-                   .agg(F.array_distinct(F.collect_list("token"))
-                        .alias("shset")))
-    docsets = hash_shingles(docsets, id_col) \
-        .filter(F.size("shset") > 0)
-    # EXPLICIT single-slot cache for the fingerprint table: three
-    # consumers reuse it within one invocation, and repeat
-    # invocations over the same input (bench warm passes, the
-    # near-dup query family sharing one corpus) hit the persisted
-    # copy.  A bare .persist() had the same effect by accident —
-    # Spark's CacheManager matches identical plans — but leaked one
-    # cache entry per DISTINCT input forever; this slot releases the
-    # previous entry when the input changes, bounding the cache to
-    # one corpus.  Keyed on input_fingerprint — INPUT FILES (path +
-    # size + mtime) so same-schema corpora can't collide (plan
-    # canonicalization strips paths), PLUS a canonicalized-plan
-    # digest so a TRANSFORMED input (docs.filter(...)) over the same
-    # files can't collide with the raw scan — plus params.
+    # Two memo entries, both persisted.  The fingerprint table has
+    # three consumers within one invocation; the VERIFIED pair set
+    # (tiny) is shared by the near-dup family (pairs / keep-best /
+    # components) over one corpus, so they run one banding+verify
+    # instead of three.  A bare .persist() would also reuse them —
+    # Spark's CacheManager matches identical plans — but would leak
+    # one cache entry per distinct input forever.  Keyed on
+    # input_fingerprint (input files AND plan digest, so neither
+    # same-schema corpora nor a docs.filter(...) over the same files
+    # collide) plus params.
+    spark = df.sparkSession
     ident = input_fingerprint(df)
-    key = (ident, id_col, text_col, shingle) if ident else None
-    # second slot: the VERIFIED pair set (tiny) keyed on the full
-    # parameterization — the near-dup family (pairs / keep-best /
-    # components) all start from the same pairs over one corpus, so
-    # they share one banding+verify execution instead of three
-    pkey = (key, num_hashes, band_size, threshold, max_bucket) \
-        if key is not None else None
-    with _SLOT_LOCK:
-        pslot = _PAIRS_CACHE.get("slot")
-        if pkey is not None and pslot is not None and pslot[0] == pkey:
-            try:
-                alive = pslot[2] is df.sparkSession and \
-                    not df.sparkSession.sparkContext._jsc.sc().isStopped()
-            except Exception:
-                alive = False
-            if alive:
-                return pslot[1]
-        docsets = slot_persist(_SHINGLE_CACHE, key, docsets)
-        sigs = minhash_signature(docsets, id_col, num_hashes)
+    key = ("shingles", ident, id_col, text_col, shingle) if ident else None
+
+    def shingle_table() -> DataFrame:
+        if shingle > 1:
+            sets = shingle_sets(df, id_col, text_col, n=shingle)
+        else:
+            sets = (tokens(df, id_col, text_col)
+                    .groupBy(id_col)
+                    .agg(F.array_distinct(F.collect_list("token"))
+                         .alias("shset")))
+        return hash_shingles(sets, id_col).filter(F.size("shset") > 0)
+
+    def pairs() -> DataFrame:
+        sets = memo(spark, key, shingle_table, persist=True)
+        sigs = minhash_signature(sets, id_col, num_hashes)
         cand = lsh_candidates(sigs, id_col, num_hashes, band_size,
                               max_bucket)
-        verified = jaccard_verify(cand, docsets, id_col, threshold)
-        out = verified.select(
+        verified = jaccard_verify(cand, sets, id_col, threshold)
+        return verified.select(
             "d1", "d2",
             ratio_round("n_inter", "n_union", 4).alias("jaccard"))
-        return slot_persist(_PAIRS_CACHE, pkey, out)
+
+    pkey = (key, num_hashes, band_size, threshold, max_bucket) \
+        if key is not None else None
+    return memo(spark, pkey, pairs, persist=True)
 
 
 def substring_duplicate_spans(df: DataFrame, id_col: str, text_col: str,

@@ -23,17 +23,21 @@ at import time (engines are built lazily per worker key).
 
 import pyspark.daemon
 
-# heavy third-party chain first (what pyspark.worker pulls in)
-import numpy                      # noqa: F401
-import pandas                     # noqa: F401
-import pyarrow                    # noqa: F401
-import pyspark.worker             # noqa: F401  (serializers, sql types)
+# A failed preload must not take every Python stage down with it: the
+# workers import whatever is missing themselves, exactly as they do
+# under the stock daemon.
+try:
+    # heavy third-party chain first (what pyspark.worker pulls in)
+    import numpy                      # noqa: F401
+    import pandas                     # noqa: F401
+    import pyarrow                    # noqa: F401
+    import pyspark.worker             # noqa: F401  (serializers, sql types)
 
-try:  # the engine stack every tagger/kg UDF constructs per worker
-    import lacspark.engine        # noqa: F401
-    import lacspark.spark.tagger  # noqa: F401
-except Exception:  # pragma: no cover — zip not shipped yet: workers
-    pass           # will import it themselves as before
+    # the engine stack every tagger/kg UDF constructs per worker
+    import lacspark.engine            # noqa: F401
+    import lacspark.spark.tagger      # noqa: F401
+except Exception:  # pragma: no cover
+    pass
 
 
 if __name__ == "__main__":

@@ -13,6 +13,10 @@ import os
 
 from pyspark.sql import SparkSession
 
+# the directory holding the ``lacspark`` package
+_PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.dirname(
+    os.path.abspath(__file__))))
+
 
 def get_spark(app_name: str = "lacspark", cores: int | None = None,
               shuffle_partitions: int | None = None,
@@ -55,6 +59,10 @@ def get_spark(app_name: str = "lacspark", cores: int | None = None,
         # (lacspark.spark.py_daemon; public knob, worker loop
         # unchanged)
         .config("spark.python.daemon.module", "lacspark.spark.py_daemon")
+        # ...which the daemon can import only with lacspark on its
+        # path: it starts in the executor's working directory (the
+        # driver's, in local mode), which need not hold the package
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

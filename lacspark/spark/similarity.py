@@ -16,6 +16,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
+from .memo import input_fingerprint, memo
+
 _DOT = ("aggregate(zip_with({a}, {b}, (x, y) -> x * y), "
         "cast(0 as double), (acc, v) -> acc + v)")
 
@@ -94,31 +96,6 @@ def label_centroids(corpus: DataFrame, vec_col: str, label_col: str,
                     .alias("centroid")))
 
 
-_CODEBOOK_MEMO: dict = {}
-
-
-def _memo_fingerprint(memo_key):
-    """Memo keys are only sound over immutable data.  When the key is
-    a filesystem path, fold in every file's (name, size, mtime_ns) so
-    a rewrite of the data at that path invalidates the memo instead
-    of silently serving a stale codebook."""
-    import os
-
-    if isinstance(memo_key, str) and os.path.exists(memo_key):
-        stats = []
-        if os.path.isdir(memo_key):
-            for root, _, names in os.walk(memo_key):
-                for nm in sorted(names):
-                    st = os.stat(os.path.join(root, nm))
-                    stats.append((nm, st.st_size, st.st_mtime_ns))
-        else:
-            st = os.stat(memo_key)
-            stats.append((os.path.basename(memo_key),
-                          st.st_size, st.st_mtime_ns))
-        return (memo_key, tuple(stats))
-    return memo_key
-
-
 def _scale_unit(cents: list[list[float]]) -> list[list[float]]:
     """Scale each centroid by 1/‖c‖ so cosine ranking equals plain
     dot-product ranking (the assignment then needs no norms)."""
@@ -132,32 +109,28 @@ def _scale_unit(cents: list[list[float]]) -> list[list[float]]:
 
 
 def collect_codebook(corpus: DataFrame, vec_col: str, label_col: str,
-                     dim: int, memo_key=None
-                     ) -> tuple[list[int], list[list[float]]]:
+                     dim: int) -> tuple[list[int], list[list[float]]]:
     """Materialize the (tiny) per-label centroid codebook on the
     driver — (list_ids sorted ascending, norm-scaled centroid
     vectors).  The SUPERVISED codebook variant for corpora that carry
     a cluster/label column; label-less corpora use
-    :func:`kmeans_codebook`.  ``memo_key`` (e.g. the source path)
-    reuses the codebook across calls; paths are fingerprinted by
-    file size/mtime so rewritten data invalidates the memo."""
-    if memo_key is not None:
-        k = ("label", _memo_fingerprint(memo_key), vec_col, label_col,
-             dim)
-        if k in _CODEBOOK_MEMO:
-            return _CODEBOOK_MEMO[k]
-    rows = label_centroids(corpus, vec_col, label_col, dim).collect()
-    rows.sort(key=lambda r: r.list_id)
-    ids = [int(r.list_id) for r in rows]
-    cents = _scale_unit([list(r.centroid) for r in rows])
-    if memo_key is not None:
-        _CODEBOOK_MEMO[k] = (ids, cents)
-    return ids, cents
+    :func:`kmeans_codebook`.  Memoized on the corpus's input
+    fingerprint, so rewritten data invalidates it."""
+    def build():
+        rows = label_centroids(corpus, vec_col, label_col, dim).collect()
+        rows.sort(key=lambda r: r.list_id)
+        return ([int(r.list_id) for r in rows],
+                _scale_unit([list(r.centroid) for r in rows]))
+
+    fp = input_fingerprint(corpus)
+    return memo(corpus.sparkSession,
+                ("label", fp, vec_col, label_col, dim) if fp else None,
+                build)
 
 
 def kmeans_codebook(corpus: DataFrame, id_col: str, vec_col: str,
-                    dim: int, n_lists: int = 16, iters: int = 2,
-                    memo_key=None) -> tuple[list[int], list[list[float]]]:
+                    dim: int, n_lists: int = 16, iters: int = 2
+                    ) -> tuple[list[int], list[list[float]]]:
     """DETERMINISTIC spherical k-means codebook — works on any
     (id, vec) table, no label column needed (a real 100-TB embedding
     corpus has none).
@@ -184,12 +157,19 @@ def kmeans_codebook(corpus: DataFrame, id_col: str, vec_col: str,
     projection (codebook as literal ≙ broadcast) plus one
     constant-size aggregate (n_lists × dim avg columns, partial
     map-side) — iters+1 corpus scans total including the final
-    assignment, no quadratic step anywhere."""
-    if memo_key is not None:
-        k = ("kmeans", _memo_fingerprint(memo_key), id_col, vec_col,
-             dim, n_lists, iters)
-        if k in _CODEBOOK_MEMO:
-            return _CODEBOOK_MEMO[k]
+    assignment, no quadratic step anywhere.  Memoized on the
+    corpus's input fingerprint, so rewritten data invalidates it."""
+    fp = input_fingerprint(corpus)
+    return memo(corpus.sparkSession,
+                ("kmeans", fp, id_col, vec_col, dim, n_lists, iters)
+                if fp else None,
+                lambda: _kmeans(corpus, id_col, vec_col, dim, n_lists,
+                                iters))
+
+
+def _kmeans(corpus: DataFrame, id_col: str, vec_col: str, dim: int,
+            n_lists: int, iters: int
+            ) -> tuple[list[int], list[list[float]]]:
     seeds = (corpus.select(
         F.col(id_col).alias("__sid"),
         F.expr(f"transform({vec_col}, x -> cast(x as double))")
@@ -223,10 +203,7 @@ def kmeans_codebook(corpus: DataFrame, id_col: str, vec_col: str,
         ids = [int(r.list_id) for r in rows]
         cents = [[float(r[f"__c{j}"]) for j in range(dim)]
                  for r in rows]
-    out = (ids, _scale_unit(cents))
-    if memo_key is not None:
-        _CODEBOOK_MEMO[k] = out
-    return out
+    return ids, _scale_unit(cents)
 
 
 def _nearest_lists(df: DataFrame, codebook, out_id: str,
@@ -275,7 +252,7 @@ def _nearest_lists(df: DataFrame, codebook, out_id: str,
 def ivf_topk(queries: DataFrame, corpus: DataFrame, id_col: str,
              vec_col: str, dim: int, k: int = 5,
              nprobe: int = 3, n_lists: int = 16, iters: int = 2,
-             memo_key=None, label_col: str | None = None) -> DataFrame:
+             label_col: str | None = None) -> DataFrame:
     """IVF (inverted-file) ANN: assign every corpus vector to its
     nearest coarse centroid (its *list*), probe each query against the
     ``nprobe`` nearest lists only, exact cosine re-rank inside them.
@@ -291,12 +268,10 @@ def ivf_topk(queries: DataFrame, corpus: DataFrame, id_col: str,
     (`lsh_bucketed_topk`): IVF adapts to the data distribution, LSH
     is data-independent."""
     if label_col is not None:
-        cb = collect_codebook(corpus, vec_col, label_col, dim,
-                              memo_key=memo_key)
+        cb = collect_codebook(corpus, vec_col, label_col, dim)
     else:
         cb = kmeans_codebook(corpus, id_col, vec_col, dim,
-                             n_lists=n_lists, iters=iters,
-                             memo_key=memo_key)
+                             n_lists=n_lists, iters=iters)
     n = _nearest_lists(_with_norm(corpus, id_col, vec_col, "neighbor_id"),
                        cb, "neighbor_id", nprobe=1)
     q = _nearest_lists(_with_norm(queries, id_col, vec_col, "query_id"),
@@ -318,17 +293,14 @@ def ivf_topk(queries: DataFrame, corpus: DataFrame, id_col: str,
 
 def ivf_list_sizes(corpus: DataFrame, id_col: str, vec_col: str,
                    dim: int, n_lists: int = 16, iters: int = 2,
-                   memo_key=None, label_col: str | None = None
-                   ) -> DataFrame:
+                   label_col: str | None = None) -> DataFrame:
     """(list_id, n_vectors): the IVF partition histogram — the skew
     diagnostic you'd watch before trusting nprobe at scale."""
     if label_col is not None:
-        cb = collect_codebook(corpus, vec_col, label_col, dim,
-                              memo_key=memo_key)
+        cb = collect_codebook(corpus, vec_col, label_col, dim)
     else:
         cb = kmeans_codebook(corpus, id_col, vec_col, dim,
-                             n_lists=n_lists, iters=iters,
-                             memo_key=memo_key)
+                             n_lists=n_lists, iters=iters)
     n = _nearest_lists(_with_norm(corpus, id_col, vec_col, "neighbor_id"),
                        cb, "neighbor_id", nprobe=1)
     return (n.groupBy("list_id")
@@ -418,8 +390,7 @@ def _with_unit(df: DataFrame, id_col: str, vec_col: str,
 
 
 def pq_codebooks(corpus: DataFrame, id_col: str, vec_col: str,
-                 dim: int, m: int = 8, k: int = 16, iters: int = 2,
-                 memo_key=None
+                 dim: int, m: int = 8, k: int = 16, iters: int = 2
                  ) -> list[tuple[list[int], list[list[float]]]]:
     """M independent DETERMINISTIC k-means codebooks over the
     subvectors of the L2-normalized corpus — the classic product
@@ -447,13 +418,21 @@ def pq_codebooks(corpus: DataFrame, id_col: str, vec_col: str,
     (codebooks ride as literals ≙ broadcast), a subspace-explode
     emits (m, code, subvec) rows, and ONE constant-size aggregate
     (m × k groups × ds sum columns) updates every codebook — 2 jobs
-    per iteration regardless of M, no per-subspace passes."""
+    per iteration regardless of M, no per-subspace passes.  Memoized
+    on the corpus's input fingerprint, so rewritten data invalidates
+    it."""
+    fp = input_fingerprint(corpus)
+    return memo(corpus.sparkSession,
+                ("pq", fp, id_col, vec_col, dim, m, k, iters)
+                if fp else None,
+                lambda: _pq_kmeans(corpus, id_col, vec_col, dim, m, k,
+                                   iters))
+
+
+def _pq_kmeans(corpus: DataFrame, id_col: str, vec_col: str, dim: int,
+               m: int, k: int, iters: int
+               ) -> list[tuple[list[int], list[list[float]]]]:
     ds = dim // m
-    if memo_key is not None:
-        kk = ("pq", _memo_fingerprint(memo_key), id_col, vec_col,
-              dim, m, k, iters)
-        if kk in _CODEBOOK_MEMO:
-            return _CODEBOOK_MEMO[kk]
     u = _with_unit(corpus, id_col, vec_col, "p")
     seeds = (u.join(corpus.select(F.col(id_col).alias("p"),
                                   F.md5(F.col(id_col).cast("string"))
@@ -496,8 +475,6 @@ def pq_codebooks(corpus: DataFrame, id_col: str, vec_col: str,
                 sorted((r for r in got if r["m"] == mi),
                        key=lambda r: r["code"])
                 for mi in range(len(books)))]
-    if memo_key is not None:
-        _CODEBOOK_MEMO[kk] = books
     return books
 
 
@@ -572,47 +549,33 @@ _PQ_QUERY_DRIVER_MAX = 10_000
 # join+window re-rank.
 _PQ_SHORTLIST_DRIVER_MAX = 100_000
 
-# single-slot cross-invocation persist of the PQ code table (the
-# index a real deployment builds once and queries many times)
-_PQ_CODES_CACHE: dict = {}
-
 # Corpora up to this many rows get their raw vectors mirrored into a
 # driver-side dict for the exact re-rank (64-dim doubles → ≤ ~55 MB
-# at the bound), slot-cached on the corpus input fingerprint like the
+# at the bound), memoized on the corpus input fingerprint like the
 # code table.  Larger corpora fetch shortlisted vectors per query
 # batch via the distributed semi-join — the 10^12-row path.
 _PQ_VECS_DRIVER_MAX = 100_000
-_PQ_VECS_CACHE: dict = {}
-_TOO_BIG = object()  # cached negative verdict for over-bound corpora
 
 
 def _pq_corpus_vecs(corpus: DataFrame, id_col: str, vec_col: str, fp):
     """{id: double-widened vector} for the whole corpus when it fits
     the driver bound (the limit(N+1) probe doubles as the fetch),
-    slot-cached on the corpus input fingerprint — same single-slot /
-    input-identity discipline as ``slot_persist`` (fp None = non-file
-    input, never cached).  Returns None past the bound; callers fall
-    back to the distributed semi-join fetch."""
-    sess = corpus.sparkSession
-    key = (fp, id_col, vec_col)
-    slot = _PQ_VECS_CACHE.get("slot")
-    if slot is not None and fp is not None \
-            and slot[0] == key and slot[2] is sess:
-        # the negative verdict is cached too: re-probing a >bound
-        # corpus would re-collect ~100k full vectors per invocation,
-        # costlier than the distributed fallback it gates
-        return None if slot[1] is _TOO_BIG else slot[1]
-    rows = (corpus.select(F.col(id_col).alias("__id"),
-                          F.col(vec_col).alias("__v"))
-            .limit(_PQ_VECS_DRIVER_MAX + 1).collect())
-    if len(rows) > _PQ_VECS_DRIVER_MAX:
-        if fp is not None:
-            _PQ_VECS_CACHE["slot"] = (key, _TOO_BIG, sess)
-        return None
-    d = {r["__id"]: [float(x) for x in r["__v"]] for r in rows}
-    if fp is not None:
-        _PQ_VECS_CACHE["slot"] = (key, d, sess)
-    return d
+    memoized on the corpus input fingerprint ``fp`` (None = non-file
+    input, never reused).  Returns None past the bound; callers fall
+    back to the distributed semi-join fetch.  The None verdict is
+    memoized too: re-probing a >bound corpus would re-collect ~100k
+    full vectors per invocation, costlier than the fallback it
+    gates."""
+    def build():
+        rows = (corpus.select(F.col(id_col).alias("__id"),
+                              F.col(vec_col).alias("__v"))
+                .limit(_PQ_VECS_DRIVER_MAX + 1).collect())
+        if len(rows) > _PQ_VECS_DRIVER_MAX:
+            return None
+        return {r["__id"]: [float(x) for x in r["__v"]] for r in rows}
+
+    return memo(corpus.sparkSession,
+                ("pq_vecs", fp, id_col, vec_col) if fp else None, build)
 
 
 def _pq_rerank_driver(spark, srows, qvecs: dict, corpus: DataFrame,
@@ -758,8 +721,8 @@ def _pq_query_luts(queries: DataFrame, id_col: str, vec_col: str,
 
 def pq_topk(queries: DataFrame, corpus: DataFrame, id_col: str,
             vec_col: str, dim: int, k: int = 5, m: int = 8,
-            n_cents: int = 32, iters: int = 2, rerank: int = 100,
-            memo_key=None) -> DataFrame:
+            n_cents: int = 32, iters: int = 2, rerank: int = 100
+            ) -> DataFrame:
     """PQ-ADC approximate top-k with exact re-rank — the
     compressed-domain scale path: score every corpus CODE row
     (M small-int columns) against each query by summing
@@ -779,8 +742,7 @@ def pq_topk(queries: DataFrame, corpus: DataFrame, id_col: str,
     (query_id, neighbor_id, rnk, cosine)."""
     ds = dim // m
     books = pq_codebooks(corpus, id_col, vec_col, dim, m=m,
-                         k=n_cents, iters=iters, memo_key=memo_key)
-    codes = pq_encode(corpus, id_col, vec_col, books, dim)
+                         k=n_cents, iters=iters)
     # Textbook ADC: per QUERY, precompute the lookup table
     # lut[m][cell] = dot(q_m, centroid) — 8×32 small folds on 50ish
     # query rows — so each of the query×corpus PAIRS costs just 8
@@ -804,22 +766,21 @@ def pq_topk(queries: DataFrame, corpus: DataFrame, id_col: str,
     # projected column gets INLINED into its consumer by
     # CollapseProject (the explode_once trap): without it the whole
     # 32-centroid LUT transform re-evaluated per PAIR row.
-    from .dedup import input_fingerprint, slot_persist
     from .tagger import ensure_parallelism
 
     spark = queries.sparkSession
     q, qvecs = _pq_query_luts(queries, id_col, vec_col, books, m, ds)
     # The code table is the PQ INDEX: built once per corpus, queried
-    # many times — so it is slot-persisted keyed on the corpus input
-    # identity + quantizer params (same single-slot pattern as the
-    # near-dup pair cache; non-file inputs get key None = persisted
-    # for this invocation only, never reused).
+    # many times — so it is persisted in the memo, keyed on the corpus
+    # input identity + quantizer params (non-file inputs get key None
+    # = persisted for this invocation only, never reused).
     fp = input_fingerprint(corpus)
-    ckey = (None if fp is None
-            else ("pq_codes", fp, id_col, vec_col, dim, m, n_cents,
-                  iters))
-    codes = slot_persist(_PQ_CODES_CACHE, ckey,
-                         ensure_parallelism(codes))
+    codes = memo(spark,
+                 ("pq_codes", fp, id_col, vec_col, dim, m, n_cents, iters)
+                 if fp else None,
+                 lambda: ensure_parallelism(pq_encode(
+                     corpus, id_col, vec_col, books, dim)),
+                 persist=True)
     # position of each ORIGINAL centroid id in the id-sorted
     # codebook, computed once per CORPUS row (not per pair)
     pos_exprs = [
@@ -835,9 +796,11 @@ def pq_topk(queries: DataFrame, corpus: DataFrame, id_col: str,
              .select("query_id", "neighbor_id", "__adc"))
     w = Window.partitionBy("query_id").orderBy(F.desc("__adc"),
                                                F.asc("neighbor_id"))
-    short = (pairs.withColumn("__r", F.row_number().over(w))
-             .filter(F.col("__r") <= rerank)
-             .select("query_id", "neighbor_id"))
+
+    def shortlist(p: DataFrame) -> DataFrame:
+        return (p.withColumn("__r", F.row_number().over(w))
+                .filter(F.col("__r") <= rerank)
+                .select("query_id", "neighbor_id"))
     # ---- exact re-rank over the shortlist ----
     # The shortlist is ≤ queries×rerank rows — small BY CONSTRUCTION
     # (that is the whole point of a shortlist), so the re-rank runs
@@ -852,19 +815,12 @@ def pq_topk(queries: DataFrame, corpus: DataFrame, id_col: str,
     # (qvecs is None) — fall back to the fully distributed re-rank.
     if qvecs is not None:
         # the shortlist shuffle keys on the (by-contract-small) query
-        # id set — right-size its partition count to that cardinality
-        # instead of the session-wide default (same scoped set/restore
-        # pattern as the streaming state-store partitions); the
-        # distributed fallback below keeps the session conf, which is
-        # the 10^12-scale setting
-        prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set("spark.sql.shuffle.partitions",
-                       str(max(1, min(int(prev_parts), 8,
-                                      len(qvecs)))))
-        try:
-            srows = short.limit(_PQ_SHORTLIST_DRIVER_MAX + 1).collect()
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+        # id set — size its partition count to that cardinality; the
+        # window reuses this partitioning.  The distributed fallback
+        # below keeps the session default, the 10^12-scale setting.
+        n = max(1, min(8, len(qvecs)))
+        srows = shortlist(pairs.repartition(n, "query_id")) \
+            .limit(_PQ_SHORTLIST_DRIVER_MAX + 1).collect()
         if len(srows) <= _PQ_SHORTLIST_DRIVER_MAX:
             nvecs = _pq_corpus_vecs(corpus, id_col, vec_col, fp)
             return _pq_rerank_driver(spark, srows, qvecs, corpus,
@@ -873,7 +829,7 @@ def pq_topk(queries: DataFrame, corpus: DataFrame, id_col: str,
         # shortlist): recompute distributed below
     qv = _with_norm(queries, id_col, vec_col, "query_id")
     nv = _with_norm(corpus, id_col, vec_col, "neighbor_id")
-    exact = (short.join(qv, "query_id").join(nv, "neighbor_id")
+    exact = (shortlist(pairs).join(qv, "query_id").join(nv, "neighbor_id")
              .withColumn("cosine",
                          F.expr(_DOT.format(a="query_id_vec",
                                             b="neighbor_id_vec"))

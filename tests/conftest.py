@@ -38,6 +38,12 @@ def load_reference_module(name: str):
 
 
 @pytest.fixture(scope="session")
+def sf_dir() -> str:
+    """The scale-factor directory the tests run against."""
+    return _sf
+
+
+@pytest.fixture(scope="session")
 def spark():
     from lacspark.spark.session import get_spark
 

@@ -551,7 +551,7 @@ def test_minhash_cache_not_hit_by_transformed_input(spark, tmp_path):
     assert {(r.d1, r.d2) for r in filt.collect()} == {(1, 2)}
     # and two raw scans of the same path DO share one cache entry
     # (fresh exprIds must not defeat the digest): same plan, same key
-    from lacspark.spark.dedup import input_fingerprint
+    from lacspark.spark.memo import input_fingerprint
     k1 = input_fingerprint(spark.read.parquet(f"{a}/documents.parquet"))
     k2 = input_fingerprint(spark.read.parquet(f"{a}/documents.parquet"))
     assert k1 == k2 and k1 is not None

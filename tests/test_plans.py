@@ -108,7 +108,7 @@ def test_kmeans_ivf_assignment_is_shuffle_free(spark):
                                            kmeans_codebook)
     e = spark.read.parquet(f"{SF}/embeddings.parquet")
     cb = kmeans_codebook(e, "vec_id", "embedding", 64,
-                         n_lists=16, iters=2, memo_key=SF)
+                         n_lists=16, iters=2)
     assign = _nearest_lists(_with_norm(e, "vec_id", "embedding", "n"),
                             cb, "n", nprobe=1)
     plan = plan_of(assign)
@@ -166,7 +166,7 @@ def test_pq_encode_is_pure_projection(spark):
 
     emb = spark.read.parquet(f"{SF}/embeddings.parquet")
     books = pq_codebooks(emb, "vec_id", "embedding", 64,
-                         m=8, k=32, iters=2, memo_key=SF)
+                         m=8, k=32, iters=2)
     plan = plan_of(pq_encode(emb, "vec_id", "embedding",
                              books, 64)).lower()
     assert "hashpartitioning" not in plan

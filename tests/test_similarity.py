@@ -64,8 +64,7 @@ def test_ivf_recall_beats_probe_fraction(spark):
     def recall(nprobe: int) -> float:
         approx = _topk_sets(ivf_topk(
             queries, emb, "vec_id", "embedding", 64,
-            k=5, nprobe=nprobe, n_lists=16, iters=2,
-            memo_key=SF_DIR))
+            k=5, nprobe=nprobe, n_lists=16, iters=2))
         per_q = [len(exact[q] & approx.get(q, set())) / len(exact[q])
                  for q in exact]
         return sum(per_q) / len(per_q)
@@ -81,8 +80,7 @@ def test_ivf_lists_partition_corpus(spark):
     the label-free k-means codebook, as on a real corpus."""
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     sizes = ivf_list_sizes(emb, "vec_id", "embedding", 64,
-                           n_lists=16, iters=2,
-                           memo_key=SF_DIR).collect()
+                           n_lists=16, iters=2).collect()
     assert sum(r.n_vectors for r in sizes) == emb.count()
     assert len(sizes) <= 16
 
@@ -91,35 +89,35 @@ def test_kmeans_codebook_deterministic_and_memo_invalidates(
         spark, tmp_path):
     """The k-means codebook is a pure function of the data (seedless
     md5-stratified init, fixed iterations, rounded updates): two
-    fresh computations agree exactly.  A path memo key fingerprints
-    the files, so rewriting the data at the same path invalidates
+    fresh computations agree exactly.  The memo key fingerprints the
+    input files, so rewriting the data at the same path invalidates
     the cached codebook instead of serving a stale one."""
     import os
     import time
 
+    from lacspark.spark import memo
     from lacspark.spark.similarity import kmeans_codebook
 
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     a = kmeans_codebook(emb, "vec_id", "embedding", 64,
                         n_lists=8, iters=2)
+    memo.clear()  # or the second call is a memo hit that checks nothing
     b = kmeans_codebook(emb, "vec_id", "embedding", 64,
                         n_lists=8, iters=2)
-    assert a == b
+    assert a == b and a is not b
     assert len(a[0]) <= 8 and len(a[0]) == len(a[1])
 
     # memo invalidation: same path, different data → different book
     path = str(tmp_path / "vecs.parquet")
     emb.limit(100).write.mode("overwrite").parquet(path)
     first = kmeans_codebook(spark.read.parquet(path), "vec_id",
-                            "embedding", 64, n_lists=4, iters=1,
-                            memo_key=path)
+                            "embedding", 64, n_lists=4, iters=1)
     time.sleep(0.01)
     emb.filter("vec_id >= 200").limit(100).write.mode("overwrite") \
         .parquet(path)
     os.utime(path)  # directory mtime; file mtimes changed by rewrite
     second = kmeans_codebook(spark.read.parquet(path), "vec_id",
-                             "embedding", 64, n_lists=4, iters=1,
-                             memo_key=path)
+                             "embedding", 64, n_lists=4, iters=1)
     assert first != second
 
 
@@ -135,7 +133,7 @@ def test_pq_recall_at_5(spark):
     exact = _topk_sets(cosine_topk(queries, emb, "vec_id",
                                    "embedding", k=5))
     approx = _topk_sets(pq_topk(queries, emb, "vec_id", "embedding",
-                                64, k=5, memo_key=SF_DIR))
+                                64, k=5))
     per_q = [len(exact[q] & approx.get(q, set())) / len(exact[q])
              for q in exact]
     recall = sum(per_q) / len(per_q)
@@ -150,7 +148,7 @@ def test_pq_codes_are_compact_and_deterministic(spark):
 
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
     books = pq_codebooks(emb, "vec_id", "embedding", 64,
-                         m=8, k=32, iters=2, memo_key=SF_DIR)
+                         m=8, k=32, iters=2)
     assert len(books) == 8
     for ids, cents in books:
         assert len(ids) == len(cents) <= 32

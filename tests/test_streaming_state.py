@@ -134,3 +134,50 @@ def test_streaming_dedup_no_ttl_terminates(spark, tmp_path):
     texts = {" ".join(r.text.lower().split())
              for r in spark.read.parquet(out).collect()}
     assert texts == {"hello world", "x"}
+
+
+def test_streaming_query_leaves_caller_conf_alone(spark, sf_dir,
+                                                  monkeypatch):
+    """A streaming gate runs its 8-partition state store in a child
+    session: the caller's session, set to 32 shuffle partitions, must
+    read 32 throughout the query (a second thread polls it), while
+    the query's state operator reports 8."""
+    import json
+    import threading
+
+    from pyspark.sql.streaming.query import StreamingQuery
+
+    from lacspark.queries import SPARK_QUERIES
+
+    caller = spark.newSession()
+    caller.conf.set("spark.sql.shuffle.partitions", "32")
+    progress = []
+    wait = StreamingQuery.awaitTermination
+
+    def wait_and_record(self, *args, **kwargs):
+        out = wait(self, *args, **kwargs)
+        progress.append(json.loads(self.lastProgress.json))
+        return out
+
+    monkeypatch.setattr(StreamingQuery, "awaitTermination",
+                        wait_and_record)
+    seen = set()
+    done = threading.Event()
+
+    def poll():
+        while not done.is_set():
+            seen.add(caller.conf.get("spark.sql.shuffle.partitions"))
+
+    poller = threading.Thread(target=poll)
+    poller.start()
+    try:
+        rows = SPARK_QUERIES["streaming_tumbling_minute"](
+            caller, sf_dir).collect()
+    finally:
+        done.set()
+        poller.join(timeout=60)
+    assert not poller.is_alive()
+    assert rows
+    assert seen == {"32"}
+    assert [op["numShufflePartitions"]
+            for op in progress[-1]["stateOperators"]] == [8]
