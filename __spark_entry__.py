@@ -75,14 +75,7 @@ _PRIORITY = [
 # query_hash_snapshot.json: editing a query without pinning it here
 # fails CI.
 _FRESH = [
-    "streaming_tumbling_minute",   # stream drained in a child session
-    "streaming_curation_counts",   # stream drained in a child session
-    "streaming_kg_triple_counts",  # stream drained in a child session
-    "streaming_dedup_keeper",      # stream drained in a child session
-    "pack_sequences_bpe",     # subword-count persist moved to the memo
-    "ann_ivf_lists",          # codebook memo keyed on the input itself
-    "ann_ivf_topk",           # codebook memo keyed on the input itself
-    "ann_pq_topk",            # codebook memo keyed on the input itself
+    "word_boundary_merge",    # groups sliced from one boundary array
 ]
 
 def _folded() -> frozenset:

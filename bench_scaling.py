@@ -24,7 +24,7 @@ cores = int(sys.argv[1])
 n_files = int(sys.argv[2])
 from lacspark.spark.session import get_spark
 from lacspark.spark.repos_files import synth_repos_files
-from lacspark.spark.kg import tag_files, file_triples, FILE_KEYS
+from lacspark.spark.kg import tag_files
 from pyspark.sql import functions as F
 spark = get_spark(app_name=f"scale-{cores}", cores=cores,
                   shuffle_partitions=max(2 * cores, 16))

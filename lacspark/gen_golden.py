@@ -97,7 +97,7 @@ def gen_for_sf(tag: str, sf_dir: str) -> None:
     print(f"{tag}/lac_seg_documents: {n} rows")
 
     # kg_mentions / kg_triples via engine.extract (window=8, the
-    # tag_and_extract default)
+    # engine's default, which tag_and_extract uses)
     mention_rows, triple_rows = [], []
     for d, r in zip(ids, rank_res):
         ms, ts = eng.extract(r, window=8)

@@ -242,9 +242,11 @@ class BiGruCrf:
         rowidx = np.arange(b * d)
         # k = 2 unrolled: argmax/take_along_axis replaced by a single
         # compare (tie → index 0, exactly argmax's rule) — same
-        # results, no per-step fancy-gather overhead
-        sp0, sp1 = sp_prevs[:, 0], sp_prevs[:, 1]
-        spt0, spt1 = sp_trans[:, 0], sp_trans[:, 1]
+        # results, no per-step fancy-gather overhead.  Unpacking the
+        # transposes raises on any other predecessor width instead of
+        # silently decoding with the first two columns.
+        sp0, sp1 = sp_prevs.T
+        spt0, spt1 = sp_trans.T
         for i in range(1, t):
             # dense columns: full max over predecessors; the max
             # value is gathered from the argmax result (B·D reads)

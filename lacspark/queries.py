@@ -525,41 +525,31 @@ def word_boundary_merge(spark, sf_dir):
     """O15 expressed in pure SQL: boundary flag → running sum →
     group-concat (SURVEY §2.1 O15 'pure-SQL alternative').
 
-    r7: the running sum and the group-concat are both per-document,
-    so ONE aggregate() fold over the doc's token array builds every
-    (word_id, merged, n_parts) group in the scan projection — the r6
-    plan's two exchanges (running-sum window by doc_id, then groupBy
-    (doc_id, word_id)) are gone entirely; measured 1.0 s → 0.46 s,
-    rows identical."""
+    The running sum and the group-concat are both per-document, so
+    every (word_id, merged, n_parts) group is built in the scan
+    projection, with no window and no exchange.  The 1-based
+    positions of the boundary tokens are collected once; the group
+    starts are those, plus position 1 (word_id 0) when the first
+    token is not a boundary; each group is then one ``slice`` +
+    ``array_join`` of the token array up to the next start — linear
+    in the document's length."""
     from .spark.dedup import explode_once
     from .spark.tagger import ensure_parallelism
     d = ensure_parallelism(load(spark, sf_dir, "documents"))
     toks = F.expr("filter(split(text, ' '), x -> length(x) > 0)")
-    fold = """
-    aggregate(__t,
-      named_struct('wid', cast(0 as bigint),
-                   'out', cast(array() as
-                       array<struct<word_id: bigint, merged: string,
-                                    n_parts: bigint>>)),
-      (a, x) -> case
-        when x rlike '^[aeiou]' then named_struct('wid', a.wid + 1,
-          'out', array_append(a.out, named_struct('word_id', a.wid + 1,
-                 'merged', x, 'n_parts', cast(1 as bigint))))
-        when size(a.out) = 0 then named_struct('wid', a.wid,
-          'out', array(named_struct('word_id', a.wid,
-                 'merged', x, 'n_parts', cast(1 as bigint))))
-        else named_struct('wid', a.wid,
-          'out', concat(slice(a.out, 1, size(a.out) - 1),
-                 array(named_struct(
-                       'word_id', element_at(a.out, -1).word_id,
-                       'merged', concat(element_at(a.out, -1).merged,
-                                        ' ', x),
-                       'n_parts', element_at(a.out, -1).n_parts + 1))))
-        end,
-      a -> a.out)
-    """
+    bounds = F.expr("filter(transform(__t, (x, i) -> "
+                    "if(x rlike '^[aeiou]', i + 1, null)), i -> i is not null)")
+    starts = F.expr("if(size(__t) = 0 or array_contains(__b, 1), __b, "
+                    "concat(array(1), __b))")
+    n_parts = "(if(k + 1 < size(__s), __s[k + 1], size(__t) + 1) - s)"
+    groups = F.expr(f"""transform(__s, (s, k) -> named_struct(
+        'word_id', cast(k + 1 + size(__b) - size(__s) as bigint),
+        'merged', array_join(slice(__t, s, {n_parts}), ' '),
+        'n_parts', cast({n_parts} as bigint)))""")
     rows = (d.select("doc_id", toks.alias("__t"))
-            .select("doc_id", F.expr(fold).alias("__g")))
+            .select("doc_id", "__t", bounds.alias("__b"))
+            .select("doc_id", "__t", "__b", starts.alias("__s"))
+            .select("doc_id", groups.alias("__g")))
     out = explode_once(rows, ["doc_id"], "__g", "g")
     return out.select("doc_id", F.col("g.word_id").alias("word_id"),
                       F.col("g.merged").alias("merged"),

@@ -1,29 +1,27 @@
-"""File-level KG extraction operator over the repos_files corpus.
+"""File-level KG extraction over the repos_files corpus.
 
 Input shape (BASELINE input_hint): ``repos_files(repo, path, commit,
-lang, content)``.  One fused ``mapInPandas`` stage per file row:
-split content into lines (K1), run the engine over ALL lines of the
-Arrow batch as one flat ragged batch (maximum amortization — the
-line/file boundary is metadata, not a batch boundary), extract
-mentions + triples per line (K3/K4), and verify the per-row sha256
-invariant *inside the UDF*: the engine guarantees
-``''.join(words) == line`` per line, and the reassembled
-``'\\n'.join(lines)`` is hashed and compared against
-``sha2(content, 256)`` computed JVM-side — no extra shuffle for the
-integrity gate (SURVEY §2.2 K1's regroup-check, optimized away).
+lang, content)``.  ``tag_files`` is the tagger's one tag core with
+each file's lines as its segments (K1): every line of an Arrow batch
+goes through one engine call, and mentions + triples (K3/K4) carry
+the line's ``sent_id``.  The per-row sha256 invariant is checked
+*inside the UDF*: the engine guarantees ``''.join(words) == line``
+per line, and the reassembled ``'\\n'.join(lines)`` is hashed and
+compared against ``sha2(content, 256)`` computed JVM-side — no extra
+shuffle for the integrity gate (SURVEY §2.2 K1's regroup-check,
+optimized away).  ``tagger.explode_mentions``/``explode_triples``
+turn the output into one row per mention/triple.
 """
 
 from __future__ import annotations
 
 import hashlib
-from typing import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .tagger import MENTION_FIELDS, TRIPLE_FIELDS, _worker_engine
+from .tagger import MENTION_FIELDS, TRIPLE_FIELDS, _tag_core
 
 FILE_KEYS = ["repo", "path", "commit", "lang"]
 
@@ -41,76 +39,33 @@ FILE_OUTPUT_FIELDS = [
 ]
 
 
-def tag_files(df: DataFrame, content_col: str = "content",
-              sha_col: str = "content_sha256",
-              mode: str = "rank",
-              custom_lines: tuple[str, ...] = (),
-              use_automaton: bool = False,
-              triple_window: int = 8,
-              auto_repartition: bool = True) -> DataFrame:
+def tag_files(df: DataFrame, mode: str = "rank",
+              custom_lines: tuple[str, ...] = ()) -> DataFrame:
     """K1+K2+K3+K4 fused over whole-file rows.
 
-    Requires ``sha_col`` (add with ``F.sha2(content, 256)`` at scan
-    time so the hash of the *source bytes* is fixed before any python
-    touches the row).
+    Requires ``content_sha256`` (add with ``F.sha2(content, 256)`` at
+    scan time so the hash of the *source bytes* is fixed before any
+    python touches the row).
     """
-    if auto_repartition:
-        from .tagger import ensure_parallelism
-        df = ensure_parallelism(df)
-    out_schema = T.StructType(list(df.schema.fields) + FILE_OUTPUT_FIELDS)
-    custom_lines = tuple(custom_lines)
+    def fill(eng, per_row, pdf):
+        n_lines, n_tokens, sha_ok, mentions, triples = [], [], [], [], []
+        for rows, sha in zip(per_row, pdf["content_sha256"]):
+            rebuilt = "\n".join("".join(r.words) for r in rows)
+            sha_ok.append(
+                hashlib.sha256(rebuilt.encode("utf-8")).hexdigest() == sha)
+            n_lines.append(len(rows))
+            n_tokens.append(sum(len(r.words) for r in rows))
+            f_mentions, f_triples = [], []
+            for sent_id, r in enumerate(rows):
+                m, t3 = eng.extract(r)
+                f_mentions.extend((sent_id, *x) for x in m)
+                f_triples.extend((sent_id, *x) for x in t3)
+            mentions.append(f_mentions)
+            triples.append(f_triples)
+        return n_lines, n_tokens, sha_ok, mentions, triples
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        eng = _worker_engine(custom_lines, use_automaton)
-        for pdf in batches:
-            contents = ["" if c is None else str(c) for c in pdf[content_col]]
-            shas = list(pdf[sha_col])
-            per_file_lines = [c.split("\n") for c in contents]
-            flat = [ln for lines in per_file_lines for ln in lines]
-            results = eng.run_batch(flat, mode=mode)
-
-            n_lines_col, n_tokens_col, sha_ok_col = [], [], []
-            mentions_col, triples_col = [], []
-            cursor = 0
-            for lines, content, sha in zip(per_file_lines, contents, shas):
-                rows = results[cursor:cursor + len(lines)]
-                cursor += len(lines)
-                rebuilt = "\n".join("".join(r.words) for r in rows)
-                digest = hashlib.sha256(rebuilt.encode("utf-8")).hexdigest()
-                sha_ok_col.append(digest == sha)
-                n_lines_col.append(len(lines))
-                n_tokens_col.append(sum(len(r.words) for r in rows))
-                f_mentions, f_triples = [], []
-                for sent_id, r in enumerate(rows):
-                    m, t3 = eng.extract(r, window=triple_window)
-                    f_mentions.extend((sent_id, *x) for x in m)
-                    f_triples.extend((sent_id, *x) for x in t3)
-                mentions_col.append(f_mentions)
-                triples_col.append(f_triples)
-
-            pdf = pdf.copy()
-            pdf["n_lines"] = n_lines_col
-            pdf["n_tokens"] = n_tokens_col
-            pdf["sha_ok"] = sha_ok_col
-            pdf["mentions"] = mentions_col
-            pdf["triples"] = triples_col
-            yield pdf
-
-    return df.mapInPandas(run, schema=out_schema)
-
-
-def file_mentions(tagged: DataFrame, keys: list[str] | None = None) -> DataFrame:
-    keys = keys or FILE_KEYS
-    m = tagged.select(*keys, F.explode("mentions").alias("m"))
-    return m.select(*keys, "m.sent_id", "m.word", "m.tag", "m.rank",
-                    "m.word_idx", "m.char_begin")
-
-
-def file_triples(tagged: DataFrame, keys: list[str] | None = None) -> DataFrame:
-    keys = keys or FILE_KEYS
-    t = tagged.select(*keys, F.explode("triples").alias("t"))
-    return t.select(*keys, "t.sent_id", "t.subj", "t.pred", "t.obj",
-                    "t.conf", "t.sal")
+    return _tag_core(df, "content", mode, custom_lines, FILE_OUTPUT_FIELDS,
+                     lambda content: content.split("\n"), fill)
 
 
 def mention_salience_topk(mentions: DataFrame, keys: list[str],

@@ -5,7 +5,8 @@ Flow (SURVEY §4.3):
 
   scan(repos_files) + sha2(content) JVM-side
   → salt-repartition on pmod(xxhash64(repo, path, commit), n_buckets)   (K9)
-  → tag_files (fused K1-K4, in-UDF sha verification)
+  → tag_files (fused K1-K4 on the tagger's core, in-UDF sha verification)
+  → explode_mentions / explode_triples (sent_id kept)
   → write mentions / triples / files parquet, partitioned by bucket
   → lineage append (bucket, counts, sha stats, wall)                    (K10)
   → cap_audit append (run_id, op, cap, drops) — no-silent-caps rows
@@ -29,7 +30,8 @@ from pyspark.sql import functions as F
 
 from .canonical import canonical_map
 from .graph import build_edges, build_vertices
-from .kg import FILE_KEYS, file_mentions, file_triples, tag_files
+from .kg import FILE_KEYS, tag_files
+from .tagger import explode_mentions, explode_triples
 
 BUCKET_COL = "bucket"
 
@@ -79,8 +81,8 @@ def run_pipeline(spark: SparkSession, files: DataFrame, out_dir: str,
     tagged = tagged.persist()
 
     keys = FILE_KEYS + [BUCKET_COL]
-    mentions = file_mentions(tagged, keys)
-    triples = file_triples(tagged, keys)
+    mentions = explode_mentions(tagged, keys)
+    triples = explode_triples(tagged, keys)
 
     # dynamic partition overwrite (set in session.py): a bucket that
     # crashed mid-write is REPLACED on replay, never double-appended —

@@ -1,14 +1,17 @@
 """Arrow-batched tagger operator: the engine as a Spark map stage.
 
-One ``mapInPandas`` fuses the whole per-row pipeline (SURVEY §2.2 K2 +
-K3/K4: chars → q2b → DAG-seg → ids → GRU-CRF → decode → custom →
-merge → rank → mention/triple extraction) so data never leaves the
-python worker between stages — the Spark re-expression of the
-reference's single fused inference program (models.py:71-175).
+One Arrow map stage (``_tag_core``) fuses the whole per-row pipeline
+(SURVEY §2.2 K2 + K3/K4: chars → q2b → DAG-seg → ids → GRU-CRF →
+decode → custom → merge → rank → mention/triple extraction) so data
+never leaves the python worker between stages — the Spark
+re-expression of the reference's single fused inference program
+(models.py:71-175).  Documents (``tag_and_extract``, one segment per
+row) and files (``kg.tag_files``, one segment per line) both run on
+it and differ only in how a row's results become columns.
 
 The engine is constructed once per python worker process and reused
-across tasks (module-level singleton keyed by config) — ≙ the
-reference's per-thread predictor clone sharing weights
+across tasks (module-level singleton keyed by the custom-dict lines)
+— ≙ the reference's per-thread predictor clone sharing weights
 (c++/src/lac.cpp:64-79).  Model/dict resources travel with the
 package zip (spark-submit --py-files); custom-dict entries travel in
 the closure (small, driver-parsed).
@@ -16,7 +19,8 @@ the closure (small, driver-parsed).
 
 from __future__ import annotations
 
-from typing import Iterator
+from itertools import islice
+from typing import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -51,92 +55,97 @@ EXTRACT_OUTPUT_FIELDS = TAG_OUTPUT_FIELDS + [
 ]
 
 
-def _worker_engine(custom_lines: tuple[str, ...], use_automaton: bool):
-    key = (custom_lines, use_automaton)
-    eng = _WORKER_ENGINES.get(key)
+def _worker_engine(custom_lines: tuple[str, ...]):
+    eng = _WORKER_ENGINES.get(custom_lines)
     if eng is None:
         from lacspark.engine import LacEngine
 
-        eng = LacEngine(use_automaton=use_automaton)
+        eng = LacEngine()
         for line in custom_lines:
             eng.add_word(line)
-        _WORKER_ENGINES[key] = eng
+        _WORKER_ENGINES[custom_lines] = eng
     return eng
 
 
-def ensure_parallelism(df: DataFrame, min_factor: int = 1) -> DataFrame:
+def ensure_parallelism(df: DataFrame) -> DataFrame:
     """Guard against the small-file trap: a tiny parquet input arrives
     as 1-2 partitions and a CPU-bound UDF then runs on 1-2 cores.
-    Round-robin repartition up to ``min_factor × defaultParallelism``
-    when the input has fewer partitions than cores.  No-op on inputs
-    that are already wide (no shuffle added at real scale).
+    Round-robin repartition to one partition per core when the input
+    has fewer partitions than cores.  No-op on inputs that are already
+    wide (no shuffle added at real scale).
 
-    min_factor 1 (r7, was 2): at one round-robin partition per core
-    the work is already balanced (50+ docs/partition at sf0.1), and
-    each EXTRA python task costs ~10 ms of worker setup — measured
-    1.26 s → 0.89 s on the tag query at 64 → 32 partitions, with the
-    trivial-UDF floor showing the same gap (0.63 → 0.40), so the win
-    is pure task overhead, not compute."""
+    One partition per core, not more: that already balances the work
+    (50+ docs/partition at sf0.1), and each extra python task only
+    adds about 10 ms of worker setup."""
     if df.isStreaming:  # micro-batch sizing is the trigger's job
         return df
-    sc = df.sparkSession.sparkContext
-    cores = sc.defaultParallelism
+    cores = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < cores:
-        return df.repartition(min_factor * cores)
+        return df.repartition(cores)
     return df
+
+
+def _tag_core(df: DataFrame, text_col: str, mode: str,
+              custom_lines: tuple[str, ...], new_fields: list,
+              split: Callable[[str], list[str]],
+              fill: Callable) -> DataFrame:
+    """The one tag operator behind documents and files.
+
+    Each row's text is cut into segments by ``split``; all segments
+    of an Arrow batch go through ONE ``run_batch`` call (the row
+    boundary is metadata, not a batch boundary).  ``fill(eng,
+    per_row, pdf)`` then turns each row's list of results into the
+    columns of ``new_fields``, in order.
+    """
+    df = ensure_parallelism(df)
+    out_schema = T.StructType(list(df.schema.fields) + new_fields)
+    custom_lines = tuple(custom_lines)
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        eng = _worker_engine(custom_lines)
+        for pdf in batches:
+            segs = [split("" if t is None else str(t)) for t in pdf[text_col]]
+            flat = iter(eng.run_batch([s for ss in segs for s in ss],
+                                      mode=mode))
+            per_row = [list(islice(flat, len(ss))) for ss in segs]
+            pdf = pdf.copy()
+            for f, col in zip(new_fields, fill(eng, per_row, pdf)):
+                pdf[f.name] = col
+            yield pdf
+
+    return df.mapInPandas(run, schema=out_schema)
 
 
 def tag_and_extract(df: DataFrame, text_col: str = "text",
                     mode: str = "rank",
                     custom_lines: tuple[str, ...] = (),
-                    use_automaton: bool = False,
-                    with_extraction: bool = True,
-                    triple_window: int = 8,
-                    auto_repartition: bool = True) -> DataFrame:
+                    with_extraction: bool = True) -> DataFrame:
     """Append words/tags/ranks (+ mentions/triples) columns.
 
     Keeps every input column (row identity preserved — empty texts
     yield empty arrays in place, models.py:73-101 semantics without
     any reordering).
     """
-    if auto_repartition:
-        df = ensure_parallelism(df)
+    def fill(eng, per_row, pdf):
+        results = [r for (r,) in per_row]
+        cols = [[r.words for r in results], [r.tags for r in results],
+                [r.ranks or [0] * len(r.words) for r in results]]
+        if with_extraction:
+            extracted = [eng.extract(r) for r in results]
+            cols += [[m for m, _ in extracted], [t for _, t in extracted]]
+        return cols
+
     new_fields = EXTRACT_OUTPUT_FIELDS if with_extraction else TAG_OUTPUT_FIELDS
-    out_schema = T.StructType(list(df.schema.fields) + new_fields)
-    custom_lines = tuple(custom_lines)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        eng = _worker_engine(custom_lines, use_automaton)
-        for pdf in batches:
-            texts = ["" if t is None else str(t) for t in pdf[text_col]]
-            results = eng.run_batch(texts, mode=mode)
-            pdf = pdf.copy()
-            pdf["words"] = [r.words for r in results]
-            pdf["tags"] = [r.tags for r in results]
-            pdf["ranks"] = [r.ranks if r.ranks else [0] * len(r.words)
-                            for r in results]
-            if with_extraction:
-                mentions, triples = [], []
-                for r in results:
-                    m, t3 = eng.extract(r, window=triple_window)
-                    mentions.append(m)
-                    triples.append(t3)
-                pdf["mentions"] = mentions
-                pdf["triples"] = triples
-            yield pdf
-
-    return df.mapInPandas(run, schema=out_schema)
+    return _tag_core(df, text_col, mode, custom_lines, new_fields,
+                     lambda text: [text], fill)
 
 
 def explode_mentions(tagged: DataFrame, keys: list[str]) -> DataFrame:
-    """K3: one row per entity mention, with position + salience."""
-    m = tagged.select(*keys, F.explode("mentions").alias("m"))
-    return m.select(*keys, "m.word", "m.tag", "m.rank", "m.word_idx",
-                    "m.char_begin")
+    """K3: one row per entity mention, with position + salience
+    (and ``sent_id`` when the rows are files)."""
+    return tagged.select(*keys, F.inline("mentions"))
 
 
 def explode_triples(tagged: DataFrame, keys: list[str]) -> DataFrame:
-    """K4: one row per (subj, pred, obj, conf, sal)."""
-    t = tagged.select(*keys, F.explode("triples").alias("t"))
-    return t.select(*keys, "t.subj", "t.pred", "t.obj", "t.conf",
-                    "t.sal")
+    """K4: one row per (subj, pred, obj, conf, sal), likewise."""
+    return tagged.select(*keys, F.inline("triples"))

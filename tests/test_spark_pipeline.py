@@ -11,10 +11,11 @@ from lacspark.engine import LacEngine
 from lacspark.spark.canonical import (candidate_pairs, canonical_map,
                                       connected_components, minhash_bands,
                                       surface_forms)
-from lacspark.spark.kg import mention_salience_topk
+from lacspark.spark.kg import FILE_KEYS, mention_salience_topk, tag_files
 from lacspark.spark.pipeline import run_pipeline
 from lacspark.spark.repos_files import synth_repos_files
-from lacspark.spark.tagger import explode_mentions, tag_and_extract
+from lacspark.spark.tagger import (explode_mentions, explode_triples,
+                                   tag_and_extract)
 
 SF = "/root/testdata/sf0.001"
 
@@ -42,6 +43,56 @@ def test_tagger_matches_oracle_exactly(spark, docs):
         assert [tuple(m) for m in g.mentions] == om
         assert [(t.subj, t.pred, t.obj, t.conf, t.sal)
                 for t in g.triples] == ot
+
+
+def test_tag_files_matches_engine_line_by_line(spark):
+    """File mode shares the document tagger's core: per file, the
+    Spark output equals a driver-side engine run over its lines, with
+    each mention/triple carrying its line's sent_id; sha_ok is False
+    exactly for the row whose content_sha256 is wrong."""
+    contents = {
+        "empty.txt": "",
+        "trailing.txt": "百度是一家高科技公司，李彦宏在北京创办了百度。\n",
+        "multi.txt": ("百度是一家高科技公司，李彦宏在北京创办了百度。\n"
+                      "LAC 2.0 supports 中文分词 and POS tagging\n\n"
+                      "张三在上海大学学习计算机科学，他喜欢研究自然语言处理。"),
+    }
+    contents["bad_sha.txt"] = contents["multi.txt"]
+    df = spark.createDataFrame(
+        [("r", p, "c", "text", c) for p, c in contents.items()],
+        "repo string, path string, commit string, lang string, "
+        "content string")
+    df = df.withColumn("content_sha256", F.sha2(
+        F.when(F.col("path") == "bad_sha.txt", F.lit("x"))
+        .otherwise(F.col("content")), 256))
+    tagged = tag_files(df.repartition(3), mode="rank").cache()
+    got = {r.path: r for r in tagged.collect()}
+    eng = LacEngine()
+    for path, content in contents.items():
+        lines = content.split("\n")
+        oracle = eng.run_batch(lines, "rank")
+        want_m, want_t = [], []
+        for sent_id, o in enumerate(oracle):
+            m, t = eng.extract(o)
+            want_m += [(sent_id, *x) for x in m]
+            want_t += [(sent_id, *x) for x in t]
+        g = got[path]
+        assert g.n_lines == len(lines)
+        assert g.n_tokens == sum(len(o.words) for o in oracle)
+        assert [tuple(m) for m in g.mentions] == want_m
+        assert [tuple(t) for t in g.triples] == want_t
+        assert g.sha_ok == (path != "bad_sha.txt")
+    assert any(m.sent_id > 0 for m in got["multi.txt"].mentions)
+    assert got["multi.txt"].triples
+
+    mentions = explode_mentions(tagged, FILE_KEYS)
+    assert mentions.columns == FILE_KEYS + [
+        "sent_id", "word", "tag", "rank", "word_idx", "char_begin"]
+    assert mentions.count() == sum(len(g.mentions) for g in got.values())
+    triples = explode_triples(tagged, FILE_KEYS)
+    assert triples.columns == FILE_KEYS + [
+        "sent_id", "subj", "pred", "obj", "conf", "sal"]
+    tagged.unpersist()
 
 
 def test_custom_lines_respected_in_udf(spark):
