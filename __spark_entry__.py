@@ -75,7 +75,7 @@ _PRIORITY = [
 # query_hash_snapshot.json: editing a query without pinning it here
 # fails CI.
 _FRESH = [
-    "word_boundary_merge",    # groups sliced from one boundary array
+    "quality_lm_score",       # LM tables are Arrow LocalRelations
 ]
 
 def _folded() -> frozenset:

@@ -184,7 +184,10 @@ class LacEngine:
         id_seqs = [r[1] for r in rows]
         label_seqs = [r[2] for r in rows]
         if spark is not None:
-            df = spark.createDataFrame(
+            from .spark.session import local_frame
+
+            df = local_frame(
+                spark,
                 [(s.tolist(), l.tolist())
                  for s, l in zip(id_seqs, label_seqs)],
                 "ids array<long>, labels array<long>").cache()

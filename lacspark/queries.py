@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from .spark.memo import file_identity, input_fingerprint, memo
+from .spark.session import local_frame
 
 SPARK_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLE_SQL: dict[str, str] = {}
@@ -1267,8 +1268,8 @@ def quality_lm_score(spark, sf_dir):
                 ctx_rows.append((t1, int(nllq)))
             else:
                 bi_rows.append((t1, t2, int(nllq)))
-    bi = spark.createDataFrame(bi_rows, "t1 string, t2 string, nllq long")
-    ctx = spark.createDataFrame(ctx_rows, "t1 string, u_nllq long")
+    bi = local_frame(spark, bi_rows, "t1 string, t2 string, nllq long")
+    ctx = local_frame(spark, ctx_rows, "t1 string, u_nllq long")
 
     toks = F.filter(F.split("text", " "), lambda x: F.length(x) > 0)
     pairs_arr = F.expr(

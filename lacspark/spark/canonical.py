@@ -24,6 +24,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .session import local_frame
+
 
 def surface_forms(mentions: DataFrame, word_col: str = "word") -> DataFrame:
     """Distinct normalized surface forms with their char-3-gram sets."""
@@ -143,7 +145,7 @@ def connected_components(vertices: DataFrame, edges: DataFrame,
                 lo, hi = (ra, rb) if ra < rb else (rb, ra)
                 parent[hi] = lo
         rows = [(r.form, find(r.form)) for r in vert_rows]
-        return spark.createDataFrame(rows, "form string, canonical string")
+        return local_frame(spark, rows, "form string, canonical string")
     # Orient every edge (hi, lo); both star operations preserve the
     # orientation, so `lo` is always the smaller label.
     e = (edges.select(F.greatest("src", "dst").alias("hi"),
@@ -238,8 +240,8 @@ def canonical_map(mentions: DataFrame, word_col: str = "word",
             counts=(audit["n_units_capped"], audit["n_rows_dropped"]))
         rows = [(f, c, eid) for f, (c, eid) in sorted(cmap.items())]
         forms.unpersist()
-        return spark.createDataFrame(
-            rows, "form string, canonical string, entity_id long")
+        return local_frame(
+            spark, rows, "form string, canonical string, entity_id long")
     banded = minhash_bands(forms, num_hashes, band_size)
     # CC probes the edge count and then reads edges again (driver
     # union-find or per-iteration joins) — materialize once

@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from .canonical import canonical_map
 from .graph import build_edges, build_vertices
 from .kg import FILE_KEYS, tag_files
+from .session import local_frame
 from .tagger import explode_mentions, explode_triples
 
 BUCKET_COL = "bucket"
@@ -110,13 +111,14 @@ def run_pipeline(spark: SparkSession, files: DataFrame, out_dir: str,
              .withColumn("run_id", F.lit(run_id))
              .withColumn("status", F.lit("ok"))
              .withColumn("wall_ms",
-                         F.lit(int((time.time() - t_start) * 1000)))
-             .withColumn("committed_at", F.current_timestamp()))
+                         F.lit(int((time.time() - t_start) * 1000))))
     # collect once, then persist lineage from the collected rows —
-    # re-evaluating stats after the append would see its own output
+    # re-evaluating stats after the append would see its own output.
+    # The commit time is stamped JVM-side, at the write.
     stat_rows = stats.collect()
     if stat_rows:
-        write_table(spark.createDataFrame(stat_rows, stats.schema),
+        write_table(local_frame(spark, stat_rows, stats.schema)
+                    .withColumn("committed_at", F.current_timestamp()),
                     out_dir, "lineage", "append")
 
     metrics = {r[BUCKET_COL]: r.asDict() for r in stat_rows}
@@ -145,7 +147,8 @@ def run_pipeline(spark: SparkSession, files: DataFrame, out_dir: str,
         # per-bucket lineage table (zeros prove the caps were inert)
         cap_audit = cap_audit_rows()
         if cap_audit:
-            audit_df = spark.createDataFrame(
+            audit_df = local_frame(
+                spark,
                 [(run_id, r["op"], r["unit"], r["cap"],
                   r["n_units_capped"], r["n_rows_dropped"])
                  for r in cap_audit],

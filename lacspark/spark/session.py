@@ -5,13 +5,20 @@ AQE (coalesce + skew-join split), Arrow-batched python UDF transfer
 and a shuffle-partition default sized for local[N] testing.  On a real
 cluster the same builder runs under spark-submit --py-files with
 executor counts supplied externally.
+
+``local_frame`` is how driver-side Python rows become a DataFrame: an
+Arrow table in the given schema, planned as a ``LocalRelation``.
+Evaluating it starts no Python task, where ``createDataFrame`` over
+Python rows plans a pickled Python RDD that runs one Python task per
+partition every time it is evaluated.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 # the directory holding the ``lacspark`` package
 _PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.dirname(
@@ -67,3 +74,23 @@ def get_spark(app_name: str = "lacspark", cores: int | None = None,
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def local_frame(spark: SparkSession, rows, schema: str | T.StructType
+                ) -> DataFrame:
+    """``rows`` (tuples or Rows, in ``schema``'s field order) as a
+    DataFrame planned as a ``LocalRelation``.  ``schema`` is a DDL
+    string or a ``StructType``.  The rows become a ``pyarrow.Table``
+    in that schema; a value that does not fit its field's type raises
+    here, since the Arrow-table path has no fallback."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
+        schema=arrow_schema)
+    return spark.createDataFrame(table, schema=schema)

@@ -17,6 +17,7 @@ from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from .memo import input_fingerprint, memo
+from .session import local_frame
 
 _DOT = ("aggregate(zip_with({a}, {b}, (x, y) -> x * y), "
         "cast(0 as double), (acc, v) -> acc + v)")
@@ -605,7 +606,7 @@ def _pq_rerank_driver(spark, srows, qvecs: dict, corpus: DataFrame,
         T.StructField("cosine", T.DoubleType()),
     ])
     if not srows:
-        return spark.createDataFrame([], out_schema)
+        return local_frame(spark, [], out_schema)
 
     def norm(v):
         s = 0.0
@@ -619,8 +620,8 @@ def _pq_rerank_driver(spark, srows, qvecs: dict, corpus: DataFrame,
         by_q.setdefault(r["query_id"], []).append(r["neighbor_id"])
         need.add(r["neighbor_id"])
     if nvecs is None:
-        idf = spark.createDataFrame(
-            [(i,) for i in sorted(need)],
+        idf = local_frame(
+            spark, [(i,) for i in sorted(need)],
             T.StructType([T.StructField("__id", id_type)]))
         nrows = (corpus.select(F.col(id_col).alias("__id"),
                                F.col(vec_col).alias("__v"))
@@ -644,7 +645,7 @@ def _pq_rerank_driver(spark, srows, qvecs: dict, corpus: DataFrame,
                         float(Decimal(repr(c)).quantize(
                             Decimal("0.000001"),
                             rounding=ROUND_HALF_UP))))
-    return spark.createDataFrame(out, out_schema)
+    return local_frame(spark, out, out_schema)
 
 
 def _pq_query_luts(queries: DataFrame, id_col: str, vec_col: str,
@@ -707,7 +708,7 @@ def _pq_query_luts(queries: DataFrame, id_col: str, vec_col: str,
             [id_field] + [T.StructField(f"__lut{mi}",
                                         T.ArrayType(T.DoubleType()))
                           for mi in range(m)])
-        return spark.createDataFrame(out, schema), qvecs
+        return local_frame(spark, out, schema), qvecs
 
     lut_exprs = [
         f"transform({_pq_cent_sql(books[mi][1])}, c -> aggregate("

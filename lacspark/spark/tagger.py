@@ -80,9 +80,33 @@ def ensure_parallelism(df: DataFrame) -> DataFrame:
     if df.isStreaming:  # micro-batch sizing is the trigger's job
         return df
     cores = df.sparkSession.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < cores:
+    if (_planned_partitions(df) or df.rdd.getNumPartitions()) < cores:
         return df.repartition(cores)
     return df
+
+
+def _planned_partitions(df: DataFrame) -> int | None:
+    """The partition count of an adaptive plan whose top exchange is
+    a ``repartition(n, ...)``, read from the plan; else None.
+
+    ``df.rdd`` on an adaptive plan runs its shuffle stages to learn
+    the final count.  AQE never changes the count of a
+    ``REPARTITION_BY_NUM`` exchange, so above one, reached through
+    single-child nodes only, the planned count is the final count.
+    Every other input answers None: a plan without an exchange is not
+    adaptive and ``df.rdd`` runs nothing for it; any other exchange's
+    count may still change."""
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.getClass().getSimpleName() != "AdaptiveSparkPlanExec":
+        return None
+    root = node = plan.inputPlan()
+    while node.children().size() == 1:
+        if node.getClass().getSimpleName() == "ShuffleExchangeExec":
+            if node.shuffleOrigin().toString() != "REPARTITION_BY_NUM":
+                return None
+            return root.outputPartitioning().numPartitions() or None
+        node = node.children().head()
+    return None
 
 
 def _tag_core(df: DataFrame, text_col: str, mode: str,

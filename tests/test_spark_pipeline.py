@@ -14,8 +14,8 @@ from lacspark.spark.canonical import (candidate_pairs, canonical_map,
 from lacspark.spark.kg import FILE_KEYS, mention_salience_topk, tag_files
 from lacspark.spark.pipeline import run_pipeline
 from lacspark.spark.repos_files import synth_repos_files
-from lacspark.spark.tagger import (explode_mentions, explode_triples,
-                                   tag_and_extract)
+from lacspark.spark.tagger import (ensure_parallelism, explode_mentions,
+                                   explode_triples, tag_and_extract)
 
 SF = "/root/testdata/sf0.001"
 
@@ -93,6 +93,28 @@ def test_tag_files_matches_engine_line_by_line(spark):
     assert triples.columns == FILE_KEYS + [
         "sent_id", "subj", "pred", "obj", "conf", "sal"]
     tagged.unpersist()
+
+
+def test_ensure_parallelism_runs_no_job_over_a_repartition(spark):
+    """Building the tag stage over a ``repartition(n, "bucket")`` input
+    (the KG job's shape) starts no Spark job: the partition count is
+    read from the plan, not from ``df.rdd``, which would run the
+    shuffle.  The counts are the ones ``df.rdd`` reports."""
+    cores = spark.sparkContext.defaultParallelism
+    files = (synth_repos_files(spark, n_files=32)
+             .withColumn("content_sha256", F.sha2("content", 256))
+             .withColumn("bucket", F.pmod(F.xxhash64("path"), F.lit(4))))
+    wide = files.repartition(cores, "bucket")
+    narrow = files.repartition(2, "bucket")
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup())
+    tag_files(wide)
+    tag_files(narrow)
+    assert ensure_parallelism(wide) is wide
+    assert ensure_parallelism(narrow) is not narrow
+    assert set(tracker.getJobIdsForGroup()) == before
+    assert wide.rdd.getNumPartitions() == cores
+    assert narrow.rdd.getNumPartitions() == 2
 
 
 def test_custom_lines_respected_in_udf(spark):
