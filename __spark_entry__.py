@@ -75,7 +75,7 @@ _PRIORITY = [
 # query_hash_snapshot.json: editing a query without pinning it here
 # fails CI.
 _FRESH = [
-    "quality_lm_score",       # LM tables are Arrow LocalRelations
+    "doc_rolling_fingerprint",  # winnowing is one numpy pass per doc
 ]
 
 def _folded() -> frozenset:

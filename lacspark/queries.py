@@ -1705,11 +1705,8 @@ def doc_fingerprint(spark, sf_dir):
             x="lower(regexp_replace(text, ' +', ' '))")).alias("fp_int"))
 
 
-_RH_K, _RH_W, _RH_B, _RH_P = 8, 4, 131, (1 << 31) - 1
-_RH_POWS = [pow(_RH_B, _RH_K - 1 - j, _RH_P) for j in range(_RH_K)]
-
-
 def _rolling_oracle() -> str:
+    from .spark.dedup import _RH_K, _RH_P, _RH_POWS, _RH_W
     gram = " + ".join(
         f"(ascii(substring(text, i + {j}, 1))::BIGINT) * {_RH_POWS[j]}"
         for j in range(_RH_K))
@@ -1737,34 +1734,16 @@ def _rolling_oracle() -> str:
 def doc_rolling_fingerprint(spark, sf_dir):
     """WINNOWING document fingerprint over polynomial k-gram rolling
     hashes (the near-dup fingerprint family of Schleimer et al.'s
-    winnowing / MOSS): hash every 8-char gram with a base-131
+    winnowing / MOSS): hash every 8-code-point gram with a base-131
     polynomial mod 2^31-1, slide a 4-gram window keeping each
     window's minimum, and digest the distinct minima (count +
-    order-independent modular sum).  Everything is a projection —
-    grams, window minima, and digest are array expressions inside
-    one select, zero shuffle, zero UDF; the oracle replays the
-    identical arithmetic.  The O(n·k) per-position form is used
-    (k = 8 multiplies) — semantically identical to the O(n)
-    rolling update, and expressible as a pure Spark projection."""
-    gram = " + ".join(
-        f"cast(ascii(substring(text, i + {j}, 1)) as bigint) "
-        f"* {_RH_POWS[j]}"
-        for j in range(_RH_K))
-    grams = (f"transform(sequence(1, length(text) - {_RH_K - 1}), "
-             f"i -> ({gram}) % {_RH_P})")
-    mins = (f"array_distinct(transform("
-            f"sequence(1, size(__g) - {_RH_W - 1}), "
-            f"i -> array_min(slice(__g, i, {_RH_W}))))")
-    digest = (f"aggregate(__m, cast(0 as bigint), "
-              f"(a, x) -> (a + x) % {_RH_P})")
-    d = load(spark, sf_dir, "documents")
-    return (d.filter(F.length("text") >= _RH_K)
-            .select("doc_id", F.expr(grams).alias("__g"))
-            .select("doc_id", F.size("__g").alias("n_grams"),
-                    F.expr(mins).alias("__m"))
-            .select("doc_id", F.col("n_grams").cast("long"),
-                    F.size("__m").cast("long").alias("n_winnow"),
-                    F.expr(digest).alias("winnow_digest")))
+    order-independent modular sum).  One Arrow map stage, one
+    vectorized numpy pass per document in the O(n·k) per-position
+    form (k = 8 multiplies); the oracle replays the identical
+    arithmetic.  Documents under 8 code points emit no row; those of
+    8–10 have no full window: n_winnow 0, NULL digest."""
+    from .spark.dedup import winnow
+    return winnow(load(spark, sf_dir, "documents"), "doc_id", "text")
 
 
 @register("binary_payload_meta", """

@@ -1,22 +1,29 @@
 """Deduplication operators for training-data pipelines.
 
-All hashing is md5-derived (cross-engine deterministic) or
-xxhash64-based (JVM-only fast path).  Four families:
+All hashing is md5-derived (cross-engine deterministic),
+xxhash64-based (JVM-only fast path) or, for winnowing, a polynomial
+hash of code points.  Five families:
 
 * exact: one hash-groupBy — the cheapest pass, run first at scale;
 * minhash/LSH: token/shingle minhash → bands → equi-join candidates →
   exact-jaccard verify (sub-quadratic near-dup detection);
 * simhash: per-document bit fingerprint; hamming-near docs share the
   fingerprint (or a band of it) — one aggregate, no join;
+* winnowing: per-document digest of the window minima of rolling
+  k-gram hashes — one numpy pass per document, no shuffle;
 * n-gram jaccard: exact verification primitive for any candidate set.
 """
 
 from __future__ import annotations
 
 import threading
+from typing import Iterator
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
 from .memo import input_fingerprint, memo
@@ -544,3 +551,59 @@ def simhash(df: DataFrame, id_col: str, text_col: str,
          .select(id_col, F.expr(fold).alias("__bits")))
     return d.select(id_col,
                     F.expr(f"cast({combined} as bigint)").alias("simhash"))
+
+
+# Winnowing constants: 8-code-point grams, 4-gram windows, base-131
+# polynomial hash mod 2^31-1.  A gram is sum(c[i+j] * _RH_POWS[j]):
+# code points < 2^21 and powers < 2^31, so 8 terms stay under 2^55
+# and the int64 arithmetic never overflows.
+_RH_K, _RH_W, _RH_B, _RH_P = 8, 4, 131, (1 << 31) - 1
+_RH_POWS = [pow(_RH_B, _RH_K - 1 - j, _RH_P) for j in range(_RH_K)]
+
+
+def _winnow_one(text: str) -> tuple[int, int, int | None]:
+    """(n_grams, n_winnow, winnow_digest) of one text of at least
+    ``_RH_K`` code points.  Fewer than ``_RH_W`` grams make no window:
+    (n_grams, 0, None)."""
+    c = np.frombuffer(text.encode("utf-32-le"), np.uint32).astype(np.int64)
+    n = len(c) - _RH_K + 1
+    g = sum(c[j:j + n] * p for j, p in enumerate(_RH_POWS)) % _RH_P
+    m = n - _RH_W + 1
+    if m <= 0:
+        return n, 0, None
+    mins = g[:m]
+    for j in range(1, _RH_W):
+        mins = np.minimum(mins, g[j:j + m])
+    u = np.unique(mins)
+    return n, len(u), int(u.sum() % _RH_P)
+
+
+def winnow(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
+    """(id, n_grams, n_winnow, winnow_digest): winnowing fingerprint
+    (Schleimer et al., SIGMOD 2003) of every text of at least 8 code
+    points.
+
+    Each 8-gram gets a polynomial hash, each window of 4 consecutive
+    grams keeps its minimum, and the distinct minima are digested as
+    their count and their sum mod p.  One Arrow map stage computes it
+    with one vectorized numpy pass per document, O(n·k) for k = 8.
+    A text of 8–10 code points has fewer grams than a window holds:
+    n_winnow 0 and a NULL digest."""
+    out_schema = T.StructType([
+        df.schema[id_col],
+        T.StructField("n_grams", T.LongType()),
+        T.StructField("n_winnow", T.LongType()),
+        T.StructField("winnow_digest", T.LongType())])
+    dtypes = {"n_grams": "int64", "n_winnow": "int64",
+              "winnow_digest": "Int64"}
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            out = pd.DataFrame(list(map(_winnow_one, pdf[text_col])),
+                               columns=list(dtypes)).astype(dtypes)
+            out.insert(0, id_col, pdf[id_col].to_numpy())
+            yield out
+
+    return (df.filter(F.length(text_col) >= _RH_K)
+            .select(id_col, text_col)
+            .mapInPandas(run, schema=out_schema))

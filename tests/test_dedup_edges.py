@@ -206,12 +206,11 @@ def test_multiband_catches_first_band_sign_flip(spark):
 
 
 def test_rolling_fingerprint_agrees_on_bmp_unicode(spark, tmp_path):
-    """Spark's ascii() returns the first UTF-16 code unit and
-    DuckDB's the Unicode code point — identical for every
-    Basic-Multilingual-Plane character (all CJK included), which the
-    rolling-hash arithmetic relies on.  Pin the agreement on mixed
-    CJK/ASCII text.  (Supplementary-plane characters WOULD diverge;
-    corpora with emoji need a codepoint-safe variant.)"""
+    """Both engines hash Unicode code points: the Spark kernel decodes
+    each text to UTF-32 and the DuckDB oracle's ascii() returns the
+    code point.  Pin the agreement on mixed CJK/ASCII text;
+    supplementary-plane characters are covered by
+    test_rolling_fingerprint_agrees_on_random_code_points."""
     rows = [
         (1, "zh", "百度是一家高科技公司总部在北京"),
         (2, "mix", "alpha 百度 beta 公司 gamma delta!"),
@@ -221,6 +220,43 @@ def test_rolling_fingerprint_agrees_on_bmp_unicode(spark, tmp_path):
     s, d = _run_both(spark, sf, "doc_rolling_fingerprint")
     assert s == d
     assert len(s) == 3
+
+
+def test_rolling_fingerprint_short_documents(spark, tmp_path):
+    """Documents of 8-10 code points have 1-3 grams, fewer than one
+    4-gram window: no minima, so n_winnow 0 and a NULL digest, as in
+    the oracle.  Shorter, empty and NULL texts emit no row."""
+    alphabet = "abcdefghijk"
+    rows = [(n, "en", alphabet[:n]) for n in (7, 8, 9, 10, 11)]
+    rows += [(20, "en", None), (21, "en", "")]
+    sf = _write_docs(spark, tmp_path, rows)
+    s, d = _run_both(spark, sf, "doc_rolling_fingerprint")
+    assert s == d
+    assert [r[0] for r in s] == [8, 9, 10, 11]
+    assert [r[1:3] for r in s] == [(1, 0), (2, 0), (3, 0), (4, 1)]
+    assert [r[3] is None for r in s] == [True, True, True, False]
+
+
+def test_rolling_fingerprint_agrees_on_random_code_points(spark, tmp_path):
+    """Seeded random texts of 0-60 code points drawn from ASCII, CJK
+    and the supplementary plane (emoji, 4 UTF-8 bytes each) agree
+    with the oracle row for row, an all-emoji document included."""
+    import random
+
+    rng = random.Random(20031)
+    pools = [[chr(c) for c in range(0x20, 0x7f)],
+             [chr(c) for c in range(0x4e00, 0x4e00 + 200)],
+             [chr(c) for c in range(0x1f600, 0x1f650)]]
+    rows = [(i, "xx", "".join(rng.choice(rng.choice(pools))
+                              for _ in range(rng.randint(0, 60))))
+            for i in range(200)]
+    rows.append((200, "xx", "".join(rng.choice(pools[2])
+                                    for _ in range(12))))
+    sf = _write_docs(spark, tmp_path, rows)
+    s, d = _run_both(spark, sf, "doc_rolling_fingerprint")
+    assert s == d
+    assert len(s) == sum(len(t) >= 8 for _, _, t in rows)
+    assert 200 in {r[0] for r in s}
 
 
 def test_rolling_fingerprint_winnow_invariance(spark, tmp_path):
