@@ -75,7 +75,11 @@ _PRIORITY = [
 # query_hash_snapshot.json: editing a query without pinning it here
 # fails CI.
 _FRESH = [
-    "doc_rolling_fingerprint",  # winnowing is one numpy pass per doc
+    # capped buckets are grouped rows, pairs expanded in place
+    "dedup_minhash_lsh", "dedup_near_keep_best", "dedup_near_components",
+    "dedup_substring_spans", "dedup_substring_clean",
+    "dedup_embedding_cosine", "dedup_embedding_keep_best",
+    "ann_lsh_topk",
 ]
 
 def _folded() -> frozenset:

@@ -92,7 +92,7 @@ def bench_queries(spark, sf_dir: str) -> dict[str, dict]:
 
 
 def main() -> None:
-    from lacspark.spark.dedup import cap_audit_rows, reset_cap_audit
+    from lacspark.spark.dedup import cap_audit, cap_audit_rows
     from lacspark.spark.session import get_spark
 
     spark = get_spark(app_name="lacspark-bench-sf1", cores=CPUS,
@@ -101,9 +101,9 @@ def main() -> None:
     synth_sf1(spark)
 
     base = bench_queries(spark, SRC_SF)
-    reset_cap_audit()
-    big = bench_queries(spark, OUT_DIR)
-    audit = cap_audit_rows()
+    with cap_audit() as scope:
+        big = bench_queries(spark, OUT_DIR)
+    audit = cap_audit_rows(scope)
 
     report = {"sf_base": SRC_SF, "sf1_dir": OUT_DIR,
               "replicas": N_REPLICAS, "cpus": CPUS,

@@ -22,8 +22,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
+from .dedup import (MD5INT, capped_buckets, explode_once, member_pairs,
+                    record_cap)
 from .session import local_frame
 
 
@@ -37,9 +38,6 @@ def surface_forms(mentions: DataFrame, word_col: str = "word") -> DataFrame:
         "transform(sequence(1, greatest(length(form) - 2, 1)), "
         "i -> substring(form, i, least(3, length(form))))"))
     return forms.withColumn("grams", grams)
-
-
-MD5INT = "cast(conv(substring(md5({x}), 1, 15), 16, 10) as bigint)"
 
 
 def minhash_bands(forms: DataFrame, num_hashes: int = 8,
@@ -60,8 +58,6 @@ def minhash_bands(forms: DataFrame, num_hashes: int = 8,
             *[F.col("sig")[b * band_size + j].cast("string")
               for j in range(band_size)]))
         for b in range(n_bands)])
-    from .dedup import explode_once
-
     # explode_once: a direct explode(bands) would inline the minhash
     # sig into the Generate and re-run it once per band
     return explode_once(
@@ -72,20 +68,19 @@ def minhash_bands(forms: DataFrame, num_hashes: int = 8,
 
 def candidate_pairs(banded: DataFrame, jaccard_threshold: float = 0.5,
                     max_bucket: int = 1000) -> DataFrame:
-    """Self-join within band buckets → verified similarity edges.
+    """Form pairs within band buckets → verified similarity edges.
 
-    Buckets larger than ``max_bucket`` are dropped (a bucket that
-    big means a degenerate band — at 10^12-file scale it would
-    quadratically explode; the dropped forms still canonicalize to
-    themselves).  AQE skew-join splitting handles the rest.
+    Each band bucket is grouped into one row of (form, grams) members
+    and its pairs are expanded in place (``dedup.member_pairs``), never
+    self-joined.  Buckets larger than ``max_bucket`` are dropped (a
+    bucket that big means a degenerate band — at 10^12-file scale it
+    would quadratically explode; the dropped forms still canonicalize
+    to themselves).
     """
-    from .dedup import cap_filter
-    small = cap_filter("canonical_candidate_pairs", banded, ["band"],
-                       max_bucket, "minhash band buckets")
-    a = small.alias("a")
-    b = small.alias("b")
-    pairs = (a.join(b, on="band")
-             .filter(F.col("a.form") < F.col("b.form"))
+    buckets = capped_buckets(
+        "canonical_candidate_pairs", banded, ["band"],
+        F.struct("form", "grams"), max_bucket, "minhash band buckets")
+    pairs = (member_pairs(buckets, by="form")
              .select(F.col("a.form").alias("src"),
                      F.col("b.form").alias("dst"),
                      F.col("a.grams").alias("g1"),
@@ -225,8 +220,6 @@ def canonical_map(mentions: DataFrame, word_col: str = "word",
             sum(len(r.form) for r in probe) <= driver_char_budget:
         from lacspark.canonical_py import canonical_map_py
 
-        from .dedup import _register_cap_audit
-
         spark = mentions.sparkSession
         audit: dict = {}
         cmap = canonical_map_py(
@@ -234,10 +227,10 @@ def canonical_map(mentions: DataFrame, word_col: str = "word",
             band_size=band_size, jaccard_threshold=jaccard_threshold,
             audit_out=audit)
         # the fast path reports the same drop accounting the
-        # distributed candidate_pairs cap registers
-        _register_cap_audit(
+        # distributed candidate_pairs cap observes
+        record_cap(
             "canonical_candidate_pairs", 1000, "minhash band buckets",
-            counts=(audit["n_units_capped"], audit["n_rows_dropped"]))
+            (audit["n_units_capped"], audit["n_rows_dropped"]))
         rows = [(f, c, eid) for f, (c, eid) in sorted(cmap.items())]
         forms.unpersist()
         return local_frame(

@@ -5,8 +5,9 @@ xxhash64-based (JVM-only fast path) or, for winnowing, a polynomial
 hash of code points.  Five families:
 
 * exact: one hash-groupBy — the cheapest pass, run first at scale;
-* minhash/LSH: token/shingle minhash → bands → equi-join candidates →
-  exact-jaccard verify (sub-quadratic near-dup detection);
+* minhash/LSH: token/shingle minhash → bands → one row per band
+  bucket, candidate pairs expanded from it → exact-jaccard verify
+  (sub-quadratic near-dup detection);
 * simhash: per-document bit fingerprint; hamming-near docs share the
   fingerprint (or a band of it) — one aggregate, no join;
 * winnowing: per-document digest of the window minima of rolling
@@ -16,15 +17,15 @@ hash of code points.  Five families:
 
 from __future__ import annotations
 
-import threading
+from contextlib import contextmanager
+from contextvars import ContextVar
 from typing import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.window import Window
 
 from .memo import input_fingerprint, memo
 
@@ -108,14 +109,6 @@ def explode_once(df: DataFrame, keys: list[str], array_col: str,
     return rows.select(*out)
 
 
-def token_shingles(df: DataFrame, id_col: str, text_col: str,
-                   n: int = 3) -> DataFrame:
-    """Row form of :func:`shingle_sets` — (id, token) distinct shingle
-    rows, for callers that need the relational shape."""
-    return explode_once(shingle_sets(df, id_col, text_col, n),
-                        [id_col], "shset", "token")
-
-
 def exact_duplicate_groups(df: DataFrame, id_col: str,
                            text_col: str) -> DataFrame:
     """(hash, n_docs, doc_ids) for every group with n_docs > 1."""
@@ -135,70 +128,109 @@ MINHASH_P = (1 << 31) - 1
 
 # ---------------------------------------------------------------------------
 # No-silent-caps accounting (VERDICT r4 item 5): every degenerate-
-# bucket cap in the dedup/ANN/canonicalization family registers a
-# LAZY audit aggregate when its plan is built; lineage writers and
-# tests evaluate them via cap_audit_rows().  Correctness never
-# depends on these (the caps are oracle-mirrored) — they make the
-# drops VISIBLE at run time instead of silently shrinking recall.
-_CAP_AUDIT: dict[str, dict] = {}
-_AUDIT_LOCK = threading.Lock()
+# bucket cap in the dedup/ANN/canonicalization family groups its
+# buckets through capped_buckets, which reports what it dropped to the
+# caller's cap_audit() scope.  Correctness never depends on it (the
+# caps are oracle-mirrored); it makes the drops VISIBLE at run time
+# instead of silently shrinking recall.
+_SCOPE: ContextVar[list[dict] | None] = ContextVar("cap_audit",
+                                                   default=None)
 
 
-def _register_cap_audit(op: str, cap: int, unit: str, *, plan=None,
-                        counts: tuple[int, int] | None = None) -> None:
-    with _AUDIT_LOCK:
-        _CAP_AUDIT[op] = {"cap": cap, "unit": unit, "plan": plan,
-                          "counts": counts}
+@contextmanager
+def cap_audit() -> Iterator[list[dict]]:
+    """Collect the drops of every capped operator PLANNED inside the
+    block, in this thread or task's context only: two driver threads
+    with their own scopes never see each other's entries.  Each
+    capped plan built here attaches an unnamed Observation to its
+    grouped buckets; read the yielded scope with
+    :func:`cap_audit_rows` after the plans ran.  Outside a scope the
+    caps apply and nothing is observed.  A memo hit (a
+    ``minhash_near_duplicates`` call served from memo) plans nothing
+    and dropped nothing in this run, so it adds no entry."""
+    scope: list[dict] = []
+    token = _SCOPE.set(scope)
+    try:
+        yield scope
+    finally:
+        _SCOPE.reset(token)
 
 
-def cap_filter(op: str, df: DataFrame, part_cols: list[str], cap: int,
-               unit: str) -> DataFrame:
-    """Drop rows whose (part_cols) group exceeds ``cap`` rows AND
-    register a drop-audit plan for the latest invocation of ``op``:
-    (distinct capped groups, rows dropped).  The audit is a lazy
-    plan: registering it is free, but EVALUATING it (cap_audit_rows)
-    re-runs the per-group window count over the input — a real
-    shuffle-sized job, not a constant-time lookup — and counts the
-    input as it stands at evaluation time, not registration time.
-    Callers that want audited numbers for a pipeline run should
-    evaluate right after the capped result materializes (run_pipeline
-    does), while the input is unchanged and its scan is page-warm."""
-    sized = df.withColumn(
-        "__n", F.count(F.lit(1)).over(Window.partitionBy(*part_cols)))
-    dropped = sized.filter(F.col("__n") > cap)
-    audit = dropped.agg(
-        F.count_distinct(*[F.col(c) for c in part_cols])
-        .alias("n_units_capped"),
-        F.count(F.lit(1)).alias("n_rows_dropped"))
-    _register_cap_audit(op, cap, unit, plan=audit)
-    return sized.filter(F.col("__n") <= cap).drop("__n")
+def record_cap(op: str, cap: int, unit: str,
+               counts: tuple[int, int]) -> None:
+    """Enter counts computed outside Spark (the canonical driver
+    path) into the active scope, if any."""
+    scope = _SCOPE.get()
+    if scope is not None:
+        scope.append({"op": op, "cap": cap, "unit": unit,
+                      "obs": None, "counts": counts})
 
 
-def cap_audit_rows() -> list[dict]:
-    """Evaluate every registered cap audit.  Each lazy entry costs a
-    re-run of that operator's window-count over its input (see
-    cap_filter — not tiny; fast in practice only because the input
-    scan is typically still page-warm).  Entries reflect each
-    operator's LATEST invocation in this process, counting the input
-    as it stands NOW."""
-    with _AUDIT_LOCK:
-        items = {k: dict(v) for k, v in _CAP_AUDIT.items()}
+def cap_audit_rows(scope: list[dict]) -> list[dict]:
+    """(op, cap, unit, n_units_capped, n_rows_dropped) per entry of
+    ``scope``, in planning order.  Reading starts no Spark job and
+    never waits for one: a plan that has not run reads as None
+    counts, and so does one whose observed stage the optimizer cut
+    out (an empty Row; see the excluded AQE rule in
+    ``session.get_spark``)."""
     out = []
-    for op in sorted(items):
-        ent = items[op]
-        if ent["counts"] is not None:
+    for ent in scope:
+        units = rows = None
+        obs = ent["obs"]
+        if obs is None:
             units, rows = ent["counts"]
-        else:
-            r = ent["plan"].collect()[0]
-            units, rows = int(r[0] or 0), int(r[1] or 0)
-        out.append({"op": op, "cap": ent["cap"], "unit": ent["unit"],
-                    "n_units_capped": units, "n_rows_dropped": rows})
+        elif obs._jo.future().isCompleted():
+            r = obs._jo.getRow()  # completed: returns at once
+            if r.length():
+                units, rows = r.get(0) or 0, r.get(1) or 0
+        out.append({"op": ent["op"], "cap": ent["cap"],
+                    "unit": ent["unit"], "n_units_capped": units,
+                    "n_rows_dropped": rows})
     return out
 
 
-def reset_cap_audit() -> None:
-    with _AUDIT_LOCK:
-        _CAP_AUDIT.clear()
+def capped_buckets(op: str, df: DataFrame, keys: list[str],
+                   member: Column, cap: int | None,
+                   unit: str) -> DataFrame:
+    """(*keys, members): one row per bucket of ``df`` grouped on
+    ``keys``, its members collected into one array, and only the
+    buckets of at most ``cap`` members kept.  Inside a
+    :func:`cap_audit` scope an Observation on the grouped frame
+    counts the dropped buckets and member rows.  The observed frame
+    must reach the result through an exchange that a ``limit``
+    cannot remove (a join, a window, an aggregate with aggregate
+    functions), so that it always runs as a whole stage: a limit in
+    its own stage runs, and counts, only some partitions, and under
+    ``limit(1)`` Spark drops a bare ``distinct``."""
+    buckets = df.groupBy(*keys).agg(F.collect_list(member).alias("members"))
+    if cap is None:
+        return buckets
+    size = F.size("members")
+    scope = _SCOPE.get()
+    if scope is not None:
+        obs = Observation()
+        buckets = buckets.observe(
+            obs, F.sum((size > cap).cast("long")).alias("n_units_capped"),
+            F.sum(F.when(size > cap, size).otherwise(0))
+            .alias("n_rows_dropped"))
+        scope.append({"op": op, "cap": cap, "unit": unit, "obs": obs,
+                      "counts": None})
+    return buckets.filter(size <= cap)
+
+
+def member_pairs(buckets: DataFrame, by: str | None = None) -> DataFrame:
+    """(a, b): every pair of one bucket's members with a < b, compared
+    on the struct field ``by`` if given.  Two explodes, the members
+    and then, per member, the larger members: no row holds an array
+    longer than its bucket, where an all-pairs array would hold the
+    bucket's size squared."""
+    def key(c: Column) -> Column:
+        return c[by] if by else c
+
+    return (buckets.select("members", F.explode("members").alias("a"))
+            .select("a", F.explode(F.filter(
+                "members", lambda y: key(y) > key(F.col("a"))))
+                .alias("b")))
 
 
 def minhash_ab(i: int) -> tuple[int, int]:
@@ -237,13 +269,14 @@ def minhash_signature(shsets: DataFrame, id_col: str,
 def lsh_candidates(sigs: DataFrame, id_col: str, num_hashes: int = 6,
                    band_size: int = 2,
                    max_bucket: int | None = None) -> DataFrame:
-    """Band the signatures and self-join: (d1, d2) candidate pairs.
+    """Band the signatures: (d1, d2) candidate pairs, the documents
+    sharing a (band, bucket key).
 
-    ``max_bucket`` drops degenerate buckets before the self-join —
+    Each bucket is grouped into one row and its pairs are expanded in
+    place (:func:`member_pairs`), so the bands are never self-joined.
+    ``max_bucket`` drops degenerate buckets before the expansion —
     the O(k²) guard that keeps a pathological band from exploding at
     corpus scale (the dropped docs still dedup via the exact pass)."""
-    from pyspark.sql.window import Window
-
     # ONE pass over the signatures: all band keys in a single array
     # projection, then posexplode.  (A union of per-band selects
     # recomputes the whole minhash projection once per band — 3× the
@@ -256,17 +289,12 @@ def lsh_candidates(sigs: DataFrame, id_col: str, num_hashes: int = 6,
     # explode_once: a direct posexplode(band_arr) would inline the
     # minhash transforms into the Generate and re-run them per band
     bands = explode_once(sigs.select(id_col, band_arr.alias("__bands")),
-                         [id_col], "__bands", "bkey", with_pos="band") \
-        .select(id_col, "band", "bkey")
-    if max_bucket is not None:
-        bands = cap_filter("lsh_candidates", bands, ["band", "bkey"],
-                           max_bucket, "minhash band buckets")
-    a, b = bands.alias("a"), bands.alias("b")
-    return (a.join(b, (F.col("a.band") == F.col("b.band"))
-                   & (F.col("a.bkey") == F.col("b.bkey"))
-                   & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")))
-            .select(F.col(f"a.{id_col}").alias("d1"),
-                    F.col(f"b.{id_col}").alias("d2"))
+                         [id_col], "__bands", "bkey", with_pos="band")
+    buckets = capped_buckets("lsh_candidates", bands, ["band", "bkey"],
+                             F.col(id_col), max_bucket,
+                             "minhash band buckets")
+    return (member_pairs(buckets)
+            .select(F.col("a").alias("d1"), F.col("b").alias("d2"))
             .distinct())
 
 
@@ -358,17 +386,18 @@ def substring_duplicate_spans(df: DataFrame, id_col: str, text_col: str,
     distribute): (1) per-doc k-gram fingerprints WITH token
     positions, built in one array projection and exploded once —
     one row per token position, the operator's inherent cost;
-    (2) ``max_df`` drops fingerprints occurring more than that many
-    times corpus-wide — the degenerate-gram guard that keeps a
-    ubiquitous boilerplate 8-gram from going quadratic in the join
-    (same posture as every LSH ``max_bucket`` here); (3) equi-join
-    on the fingerprint across documents (d1 < d2) → hit list, which
-    is tiny relative to the position list; (4) merge hits on the
-    same pair diagonal (p1 - p2) with consecutive positions into
-    maximal spans via ONE window + ONE aggregate (the islands-and-
-    gaps trick: p1 - row_number is constant within a run).  Total:
-    one shuffle for the fingerprint join, one for the window — no
-    all-pairs stage anywhere."""
+    (2) one group per fingerprint; ``max_df`` drops fingerprints
+    occurring more than that many times corpus-wide — the
+    degenerate-gram guard that keeps a ubiquitous boilerplate 8-gram
+    from going quadratic (same posture as every LSH ``max_bucket``
+    here); (3) each kept group expands its cross-document pairs
+    (d1 < d2) in place → hit list, which is tiny relative to the
+    position list; (4) merge hits on the same pair diagonal
+    (p1 - p2) with consecutive positions into maximal spans via ONE
+    window + ONE aggregate (the islands-and-gaps trick: p1 -
+    row_number is constant within a run).  Total: one shuffle for
+    the fingerprint group, one for the window — no all-pairs stage
+    anywhere."""
     from pyspark.sql.window import Window
 
     from .tagger import ensure_parallelism
@@ -383,27 +412,19 @@ def substring_duplicate_spans(df: DataFrame, id_col: str, text_col: str,
             .filter(F.size("__toks") >= k)
             .select(id_col, fps.alias("__fps")))
     pos_fp = explode_once(base, [id_col], "__fps", "fp", with_pos="pos")
-    capped = cap_filter("substring_duplicate_spans", pos_fp, ["fp"],
-                        max_df, "k-gram fingerprints")
     # Hit pairs WITHOUT a self-join: the r6 a⋈b equi-join planned the
     # whole scan→fingerprint→cap pipeline TWICE (one side per branch —
     # Spark shares no common subplan across a DataFrame self-join).
-    # One groupBy("fp") — which reuses the cap window's hash
-    # distribution, no extra exchange — gathers each fingerprint's
-    # (doc, pos) occurrences (bounded: ≤ max_df rows survive the cap)
-    # and an array expression expands the same d1 < d2 pairs in place.
-    groups = capped.groupBy("fp").agg(
-        F.collect_list(F.struct(F.col(id_col).alias("d"),
-                                F.col("pos").alias("p"))).alias("ms"))
-    pair_expr = F.expr(
-        "flatten(transform(ms, a -> "
-        "transform(filter(ms, b -> b.d > a.d), "
-        "b -> named_struct('d1', a.d, 'p1', a.p, "
-        "'d2', b.d, 'p2', b.p))))")
-    hits = (explode_once(groups.select(pair_expr.alias("__pairs")),
-                         [], "__pairs", "h")
-            .select(F.col("h.d1").alias("d1"), F.col("h.p1").alias("p1"),
-                    F.col("h.d2").alias("d2"), F.col("h.p2").alias("p2"))
+    # One groupBy("fp") gathers each fingerprint's (doc, pos)
+    # occurrences, the cap keeps the groups of at most max_df, and
+    # the same d1 < d2 pairs are expanded in place.
+    groups = capped_buckets(
+        "substring_duplicate_spans", pos_fp, ["fp"],
+        F.struct(F.col(id_col).alias("d"), F.col("pos").alias("p")),
+        max_df, "k-gram fingerprints")
+    hits = (member_pairs(groups, by="d")
+            .select(F.col("a.d").alias("d1"), F.col("a.p").alias("p1"),
+                    F.col("b.d").alias("d2"), F.col("b.p").alias("p2"))
             .withColumn("diag", F.col("p1") - F.col("p2")))
     w = Window.partitionBy("d1", "d2", "diag").orderBy("p1")
     runs = hits.withColumn(
@@ -471,20 +492,21 @@ def embedding_near_duplicates(df: DataFrame, id_col: str, vec_col: str,
 
     Scale posture (the round-2 fix): a single 2^nbits code is a hard
     bucket ceiling — at 10^9 vectors, 256 buckets means ~4M rows per
-    bucket and a quadratic self-join inside each.  Two guards:
+    bucket and a quadratic pair expansion inside each.  Two guards:
 
     * ``nbands`` independent b-bit codes over disjoint dim slices —
       a pair is a candidate if ANY band matches (recall ↑), and
       total selectivity scales with nbands × 2^nbits buckets;
     * ``max_bucket`` drops degenerate (band, code) buckets before the
-      self-join (same guard as the minhash path's lsh_candidates) —
-      a pathological all-same-sign corpus can no longer go quadratic.
+      pair expansion (same guard as the minhash path's
+      lsh_candidates) — a pathological all-same-sign corpus can no
+      longer go quadratic.
 
-    The band join moves only (id, band, code) rows; vectors ride
-    along only for the verified candidate pairs (two equi-joins pull
-    each side's array onto the pair row)."""
-    from pyspark.sql.window import Window
-
+    Each (band, code) bucket is grouped into one row of ids and its
+    pairs are expanded in place (:func:`member_pairs`), never
+    self-joined; vectors ride along only for the verified candidate
+    pairs (two equi-joins pull each side's array onto the pair
+    row)."""
     from .similarity import _DOT, _with_norm, sign_bucket
 
     v = _with_norm(df, id_col, vec_col, "d")
@@ -492,15 +514,12 @@ def embedding_near_duplicates(df: DataFrame, id_col: str, vec_col: str,
                       for b in range(nbands)])
     bands = explode_once(v.select("d", codes.alias("__codes")),
                          ["d"], "__codes", "code", with_pos="band")
-    if max_bucket is not None:
-        bands = cap_filter("embedding_near_duplicates", bands,
-                           ["band", "code"], max_bucket,
-                           "sign-code buckets")
-    a = bands.select(F.col("d").alias("d1"), "band", "code")
-    b = bands.select(F.col("d").alias("d2"), "band", "code")
-    cand = (a.join(b, ["band", "code"])
-            .filter(F.col("d1") < F.col("d2"))
-            .select("d1", "d2").distinct())
+    buckets = capped_buckets("embedding_near_duplicates", bands,
+                             ["band", "code"], F.col("d"), max_bucket,
+                             "sign-code buckets")
+    cand = (member_pairs(buckets)
+            .select(F.col("a").alias("d1"), F.col("b").alias("d2"))
+            .distinct())
     s1 = v.select(F.col("d").alias("d1"), F.col("d_vec").alias("d1_vec"),
                   F.col("d_norm").alias("d1_norm"))
     s2 = v.select(F.col("d").alias("d2"), F.col("d_vec").alias("d2_vec"),

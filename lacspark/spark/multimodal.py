@@ -26,7 +26,6 @@ from typing import Iterator
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 MEDIA_SCHEMA = T.StructType([
@@ -509,11 +508,3 @@ def resize_images(df: DataFrame, width: int, height: int) -> DataFrame:
                                                T.StringType())])
     return df.mapInPandas(run, schema=out_schema)
 
-
-def resize_stub(df: DataFrame, width: int, height: int) -> DataFrame:
-    """Resize is a per-payload transform; without a codec we record
-    the intent in metadata columns (the plumbing the judge can check)
-    and keep the payload opaque."""
-    return (df.withColumn("target_width", F.lit(width))
-            .withColumn("target_height", F.lit(height))
-            .withColumn("resize_status", F.lit("stubbed:no-codec")))

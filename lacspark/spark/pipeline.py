@@ -126,32 +126,32 @@ def run_pipeline(spark: SparkSession, files: DataFrame, out_dir: str,
     n_triples = sum(m["n_triples"] for m in metrics.values())
     sha_bad = sum(m["n_sha_bad"] for m in metrics.values())
 
-    cap_audit: list[dict] = []
+    audit: list[dict] = []
     if build_graph and n_files:
         # read back through the same shim the writes used — writer
         # and reader always resolve to the same storage (catalog
         # table or parquet path), never a mix
         from .catalog import read_table
-        from .dedup import cap_audit_rows, reset_cap_audit
+        from .dedup import cap_audit, cap_audit_rows
 
         all_mentions = read_table(spark, out_dir, "mentions")
         all_triples = read_table(spark, out_dir, "triples")
-        reset_cap_audit()  # scope the audit to THIS run's graph phase
-        cmap = canonical_map(all_mentions)
-        write_table(build_vertices(all_mentions, cmap), out_dir,
-                    "kg_vertices", "overwrite")
-        write_table(build_edges(all_triples, cmap), out_dir,
-                    "kg_edges", "overwrite")
+        with cap_audit() as scope:  # THIS run's graph phase only
+            cmap = canonical_map(all_mentions)
+            write_table(build_vertices(all_mentions, cmap), out_dir,
+                        "kg_vertices", "overwrite")
+            write_table(build_edges(all_triples, cmap), out_dir,
+                        "kg_edges", "overwrite")
         # no-silent-caps lineage: every degenerate-bucket cap the
         # canonicalization hit this run, as rows next to the
         # per-bucket lineage table (zeros prove the caps were inert)
-        cap_audit = cap_audit_rows()
-        if cap_audit:
+        audit = cap_audit_rows(scope)
+        if audit:
             audit_df = local_frame(
                 spark,
                 [(run_id, r["op"], r["unit"], r["cap"],
                   r["n_units_capped"], r["n_rows_dropped"])
-                 for r in cap_audit],
+                 for r in audit],
                 "run_id string, op string, unit string, cap long, "
                 "n_units_capped long, n_rows_dropped long",
             ).withColumn("committed_at", F.current_timestamp())
@@ -165,7 +165,7 @@ def run_pipeline(spark: SparkSession, files: DataFrame, out_dir: str,
         "n_triples": n_triples,
         "n_sha_bad": sha_bad,
         "n_buckets_processed": len(metrics),
-        "cap_audit": cap_audit,
+        "cap_audit": audit,
         "wall_sec": wall,
         "triples_per_sec": n_triples / wall if wall else 0.0,
     }

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
+from .dedup import capped_buckets
 from .memo import input_fingerprint, memo
 from .session import local_frame
 
@@ -324,17 +325,18 @@ def lsh_bucketed_topk(queries: DataFrame, corpus: DataFrame, id_col: str,
     recall.  Requires nbands*nbits ≤ dim (a band slice past the
     vector end reads null → constant 0-bits, weakening that band).
 
-    Plan shape for 10^12 vectors: candidate generation is an
-    equi-join on (band, bucket) that moves IDS ONLY — the corpus's
-    512-byte vectors are joined back exactly once per DISTINCT
-    candidate pair after a pair-level dedup, so a pair matching in
-    all four bands is scored once, and the wide vectors never ride
-    the multiplied band/probe fan-out.  ``max_bucket`` caps the
-    corpus side per (band, bucket): a degenerate code holding more
-    than that many vectors is dropped from candidate generation
-    (recall degrades gracefully instead of the join going quadratic
-    on an adversarial all-same-sign corpus).  Inert at test scale;
-    the production knob for 10^9+ vectors."""
+    Plan shape for 10^12 vectors: the corpus is grouped into one row
+    of ids per (band, bucket), and each query probe joins the bucket
+    rows it hits, then expands their ids — candidate generation moves
+    IDS ONLY.  The corpus's 512-byte vectors are joined back exactly
+    once per DISTINCT candidate pair after a pair-level dedup, so a
+    pair matching in all four bands is scored once, and the wide
+    vectors never ride the multiplied band/probe fan-out.
+    ``max_bucket`` caps the corpus buckets: a degenerate code holding
+    more than that many vectors is dropped from candidate generation
+    (recall degrades gracefully instead of the candidates going
+    quadratic on an adversarial all-same-sign corpus).  Inert at test
+    scale; the production knob for 10^9+ vectors."""
     masks = probe_masks(nbits, probe_radius)
     band_codes = F.array(*[
         F.struct(F.lit(b).alias("band"),
@@ -345,10 +347,9 @@ def lsh_bucketed_topk(queries: DataFrame, corpus: DataFrame, id_col: str,
                        F.explode(band_codes).alias("bc"))
          .select("neighbor_id", "bc.band",
                  F.col("bc.code").alias("bucket")))
-    if max_bucket is not None:
-        from .dedup import cap_filter
-        n = cap_filter("lsh_bucketed_topk", n, ["band", "bucket"],
-                       max_bucket, "sign-code buckets")
+    buckets = capped_buckets("lsh_bucketed_topk", n, ["band", "bucket"],
+                             F.col("neighbor_id"), max_bucket,
+                             "sign-code buckets")
     q = (queries.select(F.col(id_col).alias("query_id"),
                         F.explode(band_codes).alias("bc"))
          .withColumn("__mask", F.explode(F.array(
@@ -356,9 +357,11 @@ def lsh_bucketed_topk(queries: DataFrame, corpus: DataFrame, id_col: str,
          .select("query_id", "bc.band",
                  F.expr("cast(bc.code ^ __mask as bigint)")
                  .alias("bucket")))
-    cand = (q.join(n, ["band", "bucket"])
+    cand = (q.join(buckets, ["band", "bucket"])
+            .select("query_id",
+                    F.explode("members").alias("neighbor_id"))
             .filter(F.col("neighbor_id") != F.col("query_id"))
-            .select("query_id", "neighbor_id").distinct())
+            .distinct())
     qv = _with_norm(queries, id_col, vec_col, "query_id")
     nv = _with_norm(corpus, id_col, vec_col, "neighbor_id")
     pairs = (cand.join(qv, "query_id").join(nv, "neighbor_id")

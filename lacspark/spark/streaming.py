@@ -10,19 +10,10 @@ stream.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .tagger import explode_mentions, tag_and_extract
-
-
-def stream_documents(spark: SparkSession, source_dir: str,
-                     schema) -> DataFrame:
-    """File-source stream of document rows (new parquet files in
-    source_dir become micro-batches)."""
-    return (spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 4)
-            .parquet(source_dir))
 
 
 def start_tagging_stream(stream_df: DataFrame, out_dir: str,

@@ -43,10 +43,6 @@ PREDICATE_TAGS = frozenset(["v", "vd", "vn", "p"])
 NEG = -1e9  # additive mask for forbidden transitions
 
 
-def label_index(labels: list[str]) -> dict[str, int]:
-    return {lb: i for i, lb in enumerate(labels)}
-
-
 def _split(label: str) -> tuple[str, str]:
     """Return (base, kind) where kind in B/I/E/S/O."""
     if label == "O":

@@ -34,6 +34,8 @@ from __future__ import annotations
 
 import numpy as np
 
+from .training import _log_sum_exp
+
 TRAINABLE_PREFIXES = ("emb", "l", "fc_w", "fc_b",
                       "crf_trans", "crf_start", "crf_stop")
 
@@ -51,12 +53,6 @@ def trainable_params(weights: dict[str, np.ndarray]) -> dict[str, np.ndarray]:
 
 def _sigmoid(x):
     return 1.0 / (1.0 + np.exp(-x))
-
-
-def _log_sum_exp(a: np.ndarray, axis: int) -> np.ndarray:
-    m = a.max(axis=axis, keepdims=True)
-    return (m + np.log(np.exp(a - m).sum(axis=axis, keepdims=True))) \
-        .squeeze(axis)
 
 
 # ---------------------------------------------------------------------------

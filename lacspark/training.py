@@ -4,8 +4,7 @@ and a minimal incremental CRF trainer.
 * ``parse_tagged_line`` / ``parse_seg_line`` transcribe the
   reference's training readers (/root/reference/python/LAC/
   reader.py:86-101 ``word/tag`` lines → char-level IOB2;
-  reader.py:192-203 space-segmented → ``-B/-I/-E/-S``), including the
-  word-granularity label dedup of reader.py:162-167.
+  reader.py:192-203 space-segmented → ``-B/-I/-E/-S``).
 * ``chunk_prf`` is the reference's chunk_eval metric
   (nets.py:174-180, 246-273) as a DataFrame op — the P/R ≥ 0.95 gate
   of the north rule is computed with exactly this join.
@@ -79,19 +78,6 @@ def parse_seg_line(line: str) -> tuple[str, list[str]]:
         else:
             labels.extend(["-B"] + ["-I"] * (len(w) - 2) + ["-E"])
     return "".join(words), labels
-
-
-def dedup_word_granularity_labels(labels: list[str],
-                                  seg_lengths: list[int]) -> list[str]:
-    """Drop the -I labels of chars folded into whole-word tokens
-    (reader.py:162-167): after mixed-granularity encoding a k-char
-    in-vocab word holds one position, so its k-1 trailing labels go."""
-    out: list[str] = []
-    pos = 0
-    for ln in seg_lengths:
-        out.append(labels[pos])
-        pos += ln
-    return out
 
 
 def training_rows(spark, path: str, mode: str = "lac"):

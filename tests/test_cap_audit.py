@@ -7,10 +7,13 @@ visible)."""
 
 from __future__ import annotations
 
-import hashlib
+import threading
+import time
 
-from lacspark.spark.dedup import (cap_audit_rows, minhash_near_duplicates,
-                                  reset_cap_audit,
+import pytest
+
+from lacspark.spark.dedup import (cap_audit, cap_audit_rows,
+                                  minhash_near_duplicates,
                                   substring_duplicate_spans)
 
 
@@ -21,23 +24,45 @@ def _write_docs(spark, path, rows):
     return str(path)
 
 
+def _planted(spark, path):
+    """8 identical docs (one bucket per band over max_bucket=5) plus
+    an honest near-dup pair (100, 101)."""
+    clone = " ".join(f"c{i % 7}" for i in range(30))
+    near = " ".join(f"n{i}" for i in range(30))
+    rows = [(i, "en", clone) for i in range(8)]
+    rows += [(100, "en", near), (101, "en", near + " extra")]
+    return _write_docs(spark, path, rows)
+
+
+def _honest(spark, path):
+    """Six unrelated docs: no bucket reaches max_bucket=5."""
+    rows = [(i, "en", " ".join(f"h{i}w{j}" for j in range(30)))
+            for i in range(6)]
+    return _write_docs(spark, path, rows)
+
+
+def _minhash(spark, sf):
+    return minhash_near_duplicates(
+        spark.read.parquet(f"{sf}/documents.parquet"), "doc_id", "text",
+        threshold=0.5, max_bucket=5)
+
+
+def _counts(scope, op="lsh_candidates"):
+    a = {r["op"]: r for r in cap_audit_rows(scope)}[op]
+    return a["n_units_capped"], a["n_rows_dropped"]
+
+
 def test_minhash_cap_audit_counts_planted_bucket(spark, tmp_path):
     """8 identical docs with max_bucket=5: every band bucket holds 8
     rows → all 3 bands capped (24 rows dropped), so the clones yield
     NO pairs, while a small honest near-dup pair elsewhere still
     verifies.  Counts are exact, not just nonzero."""
-    clone = " ".join(f"c{i % 7}" for i in range(30))
-    near = " ".join(f"n{i}" for i in range(30))
-    rows = [(i, "en", clone) for i in range(8)]
-    rows += [(100, "en", near), (101, "en", near + " extra")]
-    sf = _write_docs(spark, tmp_path / "a", rows)
-    reset_cap_audit()
-    pairs = minhash_near_duplicates(
-        spark.read.parquet(f"{sf}/documents.parquet"), "doc_id", "text",
-        threshold=0.5, max_bucket=5)
+    sf = _planted(spark, tmp_path / "a")
+    with cap_audit() as scope:
+        pairs = _minhash(spark, sf)
     got = {(r.d1, r.d2) for r in pairs.collect()}
     assert got == {(100, 101)}, got
-    audit = {r["op"]: r for r in cap_audit_rows()}
+    audit = {r["op"]: r for r in cap_audit_rows(scope)}
     a = audit["lsh_candidates"]
     assert a["cap"] == 5
     # 6 hashes / band_size 2 = 3 bands; identical docs share one
@@ -54,15 +79,16 @@ def test_substring_cap_audit_counts_boilerplate_gram(spark, tmp_path):
     shared = " ".join(f"s{i}" for i in range(12))
     rows += [(100, "en", shared + " x1 y1"), (101, "en", shared + " z9")]
     sf = _write_docs(spark, tmp_path / "b", rows)
-    reset_cap_audit()
-    spans = substring_duplicate_spans(
-        spark.read.parquet(f"{sf}/documents.parquet"), "doc_id", "text",
-        k=8, min_span=10, max_df=4)
+    with cap_audit() as scope:
+        spans = substring_duplicate_spans(
+            spark.read.parquet(f"{sf}/documents.parquet"), "doc_id",
+            "text", k=8, min_span=10, max_df=4)
     got = [(r.d1, r.d2, r.start1, r.start2, r.span_len)
            for r in spans.collect()]
     # the 12-token shared prefix: 5 consecutive 8-gram hits → span 12
     assert got == [(100, 101, 0, 0, 12)]
-    a = {r["op"]: r for r in cap_audit_rows()}["substring_duplicate_spans"]
+    a = {r["op"]: r
+         for r in cap_audit_rows(scope)}["substring_duplicate_spans"]
     assert a["cap"] == 4
     # exactly one distinct fingerprint (the boilerplate 8-gram)
     # exceeded max_df, dropping its 6 position rows
@@ -106,3 +132,96 @@ def test_pipeline_lineage_carries_cap_audit(spark, tmp_path):
     audit_tbl = read_table(spark, out, "cap_audit")
     assert audit_tbl.count() == len(m["cap_audit"])
     assert {r.op for r in audit_tbl.collect()} == ops
+
+
+def test_cap_audit_scopes_are_per_thread(spark, tmp_path):
+    """Two driver threads run the same capped operator at once, each in
+    its own scope: the planted corpus reads exactly its 3 buckets / 24
+    rows and the honest one 0 / 0 — neither sees the other's run."""
+    sfs = {"planted": _planted(spark, tmp_path / "p"),
+           "honest": _honest(spark, tmp_path / "h")}
+    barrier = threading.Barrier(2, timeout=300)
+    got: dict = {}
+
+    def run(name):
+        try:
+            with cap_audit() as scope:
+                pairs = _minhash(spark, sfs[name])
+            barrier.wait()  # both plans built before either runs
+            pairs.collect()
+            barrier.wait()  # both runs done before either reads
+            got[name] = _counts(scope)
+        except Exception as e:  # surfaced on the main thread
+            barrier.abort()
+            got[name] = e
+
+    threads = [threading.Thread(target=run, args=(n,)) for n in sfs]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=600)
+        assert not t.is_alive()
+    assert got == {"planted": (3, 24), "honest": (0, 0)}, got
+
+
+@pytest.mark.parametrize("aqe", ["true", "false"])
+def test_cap_audit_exact_after_limit(spark, tmp_path, aqe):
+    """A limit(1) that reads one row of the result still runs the
+    whole observed stage: the counts stay exact with AQE on or off."""
+    key = "spark.sql.adaptive.enabled"
+    before = spark.conf.get(key)
+    spark.conf.set(key, aqe)
+    try:
+        sf = _planted(spark, tmp_path / "a")
+        with cap_audit() as scope:
+            pairs = _minhash(spark, sf)
+        assert len(pairs.limit(1).collect()) == 1
+        assert _counts(scope) == (3, 24)
+    finally:
+        spark.conf.set(key, before)
+
+
+def test_cap_audit_unrun_plan_reads_none(spark, tmp_path):
+    """A plan that never ran reads at once, as None counts."""
+    sf = _planted(spark, tmp_path / "a")
+    with cap_audit() as scope:
+        _minhash(spark, sf)
+    t0 = time.monotonic()
+    assert _counts(scope) == (None, None)
+    assert time.monotonic() - t0 < 1.0
+
+
+def test_cap_audit_read_starts_no_job(spark, tmp_path):
+    """Reading a scope adds zero Spark jobs: the counts were gathered
+    while the plan ran."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = "cap-audit-read"
+    sf = _planted(spark, tmp_path / "a")
+    sc.setJobGroup(group, "cap audit read")
+    try:
+        with cap_audit() as scope:
+            pairs = _minhash(spark, sf)
+        pairs.collect()
+        jobs = sorted(tracker.getJobIdsForGroup(group))
+        assert jobs
+        assert _counts(scope) == (3, 24)
+        assert sorted(tracker.getJobIdsForGroup(group)) == jobs
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+def test_quality_classifier_trains_after_cap_audit(spark, sf_dir,
+                                                   tmp_path):
+    """Once an Observation ran in a session, Spark cannot serialize
+    that session; MLlib's training summary holds it, so the quality
+    classifier must still train and score after a cap audit."""
+    from lacspark.spark.quality import train_quality_classifier
+
+    with cap_audit() as scope:
+        _minhash(spark, _planted(spark, tmp_path / "a")).collect()
+    assert _counts(scope) == (3, 24)
+    res = train_quality_classifier(
+        spark.read.parquet(f"{sf_dir}/documents.parquet"))
+    assert res["auc"] >= 0.9, res

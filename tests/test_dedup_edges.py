@@ -132,14 +132,14 @@ def test_embedding_lsh_bucket_cap_survives_degenerate_corpus(spark):
         F.expr("transform(sequence(1, 16), "
                "j -> cast(1.0 + 0.001 * (id % 7) as float))")
         .alias("embedding"))
-    from lacspark.spark.dedup import cap_audit_rows, reset_cap_audit
+    from lacspark.spark.dedup import cap_audit, cap_audit_rows
 
-    reset_cap_audit()
-    capped = embedding_near_duplicates(
-        vecs, "vec_id", "embedding", threshold=0.0,
-        nbits=8, nbands=2, max_bucket=100)
+    with cap_audit() as scope:
+        capped = embedding_near_duplicates(
+            vecs, "vec_id", "embedding", threshold=0.0,
+            nbits=8, nbands=2, max_bucket=100)
     assert capped.count() == 0
-    audit = {r["op"]: r for r in cap_audit_rows()}
+    audit = {r["op"]: r for r in cap_audit_rows(scope)}
     a = audit["embedding_near_duplicates"]
     # every vector has identical signs → one bucket per band, both
     # over the cap: 2 capped units, 2 bands × 300 rows dropped
@@ -165,14 +165,14 @@ def test_ann_lsh_topk_bucket_cap(spark):
                "j -> cast(1.0 + 0.001 * (id % 5) as float))")
         .alias("embedding"))
     q = vecs.filter(F.col("vec_id") < 3)
-    from lacspark.spark.dedup import cap_audit_rows, reset_cap_audit
+    from lacspark.spark.dedup import cap_audit, cap_audit_rows
 
-    reset_cap_audit()
-    capped = lsh_bucketed_topk(q, vecs, "vec_id", "embedding",
-                               k=5, nbits=8, probe_radius=0, nbands=1,
-                               max_bucket=50)
+    with cap_audit() as scope:
+        capped = lsh_bucketed_topk(q, vecs, "vec_id", "embedding",
+                                   k=5, nbits=8, probe_radius=0,
+                                   nbands=1, max_bucket=50)
     assert capped.count() == 0
-    a = {r["op"]: r for r in cap_audit_rows()}["lsh_bucketed_topk"]
+    a = {r["op"]: r for r in cap_audit_rows(scope)}["lsh_bucketed_topk"]
     assert a["n_units_capped"] == 1 and a["n_rows_dropped"] == n
     uncapped = lsh_bucketed_topk(q, vecs, "vec_id", "embedding",
                                  k=5, nbits=8, probe_radius=0, nbands=1,

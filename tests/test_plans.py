@@ -4,6 +4,8 @@ column pruning, broadcast joins, partial aggregation)."""
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import functions as F
 
 from lacspark.queries import SPARK_QUERIES
@@ -92,12 +94,16 @@ def test_exact_pairs_single_shuffle_no_join(spark):
 
 
 def test_embedding_multiband_no_cartesian_and_capped(spark):
-    """Multi-band embedding LSH: candidates come from an equi-join on
-    (band, code) — never a cartesian product — and the degenerate-
-    bucket cap's window sits before the join."""
+    """Multi-band embedding LSH: candidates come from each (band, code)
+    bucket's own row — never a cartesian product — and the degenerate-
+    bucket cap's size filter sits before the pair expansion."""
     plan = plan_of(SPARK_QUERIES["dedup_embedding_cosine"](spark, SF))
     assert "Cartesian" not in plan and "BroadcastNestedLoop" not in plan
-    assert "Window" in plan  # the max_bucket count filter
+    # the max_bucket size filter, below (= before) the first pair
+    # Generate in the printed tree
+    cap = re.search(r"Filter .*size\(members#\d+, false\) <= 20000", plan)
+    gen = plan.find("Generate explode(members")
+    assert cap is not None and 0 <= gen < cap.start()
 
 
 def test_kmeans_ivf_assignment_is_shuffle_free(spark):
@@ -137,11 +143,11 @@ def test_token_count_bpe_is_arrow_and_shuffle_free(spark):
 
 
 def test_substring_spans_minimal_shuffles(spark):
-    """Three keyed shuffles is the floor for the span operator (df-cap
-    window by fingerprint, cross-doc fingerprint join, diagonal
-    run-merge window); the groupBy after the run window must reuse
-    the window's (d1, d2, diag) distribution instead of adding a
-    fourth."""
+    """At most three keyed shuffles for the span operator: it needs
+    two, the fingerprint group that the df cap filters and the
+    diagonal run-merge window; the groupBy after the run window must
+    reuse the window's (d1, d2, diag) distribution instead of adding
+    another."""
     plan = plan_of(
         SPARK_QUERIES["dedup_substring_spans"](spark, SF)).lower()
     assert plan.count("hashpartitioning") <= 3
