@@ -23,9 +23,12 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
+from py4j.protocol import Py4JJavaError
+from pyspark import SparkContext
 from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.window import Window
 
 from .memo import input_fingerprint, memo
 
@@ -127,12 +130,10 @@ def exact_duplicate_groups(df: DataFrame, id_col: str,
 MINHASH_P = (1 << 31) - 1
 
 # ---------------------------------------------------------------------------
-# No-silent-caps accounting (VERDICT r4 item 5): every degenerate-
-# bucket cap in the dedup/ANN/canonicalization family groups its
-# buckets through capped_buckets, which reports what it dropped to the
-# caller's cap_audit() scope.  Correctness never depends on it (the
-# caps are oracle-mirrored); it makes the drops VISIBLE at run time
-# instead of silently shrinking recall.
+# No-silent-caps accounting: every degenerate-bucket cap groups its
+# buckets through capped_buckets, which reports its drops to the
+# caller's cap_audit() scope (the caps are oracle-mirrored; the audit
+# makes them VISIBLE instead of silently shrinking recall).
 _SCOPE: ContextVar[list[dict] | None] = ContextVar("cap_audit",
                                                    default=None)
 
@@ -142,12 +143,13 @@ def cap_audit() -> Iterator[list[dict]]:
     """Collect the drops of every capped operator PLANNED inside the
     block, in this thread or task's context only: two driver threads
     with their own scopes never see each other's entries.  Each
-    capped plan built here attaches an unnamed Observation to its
-    grouped buckets; read the yielded scope with
-    :func:`cap_audit_rows` after the plans ran.  Outside a scope the
-    caps apply and nothing is observed.  A memo hit (a
-    ``minhash_near_duplicates`` call served from memo) plans nothing
-    and dropped nothing in this run, so it adds no entry."""
+    capped plan built here attaches unnamed Observations to its rows
+    and grouped buckets; read the scope with :func:`cap_audit_rows`
+    after the plans ran.  Outside a scope nothing is observed.  A
+    memo hit (a ``minhash_near_duplicates`` call served from memo)
+    plans nothing and dropped nothing in this run: it adds no entry.
+    Once an Observation ran, Spark cannot serialize the session, so
+    no task closure may hold it (``quality.py`` works around this)."""
     scope: list[dict] = []
     token = _SCOPE.set(scope)
     try:
@@ -168,21 +170,30 @@ def record_cap(op: str, cap: int, unit: str,
 
 def cap_audit_rows(scope: list[dict]) -> list[dict]:
     """(op, cap, unit, n_units_capped, n_rows_dropped) per entry of
-    ``scope``, in planning order.  Reading starts no Spark job and
-    never waits for one: a plan that has not run reads as None
-    counts, and so does one whose observed stage the optimizer cut
-    out (an empty Row; see the excluded AQE rule in
-    ``session.get_spark``)."""
+    ``scope``, in planning order.  Reading starts no Spark job: a
+    plan that has not run reads as None counts, as does one whose
+    observed stage AQE cut out (see ``session.get_spark``).  Spark
+    completes Observations on its listener bus after the action
+    returns, so while one is open the read drains the bus (<= 10 s)."""
+    def done(ent: dict) -> bool:
+        return all(o._jo.future().isCompleted() for o in ent["obs"])
+
+    if any(e["obs"] and not done(e) for e in scope):
+        try:
+            SparkContext._active_spark_context._jsc.sc().listenerBus() \
+                .waitUntilEmpty(10_000)
+        except Py4JJavaError:  # still busy: read what completed
+            pass
     out = []
     for ent in scope:
         units = rows = None
-        obs = ent["obs"]
-        if obs is None:
+        if ent["obs"] is None:
             units, rows = ent["counts"]
-        elif obs._jo.future().isCompleted():
-            r = obs._jo.getRow()  # completed: returns at once
-            if r.length():
-                units, rows = r.get(0) or 0, r.get(1) or 0
+        elif done(ent):  # getRow returns at once
+            seen, kept = (o._jo.getRow() for o in ent["obs"])
+            if seen.length() and kept.length():
+                units = kept.get(0) or 0
+                rows = seen.get(0) - (kept.get(1) or 0)
         out.append({"op": ent["op"], "cap": ent["cap"],
                     "unit": ent["unit"], "n_units_capped": units,
                     "n_rows_dropped": rows})
@@ -193,26 +204,33 @@ def capped_buckets(op: str, df: DataFrame, keys: list[str],
                    member: Column, cap: int | None,
                    unit: str) -> DataFrame:
     """(*keys, members): one row per bucket of ``df`` grouped on
-    ``keys``, its members collected into one array, and only the
-    buckets of at most ``cap`` members kept.  Inside a
-    :func:`cap_audit` scope an Observation on the grouped frame
-    counts the dropped buckets and member rows.  The observed frame
-    must reach the result through an exchange that a ``limit``
-    cannot remove (a join, a window, an aggregate with aggregate
-    functions), so that it always runs as a whole stage: a limit in
-    its own stage runs, and counts, only some partitions, and under
-    ``limit(1)`` Spark drops a bare ``distinct``."""
-    buckets = df.groupBy(*keys).agg(F.collect_list(member).alias("members"))
+    ``keys``, its non-null members in one array, only the buckets of
+    at most ``cap`` members kept.  A row number lets at most ``cap +
+    1`` rows of a bucket reach the collect (whose buffer cannot
+    spill), enough to tell one over the cap, which ``size(members) <=
+    cap`` drops whole; so which rows the limit keeps does not matter.
+    The window reads ``df`` once and buffers a bucket spillably.
+    Inside a :func:`cap_audit` scope, Observations count the rows in
+    and, on the grouped frame, the capped buckets and members kept.
+    That frame must reach its consumer through an exchange a
+    ``limit`` cannot remove (an aggregate, a window), so that it
+    always runs as a whole stage."""
     if cap is None:
-        return buckets
-    size = F.size("members")
+        return df.groupBy(*keys).agg(F.collect_list(member).alias("members"))
     scope = _SCOPE.get()
-    if scope is not None:
-        obs = Observation()
+    obs = (Observation(), Observation()) if scope is not None else None
+    rows = df.filter(member.isNotNull())  # collect_list skips nulls
+    if obs:
+        rows = rows.observe(obs[0], F.count(F.lit(1)).alias("n_rows"))
+    w = Window.partitionBy(*keys).orderBy(*keys)
+    buckets = (rows.withColumn("__r", F.row_number().over(w))
+               .filter(F.col("__r") <= cap + 1).groupBy(*keys)
+               .agg(F.collect_list(member).alias("members")))
+    size = F.size("members")
+    if obs:
         buckets = buckets.observe(
-            obs, F.sum((size > cap).cast("long")).alias("n_units_capped"),
-            F.sum(F.when(size > cap, size).otherwise(0))
-            .alias("n_rows_dropped"))
+            obs[1], F.sum((size > cap).cast("long")).alias("n_units_capped"),
+            F.sum(F.when(size <= cap, size).otherwise(0)).alias("n_kept"))
         scope.append({"op": op, "cap": cap, "unit": unit, "obs": obs,
                       "counts": None})
     return buckets.filter(size <= cap)
@@ -398,8 +416,6 @@ def substring_duplicate_spans(df: DataFrame, id_col: str, text_col: str,
     row_number is constant within a run).  Total: one shuffle for
     the fingerprint group, one for the window — no all-pairs stage
     anywhere."""
-    from pyspark.sql.window import Window
-
     from .tagger import ensure_parallelism
 
     toks = F.filter(F.split(F.col(text_col), " "),
@@ -412,12 +428,8 @@ def substring_duplicate_spans(df: DataFrame, id_col: str, text_col: str,
             .filter(F.size("__toks") >= k)
             .select(id_col, fps.alias("__fps")))
     pos_fp = explode_once(base, [id_col], "__fps", "fp", with_pos="pos")
-    # Hit pairs WITHOUT a self-join: the r6 a⋈b equi-join planned the
-    # whole scan→fingerprint→cap pipeline TWICE (one side per branch —
-    # Spark shares no common subplan across a DataFrame self-join).
-    # One groupBy("fp") gathers each fingerprint's (doc, pos)
-    # occurrences, the cap keeps the groups of at most max_df, and
-    # the same d1 < d2 pairs are expanded in place.
+    # one row per fingerprint (at most max_df occurrences) expands its
+    # d1 < d2 hits in place: no self-join plans the scan twice
     groups = capped_buckets(
         "substring_duplicate_spans", pos_fp, ["fp"],
         F.struct(F.col(id_col).alias("d"), F.col("pos").alias("p")),

@@ -21,7 +21,6 @@ make bucket replay exactly-once rather than at-least-once).
 
 from __future__ import annotations
 
-import os
 import time
 import uuid
 

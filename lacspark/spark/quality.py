@@ -260,13 +260,12 @@ def train_quality_classifier(docs: DataFrame, text_col: str = "text",
     lr = LogisticRegression(maxIter=25, regParam=0.01,
                             standardization=True)
     model = lr.fit(asm.transform(train))
-    # transform serializes the model, and with it the training
-    # summary's SparkSession, whose Observation manager (set once any
-    # Observation ran in the session, e.g. a dedup cap audit) is not
-    # serializable; the held-out metrics below need no summary
-    jmodel = model._java_obj
-    jmodel.setSummary(jmodel.trainingSummary().empty())
-    pred = model.transform(asm.transform(test))
+    # scoring serializes the model with its summary and session, which
+    # Spark cannot serialize once an Observation ran (dedup.cap_audit):
+    # score with a summary-free copy; the returned model keeps its own
+    scorer = model.copy()
+    scorer._java_obj.setSummary(scorer._java_obj.trainingSummary().empty())
+    pred = scorer.transform(asm.transform(test))
     auc = BinaryClassificationEvaluator(
         metricName="areaUnderROC").evaluate(pred)
     acc = pred.filter(

@@ -39,10 +39,9 @@ def get_spark(app_name: str = "lacspark", cores: int | None = None,
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # keep stages that came back empty in the adaptive plan: where
-        # AQE cuts one out (a join whose other side is empty, or a
-        # later empty stage), an Observation under it completes with
-        # an empty Row, and the dedup cap audit loses its counts
+        # keep empty stages in the adaptive plan: where AQE cuts one
+        # out (or a join with an empty side), an Observation under it
+        # completes with an empty Row and the cap audit loses counts
         .config("spark.sql.adaptive.optimizer.excludedRules",
                 "org.apache.spark.sql.execution.adaptive."
                 "AQEPropagateEmptyRelation")

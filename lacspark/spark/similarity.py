@@ -347,17 +347,19 @@ def lsh_bucketed_topk(queries: DataFrame, corpus: DataFrame, id_col: str,
                        F.explode(band_codes).alias("bc"))
          .select("neighbor_id", "bc.band",
                  F.col("bc.code").alias("bucket")))
+    # a struct join key the buckets are not partitioned by: its shuffle
+    # runs the capped stage whole (a co-partitioned join skips some)
     buckets = capped_buckets("lsh_bucketed_topk", n, ["band", "bucket"],
                              F.col("neighbor_id"), max_bucket,
-                             "sign-code buckets")
+                             "sign-code buckets").select(
+        F.struct("band", "bucket").alias("probe"), "members")
     q = (queries.select(F.col(id_col).alias("query_id"),
                         F.explode(band_codes).alias("bc"))
          .withColumn("__mask", F.explode(F.array(
              *[F.lit(m) for m in masks])))
-         .select("query_id", "bc.band",
-                 F.expr("cast(bc.code ^ __mask as bigint)")
-                 .alias("bucket")))
-    cand = (q.join(buckets, ["band", "bucket"])
+         .select("query_id", F.struct("bc.band", F.expr(
+             "cast(bc.code ^ __mask as bigint) as bucket")).alias("probe")))
+    cand = (q.join(buckets, "probe")
             .select("query_id",
                     F.explode("members").alias("neighbor_id"))
             .filter(F.col("neighbor_id") != F.col("query_id"))

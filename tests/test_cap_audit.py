@@ -225,3 +225,43 @@ def test_quality_classifier_trains_after_cap_audit(spark, sf_dir,
     res = train_quality_classifier(
         spark.read.parquet(f"{sf_dir}/documents.parquet"))
     assert res["auc"] >= 0.9, res
+
+
+@pytest.mark.parametrize("aqe", ["true", "false"])
+def test_topk_cap_audit_exact_under_sort_merge_join(spark, aqe):
+    """With broadcasts off, the query probes join the corpus buckets
+    by sort-merge, which never reads a bucket partition that no query
+    probes.  The counts stay exact because the buckets reach that
+    join through a shuffle of their own."""
+    from pyspark.sql import functions as F
+
+    from lacspark.spark.similarity import lsh_bucketed_topk, sign_bucket
+
+    # ids < 200 share one all-positive code (a bucket over the cap of
+    # 50); the rest spread over other codes
+    vecs = spark.range(400).select(
+        F.col("id").alias("vec_id"),
+        F.expr("transform(sequence(1, 8), j -> cast(case when id < 200 "
+               "then 1.0 else (case when (id * 7 + j * 13 + id * j) % 5 "
+               "< 2 then -1.0 else 1.0 end) * (1 + 0.001 * id) end "
+               "as float))").alias("embedding"))
+    sizes = [r["count"] for r in vecs.groupBy(
+        sign_bucket("embedding", 8)).count().collect()]
+    want = (sum(n > 50 for n in sizes), sum(n for n in sizes if n > 50))
+    assert want[0] >= 1 and len(sizes) > 2
+    conf = {"spark.sql.adaptive.enabled": aqe,
+            "spark.sql.autoBroadcastJoinThreshold": "-1"}
+    before = {k: spark.conf.get(k) for k in conf}
+    for k, v in conf.items():
+        spark.conf.set(k, v)
+    try:
+        with cap_audit() as scope:
+            top = lsh_bucketed_topk(
+                vecs.filter(F.col("vec_id") == 399), vecs, "vec_id",
+                "embedding", k=5, nbits=8, probe_radius=0, nbands=1,
+                max_bucket=50)
+        assert len(top.collect()) == 5
+        assert _counts(scope, "lsh_bucketed_topk") == want
+    finally:
+        for k, v in before.items():
+            spark.conf.set(k, v)

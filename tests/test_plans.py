@@ -96,7 +96,8 @@ def test_exact_pairs_single_shuffle_no_join(spark):
 def test_embedding_multiband_no_cartesian_and_capped(spark):
     """Multi-band embedding LSH: candidates come from each (band, code)
     bucket's own row — never a cartesian product — and the degenerate-
-    bucket cap's size filter sits before the pair expansion."""
+    bucket cap's size filter sits before the pair expansion, with the
+    per-bucket row limit before the collect that builds the row."""
     plan = plan_of(SPARK_QUERIES["dedup_embedding_cosine"](spark, SF))
     assert "Cartesian" not in plan and "BroadcastNestedLoop" not in plan
     # the max_bucket size filter, below (= before) the first pair
@@ -104,6 +105,11 @@ def test_embedding_multiband_no_cartesian_and_capped(spark):
     cap = re.search(r"Filter .*size\(members#\d+, false\) <= 20000", plan)
     gen = plan.find("Generate explode(members")
     assert cap is not None and 0 <= gen < cap.start()
+    # at most max_bucket + 1 rows of a bucket reach its collect: the
+    # row-number limit sits below (= before) the final collect_list
+    collect = plan.find("functions=[collect_list(")
+    limit = re.search(r"Filter \(__r#\d+ <= 20001\)", plan)
+    assert limit is not None and 0 <= collect < limit.start()
 
 
 def test_kmeans_ivf_assignment_is_shuffle_free(spark):
