@@ -75,11 +75,13 @@ _PRIORITY = [
 # query_hash_snapshot.json: editing a query without pinning it here
 # fails CI.
 _FRESH = [
-    # capped buckets are grouped rows, pairs expanded in place
-    "dedup_minhash_lsh", "dedup_near_keep_best", "dedup_near_components",
-    "dedup_substring_spans", "dedup_substring_clean",
-    "dedup_embedding_cosine", "dedup_embedding_keep_best",
-    "ann_lsh_topk",
+    # md5-int expression taken from dedup.MD5INT
+    "sample_stratified", "corpus_curation", "streaming_curation_counts",
+    "doc_fingerprint", "token_minhash_canonical",
+    # the fake decode is the only feature path
+    "multimodal_features",
+    # helpers changed: one union-find in CC; no label codebook in IVF
+    "dedup_near_components", "ann_ivf_topk", "ann_ivf_lists",
 ]
 
 def _folded() -> frozenset:

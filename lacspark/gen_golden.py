@@ -31,8 +31,7 @@ from collections import defaultdict
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-from .canonical_py import (_form, _grams, canonical_map_py,  # noqa: F401
-                           md5int)
+from .canonical_py import _form, canonical_map_py, md5int
 from .engine import LacEngine
 
 SF_DIRS = {
@@ -121,7 +120,7 @@ def gen_for_sf(tag: str, sf_dir: str) -> None:
     print(f"{tag}/kg_triples: {n} rows")
 
     # kg_entity_linking: (form, canonical, entity_id)
-    cmap = canonical_map_py([m[1] for m in mention_rows])
+    cmap, _ = canonical_map_py([m[1] for m in mention_rows])
     link = sorted(cmap.items())
     n = _write("kg_entity_linking", {
         "form": ([f for f, _ in link], pa.string()),

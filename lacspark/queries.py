@@ -20,6 +20,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .spark.dedup import MD5INT
 from .spark.memo import file_identity, input_fingerprint, memo
 from .spark.session import local_frame
 
@@ -110,7 +111,6 @@ def _tokens(df: DataFrame) -> DataFrame:
     return t.filter(F.length("token") > 0)
 
 
-_MD5INT_SPARK = "cast(conv(substring(md5({x}), 1, 15), 16, 10) as bigint)"
 _MD5INT_DUCK = "(('0x' || substring(md5({x}), 1, 15))::BIGINT)"
 
 
@@ -957,7 +957,7 @@ def sample_stratified(spark, sf_dir):
     which is what makes training-data splits auditable.  Pure
     projection + one aggregate; no shuffle beyond the groupBy."""
     d = load(spark, sf_dir, "documents")
-    keep = (F.expr(_MD5INT_SPARK.format(
+    keep = (F.expr(MD5INT.format(
         x="concat('smp:', cast(doc_id as string))")) % 100 < 10)
     return (d.groupBy("lang")
             .agg(F.count(F.lit(1)).alias("n_total"),
@@ -1195,7 +1195,7 @@ def corpus_curation(spark, sf_dir):
     punct = F.length(F.regexp_replace("text", "[a-zA-Z0-9 ]", ""))
     punct_pct = F.floor(punct * 100
                         / F.greatest(F.length("text"), F.lit(1)))
-    smp = F.expr(_MD5INT_SPARK.format(
+    smp = F.expr(MD5INT.format(
         x="concat('cur:', cast(doc_id as string))")) % 100
     return (d.withColumn("keeper", keeper)
             .withColumn("punct_pct", punct_pct.cast("long"))
@@ -1339,7 +1339,7 @@ def streaming_curation_counts(spark, sf_dir):
     punct = F.length(F.regexp_replace("text", "[a-zA-Z0-9 ]", ""))
     punct_pct = F.floor(punct * 100
                         / F.greatest(F.length("text"), F.lit(1)))
-    smp = F.expr(_MD5INT_SPARK.format(
+    smp = F.expr(MD5INT.format(
         x="concat('cur:', cast(doc_id as string))")) % 100
 
     def build(child):
@@ -1701,7 +1701,7 @@ def doc_fingerprint(spark, sf_dir):
     norm = F.lower(F.regexp_replace("text", " +", " "))
     return d.select(
         "doc_id", F.md5(norm).alias("fingerprint"),
-        F.expr(_MD5INT_SPARK.format(
+        F.expr(MD5INT.format(
             x="lower(regexp_replace(text, ' +', ' '))")).alias("fp_int"))
 
 
@@ -2243,13 +2243,13 @@ def multimodal_decode_stats(spark, sf_dir):
 @register("multimodal_features",
           _golden_sql("multimodal_features", per_sf=False))
 def multimodal_features(spark, sf_dir):
-    """Binary-payload feature extraction plumbing (decode falls back
-    to the deterministic fake when no codec lib is importable;
-    schema/batching real).  Oracle = golden parquet produced by the
-    same pure-python synth+decode functions without Spark."""
+    """Binary-payload feature extraction plumbing (the deterministic
+    fake decode; schema/batching real).  Oracle = golden parquet
+    produced by the same pure-python synth+decode functions without
+    Spark."""
     from .spark.multimodal import extract_media_features, synth_media
     media = synth_media(spark, n=200)
-    return extract_media_features(media, force_fake_decode=True).select(
+    return extract_media_features(media).select(
         "media_id", "kind", "n_bytes", "payload_sha", "width", "height")
 
 
@@ -2285,7 +2285,7 @@ def token_minhash_canonical(spark, sf_dir):
                "i -> substring(token, i, 3))").alias("__g")),
         ["token"], "__g", "gram")
     sigs = grams.groupBy("token").agg(*[
-        F.min(F.expr(_MD5INT_SPARK.format(x=f"concat('g{i}:', gram)")))
+        F.min(F.expr(MD5INT.format(x=f"concat('g{i}:', gram)")))
         .alias(f"mh{i}") for i in range(4)])
     a, b = sigs.alias("a"), sigs.alias("b")
     return (a.join(b, (F.col("a.mh0") == F.col("b.mh0"))

@@ -6,32 +6,49 @@ arrays per surface form, k hash functions as md5 of a per-function
 salt + gram (first 15 hex digits as int64 — identical arithmetic is
 reproducible in DuckDB and pure python, which is how the golden-
 parquet oracles for the KG queries are generated), reduced with
-``array_min`` inside a projection.  Banding turns similarity search
-into an equi-join on band keys; candidate pairs are verified with
-exact n-gram Jaccard (array_intersect/array_union on the carried
-gram arrays).  Everything is seeded/deterministic — no rand(), no
-iteration-order dependence (SURVEY §4.2 custom work (d)).
+``array_min`` inside a projection.  Banding groups forms by band
+key; candidate pairs are verified with exact n-gram Jaccard
+(array_intersect/array_union on the carried gram arrays).  The
+constants (hashes, band size, Jaccard bound, bucket cap) live in
+``lacspark.canonical_py`` with the driver twin.  Everything is
+seeded/deterministic — no rand(), no iteration-order dependence
+(SURVEY §4.2 custom work (d)).
 
-Connected components: iterative min-label propagation over the
-similarity edges (small-step joins + localCheckpoint, GraphFrames not
+Connected components: large-star/small-star rounds over the
+similarity edges (localCheckpoint per round, GraphFrames not
 assumed).  Canonical id of a component = lexicographic min surface
 form — deterministic under any parallelism.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from lacspark.canonical_py import (BAND_SIZE, CAP_OP, CAP_UNIT,
+                                   JACCARD_MIN, MAX_BUCKET, NUM_HASHES,
+                                   canonical_map_py, union_find)
 
 from .dedup import (MD5INT, capped_buckets, explode_once, member_pairs,
                     record_cap)
 from .session import local_frame
 
+# Driver bounds: below them a step runs on the driver in one job.
+DRIVER_FORMS = 100_000    # distinct forms canonical_map canonicalizes
+DRIVER_CHARS = 4_000_000  # ... and their total length
+DRIVER_EDGES = 200_000    # edges (and vertices) CC unions on the driver
+MAX_ROUNDS = 50           # large/small-star rounds before CC raises
 
-def surface_forms(mentions: DataFrame, word_col: str = "word") -> DataFrame:
-    """Distinct normalized surface forms with their char-3-gram sets."""
-    forms = (mentions
-             .select(F.lower(F.trim(F.col(word_col))).alias("form"))
+
+def form(c: str) -> Column:
+    """The surface form of column ``c``: ``lower(trim(c))``.  Forms
+    shorter than 2 chars are never canonicalized."""
+    return F.lower(F.trim(F.col(c)))
+
+
+def surface_forms(mentions: DataFrame) -> DataFrame:
+    """Distinct surface forms of ``word`` with their char-3-gram sets."""
+    forms = (mentions.select(form("word").alias("form"))
              .filter(F.length("form") >= 2)
              .distinct())
     grams = F.array_distinct(F.expr(
@@ -40,8 +57,7 @@ def surface_forms(mentions: DataFrame, word_col: str = "word") -> DataFrame:
     return forms.withColumn("grams", grams)
 
 
-def minhash_bands(forms: DataFrame, num_hashes: int = 8,
-                  band_size: int = 2) -> DataFrame:
+def minhash_bands(forms: DataFrame) -> DataFrame:
     """Signature + LSH band keys, computed in one projection.
     Hash family: md5-int of 'c{i}:' || gram (pure-python replica:
     int(md5(f"c{i}:{gram}").hexdigest()[:15], 16))."""
@@ -49,15 +65,14 @@ def minhash_bands(forms: DataFrame, num_hashes: int = 8,
         F.array_min(F.expr(
             f"transform(grams, g -> "
             + MD5INT.format(x=f"concat('c{seed}:', g)") + ")"))
-        for seed in range(num_hashes)])
+        for seed in range(NUM_HASHES)])
     banded = forms.withColumn("sig", sig)
-    n_bands = num_hashes // band_size
     bands = F.array(*[
         F.md5(F.concat_ws(
             ",", F.lit(str(b)),
-            *[F.col("sig")[b * band_size + j].cast("string")
-              for j in range(band_size)]))
-        for b in range(n_bands)])
+            *[F.col("sig")[b * BAND_SIZE + j].cast("string")
+              for j in range(BAND_SIZE)]))
+        for b in range(NUM_HASHES // BAND_SIZE)])
     # explode_once: a direct explode(bands) would inline the minhash
     # sig into the Generate and re-run it once per band
     return explode_once(
@@ -66,20 +81,19 @@ def minhash_bands(forms: DataFrame, num_hashes: int = 8,
                                                      "grams")
 
 
-def candidate_pairs(banded: DataFrame, jaccard_threshold: float = 0.5,
-                    max_bucket: int = 1000) -> DataFrame:
+def candidate_pairs(banded: DataFrame) -> DataFrame:
     """Form pairs within band buckets → verified similarity edges.
 
     Each band bucket is grouped into one row of (form, grams) members
     and its pairs are expanded in place (``dedup.member_pairs``), never
-    self-joined.  Buckets larger than ``max_bucket`` are dropped (a
+    self-joined.  Buckets larger than ``MAX_BUCKET`` are dropped (a
     bucket that big means a degenerate band — at 10^12-file scale it
     would quadratically explode; the dropped forms still canonicalize
     to themselves).
     """
-    buckets = capped_buckets(
-        "canonical_candidate_pairs", banded, ["band"],
-        F.struct("form", "grams"), max_bucket, "minhash band buckets")
+    buckets = capped_buckets(CAP_OP, banded, ["band"],
+                             F.struct("form", "grams"), MAX_BUCKET,
+                             CAP_UNIT)
     pairs = (member_pairs(buckets, by="form")
              .select(F.col("a.form").alias("src"),
                      F.col("b.form").alias("dst"),
@@ -89,58 +103,43 @@ def candidate_pairs(banded: DataFrame, jaccard_threshold: float = 0.5,
     jac = (F.size(F.array_intersect("g1", "g2")) /
            F.size(F.array_union("g1", "g2")))
     return (pairs.withColumn("jaccard", jac)
-            .filter(F.col("jaccard") >= jaccard_threshold)
+            .filter(F.col("jaccard") >= JACCARD_MIN)
             .select("src", "dst", "jaccard"))
 
 
-def connected_components(vertices: DataFrame, edges: DataFrame,
-                         max_iter: int = 50,
-                         driver_threshold: int = 200_000) -> DataFrame:
+def connected_components(vertices: DataFrame, edges: DataFrame
+                         ) -> DataFrame:
     """Connected components; returns (form, canonical) with canonical
     = lexicographic min of the component.
 
     vertices: (form), edges: (src, dst).
 
-    Scale split: below ``driver_threshold`` edges the component graph
-    is broadcast-scale — collect and union-find on the driver (one
-    job instead of a multi-round distributed loop; results identical
-    and deterministic).  Above it, alternating large-star/small-star
-    rounds (the public MapReduce CC formulation: each round every
-    node links its neighbors to its neighborhood minimum), which
-    converges to star graphs in O(log n) rounds REGARDLESS of
-    component diameter — a million-node alias chain finishes in ~20
-    rounds where min-label propagation would need a million.  The
-    loop runs to a verified fixpoint (edge set unchanged), never
-    returning partially-converged labels; ``max_iter`` is a runaway
-    guard that raises rather than silently mislabeling.
+    Scale split: up to ``DRIVER_EDGES`` edges and vertices the
+    component graph is broadcast-scale — collect and union-find on
+    the driver (one job instead of a multi-round distributed loop;
+    results identical and deterministic).  Above it, alternating
+    large-star/small-star rounds (the public MapReduce CC
+    formulation: each round every node links its neighbors to its
+    neighborhood minimum), which converges to star graphs in
+    O(log n) rounds REGARDLESS of component diameter — a
+    million-node alias chain finishes in ~20 rounds where min-label
+    propagation would need a million.  The loop runs to a verified
+    fixpoint (edge set unchanged), never returning partially-converged
+    labels; ``MAX_ROUNDS`` is a runaway guard that raises rather than
+    silently mislabeling.
     """
     # probe-by-collect: the limit(threshold+1) collect IS the size
     # probe AND the data fetch — one job each instead of count+collect
     edge_rows = edges.select("src", "dst") \
-        .limit(driver_threshold + 1).collect()
-    vert_rows = (vertices.limit(driver_threshold + 1).collect()
-                 if len(edge_rows) <= driver_threshold else [])
-    if len(edge_rows) <= driver_threshold and \
-            len(vert_rows) <= driver_threshold:
-        spark = vertices.sparkSession
-        parent: dict[str, str] = {}
-
-        def find(x: str) -> str:
-            root = x
-            while parent.get(root, root) != root:
-                root = parent[root]
-            while parent.get(x, x) != x:
-                parent[x], x = root, parent[x]
-            return root
-
-        for r in edge_rows:
-            ra, rb = find(r.src), find(r.dst)
-            if ra != rb:
-                # deterministic: smaller label becomes the root
-                lo, hi = (ra, rb) if ra < rb else (rb, ra)
-                parent[hi] = lo
-        rows = [(r.form, find(r.form)) for r in vert_rows]
-        return local_frame(spark, rows, "form string, canonical string")
+        .limit(DRIVER_EDGES + 1).collect()
+    vert_rows = (vertices.limit(DRIVER_EDGES + 1).collect()
+                 if len(edge_rows) <= DRIVER_EDGES else [])
+    if len(edge_rows) <= DRIVER_EDGES and \
+            len(vert_rows) <= DRIVER_EDGES:
+        find = union_find((r.src, r.dst) for r in edge_rows)
+        return local_frame(vertices.sparkSession,
+                           [(r.form, find(r.form)) for r in vert_rows],
+                           "form string, canonical string")
     # Orient every edge (hi, lo); both star operations preserve the
     # orientation, so `lo` is always the smaller label.
     e = (edges.select(F.greatest("src", "dst").alias("hi"),
@@ -148,7 +147,7 @@ def connected_components(vertices: DataFrame, edges: DataFrame,
          .filter(F.col("hi") != F.col("lo"))
          .distinct().localCheckpoint())
     n_prev = e.count()
-    for it in range(max_iter):
+    for _ in range(MAX_ROUNDS):
         # large-star: every node links its LARGER neighbors to its
         # neighborhood min (including itself)
         sym = e.union(e.select(F.col("lo").alias("hi"),
@@ -176,7 +175,7 @@ def connected_components(vertices: DataFrame, edges: DataFrame,
         n_prev = n_new
     else:
         raise RuntimeError(
-            f"connected_components did not converge in {max_iter} "
+            f"connected_components did not converge in {MAX_ROUNDS} "
             f"large/small-star rounds — refusing to return partial "
             f"labels (graph has ~{n_prev} star edges)")
     # stars: every non-root points straight at its component min
@@ -187,58 +186,41 @@ def connected_components(vertices: DataFrame, edges: DataFrame,
                     .alias("canonical")))
 
 
-def canonical_map(mentions: DataFrame, word_col: str = "word",
-                  num_hashes: int = 8, band_size: int = 2,
-                  jaccard_threshold: float = 0.5,
-                  driver_threshold: int = 100_000,
-                  driver_char_budget: int = 4_000_000) -> DataFrame:
+def canonical_map(mentions: DataFrame) -> DataFrame:
     """form → canonical (entity surface).  Forms shorter than 2 chars
     and forms with no similar neighbor map to themselves.
 
     Scale split (same pattern as connected_components): the DISTINCT
     form set is usually orders of magnitude smaller than the mention
-    stream — when it fits ``driver_threshold`` the whole
+    stream — when it fits ``DRIVER_FORMS`` the whole
     minhash/band/verify/union-find chain runs on the driver via the
-    pure-python twin (lacspark.canonical_py, the module that also
-    generates the golden oracles — the two paths are pinned equal by
-    the golden-gated kg_* queries and a dedicated test).  That is ONE
-    Spark job (the distinct + probe collect) instead of six
-    (window, self-join, dedup, CC probes, checkpoint), whose fixed
-    per-job overhead dominates at small cardinalities.  Above the
-    threshold: the distributed banded path, unchanged."""
-    forms = surface_forms(mentions, word_col).persist()
+    pure-python twin (``canonical_py.canonical_map_py``, which also
+    generates the golden oracles).  That is ONE Spark job (the
+    distinct + probe collect) instead of the banded chain's six,
+    whose fixed per-job overhead dominates at small cardinalities.
+    Above the bounds: the distributed banded path."""
+    forms = surface_forms(mentions).persist()
     # probe-by-collect: the limit(N+1) IS both the size probe and,
     # when small, the data fetch (the persist keeps the big path from
     # recomputing the distinct)
-    probe = forms.select("form").limit(driver_threshold + 1).collect()
-    # the fast path's cost is total CHARS (char-3-grams x num_hashes),
-    # not form count — a pathological corpus of few but very long
-    # forms must not stall the driver single-threaded; beyond the char
-    # budget the distributed path takes over (wall-time bound, not
-    # just cardinality bound)
-    if len(probe) <= driver_threshold and \
-            sum(len(r.form) for r in probe) <= driver_char_budget:
-        from lacspark.canonical_py import canonical_map_py
-
-        spark = mentions.sparkSession
-        audit: dict = {}
-        cmap = canonical_map_py(
-            [r.form for r in probe], num_hashes=num_hashes,
-            band_size=band_size, jaccard_threshold=jaccard_threshold,
-            audit_out=audit)
-        # the fast path reports the same drop accounting the
-        # distributed candidate_pairs cap observes
-        record_cap(
-            "canonical_candidate_pairs", 1000, "minhash band buckets",
-            (audit["n_units_capped"], audit["n_rows_dropped"]))
+    probe = forms.select("form").limit(DRIVER_FORMS + 1).collect()
+    # the fast path's cost is total CHARS (char-3-grams x hashes), not
+    # form count — a pathological corpus of few but very long forms
+    # must not stall the driver single-threaded; beyond DRIVER_CHARS
+    # the distributed path takes over
+    if len(probe) <= DRIVER_FORMS and \
+            sum(len(r.form) for r in probe) <= DRIVER_CHARS:
+        cmap, counts = canonical_map_py([r.form for r in probe])
+        # the same drop accounting the distributed cap observes
+        record_cap(CAP_OP, MAX_BUCKET, CAP_UNIT, counts)
         rows = [(f, c, eid) for f, (c, eid) in sorted(cmap.items())]
         forms.unpersist()
         return local_frame(
-            spark, rows, "form string, canonical string, entity_id long")
-    banded = minhash_bands(forms, num_hashes, band_size)
+            mentions.sparkSession, rows,
+            "form string, canonical string, entity_id long")
     # CC probes the edge count and then reads edges again (driver
     # union-find or per-iteration joins) — materialize once
-    edges = candidate_pairs(banded, jaccard_threshold).persist()
+    edges = candidate_pairs(minhash_bands(forms)).persist()
     comp = connected_components(forms.select("form"), edges)
     comp = comp.localCheckpoint()  # cut lineage before unpersisting
     forms.unpersist()

@@ -11,15 +11,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .canonical import MD5INT
+from .canonical import form
+from .dedup import MD5INT
 
 
 def _with_canonical(df: DataFrame, cmap: DataFrame, col: str,
                     out_prefix: str) -> DataFrame:
     """Join a surface-form column to its canonical entity.  Forms not
     in the map (len<2 or never canonicalized) are their own entity."""
-    norm = F.lower(F.trim(F.col(col)))
-    joined = df.withColumn(f"__{col}_form", norm).join(
+    joined = df.withColumn(f"__{col}_form", form(col)).join(
         cmap.select(F.col("form").alias(f"__{col}_form"),
                     F.col("canonical").alias(f"{out_prefix}_canonical"),
                     F.col("entity_id").alias(f"{out_prefix}_id")),
@@ -41,7 +41,7 @@ def build_vertices(mentions: DataFrame, cmap: DataFrame,
     return (m.groupBy("entity_id", "entity_canonical")
             .agg(F.count(F.lit(1)).alias("n_mentions"),
                  F.sum("rank").alias("salience"),
-                 F.slice(F.array_sort(F.collect_set(F.lower(F.trim("word")))),
+                 F.slice(F.array_sort(F.collect_set(form("word"))),
                          1, max_aliases).alias("aliases"),
                  F.countDistinct("tag").alias("n_tags"),
                  F.max("tag").alias("top_tag"))

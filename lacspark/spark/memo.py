@@ -2,8 +2,8 @@
 
 The tagger keeps its state in one engine per Python worker; the driver
 keeps its state here and nowhere else.  Users: ``queries.load``'s
-DataFrames, the streaming gates' child session, the k-means / label /
-PQ codebooks, the PQ code table and corpus vectors, the minhash
+DataFrames, the streaming gates' child session, the k-means / PQ
+codebooks, the PQ code table and corpus vectors, the minhash
 shingle table and verified pair set, and the subword-count table of
 ``pack_sequences_bpe``.
 

@@ -4,12 +4,12 @@ The Spark-side mechanics — schema, partition shape, Arrow batch flow
 through ``mapInPandas``, typed metadata extraction — are real and
 tested, and so is the decode for the formats the standard library can
 carry: PNG (zlib inflate + filter reconstruction, 8-bit gray/RGB/
-RGBA), uncompressed 24-bit BMP, and PCM WAV (stdlib ``wave``).  PIL
-is preferred when importable (not in this container); formats that
-genuinely need an external codec (real video containers; TIFF/WebP)
-raise ``NotImplementedError`` — honest scope, not silent wrong
-answers.  JPEG is decoded/encoded by the in-repo baseline codec
-(:mod:`lacspark.jpeg`, pure numpy).
+RGBA), uncompressed 24-bit BMP, and PCM WAV (stdlib ``wave``).  No
+external codec is used even where one is installed, so a result never
+depends on the host; formats that genuinely need one (real video
+containers; TIFF/WebP) raise ``NotImplementedError`` — honest scope,
+not silent wrong answers.  JPEG is decoded/encoded by the in-repo
+baseline codec (:mod:`lacspark.jpeg`, pure numpy).
 Video is exercised through a length-prefixed PNG-frame container
 (``frames/v1``) so the frame-sampling plumbing is real even without
 ffmpeg.
@@ -42,17 +42,6 @@ FEATURE_FIELDS = [
     T.StructField("height", T.IntegerType()),
     T.StructField("features", T.ArrayType(T.FloatType())),
 ]
-
-
-def _codec_available() -> bool:
-    """True when a real image codec (PIL) is importable.  Not present
-    in this container; on a real cluster installing Pillow flips the
-    decode path automatically — nothing else changes."""
-    try:  # pragma: no cover — container has no codec libs
-        import PIL.Image  # noqa: F401
-        return True
-    except ImportError:
-        return False
 
 
 # ---------------------------------------------------------------------------
@@ -238,28 +227,23 @@ def resize_nearest(img: np.ndarray, width: int, height: int) -> np.ndarray:
 
 
 def decode_image(payload: bytes) -> np.ndarray:
-    """Encoded image → HxWxC uint8.  JPEG always decodes through the
-    in-repo baseline codec (lacspark.jpeg) — JPEG decoding is
-    implementation-dependent at the pixel level (IDCT variants), so
-    routing it through PIL on clusters that have it would silently
-    break golden parity with the oracle engine; PNG/BMP are lossless,
-    so PIL (when importable) and the stdlib decoders agree bit-exactly
-    and either path is fine.  Anything else (TIFF, WebP, …) raises —
-    honest scope."""
+    """Encoded image → HxWxC uint8.  JPEG decodes through the in-repo
+    baseline codec (lacspark.jpeg) — JPEG decoding is
+    implementation-dependent at the pixel level (IDCT variants), so an
+    external codec would break golden parity with the oracle engine;
+    PNG/BMP through the stdlib decoders.  Anything else (TIFF, WebP,
+    …) raises — honest scope."""
     if payload[:2] == b"\xff\xd8":
         from lacspark.jpeg import decode_jpeg
 
         return decode_jpeg(payload)
-    if _codec_available():  # pragma: no cover — container has no PIL
-        import PIL.Image
-        return np.asarray(PIL.Image.open(io.BytesIO(payload)))
     if payload[:8] == _PNG_SIG:
         return decode_png(payload)
     if payload[:2] == b"BM":
         return decode_bmp(payload)
     raise NotImplementedError(
-        "PNG/BMP/JPEG decodable codec-free; other formats need "
-        "Pillow on the cluster — the Spark plumbing is codec-agnostic")
+        "only PNG/BMP/JPEG decode here; other formats need an external "
+        "codec — the Spark plumbing is codec-agnostic")
 
 
 def _fake_decode(payload: bytes, dim: int = 8) -> tuple[int, int, np.ndarray]:
@@ -276,33 +260,23 @@ def _fake_decode(payload: bytes, dim: int = 8) -> tuple[int, int, np.ndarray]:
 
 
 def extract_media_features(df: DataFrame, payload_col: str = "payload",
-                           feature_dim: int = 8,
-                           force_fake_decode: bool = False) -> DataFrame:
-    """mapInPandas feature extraction over binary payloads.
+                           feature_dim: int = 8) -> DataFrame:
+    """mapInPandas feature-extraction plumbing over binary payloads.
 
-    Arrow moves the binary column zero-copy into the python worker;
-    the per-batch loop is the decode hot path (vectorization happens
-    per payload inside the codec, not across rows).  The real codec
-    path is taken when PIL imports inside the worker; otherwise (and
-    when ``force_fake_decode`` pins determinism for the oracle) the
-    sha-derived fake stands in."""
+    Arrow moves the binary column zero-copy into the python worker.
+    Shape and features are the sha-derived fake (``_fake_decode``), so
+    the output is the same on every host; real decoding is
+    :func:`extract_real_features`."""
     out_schema = T.StructType(list(df.schema.fields) + FEATURE_FIELDS)
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        use_fake = force_fake_decode or not _codec_available()
         for pdf in batches:
             n_bytes, shas, ws, hs, feats = [], [], [], [], []
             for payload in pdf[payload_col]:
                 raw = bytes(payload) if payload is not None else b""
                 n_bytes.append(len(raw))
                 shas.append(hashlib.sha256(raw).hexdigest())
-                if use_fake:
-                    w, h, f = _fake_decode(raw, feature_dim)
-                else:  # pragma: no cover — needs codec libs
-                    img = decode_image(raw)
-                    h, w = img.shape[:2]
-                    f = img.mean(axis=(0, 1)).reshape(-1)[:feature_dim] \
-                        .astype(np.float32)
+                w, h, f = _fake_decode(raw, feature_dim)
                 ws.append(int(w))
                 hs.append(int(h))
                 feats.append([float(x) for x in f])

@@ -20,6 +20,18 @@ Only stdlib/third-party modules whose import has no side effects
 beyond module init are preloaded; lacspark.engine constructs nothing
 at import time (engines are built lazily per worker key).
 
+Threads at the fork.  A fork copies only the forking thread, so a
+thread alive in the daemon is absent from every worker.  After the
+preload the daemon holds two native threads: its main thread and
+``jemalloc_bg_thd``, the background thread of pyarrow's bundled
+jemalloc, which importing pandas or pyarrow starts.
+``threading.active_count()`` stays 1, so only ``/proc/self/task``
+shows it (tests/test_session.py checks the thread names).  Importing
+numpy before ``lacspark`` would start OpenBLAS worker threads too (3
+more on a 4-vCPU box); the daemon runs as ``-m lacspark.spark.py_daemon``,
+so ``lacspark/__init__`` sets the BLAS thread env defaults to 1
+before numpy loads, and that alone keeps them out.
+
 Per-task zip re-read.  Every Python task starts with
 ``setup_spark_files``, which calls ``importlib.invalidate_caches()``.
 On Python < 3.12 that makes every ``zipimporter`` in

@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .dedup import MD5INT
+
 FEATURES = ["n_chars", "n_tokens", "avg_token_len", "alpha_ratio",
             "digit_ratio", "punct_ratio", "space_ratio", "upper_ratio"]
 
@@ -236,9 +238,8 @@ def hash_split(df: DataFrame, id_col: str = "doc_id",
                test_pct: int = 10) -> tuple[DataFrame, DataFrame]:
     """Deterministic md5 train/test split (reproducible across runs,
     engines, partitionings — rand() is none of those)."""
-    bucket = F.expr(
-        "pmod(cast(conv(substring(md5(concat('split:', "
-        f"cast({id_col} as string))), 1, 15), 16, 10) as bigint), 100)")
+    h = MD5INT.format(x=f"concat('split:', cast({id_col} as string))")
+    bucket = F.expr(f"pmod({h}, 100)")
     marked = df.withColumn("__b", bucket)
     return (marked.filter(F.col("__b") >= test_pct).drop("__b"),
             marked.filter(F.col("__b") < test_pct).drop("__b"))

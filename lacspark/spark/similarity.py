@@ -80,24 +80,6 @@ def probe_masks(nbits: int, radius: int) -> list[int]:
     return masks
 
 
-def label_centroids(corpus: DataFrame, vec_col: str, label_col: str,
-                    dim: int) -> DataFrame:
-    """Coarse-quantizer codebook: one centroid per ``label_col`` value
-    (deterministic — no k-means seed to drift between engines).  One
-    groupBy with 64 partial-aggregating avg columns, no explode: the
-    map side reduces every partition to n_labels rows before the
-    shuffle, so this is a constant-size aggregate even at 10^12 rows.
-    Components rounded to 9 decimals so Spark's and an oracle engine's
-    summation order can't flip downstream nearest-centroid argmaxes."""
-    aggs = [F.round(F.avg(F.element_at(F.col(vec_col), j + 1)
-                          .cast("double")), 9).alias(f"__c{j}")
-            for j in range(dim)]
-    return (corpus.groupBy(F.col(label_col).alias("list_id")).agg(*aggs)
-            .select("list_id",
-                    F.array(*[F.col(f"__c{j}") for j in range(dim)])
-                    .alias("centroid")))
-
-
 def _scale_unit(cents: list[list[float]]) -> list[list[float]]:
     """Scale each centroid by 1/‖c‖ so cosine ranking equals plain
     dot-product ranking (the assignment then needs no norms)."""
@@ -108,26 +90,6 @@ def _scale_unit(cents: list[list[float]]) -> list[list[float]]:
         nrm = math.sqrt(sum(v * v for v in c)) or 1.0
         out.append([float(v) / nrm for v in c])
     return out
-
-
-def collect_codebook(corpus: DataFrame, vec_col: str, label_col: str,
-                     dim: int) -> tuple[list[int], list[list[float]]]:
-    """Materialize the (tiny) per-label centroid codebook on the
-    driver — (list_ids sorted ascending, norm-scaled centroid
-    vectors).  The SUPERVISED codebook variant for corpora that carry
-    a cluster/label column; label-less corpora use
-    :func:`kmeans_codebook`.  Memoized on the corpus's input
-    fingerprint, so rewritten data invalidates it."""
-    def build():
-        rows = label_centroids(corpus, vec_col, label_col, dim).collect()
-        rows.sort(key=lambda r: r.list_id)
-        return ([int(r.list_id) for r in rows],
-                _scale_unit([list(r.centroid) for r in rows]))
-
-    fp = input_fingerprint(corpus)
-    return memo(corpus.sparkSession,
-                ("label", fp, vec_col, label_col, dim) if fp else None,
-                build)
 
 
 def kmeans_codebook(corpus: DataFrame, id_col: str, vec_col: str,
@@ -253,15 +215,14 @@ def _nearest_lists(df: DataFrame, codebook, out_id: str,
 
 def ivf_topk(queries: DataFrame, corpus: DataFrame, id_col: str,
              vec_col: str, dim: int, k: int = 5,
-             nprobe: int = 3, n_lists: int = 16, iters: int = 2,
-             label_col: str | None = None) -> DataFrame:
+             nprobe: int = 3, n_lists: int = 16, iters: int = 2
+             ) -> DataFrame:
     """IVF (inverted-file) ANN: assign every corpus vector to its
     nearest coarse centroid (its *list*), probe each query against the
     ``nprobe`` nearest lists only, exact cosine re-rank inside them.
     The codebook comes from deterministic k-means over the vectors
-    themselves (:func:`kmeans_codebook`) — no label column needed;
-    pass ``label_col`` to use the supervised per-label variant
-    instead.  Scale shape: constant-size aggregates build the
+    themselves (:func:`kmeans_codebook`) — no label column needed.
+    Scale shape: constant-size aggregates build the
     codebook (collected to the driver and shipped back as literals —
     the broadcast pattern); list assignment is a pure projection with
     no shuffle; the only data movement is the candidate equi-join on
@@ -269,11 +230,8 @@ def ivf_topk(queries: DataFrame, corpus: DataFrame, id_col: str,
     ~nprobe/n_lists of the corpus.  Complements sign-LSH
     (`lsh_bucketed_topk`): IVF adapts to the data distribution, LSH
     is data-independent."""
-    if label_col is not None:
-        cb = collect_codebook(corpus, vec_col, label_col, dim)
-    else:
-        cb = kmeans_codebook(corpus, id_col, vec_col, dim,
-                             n_lists=n_lists, iters=iters)
+    cb = kmeans_codebook(corpus, id_col, vec_col, dim,
+                         n_lists=n_lists, iters=iters)
     n = _nearest_lists(_with_norm(corpus, id_col, vec_col, "neighbor_id"),
                        cb, "neighbor_id", nprobe=1)
     q = _nearest_lists(_with_norm(queries, id_col, vec_col, "query_id"),
@@ -294,15 +252,12 @@ def ivf_topk(queries: DataFrame, corpus: DataFrame, id_col: str,
 
 
 def ivf_list_sizes(corpus: DataFrame, id_col: str, vec_col: str,
-                   dim: int, n_lists: int = 16, iters: int = 2,
-                   label_col: str | None = None) -> DataFrame:
+                   dim: int, n_lists: int = 16, iters: int = 2
+                   ) -> DataFrame:
     """(list_id, n_vectors): the IVF partition histogram — the skew
     diagnostic you'd watch before trusting nprobe at scale."""
-    if label_col is not None:
-        cb = collect_codebook(corpus, vec_col, label_col, dim)
-    else:
-        cb = kmeans_codebook(corpus, id_col, vec_col, dim,
-                             n_lists=n_lists, iters=iters)
+    cb = kmeans_codebook(corpus, id_col, vec_col, dim,
+                         n_lists=n_lists, iters=iters)
     n = _nearest_lists(_with_norm(corpus, id_col, vec_col, "neighbor_id"),
                        cb, "neighbor_id", nprobe=1)
     return (n.groupBy("list_id")

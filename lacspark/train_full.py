@@ -3,10 +3,9 @@
 The reference trains the entire stack — sparse embedding, stacked
 Bi-GRU, FC emission, linear-chain CRF — with Adam
 (/root/reference/python/LAC/nets.py:276-359 ``lex_net`` +
-``train`` in train.py); `lacspark.training.crf_fit_transitions` covers
-only the CRF + emission-head slice.  This module closes the gap with a
-pure-numpy float64 reverse-mode pass over the identical forward
-recurrence used at inference (`lacspark.net.BiGruCrf`), plus:
+``train`` in train.py).  This module does the same with a pure-numpy
+float64 reverse-mode pass over the identical forward recurrence used
+at inference (`lacspark.net.BiGruCrf`), plus:
 
 * `nll_and_grads` — batch CRF NLL and its exact gradient w.r.t. every
   trainable tensor (finite-difference-checked in
@@ -34,7 +33,11 @@ from __future__ import annotations
 
 import numpy as np
 
-from .training import _log_sum_exp
+
+def _log_sum_exp(a: np.ndarray, axis: int) -> np.ndarray:
+    m = a.max(axis=axis, keepdims=True)
+    return (m + np.log(np.exp(a - m).sum(axis=axis, keepdims=True))) \
+        .squeeze(axis)
 
 TRAINABLE_PREFIXES = ("emb", "l", "fc_w", "fc_b",
                       "crf_trans", "crf_start", "crf_stop")

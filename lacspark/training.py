@@ -1,5 +1,5 @@
-"""Training-side operators: corpus readers, the chunk P/R/F1 metric,
-and a minimal incremental CRF trainer.
+"""Training-side operators: corpus readers and the chunk P/R/F1
+metric.
 
 * ``parse_tagged_line`` / ``parse_seg_line`` transcribe the
   reference's training readers (/root/reference/python/LAC/
@@ -8,20 +8,13 @@ and a minimal incremental CRF trainer.
 * ``chunk_prf`` is the reference's chunk_eval metric
   (nets.py:174-180, 246-273) as a DataFrame op — the P/R ≥ 0.95 gate
   of the north rule is computed with exactly this join.
-* ``crf_fit_transitions`` is the incremental-training path (O21,
-  models.py:177-210): full CRF NLL gradient via forward-backward on
-  the transition/start/stop parameters, plus (``fit_emissions=True``)
-  the linear emission head fc_w/fc_b — enough to adapt both the
-  decoder and the label scores to new annotation, deterministic, no
-  Paddle.  The recurrent stack stays frozen HERE; full-network
-  training (backprop through the Bi-GRU stack + embeddings, Adam,
-  Spark data-parallel — the reference's nets.py:276-359) lives in
-  `lacspark.train_full`.
+
+Training itself (O21: backprop through the whole Bi-GRU-CRF, Adam,
+Spark data-parallel — the reference's nets.py:276-359) lives in
+`lacspark.train_full`.
 """
 
 from __future__ import annotations
-
-import numpy as np
 
 
 # ---------------------------------------------------------------------------
@@ -186,101 +179,3 @@ def chunk_prf_df(gold_df, pred_df, keys: list[str]):
     f1 = 2 * prec * rec / (prec + rec) if prec + rec else 0.0
     return {"tp": tp, "fp": fp, "fn": fn,
             "precision": prec, "recall": rec, "f1": f1}
-
-
-# ---------------------------------------------------------------------------
-# O21 — incremental CRF training (transitions; emissions frozen)
-# ---------------------------------------------------------------------------
-
-def _log_sum_exp(a: np.ndarray, axis: int) -> np.ndarray:
-    m = a.max(axis=axis, keepdims=True)
-    return (m + np.log(np.exp(a - m).sum(axis=axis, keepdims=True))) \
-        .squeeze(axis)
-
-
-def crf_fit_transitions(net, id_seqs: list[np.ndarray],
-                        label_seqs: list[np.ndarray],
-                        lr: float = 0.1, epochs: int = 10,
-                        fit_emissions: bool = False) -> list[float]:
-    """Full-batch gradient descent on the CRF NLL w.r.t.
-    (crf_trans, crf_start, crf_stop) and — with
-    ``fit_emissions=True`` — the emission FC layer (fc_w, fc_b); the
-    recurrent stack and embeddings stay frozen (the reference trains
-    the full stack with Adam, nets.py:276-359; transitions + the
-    linear emission head is the slice that stays deterministic and
-    Paddle-free here).
-
-    Forward-backward in log space; deterministic (no shuffling, fixed
-    lr).  Returns the per-epoch NLL trace (must decrease).  After
-    fitting, ``net`` decodes with the updated weights — the
-    incremental-training hot-reload of models.py:209."""
-    padded, lens = net._pad([np.asarray(s, dtype=np.int64)
-                             for s in id_seqs])
-    hidden_all = net._hidden(padded, lens)  # [B, T, 2H], frozen
-    h_list = [hidden_all[k, : len(s)].astype(np.float64)
-              for k, s in enumerate(id_seqs)]
-
-    nll_trace = []
-    for _ in range(epochs):
-        g_trans = np.zeros_like(net.w["crf_trans"])
-        g_start = np.zeros_like(net.w["crf_start"])
-        g_stop = np.zeros_like(net.w["crf_stop"])
-        g_fc_w = np.zeros(net.w["fc_w"].shape, dtype=np.float64)
-        g_fc_b = np.zeros(net.w["fc_b"].shape, dtype=np.float64)
-        total_nll = 0.0
-        trans = net.w["crf_trans"].astype(np.float64)
-        fc_w = net.w["fc_w"].astype(np.float64)
-        fc_b = net.w["fc_b"].astype(np.float64)
-        for h, labels in zip(h_list, label_seqs):
-            e = h @ fc_w + fc_b  # emissions from the current FC
-            t, n = e.shape
-            # forward
-            alpha = np.empty((t, n))
-            alpha[0] = net.w["crf_start"] + e[0]
-            for i in range(1, t):
-                alpha[i] = e[i] + _log_sum_exp(
-                    alpha[i - 1][:, None] + trans, axis=0)
-            logz = _log_sum_exp(alpha[-1] + net.w["crf_stop"], axis=0)
-            # backward
-            beta = np.empty((t, n))
-            beta[-1] = net.w["crf_stop"]
-            for i in range(t - 2, -1, -1):
-                beta[i] = _log_sum_exp(
-                    trans + (e[i + 1] + beta[i + 1])[None, :], axis=1)
-            # marginals − observed
-            p0 = np.exp(alpha[0] + beta[0] - logz)
-            g_start += p0
-            g_start[labels[0]] -= 1
-            pT = np.exp(alpha[-1] + net.w["crf_stop"] - logz)
-            g_stop += pT
-            g_stop[labels[-1]] -= 1
-            for i in range(1, t):
-                m = (alpha[i - 1][:, None] + trans
-                     + (e[i] + beta[i])[None, :]) - logz
-                g_trans += np.exp(m)
-                g_trans[labels[i - 1], labels[i]] -= 1
-            if fit_emissions:
-                # dNLL/de[i,j] = P(y_i=j | x) − 1[labels_i=j]; the FC
-                # is linear, so g_fc_w = hᵀ dE, g_fc_b = Σ_i dE[i]
-                node_p = np.exp(alpha + beta - logz)  # [t, n]
-                node_p[np.arange(t), labels] -= 1.0
-                g_fc_w += h.T @ node_p
-                g_fc_b += node_p.sum(axis=0)
-            # observed path score
-            score = net.w["crf_start"][labels[0]] + e[0, labels[0]]
-            for i in range(1, t):
-                score += trans[labels[i - 1], labels[i]] + e[i, labels[i]]
-            score += net.w["crf_stop"][labels[-1]]
-            total_nll += float(logz - score)
-        scale = lr / max(len(h_list), 1)
-        net.w["crf_trans"] -= (scale * g_trans).astype(np.float32)
-        net.w["crf_start"] -= (scale * g_start).astype(np.float32)
-        net.w["crf_stop"] -= (scale * g_stop).astype(np.float32)
-        if fit_emissions:
-            net.w["fc_w"] = (net.w["fc_w"].astype(np.float64)
-                             - scale * g_fc_w).astype(np.float32)
-            net.w["fc_b"] = (net.w["fc_b"].astype(np.float64)
-                             - scale * g_fc_b).astype(np.float32)
-        net.refresh_crf()  # keep the constrained decoder in sync
-        nll_trace.append(total_nll / max(len(h_list), 1))
-    return nll_trace

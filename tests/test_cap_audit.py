@@ -96,18 +96,18 @@ def test_substring_cap_audit_counts_boilerplate_gram(spark, tmp_path):
     assert a["n_rows_dropped"] == 6
 
 
-def test_canonical_fast_path_reports_drops():
+def test_canonical_fast_path_reports_drops(monkeypatch):
     """The driver fast path (canonical_py) reports the same counts
     the distributed candidate_pairs cap would."""
-    from lacspark.canonical_py import canonical_map_py
+    from lacspark import canonical_py
 
-    # > max_bucket identical forms land in one bucket per band
+    # > MAX_BUCKET identical forms land in one bucket per band
+    monkeypatch.setattr(canonical_py, "MAX_BUCKET", 3)
     words = [f"entity{i:03d}" for i in range(4)] + ["samesame"] * 10
-    audit: dict = {}
-    cmap = canonical_map_py(["samesame"] * 10 + words, max_bucket=3,
-                            audit_out=audit)
-    assert audit["n_units_capped"] >= 1
-    assert audit["n_rows_dropped"] >= 1
+    cmap, (n_units_capped, n_rows_dropped) = canonical_py.canonical_map_py(
+        ["samesame"] * 10 + words)
+    assert n_units_capped >= 1
+    assert n_rows_dropped >= 1
     # a capped form still canonicalizes to itself — drops degrade
     # recall, never correctness
     assert cmap["samesame"][0] == "samesame"

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import sys
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -37,6 +39,29 @@ def test_decode_raises_only_for_codec_needing_formats():
         decode_image(b"\xff\xd8\xff" + b"\x00" * 16)
     with pytest.raises(NotImplementedError):
         decode_image(b"II*\x00" + b"\x00" * 16)  # TIFF
+
+
+def test_decode_ignores_installed_pillow(monkeypatch):
+    """An importable Pillow must not change the decode path: with a
+    ``PIL.Image`` whose ``open`` raises, PNG still round-trips."""
+    import types
+
+    import numpy as np
+
+    from lacspark.spark.multimodal import encode_png
+
+    def refuse(*_a, **_k):
+        raise AssertionError("PIL.Image.open called")
+
+    image = types.ModuleType("PIL.Image")
+    image.open = refuse
+    pil = types.ModuleType("PIL")
+    pil.Image = image
+    monkeypatch.setitem(sys.modules, "PIL", pil)
+    monkeypatch.setitem(sys.modules, "PIL.Image", image)
+    img = np.random.default_rng(3).integers(0, 256, size=(9, 6, 3),
+                                            dtype=np.uint8)
+    assert (decode_image(encode_png(img)) == img).all()
 
 
 def test_stdlib_codecs_roundtrip():
@@ -183,7 +208,8 @@ def test_streaming_curation_equals_batch_filters(spark):
     plain batch over the same parquet."""
     from pyspark.sql import functions as F
 
-    from lacspark.queries import SPARK_QUERIES, _MD5INT_SPARK, load
+    from lacspark.queries import SPARK_QUERIES, load
+    from lacspark.spark.dedup import MD5INT
     from lacspark.spark.quality import with_repetition_keep
 
     sf = "/root/testdata/sf0.001"
@@ -194,7 +220,7 @@ def test_streaming_curation_equals_batch_filters(spark):
     punct = F.length(F.regexp_replace("text", "[a-zA-Z0-9 ]", ""))
     punct_pct = F.floor(punct * 100
                         / F.greatest(F.length("text"), F.lit(1)))
-    smp = F.expr(_MD5INT_SPARK.format(
+    smp = F.expr(MD5INT.format(
         x="concat('cur:', cast(doc_id as string))")) % 100
     want = {r.lang: r.n for r in
             d.filter(F.col("rep_keep")

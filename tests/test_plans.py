@@ -49,9 +49,9 @@ def test_ivf_assignment_is_shuffle_free(spark):
     codebook as literal, scores/argmax inside the same project — no
     Exchange, no Join before the final candidate equi-join."""
     from lacspark.spark.similarity import (_nearest_lists, _with_norm,
-                                           collect_codebook)
+                                           kmeans_codebook)
     e = spark.read.parquet(f"{SF}/embeddings.parquet")
-    cb = collect_codebook(e, "embedding", "label", 64)
+    cb = kmeans_codebook(e, "vec_id", "embedding", 64)
     assign = _nearest_lists(_with_norm(e, "vec_id", "embedding", "n"),
                             cb, "n", nprobe=1)
     plan = plan_of(assign)

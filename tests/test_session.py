@@ -45,6 +45,30 @@ spark.stop()
     assert out.stdout.strip().splitlines()[-1] == "[0, 2, 4, 6]"
 
 
+def test_daemon_preload_starts_only_jemalloc_thread():
+    """The worker daemon forks after its preload, and a thread alive at
+    a fork is not copied into the child.  After the preload the daemon
+    holds exactly its main thread and pyarrow's jemalloc background
+    thread; a preload that starts any other native thread (OpenBLAS
+    workers among them, with the BLAS thread env vars unset) fails
+    here.  ``threading`` cannot see native threads, so the names come
+    from ``/proc/self/task``."""
+    script = """
+import os
+import lacspark.spark.py_daemon
+names = [open(f"/proc/self/task/{t}/comm").read().strip()
+         for t in os.listdir("/proc/self/task")]
+print(open("/proc/self/comm").read().strip(), sorted(names))
+"""
+    env = {k: v for k, v in os.environ.items() if k not in (
+        "OMP_NUM_THREADS", "OPENBLAS_NUM_THREADS", "MKL_NUM_THREADS")}
+    out = subprocess.run([sys.executable, "-c", script], cwd=REPO,
+                         env=env, capture_output=True, text=True,
+                         timeout=120)
+    assert out.returncode == 0, out.stderr[-3000:]
+    main, names = out.stdout.split(" ", 1)
+    assert ast.literal_eval(names) == sorted([main, "jemalloc_bg_thd"])
+
 def _zip_rereads(batches):
     """Runs in a Python worker: the zip directory reads one
     ``importlib.invalidate_caches()`` makes over the worker's own

@@ -8,9 +8,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from lacspark.engine import LacEngine
-from lacspark.spark.canonical import (candidate_pairs, canonical_map,
-                                      connected_components, minhash_bands,
-                                      surface_forms)
+from lacspark.spark import canonical
+from lacspark.spark.canonical import canonical_map, connected_components
 from lacspark.spark.kg import FILE_KEYS, mention_salience_topk, tag_files
 from lacspark.spark.pipeline import run_pipeline
 from lacspark.spark.repos_files import synth_repos_files
@@ -180,7 +179,7 @@ def test_minhash_deterministic_and_groups_similar(spark):
     assert cmap1["zzz"] == "zzz"
 
 
-def test_connected_components_chain(spark):
+def test_connected_components_chain(spark, monkeypatch):
     verts = spark.createDataFrame([("a",), ("b",), ("c",), ("d",), ("e",)],
                                   "form string")
     edges = spark.createDataFrame([("b", "c"), ("c", "d")],
@@ -191,13 +190,13 @@ def test_connected_components_chain(spark):
               for r in connected_components(verts, edges).collect()}
     assert labels == expected
     # distributed iterative path must agree exactly
+    monkeypatch.setattr(canonical, "DRIVER_EDGES", 0)
     dist = {r.form: r.canonical
-            for r in connected_components(verts, edges,
-                                          driver_threshold=0).collect()}
+            for r in connected_components(verts, edges).collect()}
     assert dist == expected
 
 
-def test_connected_components_long_chain_and_random(spark):
+def test_connected_components_long_chain_and_random(spark, monkeypatch):
     """large/small-star must agree with driver union-find on (a) a
     120-node chain — diameter far beyond the old 20-round min-label
     cap — and (b) a deterministic pseudo-random graph."""
@@ -213,9 +212,10 @@ def test_connected_components_long_chain_and_random(spark):
             [e for e in edge_list if e[0] != e[1]], "src string, dst string")
         ref = {r.form: r.canonical
                for r in connected_components(verts, edges).collect()}
-        dist = {r.form: r.canonical
-                for r in connected_components(
-                    verts, edges, driver_threshold=0).collect()}
+        with monkeypatch.context() as m:
+            m.setattr(canonical, "DRIVER_EDGES", 0)
+            dist = {r.form: r.canonical
+                    for r in connected_components(verts, edges).collect()}
         assert dist == ref
 
 
@@ -268,34 +268,28 @@ def test_build_edges_salience_weighting(spark):
     assert gd.weight == 0.75 * 2 and gd.salience == 1
 
 
-def test_canonical_fast_path_matches_distributed(spark, docs):
+def test_canonical_fast_path_matches_distributed(spark, docs,
+                                                  monkeypatch):
     """canonical_map's driver fast path (python twin over the
     collected form set) must equal the distributed banded path
     row-for-row on the same mentions."""
-    from lacspark.spark.canonical import canonical_map
-    from lacspark.spark.tagger import explode_mentions, tag_and_extract
-
     tagged = tag_and_extract(docs, "text", mode="rank")
     mentions = explode_mentions(tagged, ["doc_id"]).cache()
-    fast = canonical_map(mentions)                       # driver path
-    slow = canonical_map(mentions, driver_threshold=0)   # banded path
-    f = sorted(tuple(r) for r in fast.collect())
-    s = sorted(tuple(r) for r in slow.collect())
+    f = sorted(tuple(r) for r in canonical_map(mentions).collect())
+    monkeypatch.setattr(canonical, "DRIVER_FORMS", 0)   # banded path
+    s = sorted(tuple(r) for r in canonical_map(mentions).collect())
     assert f == s
     assert len(f) > 0
 
 
-def test_canonical_char_budget_forces_distributed(spark):
+def test_canonical_char_budget_forces_distributed(spark, monkeypatch):
     """A pathological form set — few forms but very LONG ones — must
     fall through to the distributed path: the driver fast path's cost
     is total chars (3-grams x hashes), not form count, so the probe
     bounds chars too.  Exercised by shrinking the budget below the
     corpus; results must match the unconstrained run."""
-    from lacspark.spark.canonical import canonical_map
-
     rows = [(f"entity {'x' * 500}{i % 7}",) for i in range(40)]
     mentions = spark.createDataFrame(rows, "word string")
-    small = canonical_map(mentions, driver_char_budget=1_000)
-    big = canonical_map(mentions)
-    assert sorted(map(tuple, small.collect())) == \
-        sorted(map(tuple, big.collect()))
+    big = sorted(map(tuple, canonical_map(mentions).collect()))
+    monkeypatch.setattr(canonical, "DRIVER_CHARS", 1_000)
+    assert sorted(map(tuple, canonical_map(mentions).collect())) == big

@@ -1,17 +1,13 @@
-"""O20 reader parity, O22 chunk metric, O21 incremental CRF training,
-and the explicit north-rule P/R ≥ 0.95 gate."""
+"""O20 reader parity, O22 chunk metric and the explicit north-rule
+P/R ≥ 0.95 gate."""
 
 from __future__ import annotations
 
 import numpy as np
-import pytest
 
 from lacspark import resource_dir
-from lacspark.net import BiGruCrf
-from lacspark.tagscheme import SEG_LABELS, start_mask, transition_mask
-from lacspark.training import (chunk_prf, chunk_prf_df, crf_fit_transitions,
-                               iob2_chunks, parse_seg_line,
-                               parse_tagged_line)
+from lacspark.training import (chunk_prf, chunk_prf_df, iob2_chunks,
+                               parse_seg_line, parse_tagged_line)
 
 from .conftest import load_reference_module
 
@@ -102,62 +98,6 @@ def test_north_rule_pr_gate(spark):
     m = chunk_prf(pairs)
     assert m["precision"] >= 0.95 and m["recall"] >= 0.95
     assert m["f1"] == 1.0  # in fact exact: same model, same code
-
-
-def test_crf_incremental_training_reduces_nll_and_adapts():
-    net = BiGruCrf.load(str(resource_dir() / "seg_weights.npz"),
-                        transition_mask(SEG_LABELS),
-                        start_mask(SEG_LABELS))
-    rng = np.random.default_rng(3)
-    vocab = net.w["emb"].shape[0]
-    # synthetic annotation: every sequence alternates -S labels
-    seqs = [rng.integers(0, vocab, rng.integers(3, 10)) for _ in range(20)]
-    labels = [np.full(len(s), SEG_LABELS.index("-S"), dtype=np.int64)
-              for s in seqs]
-    before = net.decode(seqs)
-    acc_before = np.mean([np.mean(p == l) for p, l in zip(before, labels)])
-    trace = crf_fit_transitions(net, seqs, labels, lr=0.5, epochs=8)
-    assert trace[-1] < trace[0], trace  # NLL strictly improved
-    after = net.decode(seqs)
-    acc_after = np.mean([np.mean(p == l) for p, l in zip(after, labels)])
-    assert acc_after > acc_before
-    assert acc_after > 0.9  # adapted to the new annotation
-
-
-def test_crf_training_with_emission_layer_beats_transitions_only():
-    """fit_emissions=True must update fc_w/fc_b, keep the NLL trace
-    decreasing, and reach a LOWER final NLL than transitions-only on
-    annotation the transitions alone cannot express (labels that
-    depend on the token, not the neighbor)."""
-    def fresh():
-        return BiGruCrf.load(str(resource_dir() / "seg_weights.npz"),
-                             transition_mask(SEG_LABELS),
-                             start_mask(SEG_LABELS))
-
-    rng = np.random.default_rng(7)
-    vocab = fresh().w["emb"].shape[0]
-    seqs = [rng.integers(0, vocab, rng.integers(4, 12)) for _ in range(24)]
-    # token-dependent annotation: even ids are -S, odd ids are -B
-    labels = [np.where(s % 2 == 0, SEG_LABELS.index("-S"),
-                       SEG_LABELS.index("-B")).astype(np.int64)
-              for s in seqs]
-
-    net_t = fresh()
-    trace_t = crf_fit_transitions(net_t, seqs, labels, lr=0.3, epochs=30)
-
-    net_e = fresh()
-    fc_before = net_e.w["fc_w"].copy()
-    trace_e = crf_fit_transitions(net_e, seqs, labels, lr=0.3, epochs=30,
-                                  fit_emissions=True)
-    assert not np.array_equal(fc_before, net_e.w["fc_w"])  # FC trained
-    assert trace_e[-1] < trace_e[0]
-    assert trace_e[-1] < trace_t[-1]  # emission head adds capacity
-    acc_e = np.mean([np.mean(p == l)
-                     for p, l in zip(net_e.decode(seqs), labels)])
-    acc_t = np.mean([np.mean(p == l)
-                     for p, l in zip(net_t.decode(seqs), labels)])
-    assert acc_e > acc_t
-    assert acc_e > 0.55
 
 
 def test_training_rows_reader(spark, tmp_path):
