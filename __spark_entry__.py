@@ -75,13 +75,14 @@ _PRIORITY = [
 # query_hash_snapshot.json: editing a query without pinning it here
 # fails CI.
 _FRESH = [
-    # md5-int expression taken from dedup.MD5INT
-    "sample_stratified", "corpus_curation", "streaming_curation_counts",
-    "doc_fingerprint", "token_minhash_canonical",
-    # the fake decode is the only feature path
-    "multimodal_features",
-    # helpers changed: one union-find in CC; no label codebook in IVF
-    "dedup_near_components", "ann_ivf_topk", "ann_ivf_lists",
+    # helpers changed: one exact-cosine top-k tail and re-rank, one
+    # k-means seed pick and grid-mean update, one Python dot fold
+    "ann_bruteforce_top5", "ann_lsh_topk", "ann_ivf_topk", "ann_ivf_lists",
+    "ann_pq_topk", "dedup_embedding_cosine", "dedup_embedding_keep_best",
+    # helpers changed: one synthetic media table builder
+    "multimodal_features", "multimodal_decode_stats",
+    # docstring corrected: the payload decode is real
+    "binary_payload_meta",
 ]
 
 def _folded() -> frozenset:

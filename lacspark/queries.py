@@ -1754,8 +1754,9 @@ def doc_rolling_fingerprint(spark, sf_dir):
 """)
 def binary_payload_meta(spark, sf_dir):
     """Multimodal plumbing: treat the payload as an opaque binary
-    column with typed metadata (SURVEY multimodal posture; the decode
-    step itself is stubbed in lacspark.spark.multimodal)."""
+    column with typed metadata (SURVEY multimodal posture).  Nothing
+    is decoded here; the real PNG/BMP/JPEG/WAV decode is
+    ``lacspark.spark.multimodal.extract_real_features``."""
     d = load(spark, sf_dir, "documents")
     return d.select("doc_id",
                     F.octet_length(F.encode("text", "utf-8"))

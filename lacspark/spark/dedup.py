@@ -519,7 +519,7 @@ def embedding_near_duplicates(df: DataFrame, id_col: str, vec_col: str,
     self-joined; vectors ride along only for the verified candidate
     pairs (two equi-joins pull each side's array onto the pair
     row)."""
-    from .similarity import _DOT, _with_norm, sign_bucket
+    from .similarity import _cosine, _with_norm, sign_bucket
 
     v = _with_norm(df, id_col, vec_col, "d")
     codes = F.array(*[sign_bucket("d_vec", nbits, offset=b * nbits)
@@ -537,9 +537,7 @@ def embedding_near_duplicates(df: DataFrame, id_col: str, vec_col: str,
     s2 = v.select(F.col("d").alias("d2"), F.col("d_vec").alias("d2_vec"),
                   F.col("d_norm").alias("d2_norm"))
     pairs = (cand.join(s1, "d1").join(s2, "d2")
-             .withColumn("cosine",
-                         F.expr(_DOT.format(a="d1_vec", b="d2_vec"))
-                         / (F.col("d1_norm") * F.col("d2_norm"))))
+             .withColumn("cosine", _cosine("d1", "d2")))
     return (pairs.filter(F.col("cosine") >= threshold)
             .select("d1", "d2",
                     F.round("cosine", 6).cast("double").alias("cosine")))

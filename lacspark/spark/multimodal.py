@@ -21,7 +21,7 @@ import hashlib
 import io
 import struct
 import zlib
-from typing import Iterator
+from typing import Callable, Iterator
 
 import numpy as np
 import pandas as pd
@@ -291,17 +291,14 @@ def extract_media_features(df: DataFrame, payload_col: str = "payload",
     return df.mapInPandas(run, schema=out_schema)
 
 
-def synth_media(spark, n: int = 100, seed: int = 42) -> DataFrame:
-    """Deterministic fake media table exercising the binary path."""
+def _media_table(spark, n: int,
+                 payload: Callable[[int], tuple[str, bytes, str]]
+                 ) -> DataFrame:
+    """MEDIA_SCHEMA rows for media ids 0..n-1, each id's (kind,
+    payload, meta_format) made by ``payload(id)`` on the workers."""
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        kinds = ["image", "audio", "video"]
         for pdf in batches:
-            rows = []
-            for i in pdf["id"]:
-                i = int(i)
-                payload = hashlib.sha256(
-                    f"{seed}:{i}".encode()).digest() * (1 + i % 7)
-                rows.append((i, kinds[i % 3], payload, "fake/v1"))
+            rows = [(i, *payload(i)) for i in map(int, pdf["id"])]
             yield pd.DataFrame(rows, columns=MEDIA_SCHEMA.fieldNames())
 
     # ~8 payloads per partition: the codec work is ~1 ms/row, so at
@@ -312,6 +309,16 @@ def synth_media(spark, n: int = 100, seed: int = 42) -> DataFrame:
     slices = max(1, min(spark.sparkContext.defaultParallelism, n // 8))
     return spark.range(0, n, 1, slices).mapInPandas(gen,
                                                     schema=MEDIA_SCHEMA)
+
+
+def synth_media(spark, n: int = 100, seed: int = 42) -> DataFrame:
+    """Deterministic fake media table exercising the binary path."""
+    def fake(i: int) -> tuple[str, bytes, str]:
+        payload = hashlib.sha256(f"{seed}:{i}".encode()).digest()
+        return (("image", "audio", "video")[i % 3], payload * (1 + i % 7),
+                "fake/v1")
+
+    return _media_table(spark, n, fake)
 
 
 # ---------------------------------------------------------------------------
@@ -361,23 +368,7 @@ def synth_media_payload(i: int) -> tuple[str, bytes, str]:
 def synth_real_media(spark, n: int = 120) -> DataFrame:
     """Media table with genuinely-encoded payloads (decode round-trips
     through the stdlib codecs) — same MEDIA_SCHEMA as `synth_media`."""
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i in pdf["id"]:
-                i = int(i)
-                kind, payload, fmt = synth_media_payload(i)
-                rows.append((i, kind, payload, fmt))
-            yield pd.DataFrame(rows, columns=MEDIA_SCHEMA.fieldNames())
-
-    # ~8 payloads per partition: the codec work is ~1 ms/row, so at
-    # the default 32 slices a 120-row table pays 32 python-task
-    # setups (~15 ms each) to do ~5 ms of work per task; sizing the
-    # range to the row count keeps task overhead proportional to the
-    # data while larger n still widens to every core
-    slices = max(1, min(spark.sparkContext.defaultParallelism, n // 8))
-    return spark.range(0, n, 1, slices).mapInPandas(gen,
-                                                    schema=MEDIA_SCHEMA)
+    return _media_table(spark, n, synth_media_payload)
 
 
 def media_decode_row(kind: str, payload: bytes,

@@ -3,13 +3,24 @@
 * ``cosine_topk`` — brute-force exact top-k, the correctness
   baseline: cross-join + JVM-side dot products (zip_with/aggregate on
   double-cast arrays, no python).  Right answer for small query sets.
+* ``ivf_topk`` — inverted lists from a deterministic k-means codebook;
+  each query probes its ``nprobe`` nearest lists.
 * ``lsh_bucketed_topk`` — the scale path: sign-bit LSH code over the
   first b dims turns the cross-join into an equi-join on bucket keys
   (candidates share a bucket), then exact re-ranking inside buckets.
   Recall < 1 by construction; multiple probe codes raise it.
+* ``pq_topk`` — product-quantization ADC shortlist, then exact
+  re-rank.
+
+All four end in the same exact-cosine ``_top_k``; LSH and PQ reach it
+through ``_rerank`` from id-only candidates.  The two codebooks (IVF
+and PQ) share one seed pick (``_md5_seeds``) and one integer-grid mean
+update (``_grid_means``).
 """
 
 from __future__ import annotations
+
+import math
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -34,24 +45,46 @@ def _with_norm(df: DataFrame, id_col: str, vec_col: str,
                                       b=f"{out_id}_vec") + ")")))
 
 
-def cosine_topk(queries: DataFrame, corpus: DataFrame, id_col: str,
-                vec_col: str, k: int = 5) -> DataFrame:
-    """(query_id, neighbor_id, rnk, cosine) — exact top-k."""
-    q = _with_norm(queries, id_col, vec_col, "query_id")
-    n = _with_norm(corpus, id_col, vec_col, "neighbor_id")
-    pairs = (q.crossJoin(n)
-             .filter(F.col("neighbor_id") != F.col("query_id"))
-             .withColumn("cosine",
-                         F.expr(_DOT.format(a="query_id_vec",
-                                            b="neighbor_id_vec"))
-                         / (F.col("query_id_norm")
-                            * F.col("neighbor_id_norm"))))
+def _cosine(a: str, b: str):
+    """Column: cosine of the ``{a}_vec``/``{b}_vec`` pair that
+    :func:`_with_norm` frames carry, from their ``_norm`` columns."""
+    return (F.expr(_DOT.format(a=f"{a}_vec", b=f"{b}_vec"))
+            / (F.col(f"{a}_norm") * F.col(f"{b}_norm")))
+
+
+def _top_k(pairs: DataFrame, k: int) -> DataFrame:
+    """(query_id, neighbor_id, rnk, cosine): the k best neighbors of
+    each query by (cosine desc, neighbor_id asc), cosine rounded to 6
+    places — the tail every top-k operator ends in."""
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"),
                                                F.asc("neighbor_id"))
     return (pairs.withColumn("rnk", F.row_number().over(w))
             .filter(F.col("rnk") <= k)
             .select("query_id", "neighbor_id", "rnk",
                     F.round("cosine", 6).alias("cosine")))
+
+
+def _rerank(cand: DataFrame, queries: DataFrame, corpus: DataFrame,
+            id_col: str, vec_col: str, k: int) -> DataFrame:
+    """Exact-cosine top-k of id-only (query_id, neighbor_id)
+    candidates: the vectors are joined on once per candidate pair,
+    never carried through candidate generation."""
+    qv = _with_norm(queries, id_col, vec_col, "query_id")
+    nv = _with_norm(corpus, id_col, vec_col, "neighbor_id")
+    return _top_k(cand.join(qv, "query_id").join(nv, "neighbor_id")
+                  .withColumn("cosine", _cosine("query_id", "neighbor_id")),
+                  k)
+
+
+def cosine_topk(queries: DataFrame, corpus: DataFrame, id_col: str,
+                vec_col: str, k: int = 5) -> DataFrame:
+    """(query_id, neighbor_id, rnk, cosine) — exact top-k."""
+    q = _with_norm(queries, id_col, vec_col, "query_id")
+    n = _with_norm(corpus, id_col, vec_col, "neighbor_id")
+    return _top_k(q.crossJoin(n)
+                  .filter(F.col("neighbor_id") != F.col("query_id"))
+                  .withColumn("cosine", _cosine("query_id", "neighbor_id")),
+                  k)
 
 
 def sign_bucket(vec_col: str, nbits: int = 8, offset: int = 0):
@@ -80,14 +113,22 @@ def probe_masks(nbits: int, radius: int) -> list[int]:
     return masks
 
 
+def _fold_dot(a, b) -> float:
+    """a·b as an in-order left fold from 0.0 — the float op sequence
+    of ``_DOT``, so the driver-side replicas of PQ are bit-identical
+    to the engine (and to DuckDB's in-order list_dot_product)."""
+    s = 0.0
+    for x, y in zip(a, b):
+        s = s + x * y
+    return s
+
+
 def _scale_unit(cents: list[list[float]]) -> list[list[float]]:
     """Scale each centroid by 1/‖c‖ so cosine ranking equals plain
     dot-product ranking (the assignment then needs no norms)."""
-    import math
-
     out = []
     for c in cents:
-        nrm = math.sqrt(sum(v * v for v in c)) or 1.0
+        nrm = math.sqrt(_fold_dot(c, c)) or 1.0
         out.append([float(v) / nrm for v in c])
     return out
 
@@ -131,42 +172,54 @@ def kmeans_codebook(corpus: DataFrame, id_col: str, vec_col: str,
                                 iters))
 
 
+def _md5_seeds(df: DataFrame, id_col: str, k: int) -> list:
+    """The k rows of ``df`` with the smallest (md5(id), id), in that
+    order: the seedless, order-independent k-means init (unique ids
+    make the pick a pure function of the data)."""
+    return (df.withColumn("__h", F.md5(F.col(id_col).cast("string")))
+            .orderBy("__h", id_col).limit(k).collect())
+
+
+def _grid_means(df: DataFrame, keys: list[str], vec: str, dim: int
+                ) -> list[tuple[tuple[int, ...], list[float]]]:
+    """Sorted ((*key), mean vector) per group of ``keys``: each
+    component of the ``vec`` array is quantized to the 1e-6 grid,
+    summed as exact integers (any summation order gives the same
+    sum), then divided half away from zero back onto the grid."""
+    # INTEGER division, not F.round on the double quotient: F.round
+    # rounds the shortest decimal repr (HALF_UP) while DuckDB rounds
+    # the binary double, so a decimal-midpoint mean (2-member group
+    # with odd component sum) would diverge the codebook
+    sums = [F.sum(F.expr(f"cast(round(element_at({vec}, {j + 1}) "
+                         f"* 1000000, 0) as bigint)"))
+            .alias(f"__s{j}") for j in range(dim)]
+    cent = [F.expr(
+        f"cast((case when __s{j} >= 0 "
+        f"then (2 * __s{j} + __n) div (2 * __n) "
+        f"else -((2 * (-__s{j}) + __n) div (2 * __n)) end) "
+        f"as double) / 1000000.0").alias(f"__c{j}")
+        for j in range(dim)]
+    rows = (df.groupBy(*keys)
+            .agg(*sums, F.count(F.lit(1)).alias("__n"))
+            .select(*keys, *cent).collect())
+    return sorted((tuple(int(r[c]) for c in keys),
+                   [float(r[f"__c{j}"]) for j in range(dim)])
+                  for r in rows)
+
+
 def _kmeans(corpus: DataFrame, id_col: str, vec_col: str, dim: int,
             n_lists: int, iters: int
             ) -> tuple[list[int], list[list[float]]]:
-    seeds = (corpus.select(
-        F.col(id_col).alias("__sid"),
-        F.expr(f"transform({vec_col}, x -> cast(x as double))")
-        .alias("__vec"),
-        F.md5(F.col(id_col).cast("string")).alias("__h"))
-        .orderBy("__h", "__sid").limit(n_lists).collect())
-    ids = list(range(len(seeds)))
-    cents = [[float(x) for x in r["__vec"]] for r in seeds]
     v = _with_norm(corpus, id_col, vec_col, "v")
+    seeds = _md5_seeds(v.select("v", "v_vec"), "v", n_lists)
+    ids = list(range(len(seeds)))
+    cents = [[float(x) for x in r["v_vec"]] for r in seeds]
     for _ in range(iters):
         assigned = _nearest_lists(v, (ids, _scale_unit(cents)), "v",
                                   nprobe=1)
-        # exact integer sums, then INTEGER half-away-from-zero to the
-        # 1e-6 grid — F.round on the double quotient rounds the
-        # shortest decimal repr (HALF_UP) while DuckDB rounds the
-        # binary double, so a decimal-midpoint mean (2-member list
-        # with odd component sum) would diverge the codebook
-        sums = [F.sum(F.expr(f"cast(round(element_at(v_vec, {j + 1}) "
-                             f"* 1000000, 0) as bigint)"))
-                .alias(f"__s{j}") for j in range(dim)]
-        cent = [F.expr(
-            f"cast((case when __s{j} >= 0 "
-            f"then (2 * __s{j} + __n) div (2 * __n) "
-            f"else -((2 * (-__s{j}) + __n) div (2 * __n)) end) "
-            f"as double) / 1000000.0").alias(f"__c{j}")
-            for j in range(dim)]
-        rows = (assigned.groupBy("list_id")
-                .agg(*sums, F.count(F.lit(1)).alias("__n"))
-                .select("list_id", *cent).collect())
-        rows.sort(key=lambda r: r.list_id)
-        ids = [int(r.list_id) for r in rows]
-        cents = [[float(r[f"__c{j}"]) for j in range(dim)]
-                 for r in rows]
+        means = _grid_means(assigned, ["list_id"], "v_vec", dim)
+        ids = [key[0] for key, _c in means]
+        cents = [c for _key, c in means]
     return ids, _scale_unit(cents)
 
 
@@ -213,6 +266,18 @@ def _nearest_lists(df: DataFrame, codebook, out_id: str,
             .select(out_id, f"{out_id}_vec", f"{out_id}_norm", "list_id"))
 
 
+def _ivf_lists(corpus: DataFrame, id_col: str, vec_col: str, dim: int,
+               n_lists: int, iters: int) -> tuple[tuple, DataFrame]:
+    """(k-means codebook, corpus rows (neighbor_id, neighbor_id_vec,
+    neighbor_id_norm, list_id)): every corpus vector in its one
+    nearest list."""
+    cb = kmeans_codebook(corpus, id_col, vec_col, dim,
+                         n_lists=n_lists, iters=iters)
+    return cb, _nearest_lists(
+        _with_norm(corpus, id_col, vec_col, "neighbor_id"), cb,
+        "neighbor_id", nprobe=1)
+
+
 def ivf_topk(queries: DataFrame, corpus: DataFrame, id_col: str,
              vec_col: str, dim: int, k: int = 5,
              nprobe: int = 3, n_lists: int = 16, iters: int = 2
@@ -230,25 +295,13 @@ def ivf_topk(queries: DataFrame, corpus: DataFrame, id_col: str,
     ~nprobe/n_lists of the corpus.  Complements sign-LSH
     (`lsh_bucketed_topk`): IVF adapts to the data distribution, LSH
     is data-independent."""
-    cb = kmeans_codebook(corpus, id_col, vec_col, dim,
-                         n_lists=n_lists, iters=iters)
-    n = _nearest_lists(_with_norm(corpus, id_col, vec_col, "neighbor_id"),
-                       cb, "neighbor_id", nprobe=1)
+    cb, n = _ivf_lists(corpus, id_col, vec_col, dim, n_lists, iters)
     q = _nearest_lists(_with_norm(queries, id_col, vec_col, "query_id"),
                        cb, "query_id", nprobe=nprobe)
-    pairs = (q.join(n, "list_id")
-             .filter(F.col("neighbor_id") != F.col("query_id"))
-             .withColumn("cosine",
-                         F.expr(_DOT.format(a="query_id_vec",
-                                            b="neighbor_id_vec"))
-                         / (F.col("query_id_norm")
-                            * F.col("neighbor_id_norm"))))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"),
-                                               F.asc("neighbor_id"))
-    return (pairs.withColumn("rnk", F.row_number().over(w))
-            .filter(F.col("rnk") <= k)
-            .select("query_id", "neighbor_id", "rnk",
-                    F.round("cosine", 6).alias("cosine")))
+    return _top_k(q.join(n, "list_id")
+                  .filter(F.col("neighbor_id") != F.col("query_id"))
+                  .withColumn("cosine", _cosine("query_id", "neighbor_id")),
+                  k)
 
 
 def ivf_list_sizes(corpus: DataFrame, id_col: str, vec_col: str,
@@ -256,10 +309,7 @@ def ivf_list_sizes(corpus: DataFrame, id_col: str, vec_col: str,
                    ) -> DataFrame:
     """(list_id, n_vectors): the IVF partition histogram — the skew
     diagnostic you'd watch before trusting nprobe at scale."""
-    cb = kmeans_codebook(corpus, id_col, vec_col, dim,
-                         n_lists=n_lists, iters=iters)
-    n = _nearest_lists(_with_norm(corpus, id_col, vec_col, "neighbor_id"),
-                       cb, "neighbor_id", nprobe=1)
+    _cb, n = _ivf_lists(corpus, id_col, vec_col, dim, n_lists, iters)
     return (n.groupBy("list_id")
             .agg(F.count(F.lit(1)).alias("n_vectors")))
 
@@ -319,20 +369,7 @@ def lsh_bucketed_topk(queries: DataFrame, corpus: DataFrame, id_col: str,
                     F.explode("members").alias("neighbor_id"))
             .filter(F.col("neighbor_id") != F.col("query_id"))
             .distinct())
-    qv = _with_norm(queries, id_col, vec_col, "query_id")
-    nv = _with_norm(corpus, id_col, vec_col, "neighbor_id")
-    pairs = (cand.join(qv, "query_id").join(nv, "neighbor_id")
-             .withColumn("cosine",
-                         F.expr(_DOT.format(a="query_id_vec",
-                                            b="neighbor_id_vec"))
-                         / (F.col("query_id_norm")
-                            * F.col("neighbor_id_norm"))))
-    w = Window.partitionBy("query_id").orderBy(F.desc("cosine"),
-                                               F.asc("neighbor_id"))
-    return (pairs.withColumn("rnk", F.row_number().over(w))
-            .filter(F.col("rnk") <= k)
-            .select("query_id", "neighbor_id", "rnk",
-                    F.round("cosine", 6).alias("cosine")))
+    return _rerank(cand, queries, corpus, id_col, vec_col, k)
 
 
 # ---------------------------------------------------------------------------
@@ -395,10 +432,7 @@ def _pq_kmeans(corpus: DataFrame, id_col: str, vec_col: str, dim: int,
                ) -> list[tuple[list[int], list[list[float]]]]:
     ds = dim // m
     u = _with_unit(corpus, id_col, vec_col, "p")
-    seeds = (u.join(corpus.select(F.col(id_col).alias("p"),
-                                  F.md5(F.col(id_col).cast("string"))
-                                  .alias("__h")), "p")
-             .orderBy("__h", "p").limit(k).collect())
+    seeds = _md5_seeds(u, "p", k)
     books = [(list(range(len(seeds))),
               [[float(x) for x in r["__u"][mi * ds:(mi + 1) * ds]]
                for r in seeds]) for mi in range(m)]
@@ -413,29 +447,14 @@ def _pq_kmeans(corpus: DataFrame, id_col: str, vec_col: str, dim: int,
             for mi in range(len(books))])
         exploded = assigned.select(
             F.explode(rows_expr).alias("r")).select("r.*")
-        sums = [F.sum(F.expr(
-            f"cast(round(element_at(sub, {j + 1}) * 1000000, 0) "
-            f"as bigint)")).alias(f"__s{j}") for j in range(ds)]
-        cent = [F.expr(
-            f"cast((case when __s{j} >= 0 "
-            f"then (2 * __s{j} + __n) div (2 * __n) "
-            f"else -((2 * (-__s{j}) + __n) div (2 * __n)) end) "
-            f"as double) / 1000000.0").alias(f"__c{j}")
-            for j in range(ds)]
-        got = (exploded.groupBy("m", "code")
-               .agg(*sums, F.count(F.lit(1)).alias("__n"))
-               .select("m", "code", *cent).collect())
+        means = _grid_means(exploded, ["m", "code"], "sub", ds)
         # a FRESH list every iteration (callers may hold the memoized
         # object; in-place mutation once served stale cached literal
         # Columns — the SQL-string build regenerates per call, but
         # fresh lists stay the contract)
-        books = [
-            ([int(r["code"]) for r in rows],
-             [[float(r[f"__c{j}"]) for j in range(ds)] for r in rows])
-            for rows in (
-                sorted((r for r in got if r["m"] == mi),
-                       key=lambda r: r["code"])
-                for mi in range(len(books)))]
+        books = [([key[1] for key, _c in means if key[0] == mi],
+                  [c for key, c in means if key[0] == mi])
+                 for mi in range(len(books))]
     return books
 
 
@@ -555,7 +574,6 @@ def _pq_rerank_driver(spark, srows, qvecs: dict, corpus: DataFrame,
     Round(double) — via Decimal(repr(v)) (python repr and Java
     Double.toString both emit the shortest round-tripping decimal,
     which is unique, so the digit strings agree)."""
-    import math
     from decimal import ROUND_HALF_UP, Decimal
 
     id_type = corpus.select(F.col(id_col)).schema.fields[0].dataType
@@ -567,12 +585,6 @@ def _pq_rerank_driver(spark, srows, qvecs: dict, corpus: DataFrame,
     ])
     if not srows:
         return local_frame(spark, [], out_schema)
-
-    def norm(v):
-        s = 0.0
-        for x in v:
-            s = s + x * x
-        return math.sqrt(s)
 
     by_q: dict = {}
     need = set()
@@ -591,14 +603,12 @@ def _pq_rerank_driver(spark, srows, qvecs: dict, corpus: DataFrame,
     out = []
     for qid in by_q:
         qv = qvecs[qid]
-        qn = norm(qv)
+        qn = math.sqrt(_fold_dot(qv, qv))
         scored = []
         for nid in by_q[qid]:
             nv = nvecs[nid]
-            d = 0.0
-            for x, y in zip(qv, nv):
-                d = d + x * y
-            scored.append((d / (qn * norm(nv)), nid))
+            scored.append((_fold_dot(qv, nv)
+                           / (qn * math.sqrt(_fold_dot(nv, nv))), nid))
         scored.sort(key=lambda t: (-t[0], t[1]))
         for rnk, (c, nid) in enumerate(scored[:k], start=1):
             out.append((qid, nid, rnk,
@@ -634,8 +644,6 @@ def _pq_query_luts(queries: DataFrame, id_col: str, vec_col: str,
     CollapseProject barrier (a single-use projected column would be
     inlined into the join output and re-evaluate the whole
     32-centroid transform per PAIR — the explode_once trap)."""
-    import math
-
     spark = queries.sparkSession
     rows = (queries.select(F.col(id_col).alias("query_id"),
                            F.col(vec_col).alias("__v"))
@@ -645,21 +653,10 @@ def _pq_query_luts(queries: DataFrame, id_col: str, vec_col: str,
         qvecs: dict = {}
         for r in rows:
             v = [float(x) for x in r["__v"]]
-            s = 0.0
-            for x in v:
-                s = s + x * x
-            nrm = math.sqrt(s)
+            nrm = math.sqrt(_fold_dot(v, v))
             u = [x / nrm for x in v]
-            luts = []
-            for mi in range(m):
-                sub = u[mi * ds:(mi + 1) * ds]
-                lut = []
-                for cent in books[mi][1]:
-                    a = 0.0
-                    for x, y in zip(sub, cent):
-                        a = a + x * y
-                    lut.append(a)
-                luts.append(lut)
+            luts = [[_fold_dot(u[mi * ds:(mi + 1) * ds], cent)
+                     for cent in books[mi][1]] for mi in range(m)]
             out.append((r["query_id"], *luts))
             qvecs[r["query_id"]] = v
         id_field = queries.select(F.col(id_col).alias("query_id")) \
@@ -788,17 +785,4 @@ def pq_topk(queries: DataFrame, corpus: DataFrame, id_col: str,
                                      id_col, vec_col, k, nvecs=nvecs)
         # probe overflowed (srows is truncated at N+1 — NOT the full
         # shortlist): recompute distributed below
-    qv = _with_norm(queries, id_col, vec_col, "query_id")
-    nv = _with_norm(corpus, id_col, vec_col, "neighbor_id")
-    exact = (shortlist(pairs).join(qv, "query_id").join(nv, "neighbor_id")
-             .withColumn("cosine",
-                         F.expr(_DOT.format(a="query_id_vec",
-                                            b="neighbor_id_vec"))
-                         / (F.col("query_id_norm")
-                            * F.col("neighbor_id_norm"))))
-    w2 = Window.partitionBy("query_id").orderBy(F.desc("cosine"),
-                                                F.asc("neighbor_id"))
-    return (exact.withColumn("rnk", F.row_number().over(w2))
-            .filter(F.col("rnk") <= k)
-            .select("query_id", "neighbor_id", "rnk",
-                    F.round("cosine", 6).alias("cosine")))
+    return _rerank(shortlist(pairs), queries, corpus, id_col, vec_col, k)

@@ -113,19 +113,21 @@ def test_embedding_multiband_no_cartesian_and_capped(spark):
 
 
 def test_kmeans_ivf_assignment_is_shuffle_free(spark):
-    """The k-means codebook path keeps IVF assignment a pure
-    projection: codebook as literal, argmax inside the project — no
-    Exchange, no Join before the candidate equi-join."""
+    """The query side of ann_ivf_topk (nprobe=3) ranks the lists and
+    explodes the top three inside the same projection: one Generate,
+    no Exchange, no Join, and exactly nprobe rows per vector."""
     from lacspark.spark.similarity import (_nearest_lists, _with_norm,
                                            kmeans_codebook)
     e = spark.read.parquet(f"{SF}/embeddings.parquet")
     cb = kmeans_codebook(e, "vec_id", "embedding", 64,
                          n_lists=16, iters=2)
-    assign = _nearest_lists(_with_norm(e, "vec_id", "embedding", "n"),
-                            cb, "n", nprobe=1)
-    plan = plan_of(assign)
+    probes = _nearest_lists(_with_norm(e, "vec_id", "embedding", "q"),
+                            cb, "q", nprobe=3)
+    plan = plan_of(probes)
+    assert "Generate" in plan
     assert "Exchange" not in plan
     assert "Join" not in plan
+    assert probes.count() == 3 * e.count()
 
 
 def test_repetition_stats_is_shuffle_free(spark):

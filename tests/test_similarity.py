@@ -7,8 +7,10 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
+from lacspark.spark import memo, similarity
 from lacspark.spark.similarity import (cosine_topk, ivf_list_sizes,
                                        ivf_topk, lsh_bucketed_topk)
 
@@ -164,3 +166,42 @@ def test_pq_codes_are_compact_and_deterministic(spark):
     valid = [set(ids) for ids, _ in books]
     for code in a.values():
         assert all(code[m] in valid[m] for m in range(8))
+
+
+PQ_BOUNDS = ["_PQ_QUERY_DRIVER_MAX", "_PQ_SHORTLIST_DRIVER_MAX",
+             "_PQ_VECS_DRIVER_MAX"]
+
+
+def _pq_rows(spark):
+    """ann_pq_topk's pq_topk call, full rows, from an empty memo:
+    ``_pq_corpus_vecs`` memoizes its verdict under a key that does not
+    hold the bound, so a run under another bound must not reuse it."""
+    emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
+    memo.clear()
+    try:
+        return sorted(tuple(r) for r in similarity.pq_topk(
+            emb.filter(F.col("vec_id") < 50), emb, "vec_id", "embedding",
+            64, k=5).collect())
+    finally:
+        memo.clear()
+
+
+@pytest.fixture(scope="module")
+def pq_driver_rows(spark):
+    return _pq_rows(spark)
+
+
+@pytest.mark.parametrize("bounds", [[b] for b in PQ_BOUNDS] + [PQ_BOUNDS],
+                         ids=PQ_BOUNDS + ["all"])
+def test_pq_distributed_fallbacks_match_driver_paths(
+        spark, monkeypatch, pq_driver_rows, bounds):
+    """Each of pq_topk's three driver-side paths (query LUTs, shortlist
+    re-rank, corpus-vector mirror) has a distributed fallback past its
+    size bound.  With the bound at 0 the fallback runs, and its rows
+    (query_id, neighbor_id, rnk, cosine) must equal the driver path's
+    exactly."""
+    for b in bounds:
+        monkeypatch.setattr(similarity, b, 0)
+    got = _pq_rows(spark)
+    assert len(got) == len(pq_driver_rows) > 0
+    assert got == pq_driver_rows

@@ -271,15 +271,29 @@ def test_build_edges_salience_weighting(spark):
 def test_canonical_fast_path_matches_distributed(spark, docs,
                                                   monkeypatch):
     """canonical_map's driver fast path (python twin over the
-    collected form set) must equal the distributed banded path
-    row-for-row on the same mentions."""
+    collected form set), the distributed banded path and
+    ``canonical_map_py`` itself give the same rows on the same
+    mentions — mentions with planted near-duplicate forms, so the
+    three agree on merges and not only on singletons."""
+    from lacspark.canonical_py import canonical_map_py
+
     tagged = tag_and_extract(docs, "text", mode="rank")
-    mentions = explode_mentions(tagged, ["doc_id"]).cache()
+    planted = spark.createDataFrame(
+        [(w,) for w in ("spark_table", "spark_tables", "knowledge_graph",
+                        "knowledge_graphs", "Lexical_Analysis ",
+                        "lexical_analyses")], "word string")
+    mentions = (explode_mentions(tagged, ["doc_id"]).select("word")
+                .unionByName(planted).cache())
     f = sorted(tuple(r) for r in canonical_map(mentions).collect())
     monkeypatch.setattr(canonical, "DRIVER_FORMS", 0)   # banded path
     s = sorted(tuple(r) for r in canonical_map(mentions).collect())
-    assert f == s
-    assert len(f) > 0
+    cmap, _counts = canonical_map_py(
+        [r.word for r in mentions.collect()])
+    py = sorted((w, c, eid) for w, (c, eid) in cmap.items())
+    assert f == s == py
+    merged = {w: c for w, c, _eid in f if c != w}
+    assert merged.get("spark_tables") == "spark_table"
+    assert merged.get("lexical_analysis") == "lexical_analyses"
 
 
 def test_canonical_char_budget_forces_distributed(spark, monkeypatch):
