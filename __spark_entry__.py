@@ -75,14 +75,18 @@ _PRIORITY = [
 # query_hash_snapshot.json: editing a query without pinning it here
 # fails CI.
 _FRESH = [
-    # helpers changed: one exact-cosine top-k tail and re-rank, one
-    # k-means seed pick and grid-mean update, one Python dot fold
-    "ann_bruteforce_top5", "ann_lsh_topk", "ann_ivf_topk", "ann_ivf_lists",
-    "ann_pq_topk", "dedup_embedding_cosine", "dedup_embedding_keep_best",
-    # helpers changed: one synthetic media table builder
-    "multimodal_features", "multimodal_decode_stats",
-    # docstring corrected: the payload decode is real
-    "binary_payload_meta",
+    # source changed: one token template, one curation gate, one
+    # packing prefix sum
+    "word_boundary_merge", "cooccurrence_pairs", "dedup_jaccard_adjacent",
+    "quality_lm_score", "token_count_bpe", "pack_sequences",
+    "pack_sequences_bpe", "quality_score", "docmeta_suite",
+    "corpus_curation", "streaming_curation_counts",
+    # helpers changed: the token template, one repetition-gate binder,
+    # ratio rounding as SQL, PQ norms once per vector
+    "quality_repetition", "quality_features_label", "dedup_simhash",
+    "dedup_minhash_lsh", "dedup_near_keep_best", "dedup_near_components",
+    "dedup_substring_spans", "dedup_substring_clean", "contamination_check",
+    "ann_pq_topk",
 ]
 
 def _folded() -> frozenset:

@@ -212,15 +212,6 @@ class BiGruCrf:
                 out = x @ self.w[f"{fc}_w"] + self.w[f"{fc}_b"]
         return out
 
-    def _hidden(self, padded: np.ndarray, lens: np.ndarray) -> np.ndarray:
-        """[B, T] ids → [B, T, 2H] Bi-GRU features (the input of the
-        emission FC layer) — used by the incremental trainer to fit
-        fc_w/fc_b with the recurrent stack frozen."""
-        x = self.w["emb"][padded]
-        for i in range(self.n_layers):
-            x = self._gru_bidir(x, lens, f"l{i}")
-        return x
-
     def _viterbi(self, emis: np.ndarray, lens: np.ndarray) -> list[np.ndarray]:
         """Constrained Viterbi over [B, T, L] → per-row label ids.
 

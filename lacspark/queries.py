@@ -7,20 +7,23 @@ Design rules keeping the two engines hash-identical:
 * doubles always rounded and cast to double explicitly;
 * deterministic hashes only via md5 (identical in both engines;
   int64 form = first 15 hex digits parsed base-16);
-* token split on single space with empties filtered on both sides;
+* token split on single space with empties filtered on both sides
+  (``spark.dedup.TOKENS`` on the Spark side);
 * DuckDB arrays are 1-indexed, Spark's element_at is 1-indexed too.
 """
 
 from __future__ import annotations
 
 import os
+from functools import reduce
+from operator import and_
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from .spark.dedup import MD5INT
+from .spark.dedup import MD5INT, TOKENS
 from .spark.memo import file_identity, input_fingerprint, memo
 from .spark.session import local_frame
 
@@ -537,7 +540,7 @@ def word_boundary_merge(spark, sf_dir):
     from .spark.dedup import explode_once
     from .spark.tagger import ensure_parallelism
     d = ensure_parallelism(load(spark, sf_dir, "documents"))
-    toks = F.expr("filter(split(text, ' '), x -> length(x) > 0)")
+    toks = F.expr(TOKENS.format(x="text"))
     bounds = F.expr("filter(transform(__t, (x, i) -> "
                     "if(x rlike '^[aeiou]', i + 1, null)), i -> i is not null)")
     starts = F.expr("if(size(__t) = 0 or array_contains(__b, 1), __b, "
@@ -616,7 +619,7 @@ def cooccurrence_pairs(spark, sf_dir):
     spaces."""
     from .spark.tagger import ensure_parallelism
     d = ensure_parallelism(load(spark, sf_dir, "documents"))
-    toks = F.filter(F.split("text", " "), lambda x: F.length(x) > 0)
+    toks = F.expr(TOKENS.format(x="text"))
     pairs = F.expr(
         "flatten(transform(__toks, (x, i) -> "
         "  case when length(x) >= 4 then "
@@ -1007,8 +1010,7 @@ def dedup_jaccard_adjacent(spark, sf_dir):
     array_intersect computes the overlap in place."""
     from .spark.tagger import ensure_parallelism
     d = ensure_parallelism(load(spark, sf_dir, "documents"))
-    tset = F.array_distinct(F.filter(F.split("text", " "),
-                                     lambda x: F.length(x) > 0))
+    tset = F.array_distinct(F.expr(TOKENS.format(x="text")))
     docs = (d.select("doc_id", tset.alias("ts"))
             .filter(F.size("ts") > 0))  # empty docs drop on both sides
     nxt = docs.select((F.col("doc_id") - 1).alias("doc_id"),
@@ -1066,9 +1068,8 @@ def lang_id_heuristic(spark, sf_dir):
     from documents
 """)
 def quality_score(spark, sf_dir):
+    from .spark.quality import punct_pct, quality_gate
     d = load(spark, sf_dir, "documents")
-    punct = F.length(F.regexp_replace("text", "[a-zA-Z0-9 ]", ""))
-    punct_pct = F.floor(punct * 100 / F.greatest(F.length("text"), F.lit(1)))
     stop = (F.length("text") - F.length(
         F.replace(F.replace(F.replace(F.col("text"),
                                       F.lit(" the "), F.lit("     ")),
@@ -1078,10 +1079,10 @@ def quality_score(spark, sf_dir):
         "doc_id",
         F.least(F.floor(F.length("text") / 100), F.lit(5)).cast("long")
         .alias("len_bucket"),
-        punct_pct.cast("long").alias("punct_pct"),
+        punct_pct().cast("long").alias("punct_pct"),
         stop.cast("long").alias("stopword_chars"),
-        F.when(F.length("text").between(50, 5000)
-               & (punct_pct < 10), 1).otherwise(0).alias("is_quality"))
+        F.when(reduce(and_, quality_gate(punct_pct())), 1).otherwise(0)
+        .alias("is_quality"))
 
 
 def _repetition_duck_ctes() -> str:
@@ -1189,20 +1190,16 @@ def corpus_curation(spark, sf_dir):
     standalone query (dedup_exact_pairs / quality_score /
     quality_repetition / sample_stratified), proving the operators
     compose without extra shuffles."""
-    from .spark.quality import with_repetition_keep
+    from .spark.quality import (curation_sample, punct_pct, quality_gate,
+                                with_repetition_keep)
     d = with_repetition_keep(load(spark, sf_dir, "documents"))
     keeper = F.min("doc_id").over(Window.partitionBy(F.md5("text")))
-    punct = F.length(F.regexp_replace("text", "[a-zA-Z0-9 ]", ""))
-    punct_pct = F.floor(punct * 100
-                        / F.greatest(F.length("text"), F.lit(1)))
-    smp = F.expr(MD5INT.format(
-        x="concat('cur:', cast(doc_id as string))")) % 100
+    gate = [F.col("doc_id") == F.col("keeper"),
+            *quality_gate(F.col("punct_pct")), curation_sample(),
+            F.col("rep_keep")]
     return (d.withColumn("keeper", keeper)
-            .withColumn("punct_pct", punct_pct.cast("long"))
-            .filter((F.col("doc_id") == F.col("keeper"))
-                    & F.length("text").between(50, 5000)
-                    & (F.col("punct_pct") < 10) & (smp < 50)
-                    & F.col("rep_keep"))
+            .withColumn("punct_pct", punct_pct().cast("long"))
+            .filter(reduce(and_, gate))
             .select("doc_id", "lang", "punct_pct"))
 
 
@@ -1271,7 +1268,7 @@ def quality_lm_score(spark, sf_dir):
     bi = local_frame(spark, bi_rows, "t1 string, t2 string, nllq long")
     ctx = local_frame(spark, ctx_rows, "t1 string, u_nllq long")
 
-    toks = F.filter(F.split("text", " "), lambda x: F.length(x) > 0)
+    toks = F.expr(TOKENS.format(x="text"))
     pairs_arr = F.expr(
         "case when size(__toks) >= 2 then "
         "transform(sequence(1, size(__toks) - 1), i -> named_struct("
@@ -1333,14 +1330,10 @@ def streaming_curation_counts(spark, sf_dir):
     exact-dup keeper stage is the one curation step that is NOT
     stateless — its streaming twin is the applyInPandasWithState
     dedup operator in spark/streaming.py, pytest-gated.)"""
-    from .spark.quality import with_repetition_keep
+    from .spark.quality import (curation_sample, punct_pct, quality_gate,
+                                with_repetition_keep)
 
     schema = load(spark, sf_dir, "documents").schema  # memoized listing
-    punct = F.length(F.regexp_replace("text", "[a-zA-Z0-9 ]", ""))
-    punct_pct = F.floor(punct * 100
-                        / F.greatest(F.length("text"), F.lit(1)))
-    smp = F.expr(MD5INT.format(
-        x="concat('cur:', cast(doc_id as string))")) % 100
 
     def build(child):
         # availableNow with DEFAULT file batching: the gates are
@@ -1355,9 +1348,9 @@ def streaming_curation_counts(spark, sf_dir):
                   .option("pathGlobFilter", "documents.parquet")
                   .parquet(sf_dir))
         return (with_repetition_keep(stream)
-                .filter(F.col("rep_keep")
-                        & F.length("text").between(50, 5000)
-                        & (punct_pct < 10) & (smp < 50))
+                .filter(reduce(and_, [F.col("rep_keep"),
+                                      *quality_gate(punct_pct()),
+                                      curation_sample()]))
                 .groupBy("lang")
                 .agg(F.count(F.lit(1)).alias("n_pass")))
 
@@ -1465,12 +1458,54 @@ def token_count_bpe(spark, sf_dir):
     the count a tokenizer-faithful packing budget needs."""
     from .spark.subword import with_subword_counts
     d = with_subword_counts(load(spark, sf_dir, "documents"))
-    n_words = F.size(F.filter(F.split("text", " "),
-                              lambda x: F.length(x) > 0))
+    n_words = F.size(F.expr(TOKENS.format(x="text")))
     return d.select("doc_id",
                     n_words.cast("long").alias("n_words"),
                     F.col("__sw.n_subwords").alias("n_subwords"),
                     F.col("__sw.n_unk").alias("n_unk"))
+
+
+# Documents per shard of the packing prefix sum (:func:`_pack`).
+_SHARD_DOCS = 200
+
+
+def _pack(t: DataFrame, n: str) -> DataFrame:
+    """(doc_id, lang, n, stream_offset, pack_id) over (doc_id, lang, n)
+    rows: documents are laid head-to-tail per language stream in
+    doc_id order and cut into 512-token packs (pack_id =
+    floor(stream_offset / 512)), with ``n`` tokens per document.
+
+    Implemented as a HIERARCHICAL prefix sum — bit-identical to one
+    global running-sum window per lang, but no partition ever holds a
+    whole language:
+      1. shard = floor(doc_id / _SHARD_DOCS) is order-consistent with
+         the stream order, so within-(lang, shard) running sums are
+         exact local prefixes;
+      2. per-shard token totals (a tiny aggregate, _SHARD_DOCS×
+         smaller than the data) get an EXCLUSIVE running sum per
+         lang — the shard base offsets;
+      3. offset = shard base + within-shard prefix, one equi-join
+         (AQE broadcasts the shard table while it fits; raise
+         _SHARD_DOCS to shrink it).  Each extra level divides the
+         widest window by another _SHARD_DOCS — two levels cover
+         10^12 docs."""
+    t = t.withColumn("__shard",
+                     (F.col("doc_id") / _SHARD_DOCS).cast("bigint"))
+    w_in = (Window.partitionBy("lang", "__shard").orderBy("doc_id")
+            .rowsBetween(Window.unboundedPreceding, 0))
+    within = t.withColumn("__local", F.sum(n).over(w_in) - F.col(n))
+    totals = t.groupBy("lang", "__shard").agg(F.sum(n).alias("__tot"))
+    w_sh = (Window.partitionBy("lang").orderBy("__shard")
+            .rowsBetween(Window.unboundedPreceding, -1))
+    bases = totals.withColumn(
+        "__base", F.coalesce(F.sum("__tot").over(w_sh), F.lit(0)))
+    return (within.join(bases.select("lang", "__shard", "__base"),
+                        ["lang", "__shard"])
+            .withColumn("stream_offset",
+                        F.col("__base") + F.col("__local"))
+            .withColumn("pack_id",
+                        (F.col("stream_offset") / 512).cast("bigint"))
+            .select("doc_id", "lang", n, "stream_offset", "pack_id"))
 
 
 @register("pack_sequences_bpe", f"""
@@ -1487,12 +1522,12 @@ def token_count_bpe(spark, sf_dir):
     window w as (partition by lang order by doc_id
                  rows between unbounded preceding and current row)
 """)
-def pack_sequences_bpe(spark, sf_dir, shard_docs: int = 200):
+def pack_sequences_bpe(spark, sf_dir):
     """pack_sequences with the budget measured in REAL subword
     tokens (the vocab-fixture tokenizer) instead of whitespace
-    words: same hierarchical two-level prefix sum, same 512-token
-    packs — proving the packing machinery survives contact with an
-    actual tokenizer.  Oracle: the identical window over the
+    words: the same :func:`_pack` prefix sum and 512-token packs —
+    proving the packing machinery survives contact with an actual
+    tokenizer.  Oracle: the identical window over the
     token_count_bpe golden counts."""
     from .spark.subword import with_subword_counts
     docs = load(spark, sf_dir, "documents")
@@ -1503,31 +1538,12 @@ def pack_sequences_bpe(spark, sf_dir, shard_docs: int = 200):
     # localCheckpoint here ran the UDF at construction time and hid
     # the plan from inspection)
     ident = input_fingerprint(docs)
-    t = memo(spark, ("pack_bpe", ident, shard_docs) if ident else None,
+    t = memo(spark, ("pack_bpe", ident) if ident else None,
              lambda: with_subword_counts(docs).select(
                  "doc_id", "lang",
-                 F.col("__sw.n_subwords").alias("n_subwords"),
-                 (F.col("doc_id") / shard_docs).cast("bigint")
-                 .alias("__shard")),
+                 F.col("__sw.n_subwords").alias("n_subwords")),
              persist=True)
-    w_in = (Window.partitionBy("lang", "__shard").orderBy("doc_id")
-            .rowsBetween(Window.unboundedPreceding, 0))
-    within = t.withColumn(
-        "__local", F.sum("n_subwords").over(w_in) - F.col("n_subwords"))
-    totals = t.groupBy("lang", "__shard").agg(
-        F.sum("n_subwords").alias("__tot"))
-    w_sh = (Window.partitionBy("lang").orderBy("__shard")
-            .rowsBetween(Window.unboundedPreceding, -1))
-    bases = totals.withColumn(
-        "__base", F.coalesce(F.sum("__tot").over(w_sh), F.lit(0)))
-    return (within.join(bases.select("lang", "__shard", "__base"),
-                        ["lang", "__shard"])
-            .withColumn("stream_offset",
-                        F.col("__base") + F.col("__local"))
-            .withColumn("pack_id",
-                        (F.col("stream_offset") / 512).cast("bigint"))
-            .select("doc_id", "lang", "n_subwords", "stream_offset",
-                    "pack_id"))
+    return _pack(t, "n_subwords")
 
 
 ORACLE_SQL["pack_sequences_bpe"] = ORACLE_SQL["pack_sequences_bpe"] \
@@ -1548,49 +1564,13 @@ ORACLE_SQL["pack_sequences_bpe"] = ORACLE_SQL["pack_sequences_bpe"] \
     window w as (partition by lang order by doc_id
                  rows between unbounded preceding and current row)
 """)
-def pack_sequences(spark, sf_dir, shard_docs: int = 200):
-    """Greedy sequence packing for pretraining: documents are laid
-    head-to-tail per language stream and cut into 512-token packs
-    (pack_id = floor(stream_offset / 512)).
-
-    Implemented as a HIERARCHICAL prefix sum — bit-identical to one
-    global running-sum window per lang, but no partition ever holds a
-    whole language:
-      1. shard = floor(doc_id / shard_docs) is order-consistent with
-         the stream order, so within-(lang, shard) running sums are
-         exact local prefixes;
-      2. per-shard token totals (a tiny aggregate, shard_docs× smaller
-         than the data) get an EXCLUSIVE running sum per lang — the
-         shard base offsets;
-      3. offset = shard base + within-shard prefix, one equi-join
-         (AQE broadcasts the shard table while it fits; raise
-         shard_docs to shrink it).  Each extra level divides the
-         widest window by another shard_docs — two levels cover
-         10^12 docs."""
+def pack_sequences(spark, sf_dir):
+    """Greedy sequence packing for pretraining (:func:`_pack`) with
+    the budget measured in whitespace tokens."""
     d = load(spark, sf_dir, "documents")
-    toks = F.size(F.filter(F.split("text", " "),
-                           lambda x: F.length(x) > 0))
-    t = d.select("doc_id", "lang", toks.alias("n_tokens"),
-                 (F.col("doc_id") / shard_docs).cast("bigint")
-                 .alias("__shard"))
-    w_in = (Window.partitionBy("lang", "__shard").orderBy("doc_id")
-            .rowsBetween(Window.unboundedPreceding, 0))
-    within = t.withColumn(
-        "__local", F.sum("n_tokens").over(w_in) - F.col("n_tokens"))
-    totals = t.groupBy("lang", "__shard").agg(
-        F.sum("n_tokens").alias("__tot"))
-    w_sh = (Window.partitionBy("lang").orderBy("__shard")
-            .rowsBetween(Window.unboundedPreceding, -1))
-    bases = totals.withColumn(
-        "__base", F.coalesce(F.sum("__tot").over(w_sh), F.lit(0)))
-    return (within.join(bases.select("lang", "__shard", "__base"),
-                        ["lang", "__shard"])
-            .withColumn("stream_offset",
-                        F.col("__base") + F.col("__local"))
-            .withColumn("pack_id",
-                        (F.col("stream_offset") / 512).cast("bigint"))
-            .select("doc_id", "lang", "n_tokens", "stream_offset",
-                    "pack_id"))
+    toks = F.size(F.expr(TOKENS.format(x="text")))
+    return _pack(d.select("doc_id", "lang", toks.alias("n_tokens")),
+                 "n_tokens")
 
 
 def _contamination_duck(n: int = 8) -> str:

@@ -35,19 +35,6 @@ class DagSegmenter:
             total += int(count)
         self.log_total = log(max(total, 1))
 
-    def _ends(self, text: str, start: int) -> list[int]:
-        """Inclusive end indices reachable from ``start`` (DAG row)."""
-        ends = [start]
-        stop = start + 1
-        word = text[start:stop]
-        while stop <= len(text) and word in self.table:
-            if self.table[word]:
-                if stop - 1 != start:
-                    ends.append(stop - 1)
-            stop += 1
-            word = text[start:stop]
-        return ends
-
     def cut(self, text: str) -> list[str]:
         n = len(text)
         if n == 0:

@@ -5,7 +5,7 @@ xxhash64-based (JVM-only fast path) or, for winnowing, a polynomial
 hash of code points.  Five families:
 
 * exact: one hash-groupBy — the cheapest pass, run first at scale;
-* minhash/LSH: token/shingle minhash → bands → one row per band
+* minhash/LSH: 3-token-shingle minhash → bands → one row per band
   bucket, candidate pairs expanded from it → exact-jaccard verify
   (sub-quadratic near-dup detection);
 * simhash: per-document bit fingerprint; hamming-near docs share the
@@ -35,7 +35,14 @@ from .memo import input_fingerprint, memo
 MD5INT = "cast(conv(substring(md5({x}), 1, 15), 16, 10) as bigint)"
 
 
-def ratio_round(p: str, q: str, digits: int) -> Column:
+# A document's tokens: split on single spaces, empty strings dropped
+# (double, leading and trailing spaces), as a SQL template over the
+# text expression ``x`` — the token rule of every text operator here
+# and of its DuckDB oracle.
+TOKENS = "filter(split({x}, ' '), t -> length(t) > 0)"
+
+
+def ratio_round_sql(p: str, q: str, digits: int) -> str:
     """``cast(round(p/q, digits) as double)`` for NON-NEGATIVE
     integer SQL expressions p, q — computed with pure integer
     half-up arithmetic ((2*p*10^d + q) div (2*q)) so the result is
@@ -46,20 +53,14 @@ def ratio_round(p: str, q: str, digits: int) -> Column:
     that is not exactly representable (denominator with a factor 5,
     e.g. a 160-shingle union) silently diverges the engines."""
     m = 10 ** digits
-    return (F.expr(
-        f"cast((2 * cast(({p}) as bigint) * {m} "
-        f"+ cast(({q}) as bigint)) "
-        f"div (2 * cast(({q}) as bigint)) as double)")
-        / F.lit(float(m)))
+    return (f"cast((2 * cast(({p}) as bigint) * {m} "
+            f"+ cast(({q}) as bigint)) "
+            f"div (2 * cast(({q}) as bigint)) as double) / {m}D")
 
 
-def tokens(df: DataFrame, id_col: str, text_col: str,
-           min_len: int = 1) -> DataFrame:
-    from .tagger import ensure_parallelism
-
-    df = ensure_parallelism(df)
-    t = df.select(id_col, F.explode(F.split(text_col, " ")).alias("token"))
-    return t.filter(F.length("token") >= min_len)
+def ratio_round(p: str, q: str, digits: int) -> Column:
+    """:func:`ratio_round_sql` as a column."""
+    return F.expr(ratio_round_sql(p, q, digits))
 
 
 def shingle_sets(df: DataFrame, id_col: str, text_col: str,
@@ -76,8 +77,7 @@ def shingle_sets(df: DataFrame, id_col: str, text_col: str,
     run on the carried arrays (array_min/array_intersect), so the
     whole near-dup pipeline shuffles only ids + band keys and, for
     the candidate pairs, one array per side."""
-    toks = F.filter(F.split(F.col(text_col), " "),
-                    lambda x: F.length(x) > 0)
+    toks = F.expr(TOKENS.format(x=text_col))
     from .tagger import ensure_parallelism
 
     df = ensure_parallelism(df)
@@ -340,9 +340,9 @@ def jaccard_verify(candidates: DataFrame, shsets: DataFrame,
 
 def minhash_near_duplicates(df: DataFrame, id_col: str, text_col: str,
                             num_hashes: int = 6, band_size: int = 2,
-                            threshold: float = 0.9, shingle: int = 3,
+                            threshold: float = 0.9,
                             max_bucket: int | None = 2000) -> DataFrame:
-    """Full near-dup pipeline over n-token shingles: (d1, d2, jaccard).
+    """Full near-dup pipeline over 3-token shingles: (d1, d2, jaccard).
 
     Shuffle budget: banding shuffles (id, band, bkey) rows only; the
     verify joins move one shingle-FINGERPRINT array (8-byte ints, not
@@ -362,16 +362,10 @@ def minhash_near_duplicates(df: DataFrame, id_col: str, text_col: str,
     # collide) plus params.
     spark = df.sparkSession
     ident = input_fingerprint(df)
-    key = ("shingles", ident, id_col, text_col, shingle) if ident else None
+    key = ("shingles", ident, id_col, text_col) if ident else None
 
     def shingle_table() -> DataFrame:
-        if shingle > 1:
-            sets = shingle_sets(df, id_col, text_col, n=shingle)
-        else:
-            sets = (tokens(df, id_col, text_col)
-                    .groupBy(id_col)
-                    .agg(F.array_distinct(F.collect_list("token"))
-                         .alias("shset")))
+        sets = shingle_sets(df, id_col, text_col)
         return hash_shingles(sets, id_col).filter(F.size("shset") > 0)
 
     def pairs() -> DataFrame:
@@ -418,8 +412,7 @@ def substring_duplicate_spans(df: DataFrame, id_col: str, text_col: str,
     anywhere."""
     from .tagger import ensure_parallelism
 
-    toks = F.filter(F.split(F.col(text_col), " "),
-                    lambda x: F.length(x) > 0)
+    toks = F.expr(TOKENS.format(x=text_col))
     h = MD5INT.format(x=f"concat_ws(' ', slice(__toks, i, {k}))")
     fps = F.expr(
         f"transform(sequence(1, size(__toks) - {k - 1}), i -> {h})")
@@ -477,8 +470,7 @@ def substring_dedup_clean(df: DataFrame, id_col: str, text_col: str,
     # distinct here would shuffle the largest intermediate twice
     cov = cov_rows.groupBy("d2").agg(
         F.array_sort(F.collect_set("pos")).alias("__cov"))
-    toks = F.filter(F.split(F.col(text_col), " "),
-                    lambda x: F.length(x) > 0)
+    toks = F.expr(TOKENS.format(x=text_col))
     from .tagger import ensure_parallelism
 
     base = ensure_parallelism(df).select(id_col, toks.alias("__toks"))
@@ -557,8 +549,7 @@ def simhash(df: DataFrame, id_col: str, text_col: str,
     over exploded tokens)."""
     from .tagger import ensure_parallelism
 
-    toks = F.filter(F.split(F.col(text_col), " "),
-                    lambda x: F.length(x) > 0)
+    toks = F.expr(TOKENS.format(x=text_col))
     h = MD5INT.format(x="t")
     # single fold: acc[j] += sign of bit j of the token hash.  One
     # aggregate referencing the hash array once keeps CollapseProject

@@ -1,7 +1,12 @@
-"""Quality-classifier training for training-data pipelines.
+"""Per-document quality gates and quality-classifier training.
 
-The heuristic quality score (queries.quality_score) labels documents;
-this module trains a distributed logistic-regression classifier on
+The heuristic gate (``punct_pct`` and ``quality_gate``) scores
+documents in queries.quality_score and filters them, with the
+``curation_sample`` and the Gopher repetition gate, in
+queries.corpus_curation and queries.streaming_curation_counts.
+Each rule is written once here; every gate is a projection.
+
+The classifier trains a distributed logistic-regression model on
 cheap JVM-computed text features to REPLACE the heuristic at corpus
 scale (the standard bootstrap: heuristic labels → learned classifier
 → filter).  Everything stays in Spark ML (JVM, data-parallel):
@@ -14,26 +19,46 @@ and LogisticRegression with fixed params has no random init.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .dedup import MD5INT
+from .dedup import MD5INT, TOKENS
 
 FEATURES = ["n_chars", "n_tokens", "avg_token_len", "alpha_ratio",
             "digit_ratio", "punct_ratio", "space_ratio", "upper_ratio"]
 
 
-def text_features(df: DataFrame, text_col: str = "text") -> DataFrame:
+def punct_pct() -> Column:
+    """Characters other than ASCII letters, digits and spaces, as a
+    whole percentage (floor) of the text's length."""
+    punct = F.length(F.regexp_replace("text", "[a-zA-Z0-9 ]", ""))
+    return F.floor(punct * 100 / F.greatest(F.length("text"), F.lit(1)))
+
+
+def quality_gate(pct: Column) -> list[Column]:
+    """The heuristic quality gate over a ``punct_pct`` column, as the
+    conjuncts a caller ANDs with its own: 50 to 5000 characters,
+    under 10% punctuation."""
+    return [F.length("text").between(50, 5000), pct < 10]
+
+
+def curation_sample() -> Column:
+    """The curation passes' deterministic 50% per-document sample."""
+    return F.expr(MD5INT.format(
+        x="concat('cur:', cast(doc_id as string))")) % 100 < 50
+
+
+def text_features(df: DataFrame) -> DataFrame:
     """Append the 8 classifier features — one JVM projection, no
     python, no shuffle."""
-    t = F.col(text_col)
+    t = F.col("text")
     n = F.length(t).cast("double")
     safe_n = F.greatest(n, F.lit(1.0))
 
     def ratio(pattern: str):
         return (F.length(F.regexp_replace(t, pattern, "")) / safe_n)
 
-    toks = F.filter(F.split(t, " "), lambda x: F.length(x) > 0)
+    toks = F.expr(TOKENS.format(x="text"))
     return (df.withColumn("n_chars", n)
             .withColumn("n_tokens", F.size(toks).cast("double"))
             .withColumn("avg_token_len",
@@ -71,7 +96,7 @@ REPETITION_LIMITS = {"top_2gram_frac": 0.20, "dup_2gram_frac": 0.30,
 # the oracle mirrors with ORDER BY count DESC, gram ASC.
 _REP_FOLD = """
 aggregate(
-  __grams,
+  y.grams,
   named_struct('prev', '', 'run', cast(0 as bigint),
                'topc', cast(0 as bigint), 'topg', '',
                'dupch', cast(0 as bigint), 'totch', cast(0 as bigint)),
@@ -92,105 +117,36 @@ aggregate(
       'totch', s.totch + s.run * length(s.prev)))
 """
 
-
-def _rep_projected(df: DataFrame, text_col: str = "text",
-                   keep_cols: list[str] | None = None) -> DataFrame:
-    """Append the repetition accumulators (__s, __nc, __nt, __ndt,
-    __nl, __ndl) as pure projections.  Short docs (< 2 tokens) are kept
-    with an empty gram array (sequence(1, 0) DESCENDS in Spark —
-    guarded) so callers can compose this inline without a filter."""
-    toks = F.filter(F.split(F.col(text_col), " "),
-                    lambda x: F.length(x) > 0)
-    lines = F.filter(F.split(F.col(text_col), "\n"),
-                     lambda x: F.length(x) > 0)
-    grams = ("case when size(__toks) >= 2 then "
-             "array_sort(transform(sequence(1, size(__toks) - 1), "
-             "i -> concat_ws(' ', slice(__toks, i, 2)))) "
-             "else array() end")
-    from .tagger import ensure_parallelism
-
-    cols = keep_cols if keep_cols is not None else df.columns
-    return (ensure_parallelism(df)
-            .select(*cols, toks.alias("__toks"), lines.alias("__lines"),
-                    F.length(text_col).alias("__nc"))
-            .select(*cols, "__nc",
-                    F.expr(grams).alias("__grams"),
-                    F.size("__toks").alias("__nt"),
-                    F.size(F.array_distinct("__toks")).alias("__ndt"),
-                    F.size("__lines").alias("__nl"),
-                    F.size(F.array_distinct("__lines")).alias("__ndl"))
-            .select(*cols, "__nc", F.expr(_REP_FOLD).alias("__s"),
-                    "__nt", "__ndt", "__nl", "__ndl"))
+# (numerator, denominator) of each gate fraction over the names
+# _rep_bind binds, and the keep predicate over them.  < 2 tokens
+# means no 2-gram evidence either way; the gate rejects such a doc
+# (the oracle inner-joins on docs with >= 2 tokens).
+_REP_FRACS = {"top_2gram_frac": ("s.topch", "x.nc"),
+              "dup_2gram_frac": ("s.dupch", "x.nc"),
+              "dup_token_frac": ("y.nt - y.ndt", "y.nt"),
+              "dup_line_frac": ("y.nl - y.ndl", "y.nl")}
+_REP_KEEP = " and ".join(
+    ["y.nt >= 2"] + [f"({p}) / {q} <= {REPETITION_LIMITS[name]}"
+                     for name, (p, q) in _REP_FRACS.items()])
 
 
-def _rep_fracs() -> dict:
-    return {
-        "top_2gram_frac": F.col("__s.topch") / F.col("__nc"),
-        "dup_2gram_frac": F.col("__s.dupch") / F.col("__nc"),
-        "dup_token_frac": (F.col("__nt") - F.col("__ndt")) / F.col("__nt"),
-        "dup_line_frac": (F.col("__nl") - F.col("__ndl")) / F.col("__nl"),
-    }
+def _rep_bind(body: str, text_col: str = "text") -> str:
+    """``body`` as one SQL expression evaluated once per document,
+    with x.toks/x.lines/x.nc (tokens, non-empty lines, characters),
+    then y.grams/y.nt/y.ndt/y.nl/y.ndl (sorted 2-grams, token and line
+    counts, total and distinct), then s.topch/s.dupch/s.totch (the
+    fold) in scope.
 
-
-def _rep_keep_col():
-    # < 2 tokens means no 2-gram evidence either way; the gate keeps
-    # its historical (and oracle-mirrored: the relational side inner-
-    # joins on docs with >= 2 tokens) behavior of rejecting them —
-    # with the paper's doc-char denominator their fracs would be a
-    # clean 0.0 instead of the null that used to reject them
-    keep = F.col("__nt") >= 2
-    for name, expr in _rep_fracs().items():
-        keep = keep & (expr <= REPETITION_LIMITS[name])
-    # a doc with no line yields a null frac → not kept
-    return F.coalesce(keep, F.lit(False))
-
-
-def repetition_stats(df: DataFrame, id_col: str = "doc_id",
-                     text_col: str = "text") -> DataFrame:
-    """Per-document repetition fractions + the Gopher keep decision.
-
-    (id, top_2gram_frac, dup_2gram_frac, dup_token_frac,
-    dup_line_frac, keep) for documents with at least one 2-gram.
-    Everything is a projection over per-row arrays — at 100 TB this
-    runs embarrassingly parallel with no shuffle at all."""
-    from .dedup import ratio_round
-
-    base = _rep_projected(df, text_col, keep_cols=[id_col]) \
-        .filter(F.col("__nt") >= 2)
-    # integer-ratio rounding (not F.round on the double quotient):
-    # a totch like 640 = 2^7*5 can land a fraction exactly on a
-    # 6-decimal midpoint that is not a representable double, where
-    # Spark and DuckDB round differently
-    ratios = {
-        "top_2gram_frac": ("__s.topch", "__nc"),
-        "dup_2gram_frac": ("__s.dupch", "__nc"),
-        "dup_token_frac": ("__nt - __ndt", "__nt"),
-        "dup_line_frac": ("__nl - __ndl", "__nl"),
-    }
-    return base.select(
-        id_col,
-        *[ratio_round(p, q, 6).alias(name)
-          for name, (p, q) in ratios.items()],
-        _rep_keep_col().cast("long").alias("keep"))
-
-
-def _rep_keep_expr(text_col: str = "text") -> str:
-    """The whole repetition gate as ONE self-contained expression.
-
-    The multi-column form (_rep_projected + _rep_keep_col) re-inlines
-    __toks/__grams/__s at every downstream reference once the
-    optimizer collapses the projections into a pushed filter —
-    higher-order functions are CodegenFallback, so no subexpression
-    elimination rescues it and the split/sort/fold run many times per
-    row (measured 2.2 s for the curation gate at sf0.1).  Binding
-    each stage once via single-element transform() lambdas evaluates
-    everything exactly once per row wherever the optimizer moves the
-    predicate (0.54 s, identical decisions)."""
-    L = REPETITION_LIMITS
-    fold = _REP_FOLD.replace("__grams", "y.grams")
+    Each stage is bound once through a single-element transform()
+    lambda.  Separate projected columns would be re-inlined at every
+    downstream reference once the optimizer collapses the projections
+    into a pushed filter — higher-order functions are
+    CodegenFallback, so no subexpression elimination rescues them and
+    the split/sort/fold ran many times per row (the curation gate
+    took 2.2 s at sf0.1 that way, 0.54 s bound once)."""
     return f"""
-    coalesce(transform(array(named_struct(
-        'toks', filter(split({text_col}, ' '), t -> length(t) > 0),
+    transform(array(named_struct(
+        'toks', {TOKENS.format(x=text_col)},
         'lines', filter(split({text_col}, '\\n'), l -> length(l) > 0),
         'nc', length({text_col}))),
       x -> transform(array(named_struct(
@@ -200,30 +156,47 @@ def _rep_keep_expr(text_col: str = "text") -> str:
                  else array() end,
              'nt', size(x.toks), 'ndt', size(array_distinct(x.toks)),
              'nl', size(x.lines), 'ndl', size(array_distinct(x.lines)))),
-        y -> transform(array({fold}),
-          s -> y.nt >= 2
-               and s.topch / x.nc <= {L['top_2gram_frac']}
-               and s.dupch / x.nc <= {L['dup_2gram_frac']}
-               and (y.nt - y.ndt) / y.nt <= {L['dup_token_frac']}
-               and (y.nl - y.ndl) / y.nl <= {L['dup_line_frac']}
-          )[0])[0])[0],
-      false)
-    """
+        y -> transform(array({_REP_FOLD}), s -> {body})[0])[0])[0]"""
 
 
-def with_repetition_keep(df: DataFrame, text_col: str = "text",
-                         out_col: str = "rep_keep") -> DataFrame:
-    """Append the boolean Gopher repetition gate as a projection —
-    the form corpus_curation composes inline (no join, no second
-    scan of the corpus).  Decision-identical to
-    repetition_stats' keep column (pytest-pinned)."""
+def repetition_stats(df: DataFrame, id_col: str = "doc_id",
+                     text_col: str = "text") -> DataFrame:
+    """Per-document repetition fractions + the Gopher keep decision.
+
+    (id, top_2gram_frac, dup_2gram_frac, dup_token_frac,
+    dup_line_frac, keep) for documents with at least one 2-gram.
+    Everything is a projection over per-row arrays — at 100 TB this
+    runs embarrassingly parallel with no shuffle at all.  Each
+    document yields a one-row array (none below 2 tokens) that
+    ``inline`` expands: a filter on a struct field would be pushed
+    down and re-inline the fold."""
+    from .dedup import ratio_round_sql
+    from .tagger import ensure_parallelism
+
+    # integer-ratio rounding (not F.round on the double quotient):
+    # a totch like 640 = 2^7*5 can land a fraction exactly on a
+    # 6-decimal midpoint that is not a representable double, where
+    # Spark and DuckDB round differently
+    fracs = ", ".join(f"'{name}', {ratio_round_sql(p, q, 6)}"
+                      for name, (p, q) in _REP_FRACS.items())
+    row = (f"if(y.nt >= 2, array(named_struct({fracs}, 'keep', "
+           f"cast(coalesce({_REP_KEEP}, false) as bigint))), array())")
+    return ensure_parallelism(df).select(
+        id_col, F.inline(F.expr(_rep_bind(row, text_col))))
+
+
+def with_repetition_keep(df: DataFrame) -> DataFrame:
+    """Append the boolean Gopher repetition gate as ``rep_keep`` — a
+    projection the curation passes compose inline (no join, no second
+    scan of the corpus).  Decision-identical to repetition_stats'
+    keep column, False below 2 tokens (pytest-pinned)."""
     from .tagger import ensure_parallelism
 
     return ensure_parallelism(df).withColumn(
-        out_col, F.expr(_rep_keep_expr(text_col)))
+        "rep_keep", F.expr(f"coalesce({_rep_bind(_REP_KEEP)}, false)"))
 
 
-def heuristic_label(df: DataFrame, text_col: str = "text") -> DataFrame:
+def heuristic_label(df: DataFrame) -> DataFrame:
     """Binary quality label from the same heuristic family as the
     quality_score query: long enough, mostly alphabetic, not
     digit-heavy."""
@@ -234,19 +207,18 @@ def heuristic_label(df: DataFrame, text_col: str = "text") -> DataFrame:
          & (F.col("digit_ratio") <= 0.3)).cast("double"))
 
 
-def hash_split(df: DataFrame, id_col: str = "doc_id",
-               test_pct: int = 10) -> tuple[DataFrame, DataFrame]:
-    """Deterministic md5 train/test split (reproducible across runs,
-    engines, partitionings — rand() is none of those)."""
-    h = MD5INT.format(x=f"concat('split:', cast({id_col} as string))")
+def hash_split(df: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Deterministic md5 90/10 train/test split on doc_id
+    (reproducible across runs, engines, partitionings — rand() is
+    none of those)."""
+    h = MD5INT.format(x="concat('split:', cast(doc_id as string))")
     bucket = F.expr(f"pmod({h}, 100)")
     marked = df.withColumn("__b", bucket)
-    return (marked.filter(F.col("__b") >= test_pct).drop("__b"),
-            marked.filter(F.col("__b") < test_pct).drop("__b"))
+    return (marked.filter(F.col("__b") >= 10).drop("__b"),
+            marked.filter(F.col("__b") < 10).drop("__b"))
 
 
-def train_quality_classifier(docs: DataFrame, text_col: str = "text",
-                             id_col: str = "doc_id") -> dict:
+def train_quality_classifier(docs: DataFrame) -> dict:
     """Train LR on heuristic-labeled features; returns the model plus
     held-out metrics.  At 100 TB this exact code runs unchanged: the
     feature projection is embarrassingly parallel and MLlib L-BFGS
@@ -255,8 +227,8 @@ def train_quality_classifier(docs: DataFrame, text_col: str = "text",
     from pyspark.ml.evaluation import BinaryClassificationEvaluator
     from pyspark.ml.feature import VectorAssembler
 
-    feats = heuristic_label(text_features(docs, text_col), text_col)
-    train, test = hash_split(feats, id_col)
+    feats = heuristic_label(text_features(docs))
+    train, test = hash_split(feats)
     asm = VectorAssembler(inputCols=FEATURES, outputCol="features")
     lr = LogisticRegression(maxIter=25, regParam=0.01,
                             standardization=True)

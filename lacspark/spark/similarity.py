@@ -600,15 +600,16 @@ def _pq_rerank_driver(spark, srows, qvecs: dict, corpus: DataFrame,
                  .join(F.broadcast(idf), "__id").collect())
         nvecs = {r["__id"]: [float(x) for x in r["__v"]]
                  for r in nrows}
+    # a vector shortlisted by many queries is normed once
+    norms = {i: math.sqrt(_fold_dot(nvecs[i], nvecs[i])) for i in need}
     out = []
     for qid in by_q:
         qv = qvecs[qid]
         qn = math.sqrt(_fold_dot(qv, qv))
         scored = []
         for nid in by_q[qid]:
-            nv = nvecs[nid]
-            scored.append((_fold_dot(qv, nv)
-                           / (qn * math.sqrt(_fold_dot(nv, nv))), nid))
+            scored.append((_fold_dot(qv, nvecs[nid]) / (qn * norms[nid]),
+                           nid))
         scored.sort(key=lambda t: (-t[0], t[1]))
         for rnk, (c, nid) in enumerate(scored[:k], start=1):
             out.append((qid, nid, rnk,

@@ -29,11 +29,10 @@ def _subword_counts_udf(texts: pd.Series) -> pd.DataFrame:
     return pd.DataFrame(pairs, columns=["n_subwords", "n_unk"])
 
 
-def with_subword_counts(df: DataFrame, text_col: str = "text",
-                        out_col: str = "__sw") -> DataFrame:
-    """Append the (n_subwords, n_unk) struct as ``out_col`` —
+def with_subword_counts(df: DataFrame) -> DataFrame:
+    """Append the (n_subwords, n_unk) struct of ``text`` as ``__sw`` —
     composes as a projection; callers expand the fields they need."""
     from .tagger import ensure_parallelism
 
     return ensure_parallelism(df).withColumn(
-        out_col, _subword_counts_udf(F.col(text_col)))
+        "__sw", _subword_counts_udf(F.col("text")))

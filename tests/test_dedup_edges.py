@@ -33,24 +33,39 @@ def _run_both(spark, sf_dir, name):
     return s, d
 
 
-def test_cooccurrence_agrees_on_consecutive_spaces(spark, tmp_path):
-    """Empty tokens from double/leading/trailing spaces must not open
-    gaps in the co-occurrence window: both engines use COMPACTED
-    positions, so 'alpha  beta' and 'alpha beta' co-occur the same."""
+# 24 tokens, the second gap a double space; doc 8 repeats them with
+# single spaces, so the span, clean and near-dup queries have rows
+_LONG = [f"w{i:02d}" for i in range(24)]
+
+
+@pytest.mark.parametrize("name", [
+    "cooccurrence_pairs", "dedup_simhash", "dedup_jaccard_adjacent",
+    "word_boundary_merge", "pack_sequences", "quality_lm_score",
+    "quality_repetition", "dedup_substring_spans", "dedup_substring_clean",
+    "dedup_minhash_lsh"])
+def test_cooccurrence_agrees_on_consecutive_spaces(spark, tmp_path, name):
+    """Empty tokens from double/leading/trailing spaces are no
+    tokens: every query on the shared token rule (dedup.TOKENS)
+    agrees with its DuckDB oracle on such texts.  Positions are
+    COMPACTED, so 'alpha  beta' and 'alpha beta' co-occur the same."""
     rows = [
         (1, "en", "alpha  bravo charlie"),          # double space
         (2, "en", " alpha bravo  charlie delta "),  # lead/mid/trail
         (3, "en", "echo   foxtrot golfx  hotel victor whiskey"),
         (4, "en", "alpha bravo charlie"),            # no gaps control
         (5, "en", "   "),                            # all-empty doc
+        (6, "en", ""),                               # empty text
+        (7, "en", " ".join(_LONG[:2]) + "  " + " ".join(_LONG[2:])),
+        (8, "en", " ".join(_LONG)),
     ]
     sf = _write_docs(spark, tmp_path, rows)
-    s, d = _run_both(spark, sf, "cooccurrence_pairs")
+    s, d = _run_both(spark, sf, name)
     assert s == d
-    # the double space must NOT break adjacency: alpha/bravo from
-    # doc 1 and doc 4 both count → n_cooccur = 2 somewhere
-    m = {(t1, t2): n for t1, t2, n in s}
-    assert m[("alpha", "bravo")] >= 2
+    if name == "cooccurrence_pairs":
+        # the double space must NOT break adjacency: alpha/bravo from
+        # doc 1 and doc 4 both count → n_cooccur = 2 somewhere
+        m = {(t1, t2): n for t1, t2, n in s}
+        assert m[("alpha", "bravo")] >= 2
 
 
 def test_exact_pairs_keeper_fanout_is_linear(spark, tmp_path):

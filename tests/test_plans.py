@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import re
 
+import pytest
 from pyspark.sql import functions as F
 
 from lacspark.queries import SPARK_QUERIES
@@ -138,6 +139,17 @@ def test_repetition_stats_is_shuffle_free(spark):
     plan = plan_of(SPARK_QUERIES["quality_repetition"](spark, SF)).lower()
     assert "hashpartitioning" not in plan
     assert "rangepartitioning" not in plan
+
+
+@pytest.mark.parametrize("name", ["quality_repetition", "corpus_curation"])
+def test_repetition_fold_is_planned_once(spark, name):
+    """The repetition gate binds its stages once per document, so the
+    optimized plan holds exactly one fold.  Separate projected
+    columns, or a filter on a field of the fold's struct, would let
+    the optimizer re-inline the fold at every reference."""
+    df = SPARK_QUERIES[name](spark, SF)
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("aggregate(") == 1
 
 
 def test_token_count_bpe_is_arrow_and_shuffle_free(spark):

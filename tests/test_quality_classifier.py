@@ -5,6 +5,7 @@ path must be rerun-stable."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from lacspark.spark.quality import (hash_split, heuristic_label,
@@ -69,23 +70,26 @@ def test_repetition_stats_known_values(spark):
     assert rows[2].keep == 0
 
 
+# planted repeats: duplicate lines, all-same-token docs, tie-broken
+# top grams, double spaces
+_REPETITION_ROWS = [
+    (0, "en", "q q q q q q q q"),
+    (1, "en", "a b  a b  c d c d"),          # tie: a b / c d
+    (2, "en", "para one\npara one\npara two\nx y z w v u t s"),
+    (3, "en", "single"),                      # < 2 tokens: no row
+    (4, "en", " ".join(f"t{i}" for i in range(30))),
+]
+
+
 def test_repetition_oracle_agreement_adversarial(spark, tmp_path):
-    """Spark fold vs DuckDB relational replica on planted repeats:
-    duplicate lines, all-same-token docs, tie-broken top grams,
-    double spaces."""
+    """Spark fold vs DuckDB relational replica on planted repeats."""
     import duckdb
 
     from lacspark.queries import ORACLE_SQL, SPARK_QUERIES
 
-    rows = [
-        (0, "en", "q q q q q q q q"),
-        (1, "en", "a b  a b  c d c d"),          # tie: a b / c d
-        (2, "en", "para one\npara one\npara two\nx y z w v u t s"),
-        (3, "en", "single"),                      # < 2 tokens: no row
-        (4, "en", " ".join(f"t{i}" for i in range(30))),
-    ]
     path = str(tmp_path / "documents.parquet")
-    spark.createDataFrame(rows, "doc_id bigint, lang string, text string") \
+    spark.createDataFrame(_REPETITION_ROWS,
+                          "doc_id bigint, lang string, text string") \
         .coalesce(1).write.mode("overwrite").parquet(path)
     sdf = SPARK_QUERIES["quality_repetition"](spark, str(tmp_path))
     s = sorted(tuple(r) for r in sdf.collect())
@@ -96,6 +100,29 @@ def test_repetition_oracle_agreement_adversarial(spark, tmp_path):
                con.execute(ORACLE_SQL["quality_repetition"]).fetchall())
     assert s == d
     assert len(s) == 4  # doc 3 filtered on both sides
+
+
+@pytest.mark.parametrize("source", ["planted", "sf0.001"])
+def test_repetition_keep_matches_stats_keep(spark, source):
+    """The curation gate (with_repetition_keep) and quality_repetition
+    (repetition_stats) make the same keep decision for every
+    document; a document under 2 tokens has no stats row and is not
+    kept."""
+    from lacspark.spark.quality import (repetition_stats,
+                                        with_repetition_keep)
+
+    if source == "planted":
+        df = spark.createDataFrame(
+            _REPETITION_ROWS, "doc_id bigint, lang string, text string")
+    else:
+        df = spark.read.parquet(f"{SF}/documents.parquet")
+    keep = {r.doc_id: r.keep for r in repetition_stats(df).collect()}
+    gate = {r.doc_id: r.rep_keep for r in
+            with_repetition_keep(df).select("doc_id", "rep_keep")
+            .collect()}
+    assert len(gate) == df.count() and set(keep) <= set(gate)
+    assert {d: keep.get(d) == 1 for d in gate} == gate
+    assert set(gate.values()) == {True, False}
 
 
 def test_curation_excludes_repetition_failures(spark):
