@@ -74,19 +74,9 @@ _PRIORITY = [
 # mechanically by tests/test_fresh_pin.py against the committed
 # query_hash_snapshot.json: editing a query without pinning it here
 # fails CI.
-_FRESH = [
-    # source changed: one token template, one curation gate, one
-    # packing prefix sum
-    "word_boundary_merge", "cooccurrence_pairs", "dedup_jaccard_adjacent",
-    "quality_lm_score", "token_count_bpe", "pack_sequences",
-    "pack_sequences_bpe", "quality_score", "docmeta_suite",
-    "corpus_curation", "streaming_curation_counts",
-    # helpers changed: the token template, one repetition-gate binder,
-    # ratio rounding as SQL, PQ norms once per vector
-    "quality_repetition", "quality_features_label", "dedup_simhash",
-    "dedup_minhash_lsh", "dedup_near_keep_best", "dedup_near_components",
-    "dedup_substring_spans", "dedup_substring_clean", "contamination_check",
-    "ann_pq_topk",
+_FRESH: list[str] = [
+    # no query's source changed; the queries on canonical_map, whose
+    # probe changed, lead _PRIORITY already
 ]
 
 def _folded() -> frozenset:

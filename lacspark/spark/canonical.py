@@ -195,14 +195,23 @@ def canonical_map(mentions: DataFrame) -> DataFrame:
     stream — when it fits ``DRIVER_FORMS`` the whole
     minhash/band/verify/union-find chain runs on the driver via the
     pure-python twin (``canonical_py.canonical_map_py``, which also
-    generates the golden oracles).  That is ONE Spark job (the
-    distinct + probe collect) instead of the banded chain's six,
+    generates the golden oracles).  That is ONE probe collect (the
+    distinct) instead of the banded chain's six jobs,
     whose fixed per-job overhead dominates at small cardinalities.
-    Above the bounds: the distributed banded path."""
-    forms = surface_forms(mentions).persist()
+    Above the bounds: the distributed banded path.
+
+    The probe reads the unpersisted distinct, which AQE coalesces to
+    one partition: the probe is the map stage over the mentions and a
+    one-task read.  It is not persisted: Spark does not coalesce the
+    shuffle partitions of a cached plan, so every call would build a
+    cache of ``spark.sql.shuffle.partitions`` partitions (32 at
+    ``local[4]``) and read it in two jobs of that many tasks.  The
+    distributed path persists ``forms`` itself and so computes the
+    distinct once more than the probe; it runs only above the driver
+    bounds, where that pass is small against the banded chain."""
+    forms = surface_forms(mentions)
     # probe-by-collect: the limit(N+1) IS both the size probe and,
-    # when small, the data fetch (the persist keeps the big path from
-    # recomputing the distinct)
+    # when small, the data fetch
     probe = forms.select("form").limit(DRIVER_FORMS + 1).collect()
     # the fast path's cost is total CHARS (char-3-grams x hashes), not
     # form count — a pathological corpus of few but very long forms
@@ -214,10 +223,11 @@ def canonical_map(mentions: DataFrame) -> DataFrame:
         # the same drop accounting the distributed cap observes
         record_cap(CAP_OP, MAX_BUCKET, CAP_UNIT, counts)
         rows = [(f, c, eid) for f, (c, eid) in sorted(cmap.items())]
-        forms.unpersist()
         return local_frame(
             mentions.sparkSession, rows,
             "form string, canonical string, entity_id long")
+    # minhash bands and the components both read the forms
+    forms = forms.persist()
     # CC probes the edge count and then reads edges again (driver
     # union-find or per-iteration joins) — materialize once
     edges = candidate_pairs(minhash_bands(forms)).persist()

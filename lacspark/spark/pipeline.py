@@ -26,6 +26,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from .canonical import canonical_map
 from .graph import build_edges, build_vertices
@@ -106,24 +107,28 @@ def run_pipeline(spark: SparkSession, files: DataFrame, out_dir: str,
                   F.sum(F.expr("size(mentions)")).alias("n_mentions"),
                   F.sum(F.expr("size(triples)")).alias("n_triples"),
                   F.sum(F.col("sha_ok").cast("long")).alias("n_sha_ok"))
-             .withColumn("n_sha_bad", F.col("n_files") - F.col("n_sha_ok"))
-             .withColumn("run_id", F.lit(run_id))
-             .withColumn("status", F.lit("ok"))
-             .withColumn("wall_ms",
-                         F.lit(int((time.time() - t_start) * 1000))))
+             .withColumn("n_sha_bad", F.col("n_files") - F.col("n_sha_ok")))
+    # the run's own values join the rows on the driver: a literal in
+    # the aggregate would be compiled into its generated class, and
+    # a per-run value (wall_ms) makes that class new on every run
+    wall_ms = int((time.time() - t_start) * 1000)
     # collect once, then persist lineage from the collected rows —
     # re-evaluating stats after the append would see its own output.
     # The commit time is stamped JVM-side, at the write.
     stat_rows = stats.collect()
     if stat_rows:
-        write_table(local_frame(spark, stat_rows, stats.schema)
-                    .withColumn("committed_at", F.current_timestamp()),
-                    out_dir, "lineage", "append")
+        schema = T.StructType(stats.schema.fields + [
+            T.StructField("run_id", T.StringType(), False),
+            T.StructField("status", T.StringType(), False),
+            T.StructField("wall_ms", T.IntegerType(), False)])
+        write_table(local_frame(
+            spark, [tuple(r) + (run_id, "ok", wall_ms) for r in stat_rows],
+            schema).withColumn("committed_at", F.current_timestamp()),
+            out_dir, "lineage", "append")
 
-    metrics = {r[BUCKET_COL]: r.asDict() for r in stat_rows}
-    n_files = sum(m["n_files"] for m in metrics.values())
-    n_triples = sum(m["n_triples"] for m in metrics.values())
-    sha_bad = sum(m["n_sha_bad"] for m in metrics.values())
+    n_files = sum(r.n_files for r in stat_rows)
+    n_triples = sum(r.n_triples for r in stat_rows)
+    sha_bad = sum(r.n_sha_bad for r in stat_rows)
 
     audit: list[dict] = []
     if build_graph and n_files:
@@ -163,7 +168,7 @@ def run_pipeline(spark: SparkSession, files: DataFrame, out_dir: str,
         "n_files": n_files,
         "n_triples": n_triples,
         "n_sha_bad": sha_bad,
-        "n_buckets_processed": len(metrics),
+        "n_buckets_processed": len(stat_rows),
         "cap_audit": audit,
         "wall_sec": wall,
         "triples_per_sec": n_triples / wall if wall else 0.0,

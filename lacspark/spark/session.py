@@ -6,6 +6,15 @@ and a shuffle-partition default sized for local[N] testing.  On a real
 cluster the same builder runs under spark-submit --py-files with
 executor counts supplied externally.
 
+The compiled-code cache is sized to the program.  Spark SQL compiles
+each plan's stages to Java at run time (Janino) and keeps the classes
+in a cache of ``spark.sql.codegen.cache.maxEntries`` entries, 100 by
+default.  One warm ``query_mix`` pass of the benchmark needs 112
+classes, one ``kg`` unit 110, and the 67 registered queries at sf0.001
+765; at 100 the cache evicts classes before their next use, and every
+warm pass compiles most of its code again.  The conf is static (read
+once per JVM, when the cache is built), so it is set on the builder.
+
 ``local_frame`` is how driver-side Python rows become a DataFrame: an
 Arrow table in the given schema, planned as a ``LocalRelation``.
 Evaluating it starts no Python task, where ``createDataFrame`` over
@@ -45,6 +54,10 @@ def get_spark(app_name: str = "lacspark", cores: int | None = None,
         .config("spark.sql.adaptive.optimizer.excludedRules",
                 "org.apache.spark.sql.execution.adaptive."
                 "AQEPropagateEmptyRelation")
+        # about 2.6x the 765 classes of the 67 registered queries at
+        # sf0.001 (module docstring); static: the JVM's first session
+        # sets it
+        .config("spark.sql.codegen.cache.maxEntries", "2000")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # Arrow batch size is the engine's batching knob (≙ the
         # reference's LoD batch size); ~1k rows keeps the numpy

@@ -1,18 +1,19 @@
 """Session factory: Python workers run wherever the driver starts,
-a task does not re-read unchanged zip archives, and driver-side rows
-become LocalRelations."""
+a task does not re-read unchanged zip archives, driver-side rows
+become LocalRelations, and a re-run plan reuses its compiled code."""
 
 from __future__ import annotations
 
 import ast
 import os
+import random
 import subprocess
 import sys
 
 import pandas as pd
 from pyspark.sql import functions as F
 
-from lacspark.spark import catalog
+from lacspark.spark import canonical, catalog
 from lacspark.spark.canonical import canonical_map
 from lacspark.spark.pipeline import run_pipeline
 from lacspark.spark.repos_files import synth_repos_files
@@ -147,6 +148,72 @@ def test_canonical_map_driver_path_is_local(spark):
     mentions = spark.createDataFrame(
         [("北京大学",), ("北京大学 ",), ("清华大学",)], "word string")
     _assert_local(canonical_map(mentions))
+
+
+def _persistent_rdds(spark) -> dict:
+    return dict(spark.sparkContext._jsc.getPersistentRDDs())
+
+
+def test_canonical_map_leaves_no_cache(spark, monkeypatch):
+    """``canonical_map`` persists nothing that outlives the call.  The
+    driver path probes the unpersisted forms and adds no persistent
+    RDD; the banded path unpersists its forms and edges, and the one
+    persistent RDD it adds is the local checkpoint the returned frame
+    reads."""
+    mentions = spark.createDataFrame(
+        [("北京大学",), ("北京大学 ",), ("清华大学",), ("清华大学们",)],
+        "word string")
+    before = _persistent_rdds(spark)
+    rows = sorted(canonical_map(mentions).collect())
+    assert _persistent_rdds(spark).keys() - before.keys() == set()
+    monkeypatch.setattr(canonical, "DRIVER_FORMS", 0)   # banded path
+    before = _persistent_rdds(spark)
+    banded = canonical_map(mentions)
+    added = {k: v for k, v in _persistent_rdds(spark).items()
+             if k not in before}
+    assert [rdd.rdd().isCheckpointed() for rdd in added.values()] == [True]
+    assert sorted(banded.collect()) == rows
+
+
+def _compiles(spark) -> int:
+    """Classes Janino has compiled in this JVM so far."""
+    return spark._jvm.org.apache.spark.metrics.source.CodegenMetrics \
+        .METRIC_COMPILATION_TIME().getCount()
+
+
+def test_rerun_plans_compile_nothing(spark):
+    """A second pass over the same plans finds every generated class in
+    the codegen cache.  The 30 plans inline a fresh salt into their
+    stages, so their first pass compiles more classes than Spark's
+    default cache of 100 holds; at that size the second pass compiles
+    120 of them again."""
+    salt = random.randrange(1 << 20, 1 << 30)
+    base = spark.range(0, 256, numPartitions=4)
+
+    def run():
+        for k in range(salt, salt + 30):
+            (base.withColumn("g", F.col("id") % 7 + k)
+             .groupBy("g").agg(F.sum(F.col("id") * k).alias("s"))
+             .filter(F.col("s") > -k).collect())
+
+    c0 = _compiles(spark)
+    run()
+    c1 = _compiles(spark)
+    run()
+    assert c1 - c0 > 100
+    assert _compiles(spark) - c1 == 0
+
+
+def test_rerun_pipeline_compiles_nothing(spark, tmp_path):
+    """A second ``run_pipeline`` over the same input compiles no class:
+    no per-run value (run id, wall time) is a literal in a plan."""
+    files = synth_repos_files(spark, n_files=24)
+    run_pipeline(spark, files, str(tmp_path / "a"), n_buckets=2,
+                 resume=False)
+    c0 = _compiles(spark)
+    run_pipeline(spark, files, str(tmp_path / "b"), n_buckets=2,
+                 resume=False)
+    assert _compiles(spark) - c0 == 0
 
 
 def test_lineage_and_cap_audit_frames_are_local(spark, tmp_path,
