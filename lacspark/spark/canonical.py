@@ -186,6 +186,23 @@ def connected_components(vertices: DataFrame, edges: DataFrame
                     .alias("canonical")))
 
 
+def _persist_coalesced(df: DataFrame) -> DataFrame:
+    """``df.persist()``, with the cached plan run under AQE so that
+    its shuffle partitions are coalesced.  Spark plans a cache with
+    AQE off unless ``canChangeCachedPlanOutputPartitioning`` is set
+    when the cache entry is made; it is set only for this call, as the
+    session-wide flag would also drop the known partitioning of every
+    other cache the program reads."""
+    conf = df.sparkSession.conf
+    key = "spark.sql.optimizer.canChangeCachedPlanOutputPartitioning"
+    old = conf.get(key)
+    conf.set(key, "true")
+    try:
+        return df.persist()
+    finally:
+        conf.set(key, old)
+
+
 def canonical_map(mentions: DataFrame) -> DataFrame:
     """form → canonical (entity surface).  Forms shorter than 2 chars
     and forms with no similar neighbor map to themselves.
@@ -200,16 +217,16 @@ def canonical_map(mentions: DataFrame) -> DataFrame:
     whose fixed per-job overhead dominates at small cardinalities.
     Above the bounds: the distributed banded path.
 
-    The probe reads the unpersisted distinct, which AQE coalesces to
-    one partition: the probe is the map stage over the mentions and a
-    one-task read.  It is not persisted: Spark does not coalesce the
-    shuffle partitions of a cached plan, so every call would build a
-    cache of ``spark.sql.shuffle.partitions`` partitions (32 at
-    ``local[4]``) and read it in two jobs of that many tasks.  The
-    distributed path persists ``forms`` itself and so computes the
-    distinct once more than the probe; it runs only above the driver
-    bounds, where that pass is small against the banded chain."""
-    forms = surface_forms(mentions)
+    The distinct is computed once on either path: it is persisted
+    before the probe, and the banded path reads that cache.  The cache
+    is planned with AQE (``_persist_coalesced``), so its partitions
+    are coalesced like any other shuffle read: at small sizes the
+    probe is the map stage over the mentions, a one-task cache build
+    and a one-task read.  A plain ``persist`` keeps
+    ``spark.sql.shuffle.partitions`` cache partitions (32 at
+    ``local[4]``), built and read in two jobs of that many tasks for a
+    few hundred forms."""
+    forms = _persist_coalesced(surface_forms(mentions))
     # probe-by-collect: the limit(N+1) IS both the size probe and,
     # when small, the data fetch
     probe = forms.select("form").limit(DRIVER_FORMS + 1).collect()
@@ -219,6 +236,7 @@ def canonical_map(mentions: DataFrame) -> DataFrame:
     # the distributed path takes over
     if len(probe) <= DRIVER_FORMS and \
             sum(len(r.form) for r in probe) <= DRIVER_CHARS:
+        forms.unpersist()
         cmap, counts = canonical_map_py([r.form for r in probe])
         # the same drop accounting the distributed cap observes
         record_cap(CAP_OP, MAX_BUCKET, CAP_UNIT, counts)
@@ -226,8 +244,6 @@ def canonical_map(mentions: DataFrame) -> DataFrame:
         return local_frame(
             mentions.sparkSession, rows,
             "form string, canonical string, entity_id long")
-    # minhash bands and the components both read the forms
-    forms = forms.persist()
     # CC probes the edge count and then reads edges again (driver
     # union-find or per-iteration joins) — materialize once
     edges = candidate_pairs(minhash_bands(forms)).persist()

@@ -14,6 +14,9 @@ classes, one ``kg`` unit 110, and the 67 registered queries at sf0.001
 765; at 100 the cache evicts classes before their next use, and every
 warm pass compiles most of its code again.  The conf is static (read
 once per JVM, when the cache is built), so it is set on the builder.
+It pays only where plans run again in one JVM: a plan's first run
+compiles as many classes as before, and a session that
+``getOrCreate`` finds already running keeps its own size.
 
 ``local_frame`` is how driver-side Python rows become a DataFrame: an
 Arrow table in the given schema, planned as a ``LocalRelation``.

@@ -154,25 +154,58 @@ def _persistent_rdds(spark) -> dict:
     return dict(spark.sparkContext._jsc.getPersistentRDDs())
 
 
+def _completed_tasks(tracker, group: str) -> int:
+    return sum(tracker.getStageInfo(s).numCompletedTasks
+               for j in tracker.getJobIdsForGroup(group)
+               for s in tracker.getJobInfo(j).stageIds
+               if tracker.getStageInfo(s))
+
+
 def test_canonical_map_leaves_no_cache(spark, monkeypatch):
-    """``canonical_map`` persists nothing that outlives the call.  The
-    driver path probes the unpersisted forms and adds no persistent
-    RDD; the banded path unpersists its forms and edges, and the one
-    persistent RDD it adds is the local checkpoint the returned frame
-    reads."""
-    mentions = spark.createDataFrame(
-        [("北京大学",), ("北京大学 ",), ("清华大学",), ("清华大学们",)],
-        "word string")
-    before = _persistent_rdds(spark)
-    rows = sorted(canonical_map(mentions).collect())
-    assert _persistent_rdds(spark).keys() - before.keys() == set()
-    monkeypatch.setattr(canonical, "DRIVER_FORMS", 0)   # banded path
-    before = _persistent_rdds(spark)
-    banded = canonical_map(mentions)
-    added = {k: v for k, v in _persistent_rdds(spark).items()
-             if k not in before}
-    assert [rdd.rdd().isCheckpointed() for rdd in added.values()] == [True]
-    assert sorted(banded.collect()) == rows
+    """``canonical_map`` reads its mentions once on either path and
+    persists nothing that outlives the call.  The driver path
+    unpersists the forms it probed; the banded path unpersists its
+    forms and edges, and the one persistent RDD it adds is the local
+    checkpoint the returned frame reads.  The forms' cache is
+    coalesced by AQE, so the driver path builds and probes it in one
+    task each, where a plain persist keeps
+    ``spark.sql.shuffle.partitions`` cache partitions and builds and
+    reads them in two jobs of that many tasks."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    reads = sc.accumulator(0)
+
+    def read(word):
+        reads.add(1)
+        return word
+
+    words = F.array(*map(F.lit, ["北京大学", "北京大学 ", "清华大学",
+                                 "清华大学们"]))
+    mentions = spark.range(0, 4, numPartitions=2).select(
+        F.udf(read, "string").asNondeterministic()(
+            F.element_at(words, F.col("id").cast("int") + 1)).alias("word"))
+    rows = {}
+    # banded: a bound of 1 < 3 forms; at 0 the probe is a limit(1),
+    # which Spark answers from the first mention without the distinct
+    for path, bound in [("driver", canonical.DRIVER_FORMS), ("banded", 1)]:
+        monkeypatch.setattr(canonical, "DRIVER_FORMS", bound)
+        group = f"canonical-map-{path}"
+        before, r0 = _persistent_rdds(spark), reads.value
+        sc.setJobGroup(group, path)
+        try:
+            rows[path] = sorted(canonical_map(mentions).collect())
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        added = [rdd.rdd().isCheckpointed()
+                 for k, rdd in _persistent_rdds(spark).items()
+                 if k not in before]
+        assert (path, reads.value - r0, added) == \
+            (path, 4, [] if path == "driver" else [True])
+        if path == "driver":    # the map stage, then one task to
+            # build the coalesced cache and one to probe it
+            assert _completed_tasks(tracker, group) == 2 + 1 + 1
+    assert rows["banded"] == rows["driver"]
 
 
 def _compiles(spark) -> int:
