@@ -75,8 +75,11 @@ _PRIORITY = [
 # query_hash_snapshot.json: editing a query without pinning it here
 # fails CI.
 _FRESH: list[str] = [
-    # no query's source changed; the queries on canonical_map, whose
-    # probe changed, lead _PRIORITY already
+    # no query's source changed; the four streaming gates' child
+    # session now checkpoints through the FileSystem API and releases
+    # each stream's listener bus
+    "streaming_tumbling_minute", "streaming_curation_counts",
+    "streaming_dedup_keeper", "streaming_kg_triple_counts",
 ]
 
 def _folded() -> frozenset:

@@ -38,12 +38,14 @@ def _with_canonical(df: DataFrame, cmap: DataFrame, col: str,
 def build_vertices(mentions: DataFrame, cmap: DataFrame,
                    max_aliases: int = 32) -> DataFrame:
     m = _with_canonical(mentions, cmap, "word", "entity")
+    # n_tags as the size of a set, not countDistinct: a distinct
+    # aggregate plans a second aggregation level with its own Exchange
     return (m.groupBy("entity_id", "entity_canonical")
             .agg(F.count(F.lit(1)).alias("n_mentions"),
                  F.sum("rank").alias("salience"),
                  F.slice(F.array_sort(F.collect_set(form("word"))),
                          1, max_aliases).alias("aliases"),
-                 F.countDistinct("tag").alias("n_tags"),
+                 F.size(F.collect_set("tag")).cast("long").alias("n_tags"),
                  F.max("tag").alias("top_tag"))
             .withColumnRenamed("entity_canonical", "canonical"))
 

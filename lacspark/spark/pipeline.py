@@ -123,7 +123,8 @@ def run_pipeline(spark: SparkSession, files: DataFrame, out_dir: str,
             T.StructField("wall_ms", T.IntegerType(), False)])
         write_table(local_frame(
             spark, [tuple(r) + (run_id, "ok", wall_ms) for r in stat_rows],
-            schema).withColumn("committed_at", F.current_timestamp()),
+            schema).withColumn("committed_at", F.current_timestamp())
+            .coalesce(1),  # one write task and file, not one per core
             out_dir, "lineage", "append")
 
     n_files = sum(r.n_files for r in stat_rows)

@@ -181,3 +181,102 @@ def test_streaming_query_leaves_caller_conf_alone(spark, sf_dir,
     assert seen == {"32"}
     assert [op["numShufflePartitions"]
             for op in progress[-1]["stateOperators"]] == [8]
+
+
+def _manager_class(jvm, jsession, path: str) -> str:
+    ckpt = jvm.org.apache.spark.sql.execution.streaming.checkpointing
+    return ckpt.CheckpointFileManager.create(
+        jvm.org.apache.hadoop.fs.Path(path),
+        jsession.sessionState().newHadoopConf()).getClass().getSimpleName()
+
+
+def test_gate_checkpoints_go_through_filesystem(spark, sf_dir, tmp_path,
+                                                monkeypatch):
+    """The gates' child session writes its checkpoints through
+    Hadoop's FileSystem API, which forks no ``readlink`` per file;
+    the caller's session keeps Spark's default (FileContext)."""
+    from pyspark.sql.streaming.query import StreamingQuery
+
+    from lacspark.queries import SPARK_QUERIES
+
+    started = []  # the JVM session that starts each gate's stream
+    wait = StreamingQuery.awaitTermination
+
+    def wait_and_record(self, *args, **kwargs):
+        started.append(self._jsq.streamingQuery().sparkSession())
+        return wait(self, *args, **kwargs)
+
+    monkeypatch.setattr(StreamingQuery, "awaitTermination",
+                        wait_and_record)
+    caller = spark.newSession()
+    assert SPARK_QUERIES["streaming_curation_counts"](
+        caller, sf_dir).collect()
+    (child,) = started
+    path = str(tmp_path / "ckpt")
+    assert _manager_class(spark._jvm, child, path) == \
+        "FileSystemBasedCheckpointFileManager"
+    assert _manager_class(spark._jvm, caller._jsparkSession, path) == \
+        "FileContextBasedCheckpointFileManager"
+
+
+def _listener_buses(spark) -> int:
+    return sum(l.getClass().getSimpleName() == "StreamingQueryListenerBus"
+               for l in spark._jsc.sc().listenerBus().listeners())
+
+
+def test_gates_leave_no_listener_bus(spark, sf_dir):
+    """Each stream's session clone adds a listener bus to the
+    SparkContext; a gate removes it once its stream has terminated,
+    so the count stays flat over repeated calls."""
+    from lacspark.queries import SPARK_QUERIES
+
+    caller = spark.newSession()
+    gate = SPARK_QUERIES["streaming_tumbling_minute"]
+    assert gate(caller, sf_dir).count() == 1000  # starts the child
+    before = _listener_buses(spark)
+    for _ in range(5):
+        gate(caller, sf_dir).count()
+    assert _listener_buses(spark) == before
+
+
+def test_concurrent_gates_match_oracle_and_leave_no_bus(spark, sf_dir):
+    """Two threads run different gates at once on one caller session
+    (one shared child): each returns its oracle's rows, and neither
+    removes the other's bus nor leaves its own."""
+    import threading
+
+    import duckdb
+
+    from lacspark.queries import ORACLE_SQL, SPARK_QUERIES
+    from tests.test_driver_contract import TABLES, value_hash
+
+    names = ["streaming_tumbling_minute", "streaming_dedup_keeper"]
+    caller = spark.newSession()
+    SPARK_QUERIES[names[0]](caller, sf_dir).count()  # starts the child
+    before = _listener_buses(spark)
+    got, errors = {}, []
+
+    def run(name):
+        try:
+            df = SPARK_QUERIES[name](caller, sf_dir)
+            got[name] = value_hash([tuple(r) for r in df.collect()],
+                                   [c.lower() for c in df.columns])
+        except Exception as e:  # reported by the main thread
+            errors.append((name, e))
+
+    threads = [threading.Thread(target=run, args=(n,)) for n in names]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(timeout=300)
+    assert not any(t.is_alive() for t in threads)
+    assert not errors, errors
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(f"create view {t} as select * from "
+                    f"'{sf_dir}/{t}.parquet'")
+    for name in names:
+        cur = con.execute(ORACLE_SQL[name])
+        assert got[name] == value_hash(
+            cur.fetchall(), [c[0].lower() for c in cur.description]), name
+    assert _listener_buses(spark) == before
