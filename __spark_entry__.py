@@ -75,10 +75,11 @@ _PRIORITY = [
 # query_hash_snapshot.json: editing a query without pinning it here
 # fails CI.
 _FRESH: list[str] = [
-    # no query's source changed; the four streaming gates' child
-    # session now checkpoints through the FileSystem API and releases
-    # each stream's listener bus
-    "streaming_tumbling_minute", "streaming_curation_counts",
+    # no query's source changed: simhash and the Gopher repetition
+    # gate are now one python pass per document in an Arrow map
+    # stage, and every streaming gate drops its memory sink's view
+    "dedup_simhash", "corpus_curation", "quality_repetition",
+    "streaming_curation_counts", "streaming_tumbling_minute",
     "streaming_dedup_keeper", "streaming_kg_triple_counts",
 ]
 

@@ -1,7 +1,8 @@
 """K6/K7 canonicalization in pure python: the algorithm's constants,
 its union-find and its single-process twin of
 ``lacspark.spark.canonical``, with identical arithmetic and no Spark
-import.
+import.  It also holds the python twins of ``spark.dedup``'s two SQL
+text rules, ``md5int`` (``MD5INT``) and ``tokens`` (``TOKENS``).
 
 ``canonical_map_py`` has two consumers: the golden-parquet generator
 (``lacspark.gen_golden``), which uses it as the independent oracle,
@@ -30,6 +31,12 @@ def md5int(s: str) -> int:
     """≡ Spark ``conv(substring(md5(x),1,15),16,10)`` and DuckDB
     ``('0x'||substring(md5(x),1,15))::BIGINT``."""
     return int(hashlib.md5(s.encode("utf-8")).hexdigest()[:15], 16)
+
+
+def tokens(text: str) -> list[str]:
+    """≡ Spark ``filter(split(text, ' '), t -> length(t) > 0)``: split
+    on single spaces, empty strings dropped."""
+    return [t for t in text.split(" ") if t]
 
 
 def _form(word: str) -> str:

@@ -31,7 +31,7 @@ from collections import defaultdict
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-from .canonical_py import _form, canonical_map_py, md5int
+from .canonical_py import _form, canonical_map_py, md5int, tokens
 from .engine import LacEngine
 
 SF_DIRS = {
@@ -214,7 +214,7 @@ def gen_subword(tag: str, sf_dir: str) -> None:
     for i, t in zip(docs["doc_id"].to_pylist(), docs["text"].to_pylist()):
         text = "" if t is None else str(t)
         n_sub, n_unk = tok.counts(text)
-        n_words = sum(1 for w in text.split(" ") if w)
+        n_words = len(tokens(text))
         rows.append((int(i), n_words, n_sub, n_unk))
     rows.sort()
     n = _write("token_count_bpe", {

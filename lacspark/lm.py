@@ -27,6 +27,7 @@ from collections import Counter
 from collections.abc import Iterable
 
 from . import RESOURCE_DIR
+from .canonical_py import tokens
 
 LM_PATH = os.path.join(str(RESOURCE_DIR), "lm_bigram.tsv")
 
@@ -36,7 +37,7 @@ def train_counts(texts: Iterable[str]) -> tuple[Counter, Counter]:
     uni: Counter[str] = Counter()
     bi: Counter[tuple[str, str]] = Counter()
     for t in texts:
-        toks = [w for w in t.split(" ") if w]
+        toks = tokens(t)
         uni.update(toks)
         bi.update(zip(toks, toks[1:]))
     return uni, bi
@@ -59,7 +60,7 @@ class BigramLM:
         result is identical in python, Spark, and DuckDB even when
         the mean lands exactly on a decimal midpoint (float round()
         would round the binary double there, engines disagree)."""
-        toks = [w for w in text.split(" ") if w]
+        toks = tokens(text)
         pairs = list(zip(toks, toks[1:]))
         if not pairs:
             return 0, 0.0

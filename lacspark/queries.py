@@ -77,6 +77,12 @@ def _drain_stream(spark: SparkSession, build, output_mode: str
     """Run ``build(child)``'s stream to completion in a child session
     and return its memory-sink table (owned by the child).
 
+    The sink's temporary view is dropped from the child's catalog
+    once the table is read: the returned frame holds its own plan of
+    the sink's rows, so they live only as long as the frame does; a
+    view left in the catalog would hold every call's rows for the life
+    of the session.
+
     The child (``spark.newSession()``: same SparkContext, own SQL
     conf) runs with 8 shuffle partitions: a stateful streaming
     operator takes its state-store partition count from this conf at
@@ -121,7 +127,9 @@ def _drain_stream(spark: SparkSession, build, output_mode: str
         q.awaitTermination()
     finally:
         _release_listener_bus(q)
-    return child.table(sink)
+    out = child.table(sink)
+    child.catalog.dropTempView(sink)
+    return out
 
 
 def _release_listener_bus(q) -> None:

@@ -12,6 +12,7 @@ otherwise plain parquet paths.  Call sites never branch.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 def iceberg_catalog(spark: SparkSession) -> str | None:
@@ -103,15 +104,21 @@ def _orphaned_location(spark: SparkSession, location: str,
     return loc if os.path.exists(loc) else None
 
 
-def read_table(spark: SparkSession, location: str, table: str) -> DataFrame:
+def read_table(spark: SparkSession, location: str, table: str,
+               schema: StructType | None = None) -> DataFrame:
+    """Read back what ``write_table`` wrote.  A parquet read given the
+    written frame's ``schema`` starts no job; without one, Spark runs
+    a job to read a footer for the schema.  Catalog tables carry
+    their own schema."""
+    reader = spark.read.schema(schema) if schema else spark.read
     if not _is_fs_path(location):
         cat = iceberg_catalog(spark)
         if not cat:
             orphan = _orphaned_location(spark, location, table)
             if orphan:
-                return spark.read.parquet(orphan)
+                return reader.parquet(orphan)
         ident = (f"{cat}.{location}.{table}" if cat else
                  f"{location}.{table}") if location else \
             (f"{cat}.{table}" if cat else table)
         return spark.read.table(ident)
-    return spark.read.parquet(f"{location}/{table}")
+    return reader.parquet(f"{location}/{table}")

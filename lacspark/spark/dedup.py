@@ -9,7 +9,8 @@ hash of code points.  Five families:
   bucket, candidate pairs expanded from it → exact-jaccard verify
   (sub-quadratic near-dup detection);
 * simhash: per-document bit fingerprint; hamming-near docs share the
-  fingerprint (or a band of it) — one aggregate, no join;
+  fingerprint (or a band of it) — one python pass per document, no
+  shuffle;
 * winnowing: per-document digest of the window minima of rolling
   k-gram hashes — one numpy pass per document, no shuffle;
 * n-gram jaccard: exact verification primitive for any candidate set.
@@ -23,6 +24,7 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from py4j.protocol import Py4JJavaError
 from pyspark import SparkContext
 from pyspark.sql import Column, DataFrame, Observation
@@ -30,6 +32,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
 
+from lacspark.canonical_py import md5int, tokens
 from .memo import input_fingerprint, memo
 
 MD5INT = "cast(conv(substring(md5({x}), 1, 15), 16, 10) as bigint)"
@@ -38,7 +41,7 @@ MD5INT = "cast(conv(substring(md5({x}), 1, 15), 16, 10) as bigint)"
 # A document's tokens: split on single spaces, empty strings dropped
 # (double, leading and trailing spaces), as a SQL template over the
 # text expression ``x`` — the token rule of every text operator here
-# and of its DuckDB oracle.
+# and of its DuckDB oracle (``canonical_py.tokens`` is its python twin).
 TOKENS = "filter(split({x}, ' '), t -> length(t) > 0)"
 
 
@@ -539,38 +542,33 @@ def simhash(df: DataFrame, id_col: str, text_col: str,
             nbits: int = 16) -> DataFrame:
     """(id, simhash): sign-aggregated token-hash bits.
 
-    PROJECTION-ONLY: per-doc token array → one md5 per token
-    (transform, computed exactly once) → a single fold that carries
-    all nbits counters as an array accumulator (zip_with against the
-    bit indices).  No token row ever leaves its document — the old
-    formulation shuffled one row per token into a 16-column groupBy;
-    this one shuffles nothing at all.  Docs with zero non-empty
-    tokens emit no row (matching the relational oracle's group-by
-    over exploded tokens)."""
-    from .tagger import ensure_parallelism
+    Bit j of a document's simhash is set when more of its tokens have
+    bit j set in their md5 hash (``MD5INT``) than clear; a tie leaves
+    it clear.  One Arrow map stage computes it with one python pass
+    per document: md5 of each token, then a numpy sign vote over the
+    nbits bits.  No token row ever leaves its document, and nothing
+    is shuffled.  Docs with zero non-empty tokens (or a NULL text)
+    emit no row, matching the relational oracle's group-by over
+    exploded tokens."""
+    out_schema = T.StructType([
+        df.schema[id_col], T.StructField("simhash", T.LongType(), False)])
+    shifts = np.arange(nbits, dtype=np.int64)
 
-    toks = F.expr(TOKENS.format(x=text_col))
-    h = MD5INT.format(x="t")
-    # single fold: acc[j] += sign of bit j of the token hash.  One
-    # aggregate referencing the hash array once keeps CollapseProject
-    # from inlining the md5 transform into multiple consumers.
-    fold = (f"aggregate(__hs, "
-            f"array_repeat(cast(0 as bigint), {nbits}), "
-            f"(acc, hv) -> zip_with(acc, sequence(0, {nbits - 1}), "
-            f"(a, j) -> a + (case when ((hv >> j) & 1) = 1 "
-            f"then 1 else -1 end)))")
-    combined = " + ".join(
-        f"(case when element_at(__bits, {j + 1}) > 0 "
-        f"then {1 << j} else 0 end)"
-        for j in range(nbits))
-    d = (ensure_parallelism(df)
-         .select(id_col, toks.alias("__toks"))
-         .filter(F.size("__toks") > 0)
-         .select(id_col,
-                 F.expr(f"transform(__toks, t -> {h})").alias("__hs"))
-         .select(id_col, F.expr(fold).alias("__bits")))
-    return d.select(id_col,
-                    F.expr(f"cast({combined} as bigint)").alias("simhash"))
+    def one(toks: list[str]) -> int:
+        hs = np.array([md5int(t) for t in toks], np.int64)
+        votes = (((hs[:, None] >> shifts) & 1) * 2 - 1).sum(axis=0)
+        return int((votes > 0) @ (1 << shifts))
+
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for b in batches:
+            toks = [tokens(t or "") for t in b.column(text_col).to_pylist()]
+            has = pa.array(map(bool, toks), pa.bool_())
+            yield pa.RecordBatch.from_arrays(
+                [b.column(id_col).filter(has),
+                 pa.array([one(t) for t in toks if t], pa.int64())],
+                names=[id_col, "simhash"])
+
+    return df.select(id_col, text_col).mapInArrow(run, schema=out_schema)
 
 
 # Winnowing constants: 8-code-point grams, 4-gram windows, base-131

@@ -135,12 +135,14 @@ def run_pipeline(spark: SparkSession, files: DataFrame, out_dir: str,
     if build_graph and n_files:
         # read back through the same shim the writes used — writer
         # and reader always resolve to the same storage (catalog
-        # table or parquet path), never a mix
+        # table or parquet path), never a mix; the written frames'
+        # schemas spare the parquet reads a schema-inference job each
         from .catalog import read_table
         from .dedup import cap_audit, cap_audit_rows
 
-        all_mentions = read_table(spark, out_dir, "mentions")
-        all_triples = read_table(spark, out_dir, "triples")
+        all_mentions = read_table(spark, out_dir, "mentions",
+                                  mentions.schema)
+        all_triples = read_table(spark, out_dir, "triples", triples.schema)
         with cap_audit() as scope:  # THIS run's graph phase only
             cmap = canonical_map(all_mentions)
             write_table(build_vertices(all_mentions, cmap), out_dir,

@@ -4,7 +4,10 @@ The heuristic gate (``punct_pct`` and ``quality_gate``) scores
 documents in queries.quality_score and filters them, with the
 ``curation_sample`` and the Gopher repetition gate, in
 queries.corpus_curation and queries.streaming_curation_counts.
-Each rule is written once here; every gate is a projection.
+Each rule is written once here.  The heuristic gate and the sample
+are JVM projections; the repetition gate is one Arrow map stage, a
+python pass per document: Spark interprets a SQL fold of
+higher-order functions row by row, outside generated code.
 
 The classifier trains a distributed logistic-regression model on
 cheap JVM-computed text features to REPLACE the heuristic at corpus
@@ -19,8 +22,15 @@ and LogisticRegression with fixed params has no random init.
 
 from __future__ import annotations
 
+from collections import Counter
+from typing import Iterator
+
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from lacspark.canonical_py import tokens
 
 from .dedup import MD5INT, TOKENS
 
@@ -86,77 +96,37 @@ def text_features(df: DataFrame) -> DataFrame:
 REPETITION_LIMITS = {"top_2gram_frac": 0.20, "dup_2gram_frac": 0.30,
                      "dup_token_frac": 0.65, "dup_line_frac": 0.30}
 
-# Fold over the SORTED 2-gram array: one pass closes each equal-run
-# and carries (top run, duplicated-gram chars, total gram chars) in a
-# struct accumulator.  Zero shuffle, zero UDF — the relational
-# formulation (explode + two groupBys) would shuffle one row per
-# gram; this never leaves the document row.  O(n log n) per doc from
-# the array_sort.  Ties for the top gram resolve to the
-# lexicographically smallest (strict > over the sorted array), which
-# the oracle mirrors with ORDER BY count DESC, gram ASC.
-_REP_FOLD = """
-aggregate(
-  y.grams,
-  named_struct('prev', '', 'run', cast(0 as bigint),
-               'topc', cast(0 as bigint), 'topg', '',
-               'dupch', cast(0 as bigint), 'totch', cast(0 as bigint)),
-  (s, g) -> case when g = s.prev
-    then named_struct('prev', s.prev, 'run', s.run + 1, 'topc', s.topc,
-                      'topg', s.topg, 'dupch', s.dupch, 'totch', s.totch)
-    else named_struct('prev', g, 'run', cast(1 as bigint),
-      'topc', case when s.run > s.topc then s.run else s.topc end,
-      'topg', case when s.run > s.topc then s.prev else s.topg end,
-      'dupch', s.dupch + case when s.run >= 2
-                  then s.run * length(s.prev) else cast(0 as bigint) end,
-      'totch', s.totch + s.run * length(s.prev)) end,
-  s -> named_struct(
-      'topch', (case when s.run > s.topc then s.run else s.topc end)
-          * length(case when s.run > s.topc then s.prev else s.topg end),
-      'dupch', s.dupch + case when s.run >= 2
-                  then s.run * length(s.prev) else cast(0 as bigint) end,
-      'totch', s.totch + s.run * length(s.prev)))
-"""
 
-# (numerator, denominator) of each gate fraction over the names
-# _rep_bind binds, and the keep predicate over them.  < 2 tokens
-# means no 2-gram evidence either way; the gate rejects such a doc
-# (the oracle inner-joins on docs with >= 2 tokens).
-_REP_FRACS = {"top_2gram_frac": ("s.topch", "x.nc"),
-              "dup_2gram_frac": ("s.dupch", "x.nc"),
-              "dup_token_frac": ("y.nt - y.ndt", "y.nt"),
-              "dup_line_frac": ("y.nl - y.ndl", "y.nl")}
-_REP_KEEP = " and ".join(
-    ["y.nt >= 2"] + [f"({p}) / {q} <= {REPETITION_LIMITS[name]}"
-                     for name, (p, q) in _REP_FRACS.items()])
+def _rep_fold(text: str | None) -> list[tuple[int, int]] | None:
+    """The Gopher repetition fold of one document: the (numerator,
+    denominator) of each REPETITION_LIMITS fraction, in its order, or
+    None below 2 tokens (no 2-gram evidence either way).
+
+    Lengths are in code points, as Spark's and DuckDB's ``length``.
+    The top 2-gram is the most frequent one, ties going to the
+    lexicographically smallest (the oracle's ORDER BY count DESC,
+    gram ASC); python compares code points, which orders strings as
+    their UTF-8 bytes do."""
+    toks = tokens(text or "")
+    if len(toks) < 2:
+        return None
+    lines = [ln for ln in text.split("\n") if ln]
+    grams = Counter(map(" ".join, zip(toks, toks[1:])))
+    top = max(grams.values())
+    topg = min(g for g, n in grams.items() if n == top)
+    dupch = sum(n * len(g) for g, n in grams.items() if n >= 2)
+    return [(top * len(topg), len(text)), (dupch, len(text)),
+            (len(toks) - len(set(toks)), len(toks)),
+            (len(lines) - len(set(lines)), len(lines))]
 
 
-def _rep_bind(body: str, text_col: str = "text") -> str:
-    """``body`` as one SQL expression evaluated once per document,
-    with x.toks/x.lines/x.nc (tokens, non-empty lines, characters),
-    then y.grams/y.nt/y.ndt/y.nl/y.ndl (sorted 2-grams, token and line
-    counts, total and distinct), then s.topch/s.dupch/s.totch (the
-    fold) in scope.
-
-    Each stage is bound once through a single-element transform()
-    lambda.  Separate projected columns would be re-inlined at every
-    downstream reference once the optimizer collapses the projections
-    into a pushed filter — higher-order functions are
-    CodegenFallback, so no subexpression elimination rescues them and
-    the split/sort/fold ran many times per row (the curation gate
-    took 2.2 s at sf0.1 that way, 0.54 s bound once)."""
-    return f"""
-    transform(array(named_struct(
-        'toks', {TOKENS.format(x=text_col)},
-        'lines', filter(split({text_col}, '\\n'), l -> length(l) > 0),
-        'nc', length({text_col}))),
-      x -> transform(array(named_struct(
-             'grams', case when size(x.toks) >= 2 then
-                 array_sort(transform(sequence(1, size(x.toks) - 1),
-                     i -> concat_ws(' ', slice(x.toks, i, 2))))
-                 else array() end,
-             'nt', size(x.toks), 'ndt', size(array_distinct(x.toks)),
-             'nl', size(x.lines), 'ndl', size(array_distinct(x.lines)))),
-        y -> transform(array({_REP_FOLD}), s -> {body})[0])[0])[0]"""
+def _rep_keep(fracs: list[tuple[int, int]] | None) -> bool:
+    """The Gopher keep decision over ``_rep_fold``: every fraction
+    within its limit; a document below 2 tokens is rejected (the
+    oracle inner-joins on docs with >= 2 tokens)."""
+    return fracs is not None and all(
+        p / q <= limit for (p, q), limit in zip(fracs,
+                                                REPETITION_LIMITS.values()))
 
 
 def repetition_stats(df: DataFrame, id_col: str = "doc_id",
@@ -165,35 +135,56 @@ def repetition_stats(df: DataFrame, id_col: str = "doc_id",
 
     (id, top_2gram_frac, dup_2gram_frac, dup_token_frac,
     dup_line_frac, keep) for documents with at least one 2-gram.
-    Everything is a projection over per-row arrays — at 100 TB this
-    runs embarrassingly parallel with no shuffle at all.  Each
-    document yields a one-row array (none below 2 tokens) that
-    ``inline`` expands: a filter on a struct field would be pushed
-    down and re-inline the fold."""
-    from .dedup import ratio_round_sql
-    from .tagger import ensure_parallelism
+    One Arrow map stage runs ``_rep_fold`` once per document: no
+    shuffle, and no gram row ever leaves its document (the relational
+    formulation would shuffle one row per gram).  Each fraction is
+    rounded to 6 decimals with ``ratio_round_sql``'s integer half-up
+    arithmetic (not round() on the float quotient: a count like
+    640 = 2^7*5 can land a fraction exactly on a 6-decimal midpoint
+    that is not a representable double, where the engines would
+    round differently)."""
+    names = list(REPETITION_LIMITS)
+    out_schema = T.StructType(
+        [df.schema[id_col]]
+        + [T.StructField(n, T.DoubleType()) for n in names]
+        + [T.StructField("keep", T.LongType(), False)])
+    m = 10 ** 6
 
-    # integer-ratio rounding (not F.round on the double quotient):
-    # a totch like 640 = 2^7*5 can land a fraction exactly on a
-    # 6-decimal midpoint that is not a representable double, where
-    # Spark and DuckDB round differently
-    fracs = ", ".join(f"'{name}', {ratio_round_sql(p, q, 6)}"
-                      for name, (p, q) in _REP_FRACS.items())
-    row = (f"if(y.nt >= 2, array(named_struct({fracs}, 'keep', "
-           f"cast(coalesce({_REP_KEEP}, false) as bigint))), array())")
-    return ensure_parallelism(df).select(
-        id_col, F.inline(F.expr(_rep_bind(row, text_col))))
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for b in batches:
+            folds = [_rep_fold(t) for t in b.column(text_col).to_pylist()]
+            rows = [f for f in folds if f is not None]
+            cols = [b.column(id_col).filter(
+                pa.array([f is not None for f in folds], pa.bool_()))]
+            cols += [pa.array([((2 * p * m + q) // (2 * q)) / m
+                               for p, q in (f[i] for f in rows)],
+                              pa.float64()) for i in range(len(names))]
+            cols.append(pa.array([int(_rep_keep(f)) for f in rows],
+                                 pa.int64()))
+            yield pa.RecordBatch.from_arrays(
+                cols, names=[id_col, *names, "keep"])
+
+    return df.select(id_col, text_col).mapInArrow(run, schema=out_schema)
 
 
 def with_repetition_keep(df: DataFrame) -> DataFrame:
-    """Append the boolean Gopher repetition gate as ``rep_keep`` — a
-    projection the curation passes compose inline (no join, no second
-    scan of the corpus).  Decision-identical to repetition_stats'
-    keep column, False below 2 tokens (pytest-pinned)."""
-    from .tagger import ensure_parallelism
+    """Append the boolean Gopher repetition gate as ``rep_keep`` — one
+    Arrow map stage that passes every column through and runs
+    ``_rep_fold`` once per document, so the curation passes compose
+    it inline (no join, no second scan of the corpus).
+    Decision-identical to repetition_stats' keep column, False below
+    2 tokens (pytest-pinned)."""
+    out_schema = T.StructType(
+        df.schema.fields + [T.StructField("rep_keep", T.BooleanType(),
+                                          False)])
 
-    return ensure_parallelism(df).withColumn(
-        "rep_keep", F.expr(f"coalesce({_rep_bind(_REP_KEEP)}, false)"))
+    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for b in batches:
+            keep = [_rep_keep(_rep_fold(t))
+                    for t in b.column("text").to_pylist()]
+            yield b.append_column("rep_keep", pa.array(keep, pa.bool_()))
+
+    return df.mapInArrow(run, schema=out_schema)
 
 
 def heuristic_label(df: DataFrame) -> DataFrame:

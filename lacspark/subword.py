@@ -30,6 +30,7 @@ from collections import Counter
 from collections.abc import Iterable
 
 from . import RESOURCE_DIR
+from .canonical_py import tokens
 
 VOCAB_PATH = os.path.join(str(RESOURCE_DIR), "subword.vocab")
 
@@ -43,10 +44,9 @@ def train_bpe(texts: Iterable[str], n_merges: int = 200) -> list[str]:
     words: Counter[tuple[str, ...]] = Counter()
     chars: set[str] = set()
     for t in texts:
-        for w in t.split(" "):
-            if w:
-                words[tuple(w)] += 1
-                chars.update(w)
+        for w in tokens(t):
+            words[tuple(w)] += 1
+            chars.update(w)
     merged: set[str] = set()
     for _ in range(n_merges):
         pairs: Counter[tuple[str, str]] = Counter()
@@ -96,18 +96,15 @@ class SubwordTokenizer:
 
     def tokenize(self, text: str) -> list[str]:
         out: list[str] = []
-        for w in text.split(" "):
-            if w:
-                out.extend(self.tokenize_word(w))
+        for w in tokens(text):
+            out.extend(self.tokenize_word(w))
         return out
 
     def counts(self, text: str) -> tuple[int, int]:
         """(n_subwords, n_unk) for one document — the budget pair the
         token_count_bpe query emits."""
         n_sub = n_unk = 0
-        for w in text.split(" "):
-            if not w:
-                continue
+        for w in tokens(text):
             for p in self.tokenize_word(w):
                 n_sub += 1
                 if p not in self.vocab:

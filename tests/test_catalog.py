@@ -36,6 +36,36 @@ def test_fs_path_round_trips_parquet(spark, tmp_path):
     assert (tmp_path / "t1").exists()
 
 
+def _jobs_of(spark, fn) -> int:
+    """The number of Spark jobs ``fn()`` starts, read from the status
+    tracker through a job group of its own."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"probe-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, "job count probe")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_fs_read_with_schema_starts_no_job(spark, tmp_path):
+    """A partitioned parquet read given the written frame's schema
+    starts no job; without it Spark runs one to infer the schema."""
+    df = spark.range(40).withColumn("bucket", (F.col("id") % 4).cast("int"))
+    write_table(df, str(tmp_path), "t3", mode="overwrite",
+                partition_by=["bucket"])
+    assert _jobs_of(spark, lambda: read_table(
+        spark, str(tmp_path), "t3", df.schema)) == 0
+    assert _jobs_of(spark, lambda: read_table(
+        spark, str(tmp_path), "t3")) >= 1
+    back = read_table(spark, str(tmp_path), "t3", df.schema)
+    assert sorted(back.collect()) == sorted(
+        read_table(spark, str(tmp_path), "t3").collect())
+
+
 def test_namespace_round_trips_managed_table(spark, clean_ns):
     df = spark.range(7).withColumn("bucket", F.col("id") % 2)
     write_table(df, "lac_test_ns", "t2", mode="overwrite",

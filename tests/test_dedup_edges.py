@@ -117,12 +117,56 @@ def test_simhash_projection_matches_oracle_with_empty_tokens(
     assert sh[1] == sh[4]  # same multiset of tokens → same simhash
 
 
+# Planted texts for the per-document python folds (simhash and the
+# Gopher repetition gate) against their DuckDB oracles
+_FOLD_ROWS = [
+    # 2-grams "aaa bbbb" and "zz q" tie at 2 occurrences with
+    # different lengths: the smaller gram ("aaa bbbb") is the top
+    (1, "en", "zz q zz q aaa bbbb aaa bbbb"),
+    (2, "en", "q q q q q q q q"),              # dup_2gram_frac > 1
+    (3, "en", "hello world"),                  # exactly 2 tokens
+    (4, "en", "alpha beta\n\n   \nalpha beta\n   \ngamma"),  # blank,
+    #                                           space-only lines
+    (5, "en", "naïve café 東京 東京 café naïve 😀 😀 東京"),
+    (6, "en", "double  spaced  words and trailing  "),
+    (7, "en", None),                           # NULL text
+    (8, "en", "alpha beta"),                   # a tied simhash bit
+    (9, "en", " ".join(f"w{i % 7}x" for i in range(60))),
+    (10, "en", "The quick brown fox jumps over the lazy dog while "
+               "the cat sleeps on a warm mat near the door"),
+    (11, "en", "Another plain sentence that is long enough to pass "
+               "the length band of the curation gate today"),
+    (12, "en", "One more ordinary line of prose with no repeats in "
+               "it at all so the gate keeps it in the corpus"),
+]
+
+
+@pytest.mark.parametrize("name", ["dedup_simhash", "quality_repetition",
+                                  "corpus_curation"])
+def test_document_folds_match_oracle_on_planted_texts(spark, tmp_path,
+                                                      name):
+    """The python folds agree with their DuckDB oracles on tied top
+    grams of different lengths, a fraction above 1, exactly 2 tokens,
+    blank and space-only lines, non-ASCII tokens, double and trailing
+    spaces, a NULL text and a simhash bit whose vote is 0."""
+    from lacspark.canonical_py import md5int
+
+    a, b = md5int("alpha"), md5int("beta")
+    assert (a ^ b) & 0xFFFF  # doc 8 has a bit with one vote each way
+    sf = _write_docs(spark, tmp_path, _FOLD_ROWS)
+    s, d = _run_both(spark, sf, name)
+    assert s == d
+    if name == "quality_repetition":
+        rows = {r[0]: r for r in s}
+        assert 7 not in rows and 3 in rows
+        assert rows[1][1] == round(2 * len("aaa bbbb") / 27, 6)
+        assert rows[2][2] > 1
+
+
 def test_simhash_plan_has_no_keyed_shuffle(spark, tmp_path):
-    """The simhash fingerprint is a pure projection: no
+    """The simhash fingerprint is computed per document: no
     hash-partitioned Exchange may appear in the physical plan (the
-    old form shuffled every token row into a 16-column groupBy).
-    The only allowed Exchange is ensure_parallelism's round-robin
-    widening of tiny inputs, which is a no-op at real scale."""
+    old form shuffled every token row into a 16-column groupBy)."""
     rows = [(i, "en", f"tok{i} shared words here") for i in range(8)]
     sf = _write_docs(spark, tmp_path, rows)
     from lacspark.queries import SPARK_QUERIES

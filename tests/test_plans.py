@@ -132,24 +132,45 @@ def test_kmeans_ivf_assignment_is_shuffle_free(spark):
 
 
 def test_repetition_stats_is_shuffle_free(spark):
-    """The Gopher repetition fractions are a fold over per-row arrays:
-    no keyed shuffle may appear (the relational formulation would
-    shuffle one row per gram).  Round-robin widening of the tiny
-    parquet input is the only allowed Exchange."""
+    """The Gopher repetition fractions are a fold over each document's
+    own tokens: no Exchange may appear (the relational formulation
+    would shuffle one row per gram)."""
     plan = plan_of(SPARK_QUERIES["quality_repetition"](spark, SF)).lower()
-    assert "hashpartitioning" not in plan
-    assert "rangepartitioning" not in plan
+    assert "exchange" not in plan
 
 
 @pytest.mark.parametrize("name", ["quality_repetition", "corpus_curation"])
 def test_repetition_fold_is_planned_once(spark, name):
-    """The repetition gate binds its stages once per document, so the
-    optimized plan holds exactly one fold.  Separate projected
-    columns, or a filter on a field of the fold's struct, would let
-    the optimizer re-inline the fold at every reference."""
+    """The repetition gate runs once per document: the plan holds
+    exactly one Arrow map stage and no SQL fold (``aggregate(``),
+    which Spark would interpret row by row outside generated code."""
     df = SPARK_QUERIES[name](spark, SF)
-    plan = df._jdf.queryExecution().optimizedPlan().toString()
-    assert plan.count("aggregate(") == 1
+    assert plan_of(df).count("MapInArrow") == 1
+    assert "aggregate(" not in \
+        df._jdf.queryExecution().optimizedPlan().toString()
+
+
+def _fold_frames():
+    from lacspark.spark.dedup import simhash
+    from lacspark.spark.quality import (repetition_stats,
+                                        with_repetition_keep)
+
+    return {"simhash": lambda d: simhash(d, "doc_id", "text"),
+            "repetition_stats": repetition_stats,
+            "with_repetition_keep": with_repetition_keep}
+
+
+@pytest.mark.parametrize("name", ["simhash", "repetition_stats",
+                                  "with_repetition_keep"])
+def test_document_folds_are_one_arrow_stage(spark, name):
+    """simhash and the repetition gate each run as one Arrow map stage
+    over the scan: batches cross to python in Arrow, never
+    row-at-a-time BatchEvalPython, and no keyed shuffle."""
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    plan = plan_of(_fold_frames()[name](docs))
+    assert plan.count("MapInArrow") == 1
+    assert "BatchEvalPython" not in plan
+    assert "hashpartitioning" not in plan.lower()
 
 
 def test_token_count_bpe_is_arrow_and_shuffle_free(spark):

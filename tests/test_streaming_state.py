@@ -280,3 +280,28 @@ def test_concurrent_gates_match_oracle_and_leave_no_bus(spark, sf_dir):
         assert got[name] == value_hash(
             cur.fetchall(), [c[0].lower() for c in cur.description]), name
     assert _listener_buses(spark) == before
+
+
+def test_gates_leave_no_sink_view(spark, sf_dir):
+    """A gate drops its memory sink's temporary view from the child
+    catalog: after 5 calls no ``stream_*`` view is left, and each
+    returned frame, read after all 5 calls, still holds its rows."""
+    import duckdb
+
+    from lacspark.queries import ORACLE_SQL, SPARK_QUERIES
+    from tests.test_driver_contract import value_hash
+
+    name = "streaming_tumbling_minute"
+    caller = spark.newSession()
+    frames = [SPARK_QUERIES[name](caller, sf_dir) for _ in range(5)]
+    child = frames[0].sparkSession
+    assert not [t.name for t in child.catalog.listTables()
+                if t.name.startswith("stream_")]
+    con = duckdb.connect()
+    con.execute(f"create view events as select * from "
+                f"'{sf_dir}/events.parquet'")
+    cur = con.execute(ORACLE_SQL[name])
+    want = value_hash(cur.fetchall(), [c[0].lower() for c in cur.description])
+    for df in frames:
+        assert value_hash([tuple(r) for r in df.collect()],
+                          [c.lower() for c in df.columns]) == want
