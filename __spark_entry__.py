@@ -75,12 +75,13 @@ _PRIORITY = [
 # query_hash_snapshot.json: editing a query without pinning it here
 # fails CI.
 _FRESH: list[str] = [
-    # no query's source changed: simhash and the Gopher repetition
-    # gate are now one python pass per document in an Arrow map
-    # stage, and every streaming gate drops its memory sink's view
-    "dedup_simhash", "corpus_curation", "quality_repetition",
-    "streaming_curation_counts", "streaming_tumbling_minute",
-    "streaming_dedup_keeper", "streaming_kg_triple_counts",
+    # every row-wise Python pass now runs through session.python_pass;
+    # only the docstrings of the queries that named mapInPandas or a
+    # pandas UDF changed
+    "token_count_bpe", "pack_sequences_bpe", "multimodal_decode_stats",
+    "multimodal_features", "streaming_kg_triple_counts", "dedup_simhash",
+    "quality_repetition", "corpus_curation", "streaming_curation_counts",
+    "doc_rolling_fingerprint",
 ]
 
 def _folded() -> frozenset:

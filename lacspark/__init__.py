@@ -3,7 +3,7 @@
 A brand-new engine with the query/data-processing capabilities of
 baidu/lac (joint segmentation, POS tagging, NER, word-importance rank,
 customization-dict intervention), re-expressed Spark-first: the
-GRU-CRF tagger runs as Arrow-batched pandas UDFs over DataFrames and
+GRU-CRF tagger runs as an Arrow-batched Python pass over DataFrames and
 is extended into a knowledge-graph construction pipeline (mentions,
 triples, minhash/LSH canonicalization, connected components, graph
 materialize) over a `(repo, path, commit, lang, content)` corpus.

@@ -1,8 +1,10 @@
 """The lexical-analysis engine: seg / lac / rank over batches.
 
 This module IS both the driver-side oracle and the code every Spark
-python worker runs per Arrow batch (broadcast once, reused across
-tasks — ≙ the reference's per-thread predictor clone sharing weights,
+python worker runs per Arrow batch (each worker builds its engine
+once, from the package and the closure's custom-dict lines, and
+reuses it across tasks — ``spark.tagger._worker_engine``; ≙ the
+reference's per-thread predictor clone sharing weights,
 c++/src/lac.cpp:64-79).  Pipeline per batch, transcribing the
 reference's run path (models.py:71-175, 238-246, 305-374):
 
@@ -250,27 +252,30 @@ class LacEngine:
         return {"nll_trace": trace, "model_path": out_path}
 
     # ------------------------------------------------------------------
-    def run_batch(self, texts: list[str], mode: str = "lac",
-                  dedupe: bool = True) -> list[Analysis]:
+    def run_batch(self, texts: list[str], mode: str = "lac"
+                  ) -> list[Analysis]:
         """Analyze a batch.  Identical rows are analyzed once and the
         result shared (code corpora repeat lines heavily — blank
         lines, braces, imports); results are position-independent so
         this is observationally identical to the direct path."""
         if mode not in ("seg", "lac", "rank"):
             raise ValueError(f"unknown mode {mode!r}")
-        if dedupe and len(texts) > 1:
-            index: dict[str, int] = {}
-            uniq: list[str] = []
-            slot = []
-            for t in texts:
-                j = index.get(t)
-                if j is None:
-                    j = index[t] = len(uniq)
-                    uniq.append(t)
-                slot.append(j)
-            if len(uniq) < len(texts):
-                uniq_res = self.run_batch(uniq, mode, dedupe=False)
-                return [uniq_res[j] for j in slot]
+        index: dict[str, int] = {}
+        uniq: list[str] = []
+        slot = []
+        for t in texts:
+            j = index.get(t)
+            if j is None:
+                j = index[t] = len(uniq)
+                uniq.append(t)
+            slot.append(j)
+        if len(uniq) == len(texts):
+            return self._run_unique(texts, mode)
+        uniq_res = self._run_unique(uniq, mode)
+        return [uniq_res[j] for j in slot]
+
+    def _run_unique(self, texts: list[str], mode: str) -> list[Analysis]:
+        """``run_batch`` over texts that are all distinct."""
         live = [(i, t) for i, t in enumerate(texts) if len(t) > 0]
         out: list[Analysis] = [Analysis([], [], [], []) for _ in texts]
         if not live:

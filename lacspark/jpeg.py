@@ -20,8 +20,8 @@ Everything is vectorized numpy where it counts: the 2-D DCT/IDCT is
 two 8×8 matrix multiplies applied to ALL blocks of a component at
 once (einsum), quantization/zigzag are array ops; only the entropy
 coding is a per-symbol python loop (inherent to Huffman).  Used by
-``multimodal.decode_image`` / ``encode_jpeg`` inside mapInPandas
-batches — the Spark plumbing is unchanged, this swaps a raise for a
+``multimodal.decode_image`` / ``encode_jpeg`` inside Arrow-batched
+Python passes — the Spark plumbing is unchanged, this swaps a raise for a
 real decode.
 """
 

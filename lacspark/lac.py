@@ -60,10 +60,8 @@ class LAC:
                 p = os.path.join(model_path, fname)
                 if os.path.exists(p):
                     npz = np.load(p)
-                    net.w.update({k: npz[k] for k in npz.files})
-                    if hasattr(net, "_stacks"):
-                        del net._stacks
-                    net.refresh_crf()
+                    net.set_weights({**net.w,
+                                     **{k: npz[k] for k in npz.files}})
                     loaded = True
             if (not loaded
                     and os.path.exists(os.path.join(model_path,
@@ -84,14 +82,7 @@ class LAC:
                         f"label set needs its matching tag.dic")
                 rank_keys = {k: v for k, v in net.w.items()
                              if k.startswith(("tag_emb", "r0_", "rank_"))}
-                net.w = {**{k: np.asarray(v, dtype=np.float32)
-                            for k, v in w.items()}, **rank_keys}
-                if hasattr(net, "_stacks"):
-                    del net._stacks
-                net.n_layers = max(int(k[1]) for k in net.w
-                                   if k.startswith("l")) + 1
-                net.n_labels = net.w["fc_b"].shape[0]
-                net.refresh_crf()
+                net.set_weights({**w, **rank_keys})
                 loaded = True
             # Consistency gate: a dir that supplied its OWN dict stack
             # must also supply loadable weights.  Otherwise the

@@ -17,8 +17,11 @@ the engine uses:
   same keep-iff-extends rule over the same candidate set, so for any
   dict both matchers return identical spans on ``search``.
 
-Both are built once on the driver and shipped to executors inside a
-Spark broadcast (pickle-able plain dicts/lists).
+Both are plain dicts/lists.  Each Spark python worker builds its own
+from the custom-dict lines its task's closure carries
+(``spark.tagger._worker_engine``); nothing is broadcast.
+``PrefixDict`` is also the segmenter's prefix table
+(``segmenter.DagSegmenter``), as the reference's TriedTree is.
 """
 
 from __future__ import annotations

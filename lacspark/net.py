@@ -14,9 +14,10 @@ the word tensor plus the lac model's decoded tags
 
 Weights are deterministic seeded-random arrays of the report.pdf §4.2
 shapes scaled down (emb 32, hidden 32, 2 stacked Bi-GRU) — see
-gen_fixtures.py.  The same .npz loads in the driver-side oracle and in
-every Spark python worker (broadcast), so oracle/engine parity is by
-construction and tests exercise the distributed plumbing.
+gen_fixtures.py.  The same .npz loads in the driver-side oracle and,
+from the package, in every Spark python worker, so oracle/engine
+parity is by construction and tests exercise the distributed
+plumbing.
 """
 
 from __future__ import annotations
@@ -48,12 +49,23 @@ class BiGruCrf:
 
     def __init__(self, weights: dict[str, np.ndarray],
                  trans_mask: np.ndarray, start_vec_mask: np.ndarray):
-        self.w = {k: np.asarray(v, dtype=np.float32) for k, v in weights.items()}
-        self.n_layers = max(int(k[1]) for k in self.w if k.startswith("l")) + 1
-        self.n_labels = self.w["fc_b"].shape[0]
         self._trans_mask = trans_mask
         self._start_mask = start_vec_mask
+        self.set_weights(weights)
+
+    def set_weights(self, weights: dict[str, np.ndarray]) -> None:
+        """Install ``weights`` as this net's whole weight dict (float32)
+        and re-derive everything computed from it: the layer and label
+        counts, the stacked per-layer weights and the decode-time CRF
+        structures.  A caller that replaces only some tensors passes
+        ``{**net.w, **new}``."""
+        self.w = {k: np.asarray(v, dtype=np.float32)
+                  for k, v in weights.items()}
+        self.n_layers = max(int(k[1]) for k in self.w
+                            if k.startswith("l")) + 1
+        self.n_labels = self.w["fc_b"].shape[0]
         self.has_rank = "rank_fc_w" in self.w
+        self._stacks: dict[str, dict] = {}
         self.refresh_crf()
 
     def refresh_crf(self) -> None:
@@ -133,8 +145,6 @@ class BiGruCrf:
         recurrence from the padded end is equivalent to starting at
         each row's true last token — state stays zero while masked)."""
         b, t, _ = x.shape
-        if not hasattr(self, "_stacks"):
-            self._stacks = {}
         stacked = self._stacks.get(name)
         if stacked is None:
             stacked = self._stacks[name] = {

@@ -315,7 +315,7 @@ def streaming_tumbling_minute(spark, sf_dir):
 def streaming_kg_triple_counts(spark, sf_dir):
     """The FLAGSHIP KG path under Structured Streaming: readStream
     over the documents parquet (availableNow replay), the same fused
-    tag+extract mapInPandas the batch path uses (stateless, so it
+    tag+extract Python pass the batch path uses (stateless, so it
     lifts to streaming unchanged), triple explode, per-doc stateful
     count in complete mode.  On a finite replay the result must equal
     the batch pipeline exactly — the oracle aggregates the golden
@@ -1500,11 +1500,11 @@ def token_class_counts(spark, sf_dir):
 def token_count_bpe(spark, sf_dir):
     """REAL subword token counting: greedy longest-match against the
     committed BPE-trained vocab fixture (lacspark.subword), run as
-    one Arrow-batched pandas UDF with a per-worker tokenizer
-    singleton.  The golden oracle is the identical pure-python
-    tokenizer over the same corpus — the regex-class
-    token_class_counts stays as the cheap JVM approximation; this is
-    the count a tokenizer-faithful packing budget needs."""
+    one Python pass with a per-worker tokenizer singleton.  The
+    golden oracle is the identical pure-python tokenizer over the
+    same corpus — the regex-class token_class_counts stays as the
+    cheap JVM approximation; this is the count a tokenizer-faithful
+    packing budget needs."""
     from .spark.subword import with_subword_counts
     d = with_subword_counts(load(spark, sf_dir, "documents"))
     n_words = F.size(F.expr(TOKENS.format(x="text")))
@@ -2263,8 +2263,8 @@ def multimodal_decode_stats(spark, sf_dir):
     """REAL multimodal decode — no fake: PNG/BMP images through the
     stdlib zlib decoder, PCM WAV through ``wave``, frames/v1 video
     through the frame sampler (every 2nd frame), all inside one
-    Arrow-batched mapInPandas.  Scalar projection (width/height +
-    4 per-kind features).  Oracle = golden parquet from the identical
+    Python pass.  Scalar projection (width/height + 4 per-kind
+    features).  Oracle = golden parquet from the identical
     pure-python decode run without Spark."""
     from .spark.multimodal import extract_real_features, synth_real_media
     return extract_real_features(synth_real_media(spark, n=120))

@@ -18,22 +18,22 @@ from __future__ import annotations
 import re
 from math import log
 
+from .matcher import PrefixDict
+
 _ASCII_RUN = re.compile(r"[a-zA-Z0-9]")
 
 
 class DagSegmenter:
     def __init__(self, freq_words: dict[str, int]):
         """freq_words: word → count (``small_seg.dic`` contents)."""
-        self.table: dict[str, int | None] = {}
-        total = 0
-        for word, count in freq_words.items():
-            # value = word length (not count); count feeds only the
-            # normalizer — segment.py:36-45 + prefix_tree.py:29-34
-            self.table[word] = len(word)
-            for i in range(1, len(word)):
-                self.table.setdefault(word[:i], None)
-            total += int(count)
-        self.log_total = log(max(total, 1))
+        # the customization matcher's prefix table: value = word
+        # length (not count), prefixes → None; count feeds only the
+        # normalizer — segment.py:36-45 + prefix_tree.py:29-34
+        prefixes = PrefixDict()
+        for word in freq_words:
+            prefixes.add(word)
+        self.table = prefixes.table
+        self.log_total = log(max(sum(map(int, freq_words.values())), 1))
 
     def cut(self, text: str) -> list[str]:
         n = len(text)

@@ -23,8 +23,6 @@ from contextvars import ContextVar
 from typing import Iterator
 
 import numpy as np
-import pandas as pd
-import pyarrow as pa
 from py4j.protocol import Py4JJavaError
 from pyspark import SparkContext
 from pyspark.sql import Column, DataFrame, Observation
@@ -34,6 +32,7 @@ from pyspark.sql.window import Window
 
 from lacspark.canonical_py import md5int, tokens
 from .memo import input_fingerprint, memo
+from .session import python_pass
 
 MD5INT = "cast(conv(substring(md5({x}), 1, 15), 16, 10) as bigint)"
 
@@ -550,25 +549,18 @@ def simhash(df: DataFrame, id_col: str, text_col: str,
     is shuffled.  Docs with zero non-empty tokens (or a NULL text)
     emit no row, matching the relational oracle's group-by over
     exploded tokens."""
-    out_schema = T.StructType([
-        df.schema[id_col], T.StructField("simhash", T.LongType(), False)])
     shifts = np.arange(nbits, dtype=np.int64)
 
-    def one(toks: list[str]) -> int:
+    def one(toks: list[str]) -> tuple[int] | None:
+        if not toks:
+            return None
         hs = np.array([md5int(t) for t in toks], np.int64)
         votes = (((hs[:, None] >> shifts) & 1) * 2 - 1).sum(axis=0)
-        return int((votes > 0) @ (1 << shifts))
+        return (int((votes > 0) @ (1 << shifts)),)
 
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for b in batches:
-            toks = [tokens(t or "") for t in b.column(text_col).to_pylist()]
-            has = pa.array(map(bool, toks), pa.bool_())
-            yield pa.RecordBatch.from_arrays(
-                [b.column(id_col).filter(has),
-                 pa.array([one(t) for t in toks if t], pa.int64())],
-                names=[id_col, "simhash"])
-
-    return df.select(id_col, text_col).mapInArrow(run, schema=out_schema)
+    return python_pass(
+        df, [text_col], [T.StructField("simhash", T.LongType(), False)],
+        lambda texts: [one(tokens(t or "")) for t in texts], keep=[id_col])
 
 
 # Winnowing constants: 8-code-point grams, 4-gram windows, base-131
@@ -607,21 +599,8 @@ def winnow(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     with one vectorized numpy pass per document, O(n·k) for k = 8.
     A text of 8–10 code points has fewer grams than a window holds:
     n_winnow 0 and a NULL digest."""
-    out_schema = T.StructType([
-        df.schema[id_col],
-        T.StructField("n_grams", T.LongType()),
-        T.StructField("n_winnow", T.LongType()),
-        T.StructField("winnow_digest", T.LongType())])
-    dtypes = {"n_grams": "int64", "n_winnow": "int64",
-              "winnow_digest": "Int64"}
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = pd.DataFrame(list(map(_winnow_one, pdf[text_col])),
-                               columns=list(dtypes)).astype(dtypes)
-            out.insert(0, id_col, pdf[id_col].to_numpy())
-            yield out
-
-    return (df.filter(F.length(text_col) >= _RH_K)
-            .select(id_col, text_col)
-            .mapInPandas(run, schema=out_schema))
+    return python_pass(
+        df.filter(F.length(text_col) >= _RH_K), [text_col],
+        [T.StructField(n, T.LongType())
+         for n in ("n_grams", "n_winnow", "winnow_digest")],
+        lambda texts: map(_winnow_one, texts), keep=[id_col])

@@ -3,17 +3,16 @@
 Spark strings are UTF-8; a corpus stored in another encoding decodes
 once at the scan boundary.  Spark 4's builtin ``decode`` only accepts
 a small charset whitelist, so anything else (GB18030, the reference's
-other supported encoding — c++/include/lac.h:24-29) goes through an
-Arrow-batched python decode (zero-copy binary in, one pass)."""
+other supported encoding — c++/include/lac.h:24-29) goes through a
+Python pass (``session.python_pass``: Arrow binary in, one pass)."""
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .session import python_pass
 
 _SPARK_NATIVE = {"iso-8859-1", "us-ascii", "utf-16", "utf-16be",
                  "utf-16le", "utf-32", "utf-8"}
@@ -26,15 +25,9 @@ def decode_text(df: DataFrame, raw_col: str, out_col: str = "text",
     if cs in _SPARK_NATIVE:
         return df.withColumn(out_col, F.decode(raw_col, charset))
 
-    out_schema = T.StructType(list(df.schema.fields)
-                              + [T.StructField(out_col, T.StringType())])
+    def run(raws: list) -> list[tuple]:
+        return [(None if v is None else v.decode(charset, errors),)
+                for v in raws]
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            pdf = pdf.copy()
-            pdf[out_col] = [
-                (bytes(v).decode(charset, errors) if v is not None else None)
-                for v in pdf[raw_col]]
-            yield pdf
-
-    return df.mapInPandas(run, schema=out_schema)
+    return python_pass(df, [raw_col],
+                       [T.StructField(out_col, T.StringType())], run)

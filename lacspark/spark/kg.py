@@ -5,7 +5,7 @@ lang, content)``.  ``tag_files`` is the tagger's one tag core with
 each file's lines as its segments (K1): every line of an Arrow batch
 goes through one engine call, and mentions + triples (K3/K4) carry
 the line's ``sent_id``.  The per-row sha256 invariant is checked
-*inside the UDF*: the engine guarantees ``''.join(words) == line``
+*inside the pass*: the engine guarantees ``''.join(words) == line``
 per line, and the reassembled ``'\\n'.join(lines)`` is hashed and
 compared against ``sha2(content, 256)`` computed JVM-side — no extra
 shuffle for the integrity gate (SURVEY §2.2 K1's regroup-check,
@@ -47,25 +47,20 @@ def tag_files(df: DataFrame, mode: str = "rank",
     scan time so the hash of the *source bytes* is fixed before any
     python touches the row).
     """
-    def fill(eng, per_row, pdf):
-        n_lines, n_tokens, sha_ok, mentions, triples = [], [], [], [], []
-        for rows, sha in zip(per_row, pdf["content_sha256"]):
-            rebuilt = "\n".join("".join(r.words) for r in rows)
-            sha_ok.append(
-                hashlib.sha256(rebuilt.encode("utf-8")).hexdigest() == sha)
-            n_lines.append(len(rows))
-            n_tokens.append(sum(len(r.words) for r in rows))
-            f_mentions, f_triples = [], []
-            for sent_id, r in enumerate(rows):
-                m, t3 = eng.extract(r)
-                f_mentions.extend((sent_id, *x) for x in m)
-                f_triples.extend((sent_id, *x) for x in t3)
-            mentions.append(f_mentions)
-            triples.append(f_triples)
-        return n_lines, n_tokens, sha_ok, mentions, triples
+    def fill(eng, rows, sha):
+        rebuilt = "\n".join("".join(r.words) for r in rows)
+        mentions, triples = [], []
+        for sent_id, r in enumerate(rows):
+            m, t3 = eng.extract(r)
+            mentions.extend((sent_id, *x) for x in m)
+            triples.extend((sent_id, *x) for x in t3)
+        return (len(rows), sum(len(r.words) for r in rows),
+                hashlib.sha256(rebuilt.encode("utf-8")).hexdigest() == sha,
+                mentions, triples)
 
     return _tag_core(df, "content", mode, custom_lines, FILE_OUTPUT_FIELDS,
-                     lambda content: content.split("\n"), fill)
+                     lambda content: content.split("\n"), fill,
+                     ("content_sha256",))
 
 
 def mention_salience_topk(mentions: DataFrame, keys: list[str],

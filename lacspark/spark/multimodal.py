@@ -1,15 +1,16 @@
 """Multimodal column plumbing: image/audio/video as opaque binary.
 
 The Spark-side mechanics — schema, partition shape, Arrow batch flow
-through ``mapInPandas``, typed metadata extraction — are real and
-tested, and so is the decode for the formats the standard library can
-carry: PNG (zlib inflate + filter reconstruction, 8-bit gray/RGB/
-RGBA), uncompressed 24-bit BMP, and PCM WAV (stdlib ``wave``).  No
-external codec is used even where one is installed, so a result never
-depends on the host; formats that genuinely need one (real video
-containers; TIFF/WebP) raise ``NotImplementedError`` — honest scope,
-not silent wrong answers.  JPEG is decoded/encoded by the in-repo
-baseline codec (:mod:`lacspark.jpeg`, pure numpy).
+through one Python pass (``session.python_pass``), typed metadata
+extraction — are real and tested, and so is the decode for the
+formats the standard library can carry: PNG (zlib inflate + filter
+reconstruction, 8-bit gray/RGB/RGBA), uncompressed 24-bit BMP, and
+PCM WAV (stdlib ``wave``).  No external codec is used even where one
+is installed, so a result never depends on the host; formats that
+genuinely need one (real video containers; TIFF/WebP) raise
+``NotImplementedError`` — honest scope, not silent wrong answers.
+JPEG is decoded/encoded by the in-repo baseline codec
+(:mod:`lacspark.jpeg`, pure numpy).
 Video is exercised through a length-prefixed PNG-frame container
 (``frames/v1``) so the frame-sampling plumbing is real even without
 ffmpeg.
@@ -21,12 +22,13 @@ import hashlib
 import io
 import struct
 import zlib
-from typing import Callable, Iterator
+from typing import Callable
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
+
+from .session import python_pass
 
 MEDIA_SCHEMA = T.StructType([
     T.StructField("media_id", T.LongType()),
@@ -261,34 +263,19 @@ def _fake_decode(payload: bytes, dim: int = 8) -> tuple[int, int, np.ndarray]:
 
 def extract_media_features(df: DataFrame, payload_col: str = "payload",
                            feature_dim: int = 8) -> DataFrame:
-    """mapInPandas feature-extraction plumbing over binary payloads.
-
-    Arrow moves the binary column zero-copy into the python worker.
+    """Feature-extraction plumbing over binary payloads, one Python
+    pass: only the payload column is read in the python worker.
     Shape and features are the sha-derived fake (``_fake_decode``), so
     the output is the same on every host; real decoding is
     :func:`extract_real_features`."""
-    out_schema = T.StructType(list(df.schema.fields) + FEATURE_FIELDS)
+    def one(payload: bytes | None) -> tuple:
+        raw = payload or b""
+        w, h, f = _fake_decode(raw, feature_dim)
+        return (len(raw), hashlib.sha256(raw).hexdigest(), int(w), int(h),
+                [float(x) for x in f])
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            n_bytes, shas, ws, hs, feats = [], [], [], [], []
-            for payload in pdf[payload_col]:
-                raw = bytes(payload) if payload is not None else b""
-                n_bytes.append(len(raw))
-                shas.append(hashlib.sha256(raw).hexdigest())
-                w, h, f = _fake_decode(raw, feature_dim)
-                ws.append(int(w))
-                hs.append(int(h))
-                feats.append([float(x) for x in f])
-            pdf = pdf.copy()
-            pdf["n_bytes"] = n_bytes
-            pdf["payload_sha"] = shas
-            pdf["width"] = ws
-            pdf["height"] = hs
-            pdf["features"] = feats
-            yield pdf
-
-    return df.mapInPandas(run, schema=out_schema)
+    return python_pass(df, [payload_col], FEATURE_FIELDS,
+                       lambda payloads: map(one, payloads))
 
 
 def _media_table(spark, n: int,
@@ -296,19 +283,15 @@ def _media_table(spark, n: int,
                  ) -> DataFrame:
     """MEDIA_SCHEMA rows for media ids 0..n-1, each id's (kind,
     payload, meta_format) made by ``payload(id)`` on the workers."""
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [(i, *payload(i)) for i in map(int, pdf["id"])]
-            yield pd.DataFrame(rows, columns=MEDIA_SCHEMA.fieldNames())
-
     # ~8 payloads per partition: the codec work is ~1 ms/row, so at
     # the default 32 slices a 120-row table pays 32 python-task
     # setups (~15 ms each) to do ~5 ms of work per task; sizing the
     # range to the row count keeps task overhead proportional to the
     # data while larger n still widens to every core
     slices = max(1, min(spark.sparkContext.defaultParallelism, n // 8))
-    return spark.range(0, n, 1, slices).mapInPandas(gen,
-                                                    schema=MEDIA_SCHEMA)
+    return python_pass(spark.range(0, n, 1, slices), ["id"],
+                       MEDIA_SCHEMA.fields,
+                       lambda ids: [(i, *payload(i)) for i in ids], keep=[])
 
 
 def synth_media(spark, n: int = 100, seed: int = 42) -> DataFrame:
@@ -424,52 +407,31 @@ def extract_real_features(df: DataFrame,
     images through the PNG/BMP decoders, audio through ``wave``,
     video through the frame sampler.  Scalar projection only —
     driver-hashable by construction."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for mid, kind, payload, fmt in zip(
-                    pdf["media_id"], pdf["kind"], pdf["payload"],
-                    pdf["meta_format"]):
-                raw = bytes(payload)
-                w, h, f0, f1, f2, f3 = media_decode_row(
-                    kind, raw, frame_every)
-                rows.append((int(mid), kind, fmt, len(raw),
-                             int(w), int(h), float(f0), float(f1),
-                             float(f2), float(f3)))
-            yield pd.DataFrame(rows,
-                               columns=REAL_FEATURE_SCHEMA.fieldNames())
+    def one(kind: str, payload: bytes) -> tuple:
+        w, h, f0, f1, f2, f3 = media_decode_row(kind, payload, frame_every)
+        return (len(payload), int(w), int(h), float(f0), float(f1),
+                float(f2), float(f3))
 
-    return df.mapInPandas(run, schema=REAL_FEATURE_SCHEMA)
+    return python_pass(df, ["kind", "payload"],
+                       REAL_FEATURE_SCHEMA.fields[3:],
+                       lambda kinds, payloads: map(one, kinds, payloads),
+                       keep=["media_id", "kind", "meta_format"])
 
 
 def resize_images(df: DataFrame, width: int, height: int) -> DataFrame:
     """REAL resize for decodable images: decode → nearest-neighbor →
     re-encode PNG.  Non-image payloads pass through untouched with a
     skip status (per-row status, never a crashed job)."""
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads, status = [], []
-            for kind, payload in zip(pdf["kind"], pdf["payload"]):
-                raw = bytes(payload)
-                if kind == "image":
-                    try:
-                        img = resize_nearest(decode_image(raw),
-                                             width, height)
-                        payloads.append(encode_png(img))
-                        status.append("resized")
-                    except NotImplementedError:
-                        payloads.append(raw)
-                        status.append("skipped:no-codec")
-                else:
-                    payloads.append(raw)
-                    status.append("skipped:not-image")
-            pdf = pdf.copy()
-            pdf["payload"] = payloads
-            pdf["resize_status"] = status
-            yield pdf
+    def one(kind: str, payload: bytes) -> tuple[bytes, str]:
+        if kind != "image":
+            return payload, "skipped:not-image"
+        try:
+            img = resize_nearest(decode_image(payload), width, height)
+        except NotImplementedError:
+            return payload, "skipped:no-codec"
+        return encode_png(img), "resized"
 
-    out_schema = T.StructType(list(df.schema.fields)
-                              + [T.StructField("resize_status",
-                                               T.StringType())])
-    return df.mapInPandas(run, schema=out_schema)
-
+    return python_pass(df, ["kind", "payload"],
+                       [df.schema["payload"],
+                        T.StructField("resize_status", T.StringType())],
+                       lambda kinds, payloads: map(one, kinds, payloads))

@@ -5,7 +5,7 @@ Flow (SURVEY §4.3):
 
   scan(repos_files) + sha2(content) JVM-side
   → salt-repartition on pmod(xxhash64(repo, path, commit), n_buckets)   (K9)
-  → tag_files (fused K1-K4 on the tagger's core, in-UDF sha verification)
+  → tag_files (fused K1-K4 on the tagger's core, in-pass sha check)
   → explode_mentions / explode_triples (sent_id kept)
   → write mentions / triples / files parquet, partitioned by bucket
   → lineage append (bucket, counts, sha stats, wall)                    (K10)
@@ -36,6 +36,10 @@ from .tagger import explode_mentions, explode_triples
 
 BUCKET_COL = "bucket"
 
+# the read errors that mean "no lineage written yet"
+_NO_LINEAGE = {"PATH_NOT_FOUND", "TABLE_OR_VIEW_NOT_FOUND",
+               "UNABLE_TO_INFER_SCHEMA"}
+
 
 def with_bucket(files: DataFrame, n_buckets: int) -> DataFrame:
     """K9 salt: hash of the full file identity, NOT just repo — a
@@ -50,12 +54,22 @@ def load_lineage(spark: SparkSession, out_dir: str) -> DataFrame | None:
     """Lineage goes through the SAME table shim as the data tables —
     a namespace out_dir must not leak a literal './<ns>/lineage'
     directory into the driver cwd while files/mentions/triples land
-    in the catalog (writer and resume-reader must agree)."""
+    in the catalog (writer and resume-reader must agree).
+
+    None when there is no lineage yet: no such path or table, or a
+    directory without data files (a first write that never
+    committed).  Any other error raises: a lineage table that cannot
+    be read must not pass for a missing one, or the run would redo
+    every bucket and append more lineage next to the bad files."""
+    from pyspark.errors import AnalysisException
+
     from .catalog import read_table
     try:
         return read_table(spark, out_dir, "lineage")
-    except Exception:
-        return None
+    except AnalysisException as e:
+        if e.getCondition() in _NO_LINEAGE:
+            return None
+        raise
 
 
 def run_pipeline(spark: SparkSession, files: DataFrame, out_dir: str,

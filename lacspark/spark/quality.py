@@ -23,9 +23,7 @@ and LogisticRegression with fixed params has no random init.
 from __future__ import annotations
 
 from collections import Counter
-from typing import Iterator
 
-import pyarrow as pa
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -33,6 +31,7 @@ from pyspark.sql import types as T
 from lacspark.canonical_py import tokens
 
 from .dedup import MD5INT, TOKENS
+from .session import python_pass
 
 FEATURES = ["n_chars", "n_tokens", "avg_token_len", "alpha_ratio",
             "digit_ratio", "punct_ratio", "space_ratio", "upper_ratio"]
@@ -143,28 +142,19 @@ def repetition_stats(df: DataFrame, id_col: str = "doc_id",
     640 = 2^7*5 can land a fraction exactly on a 6-decimal midpoint
     that is not a representable double, where the engines would
     round differently)."""
-    names = list(REPETITION_LIMITS)
-    out_schema = T.StructType(
-        [df.schema[id_col]]
-        + [T.StructField(n, T.DoubleType()) for n in names]
-        + [T.StructField("keep", T.LongType(), False)])
     m = 10 ** 6
 
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for b in batches:
-            folds = [_rep_fold(t) for t in b.column(text_col).to_pylist()]
-            rows = [f for f in folds if f is not None]
-            cols = [b.column(id_col).filter(
-                pa.array([f is not None for f in folds], pa.bool_()))]
-            cols += [pa.array([((2 * p * m + q) // (2 * q)) / m
-                               for p, q in (f[i] for f in rows)],
-                              pa.float64()) for i in range(len(names))]
-            cols.append(pa.array([int(_rep_keep(f)) for f in rows],
-                                 pa.int64()))
-            yield pa.RecordBatch.from_arrays(
-                cols, names=[id_col, *names, "keep"])
+    def row(f):
+        if f is None:
+            return None
+        return (*[((2 * p * m + q) // (2 * q)) / m for p, q in f],
+                int(_rep_keep(f)))
 
-    return df.select(id_col, text_col).mapInArrow(run, schema=out_schema)
+    return python_pass(
+        df, [text_col],
+        [T.StructField(n, T.DoubleType()) for n in REPETITION_LIMITS]
+        + [T.StructField("keep", T.LongType(), False)],
+        lambda texts: [row(_rep_fold(t)) for t in texts], keep=[id_col])
 
 
 def with_repetition_keep(df: DataFrame) -> DataFrame:
@@ -174,17 +164,9 @@ def with_repetition_keep(df: DataFrame) -> DataFrame:
     it inline (no join, no second scan of the corpus).
     Decision-identical to repetition_stats' keep column, False below
     2 tokens (pytest-pinned)."""
-    out_schema = T.StructType(
-        df.schema.fields + [T.StructField("rep_keep", T.BooleanType(),
-                                          False)])
-
-    def run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
-        for b in batches:
-            keep = [_rep_keep(_rep_fold(t))
-                    for t in b.column("text").to_pylist()]
-            yield b.append_column("rep_keep", pa.array(keep, pa.bool_()))
-
-    return df.mapInArrow(run, schema=out_schema)
+    return python_pass(
+        df, ["text"], [T.StructField("rep_keep", T.BooleanType(), False)],
+        lambda texts: [(_rep_keep(_rep_fold(t)),) for t in texts])
 
 
 def heuristic_label(df: DataFrame) -> DataFrame:

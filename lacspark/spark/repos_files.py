@@ -12,12 +12,11 @@ vocab/OOV/full-width chars, and empty files.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
+
+from .session import python_pass
 
 SCHEMA = T.StructType([
     T.StructField("repo", T.StringType(), False),
@@ -75,10 +74,6 @@ def synth_repos_files(spark: SparkSession, n_files: int = 2000,
                       partitions: int | None = None) -> DataFrame:
     base = spark.range(0, n_files,
                        numPartitions=partitions or spark.sparkContext.defaultParallelism)
-
-    def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [_gen_row(int(i), seed, n_repos) for i in pdf["id"]]
-            yield pd.DataFrame(rows, columns=SCHEMA.fieldNames())
-
-    return base.mapInPandas(gen, schema=SCHEMA)
+    return python_pass(base, ["id"], SCHEMA.fields,
+                       lambda ids: [_gen_row(i, seed, n_repos) for i in ids],
+                       keep=[])

@@ -23,11 +23,20 @@ Arrow table in the given schema, planned as a ``LocalRelation``.
 Evaluating it starts no Python task, where ``createDataFrame`` over
 Python rows plans a pickled Python RDD that runs one Python task per
 partition every time it is evaluated.
+
+``python_pass`` is how a row-wise Python computation runs on the
+workers: one ``mapInArrow`` over only the columns the pass reads or
+keeps, its new fields built as Arrow arrays in Spark's own type
+mapping.  Every Python pass of the program goes through it, except
+the two that are not row-wise (``train_full.partition_grads_df``
+reduces a partition to one row; ``streaming.streaming_dedup`` keeps
+state across micro-batches).
 """
 
 from __future__ import annotations
 
 import os
+from typing import Callable, Iterable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
@@ -116,3 +125,48 @@ def local_frame(spark: SparkSession, rows, schema: str | T.StructType
         [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
         schema=arrow_schema)
     return spark.createDataFrame(table, schema=schema)
+
+
+def python_pass(df: DataFrame, reads: list[str],
+                fields: list[T.StructField],
+                fn: Callable[..., Iterable[tuple | None]],
+                keep: list[str] | None = None) -> DataFrame:
+    """``df``'s ``keep`` columns (default: all) with ``fields``
+    appended, computed in Python by one ``mapInArrow``.
+
+    ``fn`` gets each Arrow batch's ``reads`` columns as Python lists
+    and returns one output row per input row: a tuple of the values
+    of ``fields``, in order, or ``None`` to drop that row.  Only the
+    ``keep`` and ``reads`` columns cross to Python; kept columns
+    travel back as the batch's own Arrow arrays, untouched.  A field
+    named like a kept column replaces that column in its position.
+    The output arrays take Spark's type mapping (``to_arrow_type``)
+    of their fields."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    keep = list(df.columns if keep is None else keep)
+    df = df.select(*keep, *[c for c in reads if c not in keep])
+    by_name = {f.name: f for f in fields}
+    out_fields = [by_name.get(c, df.schema[c]) for c in keep]
+    out_fields += [f for f in fields if f.name not in keep]
+    names = [f.name for f in out_fields]
+    types = [to_arrow_type(f.dataType) for f in fields]
+    read_at = [df.columns.index(c) for c in reads]
+
+    def run(batches):
+        for b in batches:
+            rows = list(fn(*(b.column(i).to_pylist() for i in read_at)))
+            live = [r is not None for r in rows]
+            if not all(live):
+                b = b.filter(pa.array(live, pa.bool_()))
+                rows = [r for r in rows if r is not None]
+            cols = list(zip(*rows)) or [()] * len(fields)
+            new = {f.name: pa.array(c, t)
+                   for f, c, t in zip(fields, cols, types)}
+            arrays = [new.pop(c) if c in new else b.column(i)
+                      for i, c in enumerate(keep)]
+            yield pa.RecordBatch.from_arrays(arrays + list(new.values()),
+                                             names=names)
+
+    return df.mapInArrow(run, schema=T.StructType(out_fields))

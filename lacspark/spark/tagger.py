@@ -19,13 +19,15 @@ the closure (small, driver-parsed).
 
 from __future__ import annotations
 
+from functools import partial
 from itertools import islice
-from typing import Callable, Iterator
+from typing import Callable
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .session import python_pass
 
 _WORKER_ENGINES: dict = {}
 
@@ -112,32 +114,28 @@ def _planned_partitions(df: DataFrame) -> int | None:
 def _tag_core(df: DataFrame, text_col: str, mode: str,
               custom_lines: tuple[str, ...], new_fields: list,
               split: Callable[[str], list[str]],
-              fill: Callable) -> DataFrame:
+              fill: Callable, extra_reads: tuple[str, ...] = ()
+              ) -> DataFrame:
     """The one tag operator behind documents and files.
 
     Each row's text is cut into segments by ``split``; all segments
     of an Arrow batch go through ONE ``run_batch`` call (the row
     boundary is metadata, not a batch boundary).  ``fill(eng,
-    per_row, pdf)`` then turns each row's list of results into the
-    columns of ``new_fields``, in order.
+    results, *extra)`` then turns one row's list of results (and its
+    values of ``extra_reads``) into that row's ``new_fields`` values.
     """
-    df = ensure_parallelism(df)
-    out_schema = T.StructType(list(df.schema.fields) + new_fields)
     custom_lines = tuple(custom_lines)
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    def run(texts, *extra):
         eng = _worker_engine(custom_lines)
-        for pdf in batches:
-            segs = [split("" if t is None else str(t)) for t in pdf[text_col]]
-            flat = iter(eng.run_batch([s for ss in segs for s in ss],
-                                      mode=mode))
-            per_row = [list(islice(flat, len(ss))) for ss in segs]
-            pdf = pdf.copy()
-            for f, col in zip(new_fields, fill(eng, per_row, pdf)):
-                pdf[f.name] = col
-            yield pdf
+        segs = [split("" if t is None else str(t)) for t in texts]
+        flat = iter(eng.run_batch([s for ss in segs for s in ss],
+                                  mode=mode))
+        per_row = [list(islice(flat, len(ss))) for ss in segs]
+        return map(partial(fill, eng), per_row, *extra)
 
-    return df.mapInPandas(run, schema=out_schema)
+    return python_pass(ensure_parallelism(df), [text_col, *extra_reads],
+                       new_fields, run)
 
 
 def tag_and_extract(df: DataFrame, text_col: str = "text",
@@ -150,18 +148,14 @@ def tag_and_extract(df: DataFrame, text_col: str = "text",
     yield empty arrays in place, models.py:73-101 semantics without
     any reordering).
     """
-    def fill(eng, per_row, pdf):
-        results = [r for (r,) in per_row]
-        cols = [[r.words for r in results], [r.tags for r in results],
-                [r.ranks or [0] * len(r.words) for r in results]]
-        if with_extraction:
-            extracted = [eng.extract(r) for r in results]
-            cols += [[m for m, _ in extracted], [t for _, t in extracted]]
-        return cols
+    def fill(eng, results):
+        (r,) = results
+        row = (r.words, r.tags, r.ranks or [0] * len(r.words))
+        return row + eng.extract(r) if with_extraction else row
 
-    new_fields = EXTRACT_OUTPUT_FIELDS if with_extraction else TAG_OUTPUT_FIELDS
-    return _tag_core(df, text_col, mode, custom_lines, new_fields,
-                     lambda text: [text], fill)
+    return _tag_core(df, text_col, mode, custom_lines,
+                     EXTRACT_OUTPUT_FIELDS if with_extraction
+                     else TAG_OUTPUT_FIELDS, lambda text: [text], fill)
 
 
 def explode_mentions(tagged: DataFrame, keys: list[str]) -> DataFrame:

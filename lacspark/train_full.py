@@ -363,11 +363,7 @@ class Adam:
 def write_back(net, params: dict[str, np.ndarray]) -> None:
     """Install trained float64 params into an inference net
     (float32) and refresh its constrained decoder."""
-    for k, v in params.items():
-        net.w[k] = v.astype(np.float32)
-    if hasattr(net, "_stacks"):
-        del net._stacks  # drop stale stacked-weight cache
-    net.refresh_crf()
+    net.set_weights({**net.w, **params})
 
 
 # ---------------------------------------------------------------------------

@@ -74,27 +74,25 @@ def parse_seg_line(line: str) -> tuple[str, list[str]]:
 
 
 def training_rows(spark, path: str, mode: str = "lac"):
-    """spark.read.text + the parser → DataFrame(text, labels).
-    Arrow-batched (mapInPandas), no per-row python UDF."""
-    from typing import Iterator
-
-    import pandas as pd
+    """spark.read.text + the parser → DataFrame(text, labels), one
+    Python pass (``session.python_pass``); lines without labels are
+    dropped."""
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
-    parse = parse_tagged_line if mode == "lac" else parse_seg_line
-    schema = T.StructType([T.StructField("text", T.StringType()),
-                           T.StructField("labels",
-                                         T.ArrayType(T.StringType()))])
+    from .spark.session import python_pass
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            parsed = [parse(v or "") for v in pdf["value"]]
-            keep = [(t, ls) for t, ls in parsed if ls]
-            yield pd.DataFrame(keep, columns=["text", "labels"])
+    parse = parse_tagged_line if mode == "lac" else parse_seg_line
+
+    def run(values: list) -> list[tuple | None]:
+        return [(t, ls) if ls else None
+                for t, ls in (parse(v or "") for v in values)]
 
     raw = spark.read.text(path).filter(F.length(F.trim("value")) > 0)
-    return raw.mapInPandas(run, schema=schema)
+    return python_pass(raw, ["value"],
+                       [T.StructField("text", T.StringType()),
+                        T.StructField("labels", T.ArrayType(T.StringType()))],
+                       run, keep=[])
 
 
 # ---------------------------------------------------------------------------

@@ -112,3 +112,19 @@ def test_seg_mode_tags_are_empty_strings():
     res = engine().run_batch(["百度高科技公司"], "seg")[0]
     assert all(t == "" for t in res.tags)
     assert "".join(res.words) == "百度高科技公司"
+
+
+def test_engine_replay_times_every_layer():
+    """The benchmark's one-core engine replay wraps engine methods by
+    name; a renamed or bypassed method would leave its layer at 0."""
+    import os
+    import sys
+
+    sys.path.insert(0, os.path.join(os.path.dirname(
+        os.path.dirname(os.path.abspath(__file__))), "perfbench"))
+    from tracing import engine_replay
+
+    out = engine_replay([["百度是一家高科技公司", "北京大学生前来应聘"]])
+    layers = ["segmenter.cut.s", "encoding.encode.s", "net.decode.s",
+              "net.rank.s", "engine.run_batch.self_s", "engine.extract.s"]
+    assert {k: out[k] for k in layers if out[k] <= 0} == {}

@@ -30,10 +30,8 @@ def test_train_seg_mode_adapts_and_saves(tmp_path):
     assert out.exists()
     fresh = LacEngine()
     w = np.load(out)
-    fresh.seg_net.w.update({k: w[k] for k in w.files})
-    if hasattr(fresh.seg_net, "_stacks"):
-        del fresh.seg_net._stacks
-    fresh.seg_net.refresh_crf()
+    fresh.seg_net.set_weights({**fresh.seg_net.w,
+                               **{k: w[k] for k in w.files}})
     for text in ["ab cd", "xy zt"]:
         a = eng.run_batch([text], mode="seg")[0].words
         b = fresh.run_batch([text], mode="seg")[0].words

@@ -174,13 +174,96 @@ def test_document_folds_are_one_arrow_stage(spark, name):
 
 
 def test_token_count_bpe_is_arrow_and_shuffle_free(spark):
-    """Subword counting is a stateless Arrow-batched projection:
-    no keyed shuffle, and the python eval must be Arrow (pandas_udf),
+    """Subword counting is a stateless Arrow-batched pass: no keyed
+    shuffle, and the python pass must be Arrow (one MapInArrow),
     never row-at-a-time BatchEvalPython."""
     plan = plan_of(SPARK_QUERIES["token_count_bpe"](spark, SF)).lower()
     assert "hashpartitioning" not in plan
-    assert "arrowevalpython" in plan
+    assert plan.count("mapinarrow") == 1
     assert "batchevalpython" not in plan
+
+
+def _python_passes(spark, tmp_path):
+    """{pass: (frame maker, the columns that must reach its map)} for
+    every row-wise Python pass; the inputs hold more columns than the
+    passes that keep a subset need."""
+    from lacspark.spark import multimodal as mm
+    from lacspark.spark.dedup import simhash, winnow
+    from lacspark.spark.ingest import decode_text
+    from lacspark.spark.kg import tag_files
+    from lacspark.spark.quality import (repetition_stats,
+                                        with_repetition_keep)
+    from lacspark.spark.repos_files import SCHEMA, synth_repos_files
+    from lacspark.spark.session import local_frame
+    from lacspark.spark.subword import with_subword_counts
+    from lacspark.spark.tagger import tag_and_extract
+    from lacspark.training import training_rows
+
+    docs = spark.read.parquet(f"{SF}/documents.parquet")
+    every = set(docs.columns)
+    files = local_frame(spark, [("r", "p", "c", "python", "a\nb")],
+                        SCHEMA).withColumn("content_sha256",
+                                           F.sha2("content", 256))
+    media = local_frame(spark, [(0, "image", b"x", "fake/v1")],
+                        mm.MEDIA_SCHEMA)
+    raw = docs.withColumn("raw", F.encode("text", "utf-8"))
+    corpus = tmp_path / "train.txt"
+    corpus.write_text("ab cd\n", encoding="utf-8")
+    pair = {"doc_id", "text"}
+    return {
+        "tag_and_extract": (lambda: tag_and_extract(docs), every),
+        "tag_files": (lambda: tag_files(files), set(files.columns)),
+        "repetition_stats": (lambda: repetition_stats(docs), pair),
+        "with_repetition_keep": (lambda: with_repetition_keep(docs), every),
+        "simhash": (lambda: simhash(docs, "doc_id", "text"), pair),
+        "winnow": (lambda: winnow(docs, "doc_id", "text"), pair),
+        "with_subword_counts": (lambda: with_subword_counts(docs), every),
+        "decode_text": (lambda: decode_text(raw, "raw", "decoded",
+                                            "gb18030"), set(raw.columns)),
+        "training_rows": (lambda: training_rows(spark, str(corpus), "seg"),
+                          {"value"}),
+        "extract_media_features": (
+            lambda: mm.extract_media_features(media), set(media.columns)),
+        "extract_real_features": (
+            lambda: mm.extract_real_features(media), set(media.columns)),
+        "resize_images": (lambda: mm.resize_images(media, 8, 8),
+                          set(media.columns)),
+        "synth_repos_files": (lambda: synth_repos_files(spark, 4), {"id"}),
+        "media_table": (lambda: mm.synth_media(spark, 4), {"id"}),
+    }
+
+
+def _map_inputs(df) -> list[set[str]]:
+    """The input columns of each MapInArrow of df's optimized plan."""
+    found, todo = [], [df._jdf.queryExecution().optimizedPlan()]
+    while todo:
+        node = todo.pop()
+        kids = node.children()
+        todo += [kids.apply(i) for i in range(kids.size())]
+        if node.getClass().getSimpleName() == "MapInArrow":
+            out = node.child().output()
+            found.append({out.apply(i).name() for i in range(out.size())})
+    return found
+
+
+@pytest.mark.parametrize("name", [
+    "tag_and_extract", "tag_files", "repetition_stats",
+    "with_repetition_keep", "simhash", "winnow", "with_subword_counts",
+    "decode_text", "training_rows", "extract_media_features",
+    "extract_real_features", "resize_images", "synth_repos_files",
+    "media_table"])
+def test_python_pass_is_one_arrow_map_of_its_columns(spark, tmp_path,
+                                                      name):
+    """Every row-wise Python pass is one MapInArrow (never a pandas
+    map, a pandas UDF or row-at-a-time BatchEvalPython), and only the
+    columns it reads or keeps reach that map."""
+    make, cols = _python_passes(spark, tmp_path)[name]
+    df = make()
+    plan = plan_of(df)
+    assert plan.count("MapInArrow") == 1
+    for node in ("MapInPandas", "ArrowEvalPython", "BatchEvalPython"):
+        assert node not in plan
+    assert _map_inputs(df) == [cols]
 
 
 def test_substring_spans_minimal_shuffles(spark):

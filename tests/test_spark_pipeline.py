@@ -168,6 +168,25 @@ def test_pipeline_partial_resume(spark, tmp_path):
     assert m["n_files"] > 0
 
 
+def test_missing_lineage_resumes_from_nothing_corrupt_raises(spark,
+                                                            tmp_path):
+    """No lineage table means no committed bucket; a lineage table
+    that cannot be read raises instead of passing for a missing one
+    (which would redo every bucket and append next to the bad file)."""
+    from lacspark.spark.pipeline import load_lineage
+
+    out = str(tmp_path / "kg3")
+    assert load_lineage(spark, out) is None
+    files = synth_repos_files(spark, n_files=16)
+    (tmp_path / "kg3" / "lineage").mkdir(parents=True)
+    assert load_lineage(spark, out) is None  # a write that never committed
+    (tmp_path / "kg3" / "lineage" / "part-0.parquet").write_text("junk")
+    with pytest.raises(Exception, match="not a Parquet file|FOOTER"):
+        run_pipeline(spark, files, out, run_id="c", n_buckets=2,
+                     build_graph=False)
+    assert not (tmp_path / "kg3" / "files").exists()
+
+
 def test_minhash_deterministic_and_groups_similar(spark):
     data = [("spark_table",), ("spark_tables",), ("querymerge",),
             ("query_merge",), ("zzz",)]
