@@ -75,13 +75,8 @@ _PRIORITY = [
 # query_hash_snapshot.json: editing a query without pinning it here
 # fails CI.
 _FRESH: list[str] = [
-    # every row-wise Python pass now runs through session.python_pass;
-    # only the docstrings of the queries that named mapInPandas or a
-    # pandas UDF changed
-    "token_count_bpe", "pack_sequences_bpe", "multimodal_decode_stats",
-    "multimodal_features", "streaming_kg_triple_counts", "dedup_simhash",
-    "quality_repetition", "corpus_curation", "streaming_curation_counts",
-    "doc_rolling_fingerprint",
+    # reads the LM fixture through lm.lm_path() (resource_dir())
+    "quality_lm_score",
 ]
 
 def _folded() -> frozenset:

@@ -25,7 +25,9 @@ def main() -> None:
 
     from lacspark.engine import LacEngine
 
-    engine = LacEngine(custom_dict_path=args.custom_dict)
+    engine = LacEngine()
+    if args.custom_dict:
+        engine.load_customization(args.custom_dict)
 
     def emit(batch: list[str]) -> None:
         for res in engine.run_batch(batch, mode=args.mode):

@@ -2,9 +2,10 @@
 """Package lacspark (code + dictionary/model resources) into
 dist/lacspark.zip for ``spark-submit --py-files``.
 
-Resources are regular package files inside the zip; the engine
-extracts them to a per-worker temp dir on first use when the package
-is imported from a zip (see lacspark.engine resource resolution)."""
+Resources are regular package files inside the zip; every reader
+(the engine, the subword vocab, the LM) finds them through
+``lacspark.resource_dir()``, which extracts them to a per-process
+temp dir on first use when the package is imported from a zip."""
 
 from __future__ import annotations
 
@@ -14,8 +15,7 @@ import zipfile
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def main() -> str:
-    dist = os.path.join(ROOT, "dist")
+def main(dist: str = os.path.join(ROOT, "dist")) -> str:
     os.makedirs(dist, exist_ok=True)
     out = os.path.join(dist, "lacspark.zip")
     pkg = os.path.join(ROOT, "lacspark")

@@ -3,7 +3,8 @@
 Transcribes the observable semantics of the reference's intervention
 mechanism (/root/reference/python/LAC/custom.py:34-135): a phrase
 dictionary ``phrase → (per-word tags, cumulative char offsets)`` plus
-a multi-pattern matcher over phrases; matched spans rewrite the
+an Aho–Corasick matcher over phrases (``matcher.AhoCorasick``, with
+the reference TriedTree's keep rule); matched spans rewrite the
 char-level tag sequence *after* CRF decode and *before* B/I merge
 (order fixed at models.py:160-161): interior chars get ``-I`` (with
 the dict tag if given, else keeping the model's tag base), the span
@@ -12,14 +13,12 @@ start and each sub-word boundary get ``-B``.
 
 from __future__ import annotations
 
-from .matcher import AhoCorasick, PrefixDict
+from .matcher import AhoCorasick
 
 
 class Customization:
-    def __init__(self, use_automaton: bool = False):
-        # PrefixDict replicates the python reference's matcher; the AC
-        # automaton is the large-dict scale path (identical spans).
-        self.matcher = AhoCorasick() if use_automaton else PrefixDict()
+    def __init__(self):
+        self.matcher = AhoCorasick()
         self.items: dict[str, tuple[list[str], list[int]]] = {}
 
     def add_entry(self, line: str, sep: str | None = None) -> None:
@@ -51,7 +50,6 @@ class Customization:
             for line in f:
                 if line.strip():
                     self.add_entry(line, sep)
-        self.matcher.finalize()
 
     def apply(self, query: str, tags: list[str]) -> None:
         """Rewrite char-level ``tags`` in place for spans matched in

@@ -45,8 +45,6 @@ class LacEngine:
     """seg/lac/rank analysis over ragged batches, numpy-vectorized."""
 
     def __init__(self, resource_dir_path: str | os.PathLike | None = None,
-                 custom_dict_path: str | None = None,
-                 use_automaton: bool = False,
                  weights_follow: bool = False):
         # Per-file fallback: a user-supplied dir (e.g. the reference's
         # own shipped model layout, which carries word/q2b/tag.dic but
@@ -117,9 +115,6 @@ class LacEngine:
                 "order and would silently mislabel; ship matching "
                 "weights next to the dict stack")
         self.custom: Customization | None = None
-        if custom_dict_path:
-            self.custom = Customization(use_automaton)
-            self.custom.load(custom_dict_path)
 
     # ------------------------------------------------------------------
     def add_word(self, line: str, sep: str | None = None) -> None:
@@ -127,7 +122,6 @@ class LacEngine:
         if self.custom is None:
             self.custom = Customization()
         self.custom.add_entry(line, sep)
-        self.custom.matcher.finalize()
 
     def load_customization(self, customization_file: str,
                            sep: str | None = None) -> None:

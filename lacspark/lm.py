@@ -26,10 +26,14 @@ import os
 from collections import Counter
 from collections.abc import Iterable
 
-from . import RESOURCE_DIR
+from . import resource_dir
 from .canonical_py import tokens
 
-LM_PATH = os.path.join(str(RESOURCE_DIR), "lm_bigram.tsv")
+
+def lm_path() -> str:
+    """The committed LM fixture, wherever the package was loaded
+    from (a ``--py-files`` zip included)."""
+    return os.path.join(str(resource_dir()), "lm_bigram.tsv")
 
 
 def train_counts(texts: Iterable[str]) -> tuple[Counter, Counter]:
@@ -77,7 +81,7 @@ def default_lm() -> BigramLM:
     if _DEFAULT is None:
         uni: dict = {}
         bi: dict = {}
-        with open(LM_PATH, encoding="utf-8") as fh:
+        with open(lm_path(), encoding="utf-8") as fh:
             next(fh)  # header
             for line in fh:
                 t1, t2, c, _nllq = line.rstrip("\n").split("\t")
@@ -112,14 +116,14 @@ def main() -> None:
     # quantization on a knife edge).  Unigram rows (t2 = '') carry
     # the unseen-continuation nll for that context.
     v = lm.v
-    with open(LM_PATH, "w", encoding="utf-8") as fh:
+    with open(lm_path(), "w", encoding="utf-8") as fh:
         fh.write("t1\tt2\tc\tnllq\n")
         for t, c in sorted(uni.items()):
             unseen = round(-math.log2(1 / (c + v)) * 1_000_000)
             fh.write(f"{t}\t\t{c}\t{unseen}\n")
         for (a, b), c in sorted(bi.items()):
             fh.write(f"{a}\t{b}\t{c}\t{lm.nll_q6(a, b)}\n")
-    print(f"wrote {len(uni)} unigrams + {len(bi)} bigrams to {LM_PATH}")
+    print(f"wrote {len(uni)} unigrams + {len(bi)} bigrams to {lm_path()}")
 
 
 def default_nllq() -> int:

@@ -1253,10 +1253,10 @@ def corpus_curation(spark, sf_dir):
 
 
 def _lm_oracle() -> str:
-    from .lm import LM_PATH, default_nllq
+    from .lm import default_nllq, lm_path
     return f"""
     with lm as (select t1, coalesce(t2, '') as t2, nllq
-                from read_csv('{LM_PATH}', delim = '\t', header = true,
+                from read_csv('{lm_path()}', delim = '\t', header = true,
                               quote = '', escape = '')),
     toks as ({_DUCK_TOKENS}),
     ftoks as (select doc_id,
@@ -1301,12 +1301,12 @@ def quality_lm_score(spark, sf_dir):
     divided once.  Scale shape: the LM table is dictionary-shaped →
     broadcast joins onto the exploded bigram stream; one keyed
     shuffle for the per-doc aggregate."""
-    from .lm import LM_PATH, default_nllq
+    from .lm import default_nllq, lm_path
     from .spark.dedup import explode_once
     from .spark.tagger import ensure_parallelism
 
     bi_rows, ctx_rows = [], []
-    with open(LM_PATH, encoding="utf-8") as fh:
+    with open(lm_path(), encoding="utf-8") as fh:
         next(fh)
         for line in fh:
             t1, t2, _c, nllq = line.rstrip("\n").split("\t")
@@ -2337,8 +2337,13 @@ def token_minhash_canonical(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 def _docs_subset(spark, sf_dir):
-    return (load(spark, sf_dir, "documents")
-            .filter(F.col("doc_id") % 3 == 0))
+    """Every third document, the tag queries' input: memoized like
+    ``load``, so ``ensure_parallelism`` plans its ``df.rdd`` once per
+    session, not once per query."""
+    path = f"{sf_dir}/documents.parquet"
+    return memo(spark, ("docs_subset", file_identity(path)),
+                lambda: load(spark, sf_dir, "documents")
+                .filter(F.col("doc_id") % 3 == 0))
 
 
 @register("lac_tag_documents", _golden_sql("lac_tag_documents"))

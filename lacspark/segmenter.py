@@ -26,7 +26,7 @@ _ASCII_RUN = re.compile(r"[a-zA-Z0-9]")
 class DagSegmenter:
     def __init__(self, freq_words: dict[str, int]):
         """freq_words: word → count (``small_seg.dic`` contents)."""
-        # the customization matcher's prefix table: value = word
+        # the reference TriedTree's prefix table: value = word
         # length (not count), prefixes → None; count feeds only the
         # normalizer — segment.py:36-45 + prefix_tree.py:29-34
         prefixes = PrefixDict()

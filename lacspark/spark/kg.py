@@ -45,7 +45,8 @@ def tag_files(df: DataFrame, mode: str = "rank",
 
     Requires ``content_sha256`` (add with ``F.sha2(content, 256)`` at
     scan time so the hash of the *source bytes* is fixed before any
-    python touches the row).
+    python touches the row).  Runs on ``df``'s partitions: the KG job
+    sizes them (``pipeline.run_pipeline``).
     """
     def fill(eng, rows, sha):
         rebuilt = "\n".join("".join(r.words) for r in rows)

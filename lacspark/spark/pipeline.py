@@ -4,7 +4,9 @@ partitioning, per-partition lineage, and checkpoint resume.
 Flow (SURVEY §4.3):
 
   scan(repos_files) + sha2(content) JVM-side
-  → salt-repartition on pmod(xxhash64(repo, path, commit), n_buckets)   (K9)
+  → salt on pmod(xxhash64(repo, path, commit), n_buckets)               (K9)
+  → repartition(n_buckets, bucket), or round-robin to one task per
+    core when n_buckets < cores: the tag stage's width
   → tag_files (fused K1-K4 on the tagger's core, in-pass sha check)
   → explode_mentions / explode_triples (sent_id kept)
   → write mentions / triples / files parquet, partitioned by bucket
@@ -78,7 +80,13 @@ def run_pipeline(spark: SparkSession, files: DataFrame, out_dir: str,
                  n_buckets: int = 64, resume: bool = True,
                  build_graph: bool = True) -> dict:
     """Execute the KG job; returns run metrics.  Re-invoking with the
-    same out_dir resumes: completed buckets are anti-joined away."""
+    same out_dir resumes: completed buckets are anti-joined away.
+
+    ``n_buckets`` is the tag stage's width: the files are
+    repartitioned by bucket into ``n_buckets`` tasks, or round-robin
+    into one task per core when ``n_buckets`` is below
+    ``defaultParallelism`` (the writes partition by bucket either
+    way).  Building the stage starts no Spark job."""
     run_id = run_id or uuid.uuid4().hex[:12]
     t_start = time.time()
 
@@ -91,7 +99,9 @@ def run_pipeline(spark: SparkSession, files: DataFrame, out_dir: str,
             .select(BUCKET_COL).distinct()
         files = files.join(F.broadcast(done), BUCKET_COL, "left_anti")
 
-    files = files.repartition(n_buckets, BUCKET_COL)
+    cores = spark.sparkContext.defaultParallelism
+    files = (files.repartition(n_buckets, BUCKET_COL)
+             if n_buckets >= cores else files.repartition(cores))
     tagged = tag_files(files, mode=mode, custom_lines=custom_lines)
     tagged = tagged.persist()
 

@@ -1,8 +1,10 @@
 """SparkSession factory with the engine's scale posture baked in.
 
-AQE (coalesce + skew-join split), Arrow-batched python UDF transfer
-(the reference's LoD ragged batching ≙ Arrow list arrays, SURVEY §4.1),
-and a shuffle-partition default sized for local[N] testing.  On a real
+Arrow-batched python UDF transfer (the reference's LoD ragged batching
+≙ Arrow list arrays, SURVEY §4.1) and a shuffle-partition default
+sized for local[N] testing.  AQE (coalesce + skew-join split) runs at
+Spark's defaults, on since 3.2; the builder only keeps its empty-stage
+rule out, for the cap audit.  On a real
 cluster the same builder runs under spark-submit --py-files with
 executor counts supplied externally.
 
@@ -57,9 +59,6 @@ def get_spark(app_name: str = "lacspark", cores: int | None = None,
         SparkSession.builder.appName(app_name)
         .master(f"local[{cores}]")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
         # keep empty stages in the adaptive plan: where AQE cuts one
         # out (or a join with an empty side), an Observation under it
         # completes with an empty Row and the cap audit loses counts

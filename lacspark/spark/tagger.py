@@ -78,37 +78,17 @@ def ensure_parallelism(df: DataFrame) -> DataFrame:
 
     One partition per core, not more: that already balances the work
     (50+ docs/partition at sf0.1), and each extra python task only
-    adds about 10 ms of worker setup."""
+    adds about 10 ms of worker setup.
+
+    The count comes from ``df.rdd``, which runs the shuffle stages of
+    an adaptive plan; a caller whose input already has an exchange
+    sizes it itself (``pipeline.run_pipeline``)."""
     if df.isStreaming:  # micro-batch sizing is the trigger's job
         return df
     cores = df.sparkSession.sparkContext.defaultParallelism
-    if (_planned_partitions(df) or df.rdd.getNumPartitions()) < cores:
+    if df.rdd.getNumPartitions() < cores:
         return df.repartition(cores)
     return df
-
-
-def _planned_partitions(df: DataFrame) -> int | None:
-    """The partition count of an adaptive plan whose top exchange is
-    a ``repartition(n, ...)``, read from the plan; else None.
-
-    ``df.rdd`` on an adaptive plan runs its shuffle stages to learn
-    the final count.  AQE never changes the count of a
-    ``REPARTITION_BY_NUM`` exchange, so above one, reached through
-    single-child nodes only, the planned count is the final count.
-    Every other input answers None: a plan without an exchange is not
-    adaptive and ``df.rdd`` runs nothing for it; any other exchange's
-    count may still change."""
-    plan = df._jdf.queryExecution().executedPlan()
-    if plan.getClass().getSimpleName() != "AdaptiveSparkPlanExec":
-        return None
-    root = node = plan.inputPlan()
-    while node.children().size() == 1:
-        if node.getClass().getSimpleName() == "ShuffleExchangeExec":
-            if node.shuffleOrigin().toString() != "REPARTITION_BY_NUM":
-                return None
-            return root.outputPartitioning().numPartitions() or None
-        node = node.children().head()
-    return None
 
 
 def _tag_core(df: DataFrame, text_col: str, mode: str,
@@ -123,6 +103,7 @@ def _tag_core(df: DataFrame, text_col: str, mode: str,
     boundary is metadata, not a batch boundary).  ``fill(eng,
     results, *extra)`` then turns one row's list of results (and its
     values of ``extra_reads``) into that row's ``new_fields`` values.
+    The stage runs on ``df``'s partitions: the caller sizes it.
     """
     custom_lines = tuple(custom_lines)
 
@@ -134,8 +115,7 @@ def _tag_core(df: DataFrame, text_col: str, mode: str,
         per_row = [list(islice(flat, len(ss))) for ss in segs]
         return map(partial(fill, eng), per_row, *extra)
 
-    return python_pass(ensure_parallelism(df), [text_col, *extra_reads],
-                       new_fields, run)
+    return python_pass(df, [text_col, *extra_reads], new_fields, run)
 
 
 def tag_and_extract(df: DataFrame, text_col: str = "text",
@@ -146,14 +126,15 @@ def tag_and_extract(df: DataFrame, text_col: str = "text",
 
     Keeps every input column (row identity preserved — empty texts
     yield empty arrays in place, models.py:73-101 semantics without
-    any reordering).
+    any reordering).  A narrow input is widened to one partition per
+    core (``ensure_parallelism``).
     """
     def fill(eng, results):
         (r,) = results
         row = (r.words, r.tags, r.ranks or [0] * len(r.words))
         return row + eng.extract(r) if with_extraction else row
 
-    return _tag_core(df, text_col, mode, custom_lines,
+    return _tag_core(ensure_parallelism(df), text_col, mode, custom_lines,
                      EXTRACT_OUTPUT_FIELDS if with_extraction
                      else TAG_OUTPUT_FIELDS, lambda text: [text], fill)
 

@@ -29,10 +29,14 @@ import os
 from collections import Counter
 from collections.abc import Iterable
 
-from . import RESOURCE_DIR
+from . import resource_dir
 from .canonical_py import tokens
 
-VOCAB_PATH = os.path.join(str(RESOURCE_DIR), "subword.vocab")
+
+def vocab_path() -> str:
+    """The committed vocab fixture, wherever the package was loaded
+    from (a ``--py-files`` zip included)."""
+    return os.path.join(str(resource_dir()), "subword.vocab")
 
 
 def train_bpe(texts: Iterable[str], n_merges: int = 200) -> list[str]:
@@ -120,7 +124,7 @@ def default_tokenizer() -> SubwordTokenizer:
     workers hold it across Arrow batches)."""
     global _DEFAULT
     if _DEFAULT is None:
-        with open(VOCAB_PATH, encoding="utf-8") as fh:
+        with open(vocab_path(), encoding="utf-8") as fh:
             _DEFAULT = SubwordTokenizer(
                 line.rstrip("\n") for line in fh if line.rstrip("\n"))
     return _DEFAULT
@@ -140,9 +144,9 @@ def main() -> None:
     # drop such pieces (the chars still tokenize via the single-char
     # fallback, deterministically)
     vocab = [v for v in vocab if "\n" not in v and "\r" not in v]
-    with open(VOCAB_PATH, "w", encoding="utf-8") as fh:
+    with open(vocab_path(), "w", encoding="utf-8") as fh:
         fh.write("\n".join(vocab) + "\n")
-    print(f"wrote {len(vocab)} pieces to {VOCAB_PATH}")
+    print(f"wrote {len(vocab)} pieces to {vocab_path()}")
 
 
 if __name__ == "__main__":

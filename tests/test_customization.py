@@ -20,11 +20,10 @@ ENTRIES = [
 ]
 
 
-def _mine(entries, use_automaton=False):
-    c = Customization(use_automaton=use_automaton)
+def _mine(entries):
+    c = Customization()
     for e in entries:
         c.add_entry(e)
-    c.matcher.finalize()
     return c
 
 
@@ -57,17 +56,16 @@ def test_single_untagged_char_skipped():
 
 def test_parity_vs_reference():
     ref = _reference(ENTRIES)
-    for automaton in (False, True):
-        mine = _mine(ENTRIES, use_automaton=automaton)
-        rng = random.Random(13)
-        for _ in range(300):
-            query = "".join(rng.choices(ALPHA, k=rng.randint(0, 30)))
-            tags_a = [rng.choice(["n-B", "n-I", "v-B", "O"])
-                      for _ in range(len(query))]
-            tags_b = list(tags_a)
-            ref.parse_customization(query, tags_a)
-            mine.apply(query, tags_b)
-            assert tags_a == tags_b, repr(query)
+    mine = _mine(ENTRIES)
+    rng = random.Random(13)
+    for _ in range(300):
+        query = "".join(rng.choices(ALPHA, k=rng.randint(0, 30)))
+        tags_a = [rng.choice(["n-B", "n-I", "v-B", "O"])
+                  for _ in range(len(query))]
+        tags_b = list(tags_a)
+        ref.parse_customization(query, tags_a)
+        mine.apply(query, tags_b)
+        assert tags_a == tags_b, repr(query)
 
 
 def test_parity_random_dicts_vs_reference():

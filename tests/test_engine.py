@@ -64,7 +64,8 @@ def test_batch_order_independence():
 
 
 def test_custom_dict_rewrites_tags():
-    e = LacEngine(custom_dict_path=str(RESOURCE_DIR / "custom.dic"))
+    e = LacEngine()
+    e.load_customization(str(RESOURCE_DIR / "custom.dic"))
     text = "春天的花开"
     plain = engine().run_batch([text], "lac")[0]
     inter = e.run_batch([text], "lac")[0]
@@ -82,16 +83,6 @@ def test_add_word_runtime():
     assert "数据分析" in res.words
     idx = res.words.index("数据分析")
     assert res.tags[idx] == "TECH"
-
-
-def test_automaton_and_prefixdict_same_results():
-    e1 = LacEngine(custom_dict_path=str(RESOURCE_DIR / "custom.dic"),
-                   use_automaton=False)
-    e2 = LacEngine(custom_dict_path=str(RESOURCE_DIR / "custom.dic"),
-                   use_automaton=True)
-    texts = ["春天的花开秋天的风", "spark高科技公司百度", "落阳下的数据分析"]
-    for a, b in zip(e1.run_batch(texts, "rank"), e2.run_batch(texts, "rank")):
-        assert a.words == b.words and a.tags == b.tags and a.ranks == b.ranks
 
 
 def test_extract_mentions_triples_shape():

@@ -58,3 +58,16 @@ def test_load_customization(tmp_path):
     out = eng.run_batch(["春天来了"], mode="lac")[0]
     assert "春天" in out.words
     assert out.tags[out.words.index("春天")] == "SEASON"
+
+
+def test_train_spark_path_matches_local(tmp_path, spark):
+    """``train(spark=...)`` runs the epochs data-parallel on Spark;
+    its NLL trace equals the local path's."""
+    train = _write_corpus(tmp_path / "train.txt",
+                          ["ab cd", "abc d", "a bcd", "百度 公司"] * 3)
+    local = LacEngine().train(str(tmp_path / "local"), train, iter_num=4,
+                              mode="seg", lr=5e-2)
+    dist = LacEngine().train(str(tmp_path / "spark"), train, iter_num=4,
+                             mode="seg", lr=5e-2, spark=spark)
+    np.testing.assert_allclose(dist["nll_trace"], local["nll_trace"],
+                               rtol=1e-7)

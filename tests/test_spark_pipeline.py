@@ -13,8 +13,8 @@ from lacspark.spark.canonical import canonical_map, connected_components
 from lacspark.spark.kg import FILE_KEYS, mention_salience_topk, tag_files
 from lacspark.spark.pipeline import run_pipeline
 from lacspark.spark.repos_files import synth_repos_files
-from lacspark.spark.tagger import (ensure_parallelism, explode_mentions,
-                                   explode_triples, tag_and_extract)
+from lacspark.spark.tagger import (explode_mentions, explode_triples,
+                                   tag_and_extract)
 
 SF = "/root/testdata/sf0.001"
 
@@ -94,26 +94,42 @@ def test_tag_files_matches_engine_line_by_line(spark):
     tagged.unpersist()
 
 
-def test_ensure_parallelism_runs_no_job_over_a_repartition(spark):
-    """Building the tag stage over a ``repartition(n, "bucket")`` input
-    (the KG job's shape) starts no Spark job: the partition count is
-    read from the plan, not from ``df.rdd``, which would run the
-    shuffle.  The counts are the ones ``df.rdd`` reports."""
-    cores = spark.sparkContext.defaultParallelism
-    files = (synth_repos_files(spark, n_files=32)
-             .withColumn("content_sha256", F.sha2("content", 256))
-             .withColumn("bucket", F.pmod(F.xxhash64("path"), F.lit(4))))
-    wide = files.repartition(cores, "bucket")
-    narrow = files.repartition(2, "bucket")
+def test_pipeline_tag_stage_is_sized_without_a_job(spark, tmp_path,
+                                                   monkeypatch):
+    """Building ``run_pipeline``'s tag stage starts no Spark job, and
+    its width is the job's own: one ``hashpartitioning(bucket, n)``
+    exchange at ``n_buckets >= cores``; below, one round-robin
+    exchange to ``cores`` and no bucket exchange."""
+    import re
+
+    from lacspark.spark import pipeline
+
+    class Built(Exception):
+        pass
+
     tracker = spark.sparkContext.statusTracker()
-    before = set(tracker.getJobIdsForGroup())
-    tag_files(wide)
-    tag_files(narrow)
-    assert ensure_parallelism(wide) is wide
-    assert ensure_parallelism(narrow) is not narrow
-    assert set(tracker.getJobIdsForGroup()) == before
-    assert wide.rdd.getNumPartitions() == cores
-    assert narrow.rdd.getNumPartitions() == 2
+
+    def tag_then_stop(files, **kw):
+        raise Built(tag_files(files, **kw), set(tracker.getJobIdsForGroup()))
+
+    monkeypatch.setattr(pipeline, "tag_files", tag_then_stop)
+    cores = spark.sparkContext.defaultParallelism
+    files = synth_repos_files(spark, n_files=32)
+    for n_buckets, want in (
+            (cores, [f"hashpartitioning(bucket, {cores})"]),
+            (2 * cores, [f"hashpartitioning(bucket, {2 * cores})"]),
+            (2, [f"RoundRobinPartitioning({cores})"])):
+        before = set(tracker.getJobIdsForGroup())
+        with pytest.raises(Built) as built:
+            pipeline.run_pipeline(spark, files, str(tmp_path / "kg"),
+                                  n_buckets=n_buckets, resume=False)
+        tagged, jobs = built.value.args
+        assert jobs == before, n_buckets
+        plan = re.sub(r"#\d+", "", tagged._jdf.queryExecution()
+                      .executedPlan().toString())
+        # the tag map, then the exchanges down to the generator's map
+        _, under_tag, _ = plan.split("MapInArrow")
+        assert re.findall(r"Exchange (\w+\([^)]*\))", under_tag) == want
 
 
 def test_custom_lines_respected_in_udf(spark):
