@@ -12,6 +12,11 @@ Cluster usage (the north-rule execution model):
 Local sandbox usage (synthetic corpus):
 
     python jobs/run_kg.py --synth 20000 --output /tmp/kg --cores 32
+
+A run that starts its own JVM also prints the session start:
+``session_start_s`` (wall) and ``session_start_cpu_s`` (the driver's
+and the JVM's CPU).  Under spark-submit the JVM starts before Python
+runs, and both are left out.
 """
 
 from __future__ import annotations
@@ -20,6 +25,7 @@ import argparse
 import json
 import os
 import sys
+import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -44,13 +50,26 @@ def main() -> None:
 
     from pyspark.sql import SparkSession
 
+    from lacspark import telemetry
+
     active = SparkSession.getActiveSession()
+    session_start = {}
     if active is not None:
         spark = active  # under spark-submit the session is cluster-configured
     else:
         from lacspark.spark.session import get_spark
 
+        # the JVM starts here unless spark-submit launched it first
+        launches = "PYSPARK_GATEWAY_PORT" not in os.environ
+        cpu0, t0 = telemetry.process_cpu_s(), time.perf_counter()
         spark = get_spark(app_name="lacspark-kg", cores=args.cores)
+        if launches:
+            jvm = spark._jvm.java.lang.ProcessHandle.current().pid()
+            session_start = {
+                "session_start_s": round(time.perf_counter() - t0, 3),
+                "session_start_cpu_s": round(
+                    telemetry.process_cpu_s() - cpu0
+                    + telemetry.process_cpu_s(jvm), 3)}
     spark.sparkContext.setLogLevel("WARN")
 
     if args.synth:
@@ -67,7 +86,6 @@ def main() -> None:
         with open(args.custom_dict, encoding="utf8") as f:
             custom_lines = tuple(ln.strip() for ln in f if ln.strip())
 
-    from lacspark import telemetry
     from lacspark.spark.pipeline import run_pipeline
 
     # per-run /proc/stat steal + load annotation (same instrumentation
@@ -78,6 +96,8 @@ def main() -> None:
         custom_lines=custom_lines, n_buckets=args.buckets,
         resume=not args.no_resume, build_graph=not args.no_graph))
     metrics["telemetry"] = tel
+    # session start (JVM and driver CPU), when this process launched it
+    metrics.update(session_start)
     print(json.dumps(metrics))
 
 

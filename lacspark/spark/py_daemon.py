@@ -16,6 +16,12 @@ copy-on-write.  Enabled via ``spark.python.daemon.module`` in
 by pyspark's own tests); behavior of the workers is otherwise
 byte-identical (same ``pyspark.daemon.manager`` loop).
 
+pandas stays in the preload although no row-wise pass uses it:
+``pyarrow.array`` imports pandas on its first call (to test whether
+its input is a pandas Series), so every worker's first
+``session.python_pass`` batch would import it (seen with a
+``sys.meta_path`` probe in the workers of a ``kg`` benchmark run).
+
 Only stdlib/third-party modules whose import has no side effects
 beyond module init are preloaded; lacspark.engine constructs nothing
 at import time (engines are built lazily per worker key).

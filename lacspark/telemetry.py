@@ -59,6 +59,14 @@ def span(s0: dict, s1: dict | None = None) -> dict:
     }
 
 
+def process_cpu_s(pid: int | str = "self") -> float:
+    """CPU seconds of a process (default: this one), the children it
+    has reaped included."""
+    with open(f"/proc/{pid}/stat") as fh:
+        fields = fh.read().rsplit(")", 1)[1].split()
+    return sum(map(int, fields[11:15])) / os.sysconf("SC_CLK_TCK")
+
+
 def timed(fn):
     """Run ``fn()`` and return (result, seconds, telemetry)."""
     s0 = cpu_sample()

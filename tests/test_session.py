@@ -1,6 +1,7 @@
 """Session factory: Python workers run wherever the driver starts,
 a task does not re-read unchanged zip archives, driver-side rows
-become LocalRelations, and a re-run plan reuses its compiled code."""
+become LocalRelations, a re-run plan reuses its compiled code, and
+the driver JVM starts from a class-data archive where it can."""
 
 from __future__ import annotations
 
@@ -301,3 +302,199 @@ def test_no_create_dataframe_outside_local_frame():
         "lacspark", "spark", "session.py")])
         if isinstance(n, ast.FunctionDef) and n.name == "local_frame")
     assert _create_dataframe_calls(helper) == 1
+
+
+# One session in a subprocess: its JVM's arguments, the CDS line of
+# ``jcmd <jvm> VM.info``, a query's count, the session's Java options,
+# the conf value ``spark.lacspark.probe``, the JVM's conf dir and the
+# driver's after the start.  The JVM is waited for, so a dump at its
+# exit has finished on return.
+_ARCHIVE_PROBE = """
+import json, os, subprocess, sys
+sys.path.insert(0, {repo!r})
+from pyspark import SparkContext
+from lacspark.spark.session import get_spark
+spark = get_spark(app_name="cds-probe", cores=1, shuffle_partitions=1,
+                  extra_conf=json.loads(sys.argv[1]))
+jvm = spark._jvm
+pid = jvm.java.lang.ProcessHandle.current().pid()
+java = os.path.realpath(jvm.java.lang.System.getProperty("java.home"))
+info = subprocess.run([os.path.join(java, "bin", "jcmd"), str(pid),
+                       "VM.info"], capture_output=True, text=True).stdout
+print(json.dumps({{
+    "args": list(jvm.java.lang.management.ManagementFactory
+                 .getRuntimeMXBean().getInputArguments()),
+    "cds": [ln for ln in info.splitlines() if ln.startswith("CDS archive")],
+    "rows": spark.range(5).count(),
+    "java_opts": spark.sparkContext.getConf().get(
+        "spark.driver.extraJavaOptions", ""),
+    "probe": spark.conf.get("spark.lacspark.probe", None),
+    "conf_dir": jvm.java.lang.System.getenv("SPARK_CONF_DIR"),
+    "env_conf_dir": os.environ.get("SPARK_CONF_DIR"),
+}}))
+gateway = SparkContext._gateway
+spark.stop()
+gateway.shutdown()
+gateway.proc.stdin.close()
+gateway.proc.wait(timeout=120)
+"""
+
+
+def _probe_session(cache, extra_conf=None, **env):
+    """``_ARCHIVE_PROBE``'s reading, with ``XDG_CACHE_HOME=cache``."""
+    import json
+
+    run_env = {k: v for k, v in os.environ.items() if k != "SPARK_CONF_DIR"}
+    run_env.update(LACSPARK_DRIVER_MEM="1g", XDG_CACHE_HOME=str(cache),
+                   **env)
+    out = subprocess.run(
+        [sys.executable, "-c", _ARCHIVE_PROBE.format(repo=REPO),
+         json.dumps(extra_conf or {})],
+        env=run_env, capture_output=True, text=True, timeout=600)
+    assert out.returncode == 0, out.stderr[-3000:]
+    return json.loads(out.stdout.strip().splitlines()[-1])
+
+
+def _cds_flags(args):
+    return [a for a in args if "Archive" in a or a.startswith("-Xshare")]
+
+
+def _mapped_size(probe):
+    """The bytes of CDS archives the JVM mapped (0: none)."""
+    import re
+
+    (line,) = probe["cds"]
+    m = re.search(r"size (\d+)", line)
+    return int(m.group(1)) if m else 0
+
+
+def _archive_name(cache):
+    """The archive's file name for this machine under ``cache``."""
+    from pyspark.find_spark_home import _find_spark_home
+
+    from lacspark.spark import session
+
+    stand_in = os.path.join(str(cache), "lacspark", "cds", "conf")
+    key = session._archive_key(session._java_binary(), _find_spark_home(),
+                               stand_in)
+    return f"{key}.jsa"
+
+
+def test_first_start_dumps_the_archive_and_the_next_maps_it(tmp_path):
+    """The first launch against an empty cache dumps the class-data
+    archive at JVM exit, under its own temporary name, from the empty
+    stand-in conf dir, with the caller's Java options kept word for
+    word and the dump flag appended.  The next launch promotes the
+    dump and maps it: the JVM maps more than the JDK's base archive,
+    and the cache holds one archive and no temporary file."""
+    caller = "-Dlacspark.probe=a  -XX:TieredStopAtLevel=1"
+    cache = tmp_path / "cache"
+    cds = cache / "lacspark" / "cds"
+    first = _probe_session(
+        cache, {"spark.driver.extraJavaOptions": caller})
+    assert first["rows"] == 5
+    # Spark puts its own module options first in the session's value
+    assert f"{caller} -XX:ArchiveClassesAtExit=" in first["java_opts"]
+    assert "-Dlacspark.probe=a" in first["args"]
+    (dump,) = _cds_flags(first["args"])
+    assert dump.startswith(f"-XX:ArchiveClassesAtExit={cds}{os.sep}")
+    assert dump.endswith(".tmp")
+    assert first["conf_dir"] == str(cds / "conf")
+    assert first["env_conf_dir"] is None
+    assert os.listdir(cds / "conf") == []
+
+    second = _probe_session(cache)
+    name = _archive_name(cache)
+    assert _cds_flags(second["args"]) == [
+        f"-XX:SharedArchiveFile={cds / name}"]
+    assert second["rows"] == 5
+    assert _mapped_size(second) > _mapped_size(first) > 0
+    assert sorted(os.listdir(cds)) == sorted([name, "conf"])
+
+
+def test_garbage_or_stale_archive_starts_normally(tmp_path):
+    """An archive under this machine's name that the JVM rejects, a
+    garbage file with the archive magic or a real archive written for
+    another classpath, is passed to the JVM, which starts without it;
+    the session works."""
+    import glob
+
+    from pyspark.find_spark_home import _find_spark_home
+
+    from lacspark.spark import session
+
+    cache = tmp_path / "cache"
+    cds = cache / "lacspark" / "cds"
+    (cds / "conf").mkdir(parents=True)
+    archive = cds / _archive_name(cache)
+    archive.write_bytes(session._ARCHIVE_MAGIC + os.urandom(1 << 16))
+    garbage = _probe_session(cache)
+    assert _cds_flags(garbage["args"]) == [
+        f"-XX:SharedArchiveFile={archive}"]
+    assert garbage["rows"] == 5
+
+    archive.unlink()
+    jar = min(glob.glob(os.path.join(_find_spark_home(), "jars", "*.jar")))
+    made = subprocess.run(
+        [session._java_binary(), f"-XX:ArchiveClassesAtExit={archive}",
+         "-cp", jar, "-version"], capture_output=True, timeout=120)
+    assert made.returncode == 0 and session._is_archive(str(archive))
+    stale = _probe_session(cache)
+    assert _cds_flags(stale["args"]) == [f"-XX:SharedArchiveFile={archive}"]
+    assert stale["rows"] == 5
+
+
+def test_real_conf_dir_or_unwritable_cache_uses_no_archive(tmp_path):
+    """A conf dir holding a real ``spark-defaults.conf`` stays the
+    launcher's, its values reach the session, and no archive flag is
+    added; a cache that cannot be made gives a normal start too."""
+    conf = tmp_path / "conf"
+    conf.mkdir()
+    (conf / "spark-defaults.conf").write_text("spark.lacspark.probe 42\n")
+    (conf / "log4j2.properties.template").write_text("")
+    cache = tmp_path / "cache"
+    real = _probe_session(cache, SPARK_CONF_DIR=str(conf))
+    assert real["probe"] == "42"
+    assert real["conf_dir"] == real["env_conf_dir"] == str(conf)
+    assert _cds_flags(real["args"]) == []
+    assert real["rows"] == 5
+    assert not cache.exists()
+
+    cache.write_text("a file where the cache directory would be")
+    blocked = _probe_session(cache)
+    assert _cds_flags(blocked["args"]) == []
+    assert blocked["rows"] == 5
+
+
+def test_unfinished_dump_is_never_promoted(tmp_path, monkeypatch):
+    """A temporary dump without the archive magic is left alone while
+    it may still be written, deleted once it is old, and never
+    promoted; the largest finished one is promoted, and the other
+    finished dumps and the archives of other keys go."""
+    from lacspark.spark import session
+
+    monkeypatch.setenv("XDG_CACHE_HOME", str(tmp_path))
+    monkeypatch.delenv("SPARK_CONF_DIR", raising=False)
+    cds = tmp_path / "lacspark" / "cds"
+    (cds / "conf").mkdir(parents=True)
+    name = _archive_name(tmp_path)
+    key = name.removesuffix(".jsa")
+    writing = cds / f"{key}.1-a.tmp"
+    writing.write_bytes(bytes(4096))
+    cut_short = cds / f"{key}.2-b.tmp"
+    cut_short.write_bytes(bytes(4096))
+    hour_ago = os.path.getmtime(cut_short) - 3600
+    os.utime(cut_short, (hour_ago, hour_ago))
+
+    _, flags = session._plan_archive({})
+    assert flags.startswith(f"-XX:ArchiveClassesAtExit={cds}{os.sep}{key}.")
+    assert sorted(os.listdir(cds)) == sorted(["conf", writing.name])
+
+    other = cds / "0123456789abcdef.jsa"
+    other.write_bytes(session._ARCHIVE_MAGIC + bytes(4096))
+    (cds / f"{key}.3-c.tmp").write_bytes(session._ARCHIVE_MAGIC + bytes(64))
+    (cds / f"{key}.4-d.tmp").write_bytes(session._ARCHIVE_MAGIC + bytes(128))
+    _, flags = session._plan_archive({})
+    assert flags.startswith(f"-XX:SharedArchiveFile={cds / name} ")
+    assert sorted(os.listdir(cds)) == sorted(["conf", name, writing.name])
+    assert (cds / name).stat().st_size == 4 + 128

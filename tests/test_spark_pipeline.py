@@ -98,8 +98,9 @@ def test_pipeline_tag_stage_is_sized_without_a_job(spark, tmp_path,
                                                    monkeypatch):
     """Building ``run_pipeline``'s tag stage starts no Spark job, and
     its width is the job's own: one ``hashpartitioning(bucket, n)``
-    exchange at ``n_buckets >= cores``; below, one round-robin
-    exchange to ``cores`` and no bucket exchange."""
+    exchange at ``n_buckets >= cores`` (``SinglePartition`` at
+    ``n == 1``); below, one round-robin exchange to ``cores`` and no
+    bucket exchange.  At one core there is no width below."""
     import re
 
     from lacspark.spark import pipeline
@@ -115,10 +116,15 @@ def test_pipeline_tag_stage_is_sized_without_a_job(spark, tmp_path,
     monkeypatch.setattr(pipeline, "tag_files", tag_then_stop)
     cores = spark.sparkContext.defaultParallelism
     files = synth_repos_files(spark, n_files=32)
-    for n_buckets, want in (
-            (cores, [f"hashpartitioning(bucket, {cores})"]),
-            (2 * cores, [f"hashpartitioning(bucket, {2 * cores})"]),
-            (2, [f"RoundRobinPartitioning({cores})"])):
+
+    def by_bucket(n):
+        return ["SinglePartition" if n == 1
+                else f"hashpartitioning(bucket, {n})"]
+
+    cases = [(cores, by_bucket(cores)), (2 * cores, by_bucket(2 * cores))]
+    if cores > 1:
+        cases.append((min(2, cores - 1), [f"RoundRobinPartitioning({cores})"]))
+    for n_buckets, want in cases:
         before = set(tracker.getJobIdsForGroup())
         with pytest.raises(Built) as built:
             pipeline.run_pipeline(spark, files, str(tmp_path / "kg"),
@@ -129,7 +135,8 @@ def test_pipeline_tag_stage_is_sized_without_a_job(spark, tmp_path,
                       .executedPlan().toString())
         # the tag map, then the exchanges down to the generator's map
         _, under_tag, _ = plan.split("MapInArrow")
-        assert re.findall(r"Exchange (\w+\([^)]*\))", under_tag) == want
+        assert re.findall(r"Exchange (\w+\([^)]*\)|SinglePartition)",
+                          under_tag) == want
 
 
 def test_custom_lines_respected_in_udf(spark):
