@@ -72,10 +72,10 @@ def main() -> None:
     # warm passes with the BEST as the headline: this VM's host-level
     # CPU steal moves single runs by 2x in either direction and is
     # strictly additive slowdown, so best-of-N is the faithful
-    # steady-state estimate (same policy as bench_scaling.py).  All
-    # samples are reported WITH per-sample /proc/stat steal + load
-    # telemetry (lacspark.telemetry) so contaminated samples are
-    # identifiable mechanically, not narratively (VERDICT r5 item 2);
+    # steady-state estimate.  All samples are reported WITH
+    # per-sample /proc/stat steal + load telemetry
+    # (lacspark.telemetry) so contaminated samples are identifiable
+    # mechanically, not narratively (VERDICT r5 item 2);
     # the median over warm samples rides alongside the best
     # (ADVICE r4 / VERDICT r5 item 8).
     (n_triples, kg_stats), cold_sec, cold_tel = telemetry.timed(

@@ -13,6 +13,10 @@ Local sandbox usage (synthetic corpus):
 
     python jobs/run_kg.py --synth 20000 --output /tmp/kg --cores 32
 
+``--cores N`` makes the master ``local[N]`` only where the job starts
+its own JVM; under spark-submit, ``--master`` holds and N only sizes
+the shuffle partitions.
+
 A run that starts its own JVM also prints the session start:
 ``session_start_s`` (wall) and ``session_start_cpu_s`` (the driver's
 and the JVM's CPU).  Under spark-submit the JVM starts before Python
@@ -44,7 +48,8 @@ def main() -> None:
     ap.add_argument("--no-resume", action="store_true")
     ap.add_argument("--no-graph", action="store_true")
     ap.add_argument("--cores", type=int, default=None,
-                    help="local[N] when not under spark-submit")
+                    help="local[N] when not under spark-submit "
+                         "(there, --master holds)")
     ap.add_argument("--run-id", default=None)
     args = ap.parse_args()
 
@@ -55,7 +60,7 @@ def main() -> None:
     active = SparkSession.getActiveSession()
     session_start = {}
     if active is not None:
-        spark = active  # under spark-submit the session is cluster-configured
+        spark = active  # a session already runs in this process
     else:
         from lacspark.spark.session import get_spark
 

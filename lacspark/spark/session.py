@@ -4,9 +4,9 @@ Arrow-batched python UDF transfer (the reference's LoD ragged batching
 ≙ Arrow list arrays, SURVEY §4.1) and a shuffle-partition default
 sized for local[N] testing.  AQE (coalesce + skew-join split) runs at
 Spark's defaults, on since 3.2; the builder only keeps its empty-stage
-rule out, for the cap audit.  On a real
-cluster the same builder runs under spark-submit --py-files with
-executor counts supplied externally.
+rule out, for the cap audit.  ``local[cores]`` is the master only if
+``get_spark`` launches the JVM: on a real cluster the builder runs
+under spark-submit --py-files, whose ``--master`` and executors hold.
 
 The compiled-code cache is sized to the program.  Spark SQL compiles
 each plan's stages to Java at run time (Janino) and keeps the classes
@@ -78,16 +78,15 @@ _PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.dirname(
 
 
 def get_spark(app_name: str = "lacspark", cores: int | None = None,
-              shuffle_partitions: int | None = None,
               extra_conf: dict | None = None) -> SparkSession:
     if cores is None:
         cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    if shuffle_partitions is None:
-        shuffle_partitions = max(2 * cores, 32)
+    # whether this call starts the JVM (not spark-submit's, not reused)
+    launches = SparkContext._gateway is None and \
+        "PYSPARK_GATEWAY_PORT" not in os.environ
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(f"local[{cores}]")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
+        .config("spark.sql.shuffle.partitions", str(max(2 * cores, 32)))
         # keep empty stages in the adaptive plan: where AQE cuts one
         # out (or a join with an empty side), an Observation under it
         # completes with an empty Row and the cap audit loses counts
@@ -130,10 +129,12 @@ def get_spark(app_name: str = "lacspark", cores: int | None = None,
         # driver's, in local mode), which need not hold the package
         .config("spark.executorEnv.PYTHONPATH", _PACKAGE_PARENT)
     )
+    if launches:
+        builder = builder.master(f"local[{cores}]")
     extra_conf = extra_conf or {}
     for k, v in extra_conf.items():
         builder = builder.config(k, v)
-    with _class_data_archive(extra_conf) as java_opts:
+    with _class_data_archive(extra_conf, launches) as java_opts:
         if java_opts is not None:
             builder = builder.config("spark.driver.extraJavaOptions",
                                      java_opts)
@@ -155,16 +156,15 @@ _CLASSPATH_ENV = ("SPARK_CLASSPATH", "SPARK_DIST_CLASSPATH",
 
 
 @contextlib.contextmanager
-def _class_data_archive(extra_conf: dict) -> Iterator[str | None]:
+def _class_data_archive(conf: dict, launches: bool) -> Iterator[str | None]:
     """Around the session's creation: the driver's Java options with
     the class-data archive flag appended, or ``None`` to launch as
-    Spark would (module docstring).  ``SPARK_CONF_DIR`` points at the
-    empty stand-in only inside the block."""
+    Spark would (module docstring) or where this call ``launches`` no
+    JVM.  ``SPARK_CONF_DIR`` points at the empty stand-in in the block."""
     launch = None
-    if SparkContext._gateway is None and \
-            "PYSPARK_GATEWAY_PORT" not in os.environ:
+    if launches:
         try:
-            launch = _plan_archive(extra_conf)
+            launch = _plan_archive(conf)
         except OSError:  # the cache cannot be read or written
             pass
     if launch is None:

@@ -47,6 +47,7 @@ def sf_dir() -> str:
 def spark():
     from lacspark.spark.session import get_spark
 
-    s = get_spark(app_name="lacspark-tests", cores=8, shuffle_partitions=8)
+    s = get_spark(app_name="lacspark-tests", cores=8, extra_conf={
+        "spark.sql.shuffle.partitions": "8"})
     yield s
     s.stop()

@@ -1,7 +1,8 @@
 """Session factory: Python workers run wherever the driver starts,
 a task does not re-read unchanged zip archives, driver-side rows
-become LocalRelations, a re-run plan reuses its compiled code, and
-the driver JVM starts from a class-data archive where it can."""
+become LocalRelations, a re-run plan reuses its compiled code, the
+driver JVM starts from a class-data archive where it can, and
+spark-submit's master holds."""
 
 from __future__ import annotations
 
@@ -32,8 +33,8 @@ def test_python_workers_start_outside_the_repo(tmp_path):
 import sys
 sys.path.insert(0, {REPO!r})
 from lacspark.spark.session import get_spark
-spark = get_spark(app_name="daemon-cwd", cores=1, shuffle_partitions=1,
-                  extra_conf={{"spark.ui.enabled": "false"}})
+spark = get_spark(app_name="daemon-cwd", cores=1, extra_conf={{
+    "spark.sql.shuffle.partitions": "1", "spark.ui.enabled": "false"}})
 df = spark.range(4).mapInPandas(lambda it: (p * 2 for p in it), "id long")
 print(sorted(r.id for r in df.collect()))
 spark.stop()
@@ -45,6 +46,31 @@ spark.stop()
                          timeout=300)
     assert out.returncode == 0, out.stderr[-3000:]
     assert out.stdout.strip().splitlines()[-1] == "[0, 2, 4, 6]"
+
+
+def test_spark_submit_keeps_its_master(tmp_path):
+    """Under ``spark-submit`` the JVM runs before the script does:
+    ``get_spark(cores=1)`` keeps the launcher's ``--master`` and still
+    sets the program's confs."""
+    from pyspark.find_spark_home import _find_spark_home
+
+    script = tmp_path / "submitted.py"
+    script.write_text(f"""
+import sys
+sys.path.insert(0, {REPO!r})
+from lacspark.spark.session import get_spark
+spark = get_spark(app_name="submitted", cores=1)
+print(spark.sparkContext.master,
+      spark.conf.get("spark.sql.sources.partitionOverwriteMode"))
+spark.stop()
+""")
+    out = subprocess.run(
+        [os.path.join(_find_spark_home(), "bin", "spark-submit"),
+         "--master", "local[2]", "--driver-memory", "1g",
+         "--conf", "spark.ui.enabled=false", str(script)],
+        cwd=tmp_path, capture_output=True, text=True, timeout=300)
+    assert out.returncode == 0, out.stderr[-3000:]
+    assert out.stdout.strip().splitlines()[-1] == "local[2] dynamic"
 
 
 def test_daemon_preload_starts_only_jemalloc_thread():
@@ -314,8 +340,8 @@ import json, os, subprocess, sys
 sys.path.insert(0, {repo!r})
 from pyspark import SparkContext
 from lacspark.spark.session import get_spark
-spark = get_spark(app_name="cds-probe", cores=1, shuffle_partitions=1,
-                  extra_conf=json.loads(sys.argv[1]))
+spark = get_spark(app_name="cds-probe", cores=1, extra_conf={{
+    "spark.sql.shuffle.partitions": "1", **json.loads(sys.argv[1])}})
 jvm = spark._jvm
 pid = jvm.java.lang.ProcessHandle.current().pid()
 java = os.path.realpath(jvm.java.lang.System.getProperty("java.home"))

@@ -1,6 +1,6 @@
 """Host-contention telemetry (lacspark/telemetry.py).
 
-The bench harnesses (bench.py, bench_scaling.py) annotate every
+The bench harness (bench.py) annotates every
 sample with /proc/stat steal + busy + loadavg so contaminated
 samples are discarded mechanically (VERDICT r5 item 2).  These
 tests pin the helper's contract — field shape, monotone counters,
