@@ -11,11 +11,12 @@ Cluster usage (the north-rule execution model):
 
 Local sandbox usage (synthetic corpus):
 
-    python jobs/run_kg.py --synth 20000 --output /tmp/kg --cores 32
+    python jobs/run_kg.py --synth 20000 --output /tmp/kg
 
 ``--cores N`` makes the master ``local[N]`` only where the job starts
 its own JVM; under spark-submit, ``--master`` holds and N only sizes
-the shuffle partitions.
+the shuffle partitions.  Without it, N is ``$SPARK_GRAFT_CPUS`` or
+else the number of CPUs this process may run on.
 
 A run that starts its own JVM also prints the session start:
 ``session_start_s`` (wall) and ``session_start_cpu_s`` (the driver's
@@ -49,7 +50,9 @@ def main() -> None:
     ap.add_argument("--no-graph", action="store_true")
     ap.add_argument("--cores", type=int, default=None,
                     help="local[N] when not under spark-submit "
-                         "(there, --master holds)")
+                         "(there, --master holds); default "
+                         "$SPARK_GRAFT_CPUS, else the CPUs this "
+                         "process may run on")
     ap.add_argument("--run-id", default=None)
     args = ap.parse_args()
 

@@ -146,104 +146,64 @@ class LacEngine:
         ``mode='rank'`` fits the RANK HEAD (tag-conditioned Bi-GRU +
         importance softmax) on ``word/tag/rank`` lines — going beyond
         the reference, whose RankModel.train is an unimplemented stub
-        (models.py:376-379)."""
-        from .train_full import fit_full_local, fit_full_spark
-        from .training import parse_seg_line, parse_tagged_line
+        (models.py:376-379).  It fits locally, saves
+        lac_weights.npz (the rank tensors live alongside the
+        tagger's) and scores no ``test_data``."""
+        from .train_full import fit_full_local, fit_full_spark, fit_rank_local
+        from .training import (chunk_prf, parse_rank_line, parse_seg_line,
+                               parse_tagged_line)
 
-        if mode == "rank":
-            return self._train_rank(model_save_dir, train_data,
-                                    iter_num=iter_num, lr=lr)
-        net = self.lac_net if mode == "lac" else self.seg_net
-        labels_list = LAC_LABELS if mode == "lac" else SEG_LABELS
+        net = self.seg_net if mode == "seg" else self.lac_net
+        labels_list = SEG_LABELS if mode == "seg" else LAC_LABELS
         lab2id = {l: i for i, l in enumerate(labels_list)}
-        parse = parse_tagged_line if mode == "lac" else parse_seg_line
+        parse = {"lac": parse_tagged_line, "seg": parse_seg_line,
+                 "rank": parse_rank_line}[mode]
 
-        def read_rows(path: str):
+        def read_rows(path: str) -> list[list[np.ndarray]]:
+            """(char ids, label ids[, ranks]) per usable line."""
             rows = []
             with open(path, encoding="utf-8") as fh:
                 for line in fh:
-                    text, labels = parse(line)
+                    text, labels, *ranks = parse(line)
                     if not labels or any(l not in lab2id for l in labels):
                         continue
-                    ids = np.asarray(self.encoder.encode_chars(text),
-                                     dtype=np.int64)
-                    if len(ids) != len(labels):
-                        continue
-                    rows.append((text, ids,
-                                 np.asarray([lab2id[l] for l in labels],
-                                            dtype=np.int64)))
+                    row = [np.asarray(v, dtype=np.int64) for v in (
+                        self.encoder.encode_chars(text),
+                        [lab2id[l] for l in labels], *ranks)]
+                    if len(row[0]) == len(labels):
+                        rows.append(row)
             return rows
 
         rows = read_rows(train_data)
         if not rows:
             raise ValueError(f"no trainable rows in {train_data}")
-        id_seqs = [r[1] for r in rows]
-        label_seqs = [r[2] for r in rows]
-        if spark is not None:
+        seqs = [list(col) for col in zip(*rows)]
+        if mode == "rank":
+            trace = fit_rank_local(net, *seqs, lr=lr, epochs=iter_num)
+        elif spark is not None:
             from .spark.session import local_frame
 
-            df = local_frame(
-                spark,
-                [(s.tolist(), l.tolist())
-                 for s, l in zip(id_seqs, label_seqs)],
-                "ids array<long>, labels array<long>").cache()
+            df = local_frame(spark, [(s.tolist(), l.tolist())
+                                     for s, l in rows],
+                             "ids array<long>, labels array<long>").cache()
             try:
-                trace = fit_full_spark(spark, df, net, lr=lr,
-                                       epochs=iter_num)
+                trace = fit_full_spark(df, net, lr=lr, epochs=iter_num)
             finally:
                 df.unpersist()
         else:
-            trace = fit_full_local(net, id_seqs, label_seqs, lr=lr,
-                                   epochs=iter_num)
+            trace = fit_full_local(net, *seqs, lr=lr, epochs=iter_num)
         os.makedirs(model_save_dir, exist_ok=True)
         out_path = os.path.join(
             model_save_dir,
-            "lac_weights.npz" if mode == "lac" else "seg_weights.npz")
+            "seg_weights.npz" if mode == "seg" else "lac_weights.npz")
         np.savez(out_path, **net.w)
         result = {"nll_trace": trace, "model_path": out_path}
-        if test_data:
-            from .training import chunk_prf
-            test_rows = read_rows(test_data)
-            pairs = []
-            for text, ids, lab_ids in test_rows:
-                pred = net.decode([ids])[0]
-                pairs.append(([labels_list[i] for i in lab_ids],
-                              [labels_list[i] for i in pred]))
-            result.update(chunk_prf(pairs))
+        if test_data and mode != "rank":
+            result.update(chunk_prf([
+                ([labels_list[i] for i in lab_ids],
+                 [labels_list[i] for i in net.decode([ids])[0]])
+                for ids, lab_ids in read_rows(test_data)]))
         return result
-
-    def _train_rank(self, model_save_dir: str, train_data: str,
-                    iter_num: int = 10, lr: float = 1e-2) -> dict:
-        """Fit the rank head on ``word/tag/rank`` lines: char-level
-        ids via the encoder, char-level LAC tag ids, per-char target
-        importance.  Saves/hot-reloads lac_weights.npz (the rank
-        tensors live alongside the tagger's)."""
-        from .train_full import fit_rank_local
-        from .training import parse_rank_line
-
-        lab2id = {l: i for i, l in enumerate(LAC_LABELS)}
-        id_seqs, tag_seqs, rank_seqs = [], [], []
-        with open(train_data, encoding="utf-8") as fh:
-            for line in fh:
-                text, labels, ranks = parse_rank_line(line)
-                if not labels or any(l not in lab2id for l in labels):
-                    continue
-                ids = np.asarray(self.encoder.encode_chars(text),
-                                 dtype=np.int64)
-                if len(ids) != len(labels):
-                    continue
-                id_seqs.append(ids)
-                tag_seqs.append(np.asarray(
-                    [lab2id[l] for l in labels], dtype=np.int64))
-                rank_seqs.append(np.asarray(ranks, dtype=np.int64))
-        if not id_seqs:
-            raise ValueError(f"no trainable rank rows in {train_data}")
-        trace = fit_rank_local(self.lac_net, id_seqs, tag_seqs,
-                               rank_seqs, lr=lr, epochs=iter_num)
-        os.makedirs(model_save_dir, exist_ok=True)
-        out_path = os.path.join(model_save_dir, "lac_weights.npz")
-        np.savez(out_path, **self.lac_net.w)
-        return {"nll_trace": trace, "model_path": out_path}
 
     # ------------------------------------------------------------------
     def run_batch(self, texts: list[str], mode: str = "lac"

@@ -139,9 +139,8 @@ class LAC:
         stub (models.py:376-379); test_data P/R/F1 applies to the
         tagger modes only."""
         return self.engine.train(model_save_dir, train_data,
-                                 test_data=None if self.mode == "rank"
-                                 else test_data,
-                                 iter_num=iter_num, mode=self.mode)
+                                 test_data=test_data, iter_num=iter_num,
+                                 mode=self.mode)
 
     def load_customization(self, customization_file: str,
                            sep: str | None = None) -> None:

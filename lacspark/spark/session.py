@@ -7,6 +7,8 @@ Spark's defaults, on since 3.2; the builder only keeps its empty-stage
 rule out, for the cap audit.  ``local[cores]`` is the master only if
 ``get_spark`` launches the JVM: on a real cluster the builder runs
 under spark-submit --py-files, whose ``--master`` and executors hold.
+``cores`` defaults to ``$SPARK_GRAFT_CPUS``, else to the number of
+CPUs the process may run on.
 
 The compiled-code cache is sized to the program.  Spark SQL compiles
 each plan's stages to Java at run time (Janino) and keeps the classes
@@ -30,8 +32,8 @@ partition every time it is evaluated.
 workers: one ``mapInArrow`` over only the columns the pass reads or
 keeps, its new fields built as Arrow arrays in Spark's own type
 mapping.  Every Python pass of the program goes through it, except
-the two that are not row-wise (``train_full.partition_grads_df``
-reduces a partition to one row; ``streaming.streaming_dedup`` keeps
+the two that are not row-wise (``train_full.spark_grads`` reduces a
+partition to one row; ``streaming.streaming_dedup`` keeps
 state across micro-batches).
 
 The driver JVM starts from a class-data archive.  A cold session
@@ -80,7 +82,8 @@ _PACKAGE_PARENT = os.path.dirname(os.path.dirname(os.path.dirname(
 def get_spark(app_name: str = "lacspark", cores: int | None = None,
               extra_conf: dict | None = None) -> SparkSession:
     if cores is None:
-        cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        cores = int(os.environ.get("SPARK_GRAFT_CPUS",
+                                   len(os.sched_getaffinity(0))))
     # whether this call starts the JVM (not spark-submit's, not reused)
     launches = SparkContext._gateway is None and \
         "PYSPARK_GATEWAY_PORT" not in os.environ

@@ -524,9 +524,9 @@ def pq_encode(corpus: DataFrame, id_col: str, vec_col: str,
 # sets fall back to the distributed LUT build.
 _PQ_QUERY_DRIVER_MAX = 10_000
 
-# Shortlists (≤ queries×rerank rows by construction) up to this many
-# rows re-rank on the driver; larger fall back to the distributed
-# join+window re-rank.
+# Shortlists whose bound (distinct query ids × rerank rows) is at
+# most this many rows re-rank on the driver; larger take the
+# distributed join+window re-rank.
 _PQ_SHORTLIST_DRIVER_MAX = 100_000
 
 # Corpora up to this many rows get their raw vectors mirrored into a
@@ -761,29 +761,27 @@ def pq_topk(queries: DataFrame, corpus: DataFrame, id_col: str,
                 .filter(F.col("__r") <= rerank)
                 .select("query_id", "neighbor_id"))
     # ---- exact re-rank over the shortlist ----
-    # The shortlist is ≤ queries×rerank rows — small BY CONSTRUCTION
-    # (that is the whole point of a shortlist), so the re-rank runs
-    # on the driver when it fits: one bounded collect of the
-    # distributed shortlist, one distributed semi-join fetch of the
-    # shortlisted corpus vectors (corpus streams, id set broadcasts
-    # — the 10^12-row orientation), then pure-Python folds that
-    # replicate the engine float ops EXACTLY (see _pq_query_luts).
-    # Saves ~4 driver-scheduled stages (two joins + window + final
-    # project) whose fixed cost dwarfed the 5k-row work.  Larger
-    # shortlists — or a query set too big for the LUT fast path
-    # (qvecs is None) — fall back to the fully distributed re-rank.
-    if qvecs is not None:
+    # The shortlist holds at most (distinct query ids)×rerank rows —
+    # small BY CONSTRUCTION (that is the whole point of a shortlist),
+    # so the re-rank runs on the driver when that bound fits: one
+    # collect of the distributed shortlist, one distributed semi-join
+    # fetch of the shortlisted corpus vectors (corpus streams, id set
+    # broadcasts — the 10^12-row orientation), then pure-Python folds
+    # that replicate the engine float ops EXACTLY (see
+    # _pq_query_luts).  Saves ~4 driver-scheduled stages (two joins +
+    # window + final project) whose fixed cost dwarfed the 5k-row
+    # work.  The bound is decided before the shortlist is built, so
+    # it is evaluated once either way.  Larger bounds — or a query
+    # set too big for the LUT fast path (qvecs is None) — take the
+    # fully distributed re-rank.
+    if qvecs is not None and len(qvecs) * rerank <= _PQ_SHORTLIST_DRIVER_MAX:
         # the shortlist shuffle keys on the (by-contract-small) query
         # id set — size its partition count to that cardinality; the
-        # window reuses this partitioning.  The distributed fallback
+        # window reuses this partitioning.  The distributed re-rank
         # below keeps the session default, the 10^12-scale setting.
         n = max(1, min(8, len(qvecs)))
-        srows = shortlist(pairs.repartition(n, "query_id")) \
-            .limit(_PQ_SHORTLIST_DRIVER_MAX + 1).collect()
-        if len(srows) <= _PQ_SHORTLIST_DRIVER_MAX:
-            nvecs = _pq_corpus_vecs(corpus, id_col, vec_col, fp)
-            return _pq_rerank_driver(spark, srows, qvecs, corpus,
-                                     id_col, vec_col, k, nvecs=nvecs)
-        # probe overflowed (srows is truncated at N+1 — NOT the full
-        # shortlist): recompute distributed below
+        srows = shortlist(pairs.repartition(n, "query_id")).collect()
+        nvecs = _pq_corpus_vecs(corpus, id_col, vec_col, fp)
+        return _pq_rerank_driver(spark, srows, qvecs, corpus,
+                                 id_col, vec_col, k, nvecs=nvecs)
     return _rerank(shortlist(pairs), queries, corpus, id_col, vec_col, k)

@@ -9,19 +9,23 @@ at inference (`lacspark.net.BiGruCrf`), plus:
 
 * `nll_and_grads` — batch CRF NLL and its exact gradient w.r.t. every
   trainable tensor (finite-difference-checked in
-  tests/test_train_full.py).
-* `adam_step` — deterministic Adam (no shuffling; reference uses
-  Adam, nets.py train loop).
-* `fit_full_local` — single-process epochs loop.
-* `fit_full_spark` — data-parallel epochs: every epoch one Spark job
-  computes per-partition gradient SUMS via Arrow-batched
-  `mapInPandas` (map-side combine: a partition of any size reduces to
-  ONE ~43k-float row), the driver sums the ≤n_partitions rows and
-  applies the Adam step, then re-broadcasts the weights.  This is the
-  classic synchronous data-parallel SGD layout: shuffle-free, the
-  only cross-node traffic is |θ| per partition per epoch, so it holds
-  at 1000 executors (gradient rows are ~343 KB here; a tree-reduce
-  would only be needed when n_partitions × |θ| outgrows the driver).
+  tests/test_train_full.py); `rank_nll_and_grads` the same for the
+  rank head.
+* `Adam` — deterministic Adam (no shuffling; reference uses Adam,
+  nets.py train loop), stepped by the one epoch loop `_fit`: each
+  epoch takes (summed NLL, flat summed gradient, n rows) from a
+  gradient pass.
+* `fit_full_local` / `fit_rank_local` — `_fit` over the local pass.
+* `fit_full_spark` — `_fit` over the data-parallel pass
+  `spark_grads`: every epoch one Spark job computes per-partition
+  gradient SUMS via Arrow-batched `mapInPandas` (map-side combine: a
+  partition of any size reduces to ONE ~43k-float row), the driver
+  sums the ≤n_partitions rows and destroys that epoch's θ broadcast.
+  This is the classic synchronous data-parallel SGD layout:
+  shuffle-free, the only cross-node traffic is |θ| per partition per
+  epoch, so it holds at 1000 executors (gradient rows are ~343 KB
+  here; a tree-reduce would only be needed when n_partitions × |θ|
+  outgrows the driver).
 
 Gate order in every GRU weight matrix is z | r | c, matching
 `BiGruCrf._gru_bidir`; the recurrence is the update-gate form
@@ -156,7 +160,7 @@ def _bigru_backward(params, name, cache, dout, grads):
 # Batch NLL + full gradient
 # ---------------------------------------------------------------------------
 
-def _pad_batch(id_seqs, label_seqs):
+def _pad_batch(id_seqs):
     lens = np.array([len(s) for s in id_seqs], dtype=np.int64)
     t = max(1, int(lens.max()))
     ids = np.zeros((len(id_seqs), t), dtype=np.int64)
@@ -172,7 +176,7 @@ def nll_and_grads(params: dict[str, np.ndarray],
     """Summed CRF NLL of the batch and its exact gradient w.r.t.
     every tensor in ``params``.  Forward identical to inference
     (same gate order/masked recurrence) but float64 with caches."""
-    ids, lens = _pad_batch(id_seqs, label_seqs)
+    ids, lens = _pad_batch(id_seqs)
     bsz, t = ids.shape
     m = (np.arange(t)[None, :] < lens[:, None]).astype(np.float64)[:, :, None]
 
@@ -263,8 +267,8 @@ def rank_nll_and_grads(params: dict[str, np.ndarray],
     (0-3) and its exact gradient w.r.t. every rank tensor.  Forward
     matches BiGruCrf.rank: x = [emb[ids]; tag_emb[tags]] → r0 Bi-GRU
     → rank_fc logits."""
-    ids, lens = _pad_batch(id_seqs, rank_seqs)
-    tags, _ = _pad_batch(tag_seqs, rank_seqs)
+    ids, lens = _pad_batch(id_seqs)
+    tags, _ = _pad_batch(tag_seqs)
     bsz, t = ids.shape
     m = (np.arange(t)[None, :] < lens[:, None]).astype(np.float64)[:, :, None]
 
@@ -300,25 +304,6 @@ def rank_nll_and_grads(params: dict[str, np.ndarray],
     np.add.at(grads["tag_emb"], tags.reshape(-1),
               dx[:, :, e_dim:].reshape(-1, dx.shape[-1] - e_dim))
     return total_nll, grads
-
-
-def fit_rank_local(net, id_seqs, tag_seqs, rank_seqs, lr: float = 1e-2,
-                   epochs: int = 5) -> list[float]:
-    """Single-process Adam on the rank head; hot-reloads into the
-    inference net.  Returns per-epoch mean NLL."""
-    params = rank_params(net.w)
-    opt = Adam(lr)
-    trace = []
-    n = max(len(id_seqs), 1)
-    for _ in range(epochs):
-        nll, grads = rank_nll_and_grads(params, id_seqs, tag_seqs,
-                                        rank_seqs)
-        theta = opt.step(flatten_params(params),
-                         flatten_params(grads) / n)
-        params = unflatten_like(theta, params)
-        trace.append(nll / n)
-    write_back(net, params)
-    return trace
 
 
 # ---------------------------------------------------------------------------
@@ -367,50 +352,71 @@ def write_back(net, params: dict[str, np.ndarray]) -> None:
 
 
 # ---------------------------------------------------------------------------
-# Local + Spark data-parallel epoch loops
+# The Adam epoch loop and its three callers (local lac/seg net, local
+# rank head, Spark data-parallel lac/seg net)
 # ---------------------------------------------------------------------------
 
-def fit_full_local(net, id_seqs, label_seqs, lr: float = 1e-2,
-                   epochs: int = 5) -> list[float]:
-    """Single-process full-network Adam; returns per-epoch mean NLL."""
-    params = trainable_params(net.w)
+def _fit(net, params: dict[str, np.ndarray], grad_pass, lr: float,
+         epochs: int) -> list[float]:
+    """Adam over ``params``, whose every epoch takes ``(summed NLL,
+    flat summed gradient, n rows)`` from ``grad_pass(params)``; the
+    result hot-reloads into ``net``.  Returns per-epoch mean NLL."""
     opt = Adam(lr)
     trace = []
-    n = max(len(id_seqs), 1)
     for _ in range(epochs):
-        nll, grads = nll_and_grads(params, id_seqs, label_seqs,
-                                   net.n_layers)
-        theta = opt.step(flatten_params(params),
-                         flatten_params(grads) / n)
+        nll, grad, n = grad_pass(params)
+        n = max(n, 1)
+        theta = opt.step(flatten_params(params), grad / n)
         params = unflatten_like(theta, params)
         trace.append(nll / n)
     write_back(net, params)
     return trace
 
 
-def partition_grads_df(df, params: dict[str, np.ndarray], n_layers: int,
-                       return_broadcast: bool = False):
-    """One row per partition: (nll double, n long, grad array<double>)
-    — the map-side combine of synchronous data-parallel training.
-    ``df`` columns: ids array<long>, labels array<long>.
+def fit_full_local(net, id_seqs, label_seqs, lr: float = 1e-2,
+                   epochs: int = 5) -> list[float]:
+    """Single-process full-network Adam."""
+    def grad_pass(params):
+        nll, grads = nll_and_grads(params, id_seqs, label_seqs,
+                                   net.n_layers)
+        return nll, flatten_params(grads), len(id_seqs)
 
-    With ``return_broadcast`` the θ broadcast handle is returned too
-    so the caller can destroy it after the epoch's collect — a fresh
-    broadcast is created per call, and an epoch loop that never frees
-    them grows executor+driver memory linearly with epochs."""
+    return _fit(net, trainable_params(net.w), grad_pass, lr, epochs)
+
+
+def fit_rank_local(net, id_seqs, tag_seqs, rank_seqs, lr: float = 1e-2,
+                   epochs: int = 5) -> list[float]:
+    """Single-process Adam on the rank head."""
+    def grad_pass(params):
+        nll, grads = rank_nll_and_grads(params, id_seqs, tag_seqs,
+                                        rank_seqs)
+        return nll, flatten_params(grads), len(id_seqs)
+
+    return _fit(net, rank_params(net.w), grad_pass, lr, epochs)
+
+
+def spark_grads(df, params: dict[str, np.ndarray], n_layers: int
+                ) -> tuple[float, np.ndarray, int]:
+    """(summed NLL, flat summed gradient, n rows) of ``df`` (ids
+    array<long>, labels array<long>) at ``params``, in one Spark job:
+    each partition reduces to one (nll, n, grad) row — the map-side
+    combine of synchronous data-parallel training — and the driver
+    sums the rows in collect order.  θ ships as a broadcast, once per
+    executor rather than per task, and is destroyed after the collect:
+    an epoch loop that kept one per epoch would grow executor and
+    driver memory linearly with epochs."""
     from typing import Iterator
 
     import pandas as pd
 
-    # broadcast, not closure: θ ships once per EXECUTOR, not per task
-    bc = df.sparkSession.sparkContext.broadcast(flatten_params(params))
+    theta = flatten_params(params)
+    bc = df.sparkSession.sparkContext.broadcast(theta)
     shapes = {k: v.shape for k, v in params.items()}
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         ref = {k: np.zeros(s) for k, s in shapes.items()}
         p = unflatten_like(bc.value, ref)
-        theta = bc.value
-        g_sum = np.zeros_like(theta)
+        g_sum = np.zeros_like(bc.value)
         nll_sum, n = 0.0, 0
         for pdf in batches:
             seqs = [np.asarray(v, dtype=np.int64) for v in pdf["ids"]]
@@ -427,37 +433,25 @@ def partition_grads_df(df, params: dict[str, np.ndarray], n_layers: int,
         yield pd.DataFrame({"nll": [nll_sum], "n": [n],
                             "grad": [g_sum]})
 
-    out = df.mapInPandas(
-        run, schema="nll double, n long, grad array<double>")
-    return (out, bc) if return_broadcast else out
-
-
-def fit_full_spark(spark, df, net, lr: float = 1e-2,
-                   epochs: int = 5) -> list[float]:
-    """Data-parallel full-network Adam: per epoch ONE Spark job whose
-    output is ≤ n_partitions gradient rows (each a partition's summed
-    gradient); the driver reduces them and applies the Adam step.
-    Deterministic: gradient summation over partitions is
-    order-independent up to float64 rounding, and the epoch order is
-    fixed.  ``df``: (ids array<long>, labels array<long>), cached by
-    the caller if it will be re-read every epoch."""
-    params = trainable_params(net.w)
-    opt = Adam(lr)
-    trace = []
-    for _ in range(epochs):
-        grads_df, bc = partition_grads_df(df, params, net.n_layers,
-                                          return_broadcast=True)
-        rows = grads_df.collect()
-        # each epoch broadcasts a fresh θ; free the old one or
-        # executor/driver memory grows linearly with epochs
+    try:
+        rows = df.mapInPandas(
+            run, schema="nll double, n long, grad array<double>").collect()
+    finally:
         bc.destroy()
-        n = sum(r.n for r in rows) or 1
-        g = np.zeros(flatten_params(params).size)
-        for r in rows:
-            g += np.asarray(r.grad)
-        nll = sum(r.nll for r in rows)
-        theta = opt.step(flatten_params(params), g / n)
-        params = unflatten_like(theta, params)
-        trace.append(nll / n)
-    write_back(net, params)
-    return trace
+    grad = np.zeros(theta.size)
+    for r in rows:
+        grad += np.asarray(r.grad)
+    return sum(r.nll for r in rows), grad, sum(r.n for r in rows)
+
+
+def fit_full_spark(df, net, lr: float = 1e-2,
+                   epochs: int = 5) -> list[float]:
+    """Data-parallel full-network Adam: per epoch one `spark_grads`
+    job, then the driver's Adam step.  Deterministic: the epoch order
+    is fixed, and the partition sums add in collect order (they equal
+    the local gradient up to float64 summation order).  ``df``: (ids
+    array<long>, labels array<long>), cached by the caller since every
+    epoch reads it."""
+    return _fit(net, trainable_params(net.w),
+                lambda params: spark_grads(df, params, net.n_layers),
+                lr, epochs)

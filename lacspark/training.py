@@ -6,8 +6,9 @@ metric.
   reader.py:86-101 ``word/tag`` lines → char-level IOB2;
   reader.py:192-203 space-segmented → ``-B/-I/-E/-S``).
 * ``chunk_prf`` is the reference's chunk_eval metric
-  (nets.py:174-180, 246-273) as a DataFrame op — the P/R ≥ 0.95 gate
-  of the north rule is computed with exactly this join.
+  (nets.py:174-180, 246-273) — the P/R ≥ 0.95 gate of the north rule
+  — and ``chunk_prf_df`` the same counts as one full-outer join of
+  gold and predicted chunk tables.
 
 Training itself (O21: backprop through the whole Bi-GRU-CRF, Adam,
 Spark data-parallel — the reference's nets.py:276-359) lives in
@@ -123,16 +124,7 @@ def iob2_chunks(tags: list[str]) -> list[tuple[int, int, str]]:
     return chunks
 
 
-def chunk_prf(pairs: list[tuple[list[str], list[str]]]) -> dict:
-    """[(gold_tags, pred_tags)] → {precision, recall, f1} over
-    (begin, end, base) chunks, micro-averaged."""
-    tp = fp = fn = 0
-    for gold, pred in pairs:
-        g = set(iob2_chunks(gold))
-        p = set(iob2_chunks(pred))
-        tp += len(g & p)
-        fp += len(p - g)
-        fn += len(g - p)
+def _prf(tp: int, fp: int, fn: int) -> dict:
     prec = tp / (tp + fp) if tp + fp else 0.0
     rec = tp / (tp + fn) if tp + fn else 0.0
     f1 = 2 * prec * rec / (prec + rec) if prec + rec else 0.0
@@ -140,14 +132,29 @@ def chunk_prf(pairs: list[tuple[list[str], list[str]]]) -> dict:
             "precision": prec, "recall": rec, "f1": f1}
 
 
-def chunk_prf_df(gold_df, pred_df, keys: list[str]):
-    """Distributed chunk_eval: two DataFrames with char-level ``tags``
-    arrays → single-row (tp, fp, fn, precision, recall, f1).
-    Chunks explode JVM-side; the metric is one inner join + two
-    anti-joins on (keys, begin, end, base) — SURVEY §2.1 O22."""
-    from pyspark.sql import functions as F
+def chunk_prf(pairs: list[tuple[list[str], list[str]]]) -> dict:
+    """[(gold_tags, pred_tags)] → {tp, fp, fn, precision, recall, f1}
+    over (begin, end, base) chunks, micro-averaged."""
+    tp = fp = fn = 0
+    for gold, pred in pairs:
+        g = set(iob2_chunks(gold))
+        p = set(iob2_chunks(pred))
+        tp += len(g & p)
+        fp += len(p - g)
+        fn += len(g - p)
+    return _prf(tp, fp, fn)
 
-    def explode_chunks(df, name):
+
+def chunk_prf_df(gold_df, pred_df, keys: list[str]) -> dict:
+    """Distributed chunk_eval: two DataFrames with char-level ``tags``
+    arrays → the ``chunk_prf`` dict.  Chunks explode JVM-side; one
+    full-outer join on (keys, begin, end, base) counts tp (both
+    sides), fp (pred only) and fn (gold only) in one action — SURVEY
+    §2.1 O22."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.window import Window
+
+    def explode_chunks(df, side):
         # boundary flag → running chunk id → group to (begin,end,base)
         t = df.select(*keys, F.posexplode("tags").alias("pos", "tag"))
         t = t.withColumn("base", F.when(F.col("tag") == "O", F.lit(None))
@@ -155,7 +162,6 @@ def chunk_prf_df(gold_df, pred_df, keys: list[str]):
         t = t.withColumn(
             "is_b", (F.col("tag").endswith("B") | F.col("tag").endswith("S")
                      | F.col("tag").eqNullSafe("O")).cast("int"))
-        from pyspark.sql.window import Window
         w = (Window.partitionBy(*keys).orderBy("pos")
              .rowsBetween(Window.unboundedPreceding, 0))
         t = t.withColumn("chunk_id", F.sum("is_b").over(w))
@@ -164,16 +170,14 @@ def chunk_prf_df(gold_df, pred_df, keys: list[str]):
                 .agg(F.min("pos").alias("begin"),
                      (F.max("pos") + 1).alias("end"),
                      F.min_by("base", "pos").alias("base"))
-                .drop("chunk_id"))
+                .select(*keys, "begin", "end", "base",
+                        F.lit(True).alias(side)))
 
-    g = explode_chunks(gold_df, "gold")
-    p = explode_chunks(pred_df, "pred")
-    on = keys + ["begin", "end", "base"]
-    tp = p.join(g, on).count()
-    fp = p.join(g, on, "left_anti").count()
-    fn = g.join(p, on, "left_anti").count()
-    prec = tp / (tp + fp) if tp + fp else 0.0
-    rec = tp / (tp + fn) if tp + fn else 0.0
-    f1 = 2 * prec * rec / (prec + rec) if prec + rec else 0.0
-    return {"tp": tp, "fp": fp, "fn": fn,
-            "precision": prec, "recall": rec, "f1": f1}
+    both = explode_chunks(gold_df, "__gold").join(
+        explode_chunks(pred_df, "__pred"),
+        keys + ["begin", "end", "base"], "full_outer")
+    gold, pred = F.col("__gold").isNotNull(), F.col("__pred").isNotNull()
+    counts = both.agg(F.count(F.when(gold & pred, 1)),
+                      F.count(F.when(pred & ~gold, 1)),
+                      F.count(F.when(gold & ~pred, 1))).first()
+    return _prf(*counts)

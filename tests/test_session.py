@@ -50,8 +50,10 @@ spark.stop()
 
 def test_spark_submit_keeps_its_master(tmp_path):
     """Under ``spark-submit`` the JVM runs before the script does:
-    ``get_spark(cores=1)`` keeps the launcher's ``--master`` and still
-    sets the program's confs."""
+    ``get_spark()`` keeps the launcher's ``--master`` and still sets
+    the program's confs.  With no ``cores`` and no
+    ``SPARK_GRAFT_CPUS``, the core count that sizes the shuffle
+    partitions is the number of CPUs the process may run on."""
     from pyspark.find_spark_home import _find_spark_home
 
     script = tmp_path / "submitted.py"
@@ -59,18 +61,22 @@ def test_spark_submit_keeps_its_master(tmp_path):
 import sys
 sys.path.insert(0, {REPO!r})
 from lacspark.spark.session import get_spark
-spark = get_spark(app_name="submitted", cores=1)
+spark = get_spark(app_name="submitted")
 print(spark.sparkContext.master,
-      spark.conf.get("spark.sql.sources.partitionOverwriteMode"))
+      spark.conf.get("spark.sql.sources.partitionOverwriteMode"),
+      spark.conf.get("spark.sql.shuffle.partitions"))
 spark.stop()
 """)
+    env = {k: v for k, v in os.environ.items() if k != "SPARK_GRAFT_CPUS"}
     out = subprocess.run(
         [os.path.join(_find_spark_home(), "bin", "spark-submit"),
          "--master", "local[2]", "--driver-memory", "1g",
          "--conf", "spark.ui.enabled=false", str(script)],
-        cwd=tmp_path, capture_output=True, text=True, timeout=300)
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=300)
     assert out.returncode == 0, out.stderr[-3000:]
-    assert out.stdout.strip().splitlines()[-1] == "local[2] dynamic"
+    partitions = max(2 * len(os.sched_getaffinity(0)), 32)
+    assert out.stdout.strip().splitlines()[-1] == \
+        f"local[2] dynamic {partitions}"
 
 
 def test_daemon_preload_starts_only_jemalloc_thread():

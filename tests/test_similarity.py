@@ -205,3 +205,25 @@ def test_pq_distributed_fallbacks_match_driver_paths(
     got = _pq_rows(spark)
     assert len(got) == len(pq_driver_rows) > 0
     assert got == pq_driver_rows
+
+
+def test_pq_shortlist_past_its_bound_is_evaluated_once(
+        spark, monkeypatch, pq_driver_rows):
+    """50 queries × rerank 100 bound the shortlist at 5,000 rows.  With
+    the driver bound one row below that, ``pq_topk`` takes the
+    distributed re-rank without first collecting the shortlist on the
+    driver: the only collected plan that holds the ADC scores is the
+    result's own, and its rows equal the driver path's."""
+    monkeypatch.setattr(similarity, "_PQ_SHORTLIST_DRIVER_MAX",
+                        50 * 100 - 1)
+    plans = []
+    frame = type(spark.range(1))  # the session's concrete DataFrame class
+    collect = frame.collect
+
+    def spy(df):
+        plans.append(df._jdf.queryExecution().analyzed().toString())
+        return collect(df)
+
+    monkeypatch.setattr(frame, "collect", spy)
+    assert _pq_rows(spark) == pq_driver_rows
+    assert sum("__adc" in p for p in plans) == 1

@@ -109,17 +109,13 @@ def test_spark_gradients_equal_local(spark):
               np.array([0, 1, 0]), np.array([0, 1, 1, 0, 1])]
     nll_local, g_local = nll_and_grads(params, ids, labels, net.n_layers)
 
-    from lacspark.train_full import partition_grads_df
+    from lacspark.train_full import spark_grads
     df = spark.createDataFrame(
         [(s.tolist(), l.tolist()) for s, l in zip(ids, labels)],
         "ids array<long>, labels array<long>").repartition(3)
-    rows = partition_grads_df(df, params, net.n_layers).collect()
-    assert sum(r.n for r in rows) == 4
-    g_spark = np.zeros(flatten_params(params).size)
-    for r in rows:
-        g_spark += np.asarray(r.grad)
-    np.testing.assert_allclose(sum(r.nll for r in rows), nll_local,
-                               rtol=1e-10)
+    nll_spark, g_spark, n = spark_grads(df, params, net.n_layers)
+    assert n == 4
+    np.testing.assert_allclose(nll_spark, nll_local, rtol=1e-10)
     np.testing.assert_allclose(g_spark, flatten_params(g_local),
                                rtol=1e-9, atol=1e-9)
 
@@ -135,7 +131,7 @@ def test_fit_full_spark_matches_local_trace(spark):
     df = spark.createDataFrame(
         [(s.tolist(), l.tolist()) for s, l in zip(ids, want)],
         "ids array<long>, labels array<long>").repartition(2).cache()
-    trace_s = fit_full_spark(spark, df, net_s, lr=5e-2, epochs=8)
+    trace_s = fit_full_spark(df, net_s, lr=5e-2, epochs=8)
     np.testing.assert_allclose(trace_s, trace_l, rtol=1e-7)
     after_l = net_l.decode(ids)
     after_s = net_s.decode(ids)

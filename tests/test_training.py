@@ -56,17 +56,27 @@ def test_chunk_prf_df_matches_local(spark):
     rows = [
         (0, ["n-B", "n-I", "v-B", "O"]),
         (1, ["PER-B", "PER-I", "PER-I"]),
+        (2, ["n-B", "v-B", "v-I"]),          # gold only
+        (4, ["O", "O", "O"]),                # all O
+        (5, ["a-B", "a-I", "O", "n-B"]),
     ]
     pred_rows = [
         (0, ["n-B", "v-B", "v-I", "O"]),
         (1, ["PER-B", "PER-I", "LOC-B"]),
+        (3, ["LOC-B", "O"]),                 # pred only
+        (4, ["O", "O", "O"]),
+        (5, ["a-B", "a-I", "O", "v-B"]),
     ]
     gold = spark.createDataFrame(rows, "doc_id long, tags array<string>")
     pred = spark.createDataFrame(pred_rows, "doc_id long, tags array<string>")
     dist = chunk_prf_df(gold, pred, ["doc_id"])
-    local = chunk_prf([(g[1], p[1]) for g, p in zip(rows, pred_rows)])
+    g, p = dict(rows), dict(pred_rows)
+    local = chunk_prf([(g.get(d, []), p.get(d, []))
+                       for d in sorted(g.keys() | p.keys())])
     assert (dist["tp"], dist["fp"], dist["fn"]) == \
         (local["tp"], local["fp"], local["fn"])
+    assert (local["tp"], local["fp"], local["fn"]) == (1, 6, 6)
+    assert dist == local
 
 
 def _words_to_char_iob2(words, tags):
